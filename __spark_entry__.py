@@ -15,8 +15,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from telecom_competitor_analysis_spark.plans.oracles import ORACLES
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import ORACLES, QUERIES
+from telecom_competitor_analysis_spark.plans.registry import ordered_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,8 +29,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(QUERIES)
+    """One entry per implemented operator from SURVEY.md §2, in verify
+    order: most recently changed plan first, rows-only queries last."""
+    return ordered_queries()
 
 
 def oracle_sql() -> dict[str, str]:

@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 HEADLINE = [

@@ -11,7 +11,7 @@ cheapest duplicate cut available (no content ever read).
 
 Pure built-in column expressions (regexp + array functions) — JVM
 codegen end to end, zero Python boundary, and every step is mirrored
-verbatim by the DuckDB oracle (plans/oracles_ext.py::q_url_dedup).
+verbatim by the DuckDB oracle (plans/dedup.py::q_url_dedup).
 """
 
 from __future__ import annotations

@@ -9,7 +9,8 @@ Runnable:  python -m telecom_competitor_analysis_spark.jobs.run_pipeline \
 Each stage is restart-safe: silver is overwritten per run partition, gold
 appends are idempotent anti-join/change-detect plans (re-running with the
 same input appends nothing). A one-row status record goes to the logs
-table per run (reference dags/utils.py:54-68).
+table per run (reference dags/utils.py:54-68): ``success``, or ``failed``
+with the error text when a stage raises.
 """
 
 from __future__ import annotations
@@ -41,9 +42,31 @@ def _read_gold(spark: SparkSession, gold: str, table: str) -> DataFrame | None:
     return spark.read.schema(STAR_SCHEMA[table]).parquet(path)
 
 
+def _write_log(spark: SparkSession, gold: str, error_details: str, status: str) -> None:
+    """Append the run's status row (reference dags/utils.py:54-68 /
+    bigquery.py:160-172)."""
+    log = spark.createDataFrame(
+        [("pipeline", error_details, status)],
+        "competitor_name string, error_details string, status string",
+    ).withColumn("scraped_at", F.date_format(F.current_date(), "yyyy-MM-dd"))
+    write_gold(log.select(*STAR_SCHEMA["logs"].fieldNames()),
+               f"{gold}/logs", mode="append")
+
+
 def run(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str, int]:
     """Run clean + load once over every bronze products/packs document.
-    Returns appended-row counts per gold table (for the run log)."""
+    Returns appended-row counts per gold table. A failed run is logged
+    as failed, with its error, and the error is re-raised."""
+    try:
+        counts = _load(spark, bronze, silver, gold)
+    except Exception as exc:
+        _write_log(spark, gold, f"{type(exc).__name__}: {exc}", "failed")
+        raise
+    _write_log(spark, gold, "no error", "success")
+    return counts
+
+
+def _load(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str, int]:
     counts: dict[str, int] = {}
 
     raw_products = read_wrapped_json(
@@ -74,14 +97,6 @@ def run(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str, i
         counts["packs"] = new_packs.count()
         if counts["packs"]:
             write_gold(new_packs, f"{gold}/packs", mode="append")
-
-    # run log (reference dags/utils.py:54-68 / bigquery.py:160-172)
-    log = spark.createDataFrame(
-        [("pipeline", "no error", "success")],
-        "competitor_name string, error_details string, status string",
-    ).withColumn("scraped_at", F.date_format(F.current_date(), "yyyy-MM-dd"))
-    write_gold(log.select(*STAR_SCHEMA["logs"].fieldNames()),
-               f"{gold}/logs", mode="append")
     return counts
 
 

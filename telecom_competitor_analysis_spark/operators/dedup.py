@@ -36,7 +36,7 @@ from telecom_competitor_analysis_spark.functions.text import words
 HEX_HIGH_NIBBLES = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small inputs arrive as one parquet split, serializing the
     compute-heavy shingle/hash stages onto one core (measured: 9.7s → ~1s
     for the minhash signature at sf0.1). Round-robin repartition up to the
@@ -54,10 +54,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
-
-
-# public name: similarity/embedding plans reuse the same under-split guard
-ensure_parallelism = _ensure_parallelism
 
 
 def exact_dedup_groups(
@@ -168,7 +164,7 @@ def minhash_signature(
     on the testdata corpus produced ~25M candidate pairs at 5k docs;
     shingle-level produces only true near-dups). ``shingle_w=1`` recovers
     word-level behavior."""
-    df = _ensure_parallelism(df)
+    df = ensure_parallelism(df)
     # no distinct pass: MIN over duplicates equals MIN over the set
     tokens = (
         shingle_rows(df, id_col, text_col, shingle_w)
@@ -408,7 +404,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     of md5 nibble i). Exact integer sums → fully deterministic; emitted as
     a 16-char '0'/'1' string. Words keep multiplicity (standard SimHash
     weighting by term frequency)."""
-    tokens = _ensure_parallelism(df).select(
+    tokens = ensure_parallelism(df).select(
         F.col(id_col),
         F.explode(words(F.trim(F.col(text_col)))).alias("w"),
     ).select(F.col(id_col), F.md5(F.col("w")).alias("wh"))
@@ -425,7 +421,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     fully deterministic; emitted as a 64-char '0'/'1' string. Words keep
     multiplicity (standard term-frequency weighting)."""
     tokens = (
-        _ensure_parallelism(df)
+        ensure_parallelism(df)
         .select(
             F.col(id_col),
             F.explode(words(F.trim(F.col(text_col)))).alias("w"),
@@ -664,7 +660,7 @@ def shingle_jaccard_pairs(
     numerator and the denominators exclude stop-shingles — no bias, just
     a smaller, discriminative feature set)."""
     toks = (
-        shingle_rows(_ensure_parallelism(df), id_col, text_col, w)
+        shingle_rows(ensure_parallelism(df), id_col, text_col, w)
         .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
         .distinct()
     )
@@ -813,7 +809,7 @@ def build_shingle_index(
     incremental batch reads only the buckets its own shingles hash to;
     the keep-list's documents are never re-tokenized again."""
     toks = (
-        shingle_rows(_ensure_parallelism(keepers), id_col, text_col, w)
+        shingle_rows(ensure_parallelism(keepers), id_col, text_col, w)
         .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
         .distinct()
     )
@@ -859,7 +855,7 @@ def near_dups_against_index(
     postings = spark.read.parquet(f"{index_path}/postings")
     sizes = spark.read.parquet(f"{index_path}/sizes")
     btoks = (
-        shingle_rows(_ensure_parallelism(batch), id_col, text_col, w)
+        shingle_rows(ensure_parallelism(batch), id_col, text_col, w)
         .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
         .distinct()
     )
@@ -918,7 +914,7 @@ def shingle_jaccard_pairs_between(
         build.select(F.col(id_col), F.col(text_col))
     )
     toks = (
-        shingle_rows(_ensure_parallelism(union), id_col, text_col, w)
+        shingle_rows(ensure_parallelism(union), id_col, text_col, w)
         .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
         .distinct()
     )

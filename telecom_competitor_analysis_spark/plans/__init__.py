@@ -1,6 +1,19 @@
-"""Declared query plans (SURVEY.md §2 inventory) and their DuckDB oracle
-SQL. ``QUERIES`` / ``ORACLES`` back ``__spark_entry__.queries()`` /
-``oracle_sql()``."""
+"""Declared query plans, one module per family, each query registered
+beside its DuckDB oracle (see ``registry``). ``QUERIES`` / ``ORACLES``
+map every query name to its callable / oracle SQL;
+``__spark_entry__.queries()`` serves them in verify order."""
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES  # noqa: F401
-from telecom_competitor_analysis_spark.plans.oracles import ORACLES  # noqa: F401
+from telecom_competitor_analysis_spark.plans import (  # noqa: F401  (registers)
+    curation,
+    dedup,
+    graph,
+    relational,
+    similarity,
+    stats,
+    streaming,
+    text,
+)
+from telecom_competitor_analysis_spark.plans.registry import REGISTERED
+
+QUERIES = dict(REGISTERED)
+ORACLES = {n: fn.oracle for n, fn in QUERIES.items() if fn.oracle is not None}

@@ -1,0 +1,3908 @@
+"""Embedding similarity and ANN retrieval: exact and approximate top-k
+(LSH, IVF, PQ, IVFPQ, multi-probe), clustering, semantic dedup,
+retrieval-quality metrics, lexical (BM25) and hybrid search.
+"""
+
+from __future__ import annotations
+
+import hashlib
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from telecom_competitor_analysis_spark.functions.text import words
+from telecom_competitor_analysis_spark.operators.similarity import (
+    cosine_topk,
+    lsh_bucketed_topk,
+)
+from telecom_competitor_analysis_spark.plans.artifacts import _materialized
+from telecom_competitor_analysis_spark.plans.dedup import (
+    _materialized_lsh_pairs,
+    _NEARDUP_CC_CTES,
+)
+from telecom_competitor_analysis_spark.plans.registry import query
+from telecom_competitor_analysis_spark.plans.stats import sdiv_expr
+from telecom_competitor_analysis_spark.sources.readers import load_table
+
+
+EMBEDDING_DIM = 64
+
+
+def _materialized_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """The embeddings IVF index as a materialized artifact — ONE build
+    shared by every probe query (q_ann_index_probe, q_semantic_neighbors,
+    q_ann_filtered). 8 anchors, skew cap 50, and the ``label`` column
+    carried INLINE so filtered searches push their predicate into the
+    index scan instead of joining back to a metadata table."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        build_ivf_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _materialized(
+        spark,
+        sf_dir,
+        "ivf_idx_a8_cap50",
+        "embeddings",
+        lambda p: build_ivf_index(
+            emb, p, n_anchors=8, max_bucket_size=50, carry_cols=("label",)
+        ),
+    )
+
+
+@query("""
+        SELECT
+            q.vec_id AS query_id,
+            c.vec_id AS neighbor_id,
+            CAST(row_number() OVER (
+                PARTITION BY q.vec_id
+                ORDER BY list_cosine_similarity(
+                    CAST(c.embedding AS DOUBLE[]),
+                    CAST(q.embedding AS DOUBLE[])) DESC,
+                c.vec_id ASC
+            ) AS INT) AS rank
+        FROM embeddings c
+        CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) q
+        WHERE c.vec_id != q.vec_id
+        QUALIFY rank <= 10
+    """)
+def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force exact top-10 cosine neighbors for 5 query vectors
+    (broadcast queries × streamed corpus; per-query top-k via
+    WindowGroupLimit — no global sort)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    return cosine_topk(emb, queries, "vec_id", "embedding", k=10)
+
+
+# RAG retrieval composition (q_semantic_neighbors): the
+# retrieval leg is the MATERIALIZED IVF index (same quantization as
+# q_ann_index_probe's oracle: 8 lowest-id anchors, nprobe=2 probing —
+# the frozen-universe mirror of the fingerprint-cached artifact), top-3
+# per query, joined to document metadata on vec_id = doc_id.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign WHERE rn = 1
+    ),
+    q AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE vec_id < 5 AND rn <= 2
+    ),
+    topk AS (
+        SELECT
+            q.vec_id AS query_id,
+            c.vec_id AS neighbor_id,
+            CAST(row_number() OVER (
+                PARTITION BY q.vec_id
+                ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+            ) AS INT) AS rank
+        FROM c
+        JOIN q ON c.bucket = q.bucket
+        WHERE c.vec_id != q.vec_id
+        QUALIFY rank <= 3
+    )
+    SELECT
+        topk.query_id,
+        topk.neighbor_id,
+        topk.rank,
+        d.lang AS neighbor_lang,
+        len(string_split(trim(d.text), ' '))::BIGINT AS neighbor_n_words
+    FROM topk
+    JOIN documents d ON d.doc_id = topk.neighbor_id
+""")
+def q_semantic_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The RAG retrieval composition: ANN neighbors JOINED BACK to the
+    document table for the payload a retrieval-augmented pipeline
+    actually hands to the generator (here lang + word count; in
+    production the chunk text). vec_id ≡ doc_id by construction in the
+    testdata — the cross-modal key every embedding pipeline maintains.
+
+    The retrieval leg is the MATERIALIZED IVF index (the same
+    fingerprint-cached artifact q_ann_index_probe reads — built once,
+    probed by every retrieval query): nprobe=2 bucket probing with
+    dynamic partition pruning, so at 100 TB the scan touches only the
+    probed bucket partitions, never the corpus (r6 VERDICT item 3 —
+    previously this composed on exact brute force; the exact form
+    remains available as q_embedding_topk / q_ann_recall's mirror).
+    Then ONE broadcast-able equi-join on the neighbor id — the metadata
+    join touches k×|queries| rows."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ann_against_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    queries = emb.filter(F.col("vec_id") < 5)
+    idx = _materialized_ivf_index(spark, sf_dir)
+    topk = ann_against_index(queries, spark, idx, k=3, nprobe=2)
+    meta = docs.select(
+        F.col("doc_id").alias("neighbor_id"),
+        F.col("lang").alias("neighbor_lang"),
+        F.size(words(F.trim(F.col("text")))).cast("long").alias(
+            "neighbor_n_words"
+        ),
+    )
+    return topk.join(meta, on="neighbor_id").select(
+        "query_id", "neighbor_id", "rank", "neighbor_lang",
+        "neighbor_n_words",
+    )
+
+
+def _kmeans_cte_sql(k: int = 4, iters: int = 2, dim: int = 64) -> str:
+    """WITH-clause body mirroring operators.similarity.kmeans_assign:
+    ``iters`` unrolled Lloyd rounds (seeds = k lowest-id vectors,
+    argmax-dot assignment with lowest-cid tie-break, centroid components
+    = exact integer-micro sums divided back to double in one fp op —
+    identical to the Spark side by construction). The final assignment
+    CTE is ``m{iters-1}`` (vec_id, v, cid)."""
+    sums = ",\n               ".join(
+        f"CAST(SUM(CAST(round(v[{d + 1}] * 1000000, 0) AS BIGINT))"
+        f" AS BIGINT) AS s{d}"
+        for d in range(dim)
+    )
+    divs = ", ".join(f"s{d} / (n * 1000000.0)" for d in range(dim))
+    parts = [
+        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
+        " FROM embeddings)",
+        "c0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec"
+        f" FROM embeddings ORDER BY vec_id ASC LIMIT {k})",
+    ]
+    for it in range(iters):
+        parts.append(
+            f"a{it} AS (SELECT e.vec_id, e.v, c{it}.cid,"
+            " row_number() OVER (PARTITION BY e.vec_id"
+            f" ORDER BY list_dot_product(e.v, c{it}.cvec) DESC,"
+            f" c{it}.cid ASC) AS rn"
+            f" FROM e CROSS JOIN c{it})"
+        )
+        parts.append(
+            f"m{it} AS (SELECT vec_id, v, cid FROM a{it} WHERE rn = 1)"
+        )
+        if it < iters - 1:
+            parts.append(
+                f"g{it} AS (SELECT cid, COUNT(*) AS n,\n               "
+                f"{sums}\n           FROM m{it} GROUP BY cid)"
+            )
+            parts.append(
+                f"c{it + 1} AS (SELECT cid, list_value({divs}) AS cvec"
+                f" FROM g{it})"
+            )
+    return ",\n    ".join(parts)
+
+
+# Distributed k-means assignment (q_kmeans_assign): two
+# unrolled Lloyd rounds, integer-micro centroids — see _kmeans_cte_sql.
+@query(f"""
+    WITH {_kmeans_cte_sql(k=4, iters=2, dim=64)}
+    SELECT vec_id, cid AS cluster_id FROM m1
+""")
+def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed spherical k-means (2 unrolled Lloyd rounds, k=4,
+    lowest-id seeds) over the embedding corpus — the clustering stage
+    of SemDedup-style curation (operators/similarity.py::kmeans_assign).
+    Assignment is a map-side-combinable max_by aggregate (never a
+    per-vector window); centroid updates are exact integer-micro sums,
+    so the result is identical under any partitioning and the DuckDB
+    oracle can mirror it verbatim (two unrolled CTE rounds, the
+    q_pagerank discipline)."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        kmeans_assign,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return kmeans_assign(
+        emb, "vec_id", "embedding", k=4, iters=2, dim=EMBEDDING_DIM
+    ).select("vec_id", "cluster_id")
+
+
+# SemDedup (q_semdedup): cluster-blocked cosine pairs, the
+# higher id of every pair with cos >= 0.2 is dropped (keep-lowest).
+@query(f"""
+    WITH {_kmeans_cte_sql(k=8, iters=2, dim=64)},
+    dropped AS (
+        SELECT DISTINCT b.vec_id
+        FROM m1 a JOIN m1 b ON a.cid = b.cid AND a.vec_id < b.vec_id
+        WHERE list_cosine_similarity(a.v, b.v) >= 0.2
+    )
+    SELECT
+        m1.vec_id,
+        m1.cid AS cluster_id,
+        (dropped.vec_id IS NULL) AS kept
+    FROM m1 LEFT JOIN dropped ON m1.vec_id = dropped.vec_id
+""")
+def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDedup (arXiv:2303.09540): embedding-space near-dup pruning
+    with cluster-blocked pairwise work — cosine pairs are computed only
+    within a k-means cluster (candidate volume Σ cluster², never
+    corpus²), and the higher id of every pair with cos ≥ 0.2 is
+    dropped (keep-lowest representative, the exact_dedup_groups rule).
+    The threshold matches q_embedding_dup's measured near-isotropy of
+    the test embeddings (0.5 would be trivially empty).
+
+    k IS the scale knob: cluster size ≈ n/k, pair volume ≈ n²/k, so k
+    must grow with the corpus to keep cluster size (and per-cluster
+    pair work) bounded — fixed-k is quadratic BY DESIGN and the ×10
+    probe in SCALE.md measures both regimes. The declared form pins
+    k=8 for the oracle; a production run sizes k = n / target_cluster.
+
+    The cluster assignment is read from a FINGERPRINT-CACHED
+    materialized table (built once by kmeans_assign, like the LSH pair
+    graph — cluster once, prune repeatedly; also avoids an in-query
+    persist whose cache this stateless query contract could never
+    release, r7 review finding). The oracle recomputes the same
+    assignment from the frozen universe."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        kmeans_assign,
+        semdedup_prune,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = _materialized(
+        spark,
+        sf_dir,
+        "kmeans_k8_i2",
+        "embeddings",
+        lambda p: kmeans_assign(
+            emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM
+        ).write.mode("overwrite").parquet(f"{p}/assign"),
+    )
+    assign = spark.read.parquet(f"{path}/assign")
+    return semdedup_prune(
+        emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM,
+        threshold=0.2, assign=assign,
+    )
+
+
+# Scaled-blocker plane sizing, ONE shared integer rule (inlined into the
+# oracle SQL too): the smallest p with 2^p >= n / TARGET_BUCKET is
+# length(bin((n-1) div TARGET_BUCKET)) — bin() exists in BOTH engines
+# and length(bin(q)) = floor(log2(q)) + 1 for q >= 1, so no float log
+# ever decides a knob. (n-1) div TARGET < 1 (tiny corpus) floors at one
+# plane. DIV truncates toward zero in both engines; n >= 1 keeps the
+# operand non-negative anyway.
+SEMDEDUP_TARGET_BUCKET = 128
+
+
+SEMDEDUP_MAX_PLANES = 16
+
+
+SEMDEDUP_PLANES_EXPR = (
+    "CASE WHEN ({n} - 1) DIV 128 < 1 THEN 1"
+    " ELSE length(bin(({n} - 1) DIV 128)) END"
+)
+
+
+def _hyperplane_bucket_sql(
+    vec_expr: str, dim: int = 64, n_planes: int = 4, seed: int = 0
+) -> str:
+    """SQL for operators.similarity.hyperplane_sign_bucket: the ±1 weights
+    depend only on md5 of '{seed}|{plane}|{dim}' constants, so they are
+    precomputed here (hashlib.md5 == Spark md5 on utf-8) and inlined as
+    literal arrays — DuckDB then reproduces the exact sign pattern."""
+    bits = []
+    for p in range(n_planes):
+        w = []
+        for d in range(dim):
+            h = hashlib.md5(f"{seed}|{p}|{d}".encode()).hexdigest()
+            w.append("1.0" if h[0] in "89abcdef" else "-1.0")
+        arr = "[" + ", ".join(w) + "]"
+        bits.append(
+            "(CASE WHEN list_dot_product(CAST("
+            f"{vec_expr} AS DOUBLE[]), {arr}) >= 0 "
+            "THEN '1' ELSE '0' END)"
+        )
+    return " || ".join(bits)
+
+
+# SemDedup, SCALED-BLOCKER regime (q_semdedup_scaled): the
+# bucket is the first p sign bits of the 16-plane hyperplane pattern,
+# p from the shared all-integer rule (SEMDEDUP_PLANES_EXPR — spelled
+# with // here, DIV there; both truncate toward zero and bin()/length()
+# agree). The frozen-universe mirror of the fingerprint-cached
+# assignment artifact, like q_semdedup's kmeans CTE.
+@query(f"""
+    WITH cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
+    assign AS (
+        SELECT
+            vec_id,
+            CAST(embedding AS DOUBLE[]) AS v,
+            substr(
+                {_hyperplane_bucket_sql("embedding", 64, 16)},
+                1,
+                (SELECT CASE WHEN (n - 1) // 128 < 1 THEN 1
+                        ELSE length(bin((n - 1) // 128)) END FROM cnt)
+            ) AS cluster_id
+        FROM embeddings
+    ),
+    dropped AS (
+        SELECT DISTINCT b.vec_id
+        FROM assign a
+        JOIN assign b
+          ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
+        WHERE list_cosine_similarity(a.v, b.v) >= 0.2
+    )
+    SELECT
+        assign.vec_id,
+        assign.cluster_id,
+        (dropped.vec_id IS NULL) AS kept
+    FROM assign LEFT JOIN dropped ON assign.vec_id = dropped.vec_id
+""")
+def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDedup in the SCALED-BLOCKER regime — the production form the
+    fixed-k q_semdedup deliberately is not (its k=8 pins cluster size
+    ∝ n, pair volume ∝ n²/k: quadratic BY KNOB CHOICE, measured in
+    SCALE.md r9). Here the blocker count grows WITH the corpus so
+    expected bucket size stays ≈ SEMDEDUP_TARGET_BUCKET: the bucket is
+    the first p sign bits of the deterministic 16-plane hyperplane
+    pattern (hyperplane_sign_bucket — the same LSH family the ANN stack
+    uses; the paper's faiss-IVF blocker played by the O(n·planes)
+    bucketer), with p = length(bin((n−1) div 128)) — an ALL-INTEGER
+    sizing rule shared textually with the oracle (SEMDEDUP_PLANES_EXPR),
+    no float log anywhere. Pair volume is Σ bucket² ≈ (n/128)·128² =
+    128·n — LINEAR in the corpus (probed: tools/probe_semdedup_scaled.py
+    measured 1.5× wall on 100× vectors in exactly this regime).
+
+    The corpus count enters as a 1-row broadcast aggregate inside the
+    ARTIFACT BUILD (never a driver-side collect); the assignment is a
+    fingerprint-cached materialized table (the q_semdedup /
+    q_ann_index_probe discipline — block once, prune repeatedly), and
+    the prune is semdedup_prune's guarded assign path: coverage of the
+    corpus is enforced per-row, so a stale table fails loudly. At sf0.01
+    (500 vecs) the rule gives 2 planes / 4 buckets; at sf0.1 (2000) 4
+    planes / 16 buckets — the bucket count demonstrably scales.
+
+    Returns (vec_id, cluster_id, kept) with cluster_id the bit-string
+    bucket; kept=false for the higher id of every within-bucket pair
+    with cosine ≥ 0.2 (keep-lowest, the exact_dedup_groups rule)."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        hyperplane_sign_bucket,
+        semdedup_prune,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def _build(p: str) -> None:
+        n1 = emb.agg(F.count(F.lit(1)).cast("long").alias("__n"))
+        staged = (
+            emb.crossJoin(F.broadcast(n1))
+            .select(
+                "vec_id",
+                F.col("embedding").alias("v"),
+                hyperplane_sign_bucket(
+                    F.col("embedding"),
+                    EMBEDDING_DIM,
+                    SEMDEDUP_MAX_PLANES,
+                ).alias("__bits"),
+                F.expr(SEMDEDUP_PLANES_EXPR.format(n="__n"))
+                .cast("int")
+                .alias("__p"),
+            )
+            .select(
+                "vec_id",
+                "v",
+                F.col("__bits")
+                .substr(F.lit(1), F.col("__p"))
+                .alias("cluster_id"),
+            )
+        )
+        staged.write.mode("overwrite").parquet(f"{p}/assign")
+
+    path = _materialized(
+        spark, sf_dir, "semdedup_blocker_p16t128", "embeddings", _build
+    )
+    assign = spark.read.parquet(f"{path}/assign")
+    return semdedup_prune(
+        emb, "vec_id", "embedding", threshold=0.2, assign=assign
+    )
+
+
+# q_embedding_lsh_topk — same md5-derived hyperplane buckets as the Spark
+# plan (operators/similarity.py:98, n_planes=4 seed=0), candidates only
+# within the shared bucket, exact cosine rank among candidates.
+@query(f"""
+    WITH e AS (
+        SELECT
+            vec_id,
+            CAST(embedding AS DOUBLE[]) AS v,
+            {_hyperplane_bucket_sql("embedding", n_planes=4, seed=0)} AS bucket
+        FROM embeddings
+    )
+    SELECT
+        q.vec_id AS query_id,
+        c.vec_id AS neighbor_id,
+        CAST(row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) AS INT) AS rank
+    FROM e c
+    JOIN (SELECT * FROM e WHERE vec_id < 5) q ON c.bucket = q.bucket
+    WHERE c.vec_id != q.vec_id
+    QUALIFY rank <= 10
+""")
+def q_embedding_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k via random-hyperplane LSH buckets (the 100 TB
+    path: bucket join instead of full cross join). ORACLE-CHECKED since
+    round 4: the md5-derived planes are deterministic, so the DuckDB
+    mirror reproduces the exact bucket assignment and ranking — don't
+    change tie-breaks or FP expression order without updating the
+    oracle."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    return lsh_bucketed_topk(
+        emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
+    )
+
+
+# q_ann_recall — recall@10 of the LSH approximate ranking vs the exact
+# brute-force ranking, composed from the two existing deterministic
+# mirrors as CTEs.
+@query(f"""
+    WITH exact AS ({q_embedding_topk.oracle}),
+    approx AS ({q_embedding_lsh_topk.oracle})
+    SELECT
+        e.query_id,
+        CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_matched,
+        round(COUNT(a.neighbor_id) / 10.0, 6) AS recall_at_10
+    FROM exact e
+    LEFT JOIN approx a
+      ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+    GROUP BY e.query_id
+""")
+def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN quality observability: recall@10 of the hyperplane-LSH top-k
+    against the brute-force exact top-k, per query, as ONE DataFrame
+    plan (left join exact→approx on the pair, count hits). The metric a
+    production ANN pipeline tracks continuously — approximation quality
+    becomes a driver-checkable number instead of a docstring claim.
+    Both rankings are deterministic, so the oracle composes the two
+    existing SQL mirrors as CTEs."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine_topk,
+        lsh_bucketed_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10)
+    approx = lsh_bucketed_topk(
+        emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
+    )
+    return _recall_join(exact, approx, k=10)
+
+
+# q_embedding_quantize — symmetric int8 per-vector max-abs quantization,
+# exploded to scalar rows; same (x*127)/m expression order → identical FP.
+@query("""
+    WITH e AS (
+        SELECT
+            vec_id,
+            CAST(embedding AS DOUBLE[]) AS v,
+            list_max(list_transform(CAST(embedding AS DOUBLE[]),
+                                    x -> abs(x))) AS m
+        FROM embeddings
+    )
+    SELECT
+        vec_id,
+        CAST(i - 1 AS INT) AS dim_idx,
+        CAST(CASE WHEN m = 0 THEN 0
+                  ELSE round(v[i] * 127.0 / m, 0) END AS INT) AS q
+    FROM e, unnest(generate_series(1, len(v))) AS g(i)
+""")
+def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric int8 quantization of the embedding column (per-vector
+    max-abs scale, the storage-efficiency op for 100 TB embedding
+    tables: 4 bytes/dim → 1). Emitted exploded as (vec_id, dim_idx, q)
+    so the check is value-exact; map-only, zero shuffles (plus the
+    shared ensure_parallelism guard: the per-element HOF + 64-way
+    posexplode is compute-bound and a small parquet's single split
+    serializes it — r9 full-surface ×10 sweep finding). Zero vectors
+    quantize to zeros (guarded divide)."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+
+    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    v = F.col("embedding")
+    maxabs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
+    d = emb.select(
+        "vec_id",
+        F.posexplode(v).alias("dim_idx", "x"),
+        maxabs.alias("m"),
+    )
+    q = F.when(F.col("m") == 0, F.lit(0)).otherwise(
+        F.round(F.col("x").cast("double") * 127.0 / F.col("m"), 0)
+    )
+    return d.select(
+        "vec_id",
+        F.col("dim_idx").cast("int").alias("dim_idx"),
+        q.cast("int").alias("q"),
+    )
+
+
+# q_random_projection — same md5-derived ±1 JL matrix as
+# operators/features.py::random_projection, inlined as literal arrays;
+# DuckDB list_dot_product sums in index order = Spark's sequential fold,
+# and both round to 6 → bit-identical output.
+def _rp_cols_sql(in_dim: int = 64, out_dim: int = 16, seed: int = 0) -> str:
+    import math
+
+    scale = 1.0 / math.sqrt(out_dim)
+    cols = []
+    for j in range(out_dim):
+        w = [
+            "1.0"
+            if hashlib.md5(f"rp|{seed}|{j}|{i}".encode()).hexdigest()[0]
+            in "89abcdef"
+            else "-1.0"
+            for i in range(in_dim)
+        ]
+        arr = "[" + ", ".join(w) + "]"
+        cols.append(
+            f"round(list_dot_product(CAST(embedding AS DOUBLE[]), {arr})"
+            f" * {scale!r}, 6) AS d{j}"
+        )
+    return ",\n        ".join(cols)
+
+
+@query(f"""
+    SELECT
+        vec_id,
+        {_rp_cols_sql()}
+    FROM embeddings
+""")
+def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Johnson–Lindenstrauss ±1 random projection 64→16 dims (md5-derived
+    deterministic matrix, map-only, zero shuffles) — the cheap
+    dimensionality reduction in front of ANN indexing."""
+    from telecom_competitor_analysis_spark.operators.features import (
+        random_projection,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return random_projection(
+        emb, "vec_id", "embedding", in_dim=EMBEDDING_DIM, out_dim=16
+    )
+
+
+# q_embedding_ivf_topk — anchors are the 8 lowest-vec_id corpus vectors
+# (operators/similarity.py:155, deterministic, no fit), nearest-anchor
+# assignment by max dot product with lowest-anchor-id tie-break, nprobe=1.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    b AS (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign WHERE rn = 1
+    )
+    SELECT
+        q.vec_id AS query_id,
+        c.vec_id AS neighbor_id,
+        CAST(row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) AS INT) AS rank
+    FROM b c
+    JOIN (SELECT * FROM b WHERE vec_id < 5) q ON c.bucket = q.bucket
+    WHERE c.vec_id != q.vec_id
+    QUALIFY rank <= 10
+""")
+def q_embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF approximate top-k (anchor-quantized buckets, nprobe=1) — the
+    second scale path next to hyperplane LSH. ORACLE-CHECKED since
+    round 4: lowest-id anchors make the quantization deterministic and
+    SQL-reproducible — keep tie-breaks and expression order in sync
+    with the oracle."""
+    from telecom_competitor_analysis_spark.operators.similarity import ivf_topk
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    return ivf_topk(emb, queries, k=10, n_anchors=8)
+
+
+EMBEDDING_LSH_BANDS = 2  # OR-amplification: pair found if ANY band collides
+
+
+@query(f"""
+        WITH e AS (
+            SELECT
+                vec_id, label, embedding,
+                {_hyperplane_bucket_sql("embedding", seed=0)} AS b0,
+                {_hyperplane_bucket_sql("embedding", seed=1)} AS b1
+            FROM embeddings
+        ),
+        cand AS (
+            SELECT DISTINCT a.label, a.vec_id AS id_a, b.vec_id AS id_b
+            FROM e a JOIN e b
+              ON a.label = b.label AND a.b0 = b.b0 AND a.vec_id < b.vec_id
+            UNION
+            SELECT DISTINCT a.label, a.vec_id AS id_a, b.vec_id AS id_b
+            FROM e a JOIN e b
+              ON a.label = b.label AND a.b1 = b.b1 AND a.vec_id < b.vec_id
+        )
+        SELECT
+            c.label,
+            c.id_a,
+            c.id_b,
+            round(list_cosine_similarity(
+                CAST(va.embedding AS DOUBLE[]),
+                CAST(vb.embedding AS DOUBLE[])), 6) AS cos_r
+        FROM cand c
+        JOIN embeddings va ON va.vec_id = c.id_a
+        JOIN embeddings vb ON vb.vec_id = c.id_b
+        WHERE list_cosine_similarity(
+                CAST(va.embedding AS DOUBLE[]),
+                CAST(vb.embedding AS DOUBLE[])) >= 0.2
+    """)
+def q_embedding_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup pairs, multi-band LSH-blocked: a pair is
+    a candidate if the two vectors share their hyperplane-sign bucket in
+    ANY of the bands (2 independent 4-plane bands, seeds 0/1) — the
+    standard LSH OR-amplification, expressed as a UNION of per-band
+    equi-joins + pair distinct (never an OR join condition, which would
+    degrade to a per-label nested loop). Candidate volume stays Σ bucket²
+    per band; recall stacks across bands (measured on the near-isotropic
+    test embeddings at cos≥0.2: ~10% per band, 21% with both, for 13% of
+    the label-blocked candidate volume — production tunes bands/planes to
+    the similarity regime, where true near-dups (cos≥0.9) collide at
+    ~75-95% per band). Deterministic (md5-derived hyperplanes) so the
+    DuckDB oracle reproduces the same buckets from the same weights.
+
+    Threshold 0.2: the synthetic embeddings are near-isotropic (max
+    within-label cosine ≈ 0.48), so a 0.5 cutoff would make the result
+    trivially empty — 0.2 exercises real pair volume through the whole
+    block-score-filter plan at every test SF."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        dot_product,
+        hyperplane_sign_bucket,
+        l2_norm,
+    )
+
+    # The signature table (label, id, per-band buckets, norm, vector) is
+    # materialized ONCE (persist — the local stand-in for writing
+    # signatures to a table, which every production LSH pipeline does):
+    # the per-band self-joins and the scoring joins all read it, instead
+    # of re-running the interpreted array-fold bucket computation for
+    # every join side (4× otherwise). persist(), not a lazy
+    # localCheckpoint: checkpoint physically plans at build time (~2 s,
+    # r5 profile) while persist defers everything to first execution.
+    # ensure_parallelism: a small parquet arrives as ONE split, which
+    # would serialize the fold work onto a single core; no-op
+    # (conf-gated) on a real cluster.
+    base = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    sigs = base.select(
+        "label",
+        "vec_id",
+        *[
+            hyperplane_sign_bucket(
+                F.col("embedding"), EMBEDDING_DIM, n_planes=4, seed=s
+            ).alias(f"b{s}")
+            for s in range(EMBEDDING_LSH_BANDS)
+        ],
+        l2_norm(F.col("embedding")).alias("nrm"),
+        "embedding",
+    ).persist()
+
+    cand = None
+    for band in range(EMBEDDING_LSH_BANDS):
+        a = sigs.select(
+            F.col("label"),
+            F.col(f"b{band}").alias("bucket"),
+            F.col("vec_id").alias("id_a"),
+        )
+        b = sigs.select(
+            F.col("label"),
+            F.col(f"b{band}").alias("bucket"),
+            F.col("vec_id").alias("id_b"),
+        )
+        band_pairs = (
+            a.join(b, on=["label", "bucket"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("label", "id_a", "id_b")
+        )
+        cand = band_pairs if cand is None else cand.unionByName(band_pairs)
+    cand = cand.distinct()
+
+    va = sigs.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("vec_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    vb = sigs.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vec_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    return (
+        cand.join(va, on="id_a")
+        .join(vb, on="id_b")
+        .withColumn(
+            "cos",
+            dot_product(F.col("vec_a"), F.col("vec_b"))
+            / (F.col("nrm_a") * F.col("nrm_b")),
+        )
+        .filter(F.col("cos") >= 0.2)
+        .select("label", "id_a", "id_b", F.round(F.col("cos"), 6).alias("cos_r"))
+    )
+
+
+BM25_TERMS = ("spark", "data")
+
+
+BM25_K1 = 1.2
+
+
+BM25_B = 0.75
+
+
+@query("""
+        WITH scored AS (
+            SELECT
+                doc_id,
+                CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS dl,
+                CAST(len(list_filter(string_split(lower(text), ' '),
+                    w -> w = 'spark')) AS BIGINT) AS tf_0,
+                CAST(len(list_filter(string_split(lower(text), ' '),
+                    w -> w = 'data')) AS BIGINT) AS tf_1
+            FROM documents
+        ),
+        stats AS (
+            SELECT
+                COUNT(*) AS n_docs,
+                CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl,
+                CAST(SUM(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
+                CAST(SUM(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1
+            FROM scored
+        )
+        SELECT
+            doc_id,
+            dl,
+            tf_0,
+            tf_1,
+            round(
+                ln((n_docs - CAST(df_0 AS DOUBLE) + 0.5)
+                   / (CAST(df_0 AS DOUBLE) + 0.5) + 1.0)
+                  * CAST(tf_0 AS DOUBLE) * (1.2 + 1.0)
+                  / (CAST(tf_0 AS DOUBLE)
+                     + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))
+                + ln((n_docs - CAST(df_1 AS DOUBLE) + 0.5)
+                     / (CAST(df_1 AS DOUBLE) + 0.5) + 1.0)
+                  * CAST(tf_1 AS DOUBLE) * (1.2 + 1.0)
+                  / (CAST(tf_1 AS DOUBLE)
+                     + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl)),
+                4) AS bm25_r
+        FROM scored CROSS JOIN stats
+        WHERE tf_0 + tf_1 > 0
+    """)
+def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 ranking of documents for a fixed two-term query — the text
+    retrieval counterpart to embedding similarity. Exact integer tf/df/dl
+    statistics; the one-row corpus stats (N, avgdl, df per term) broadcast
+    into a map-only scoring pass. Score rounded for cross-engine float
+    parity; full scored set returned (no top-k) so ordering can't bite."""
+    docs = load_table(spark, sf_dir, "documents")
+    w = F.split(F.lower(F.col("text")), " ")
+    def term_pred(term: str):
+        # NB: a `lambda x, t=term` default-arg closure would give F.filter
+        # a two-parameter lambda, which it interprets as (element, INDEX)
+        return lambda x: x == term
+
+    tf_cols = [
+        F.size(F.filter(w, term_pred(t))).cast("long").alias(f"tf_{i}")
+        for i, t in enumerate(BM25_TERMS)
+    ]
+    scored = docs.select(
+        "doc_id", F.size(w).cast("long").alias("dl"), *tf_cols
+    )
+    stats = scored.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0))
+            .cast("long")
+            .alias(f"df_{i}")
+            for i in range(len(BM25_TERMS))
+        ],
+    )
+    joined = scored.crossJoin(F.broadcast(stats))
+    score = F.lit(0.0)
+    for i in range(len(BM25_TERMS)):
+        tf = F.col(f"tf_{i}").cast("double")
+        df_t = F.col(f"df_{i}").cast("double")
+        idf = F.log(
+            (F.col("n_docs") - df_t + 0.5) / (df_t + 0.5) + 1.0
+        )
+        norm = tf + BM25_K1 * (
+            1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
+        )
+        score = score + idf * tf * (BM25_K1 + 1.0) / norm
+    return joined.filter(
+        sum(F.col(f"tf_{i}") for i in range(len(BM25_TERMS))) > 0
+    ).select(
+        "doc_id",
+        "dl",
+        *[f"tf_{i}" for i in range(len(BM25_TERMS))],
+        F.round(score, 4).alias("bm25_r"),
+    )
+
+
+_CENT_LIST = ", ".join(f"c{i}" for i in range(64))
+
+
+_CENT_AVGS = ", ".join(f"avg(v[{i + 1}]) AS c{i}" for i in range(64))
+
+
+@query(f"""
+    WITH e AS (
+        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings
+    ),
+    cm AS (
+        SELECT label, {_CENT_AVGS} FROM e GROUP BY label
+    ),
+    c AS (
+        SELECT label, [{_CENT_LIST}] AS cvec FROM cm
+    )
+    SELECT
+        e.vec_id,
+        e.label,
+        round(list_cosine_similarity(e.v, c.cvec), 6) AS cos_centroid,
+        CAST(row_number() OVER (
+            PARTITION BY e.label
+            ORDER BY round(list_cosine_similarity(e.v, c.cvec), 6) ASC,
+                     e.vec_id ASC
+        ) AS INT) AS outlier_rank
+    FROM e JOIN c USING (label)
+""")
+def q_embedding_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-centroid outlier scoring: cosine of each vector to its
+    label's elementwise-mean centroid + per-label outlier rank (rank 1 =
+    farthest). The embedding-space data-cleaning pass — mislabeled/noise
+    candidates surface as low-cosine rows. Centroids come from ONE
+    partial-aggregated shuffle (64 avg columns, |labels| rows) and join
+    back broadcast; scoring is map-only."""
+    from telecom_competitor_analysis_spark.operators.features import (
+        embedding_centroid_outliers,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return embedding_centroid_outliers(
+        emb, "vec_id", "embedding", "label", dim=EMBEDDING_DIM
+    )
+
+
+# q_bm25_search — inverted-index BM25 (operators/search.py::bm25_topk,
+# k1=1.2 b=0.75, Lucene +1-inside-log idf, probe terms join/filter/window).
+# Per-(doc,term) scores round to integer micro-units BEFORE the cross-term
+# sum (double sums are order-dependent); expression order mirrors the
+# Spark plan left-to-right so both engines emit identical doubles.
+@query("""
+    WITH d AS (
+        SELECT doc_id AS id, trim(text) AS t FROM documents
+    ),
+    dl AS (
+        SELECT id, CAST(len(string_split(t, ' ')) AS DOUBLE) AS dl FROM d
+    ),
+    stats AS (
+        SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, AVG(dl) AS avgdl FROM dl
+    ),
+    tf AS (
+        SELECT id, w, CAST(COUNT(*) AS DOUBLE) AS tf
+        FROM d, unnest(string_split(t, ' ')) AS u(w)
+        WHERE w IN ('join', 'filter', 'window')
+        GROUP BY id, w
+    ),
+    dfreq AS (
+        SELECT w, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY w
+    )
+    SELECT
+        id AS doc_id,
+        CAST(SUM(CAST(round(
+            ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+              * tf * 2.2
+              / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))
+            * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS score_micro
+    FROM tf
+    JOIN dfreq USING (w)
+    JOIN dl USING (id)
+    CROSS JOIN stats
+    GROUP BY id
+    ORDER BY score_micro DESC, id ASC
+    LIMIT 20
+""")
+def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 keyword retrieval (operators/search.py): top-20 documents for
+    the probe terms join/filter/window — the retrieval step of
+    retrieval-augmented curation. Inverted-index shape: only postings for
+    the probe terms leave the map side; corpus stats ride a one-row
+    broadcast. Scores in integer micro-units (summed AFTER rounding —
+    raw-double sums are order-dependent)."""
+    from telecom_competitor_analysis_spark.operators.search import bm25_topk
+
+    # Complements q_bm25 (above): that one is the MAP-ONLY wide-column
+    # form (per-term tf columns, full scored set — right for 2-3 fixed
+    # terms fused into a scan); this is the INVERTED-INDEX form (postings
+    # explode + top-k — right when the term list or k grows, the shape a
+    # retrieval service actually runs).
+    docs = load_table(spark, sf_dir, "documents")
+    return bm25_topk(
+        docs, "doc_id", "text", terms=["join", "filter", "window"], k=20
+    ).withColumnRenamed("id", "doc_id")
+
+
+# Materialized-IVF ANN probe (q_ann_index_probe): identical
+# quantization to q_embedding_ivf_topk, but the query side probes its
+# TWO nearest anchor buckets (rn <= 2) — candidates are the union of
+# both probed partitions; a corpus vector lives in exactly one bucket,
+# so the union is duplicate-free and the rank is a plain top-k.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign WHERE rn = 1
+    ),
+    q AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE vec_id < 5 AND rn <= 2
+    )
+    SELECT
+        q.vec_id AS query_id,
+        c.vec_id AS neighbor_id,
+        CAST(row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) AS INT) AS rank
+    FROM c
+    JOIN q ON c.bucket = q.bucket
+    WHERE c.vec_id != q.vec_id
+    QUALIFY rank <= 10
+""")
+def q_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-k against a MATERIALIZED IVF index
+    (operators/similarity.py::build_ivf_index / ann_against_index) —
+    the similarity twin of q_dedup_incremental: the corpus is quantized
+    once into bucket-partitioned parquet (fingerprint-cached); the
+    query batch probes its nprobe=2 nearest anchor buckets, and the
+    broadcast probe join on the partition column lets dynamic partition
+    pruning skip every unprobed bucket at scan time. Query-time recall
+    tuning (nprobe) without touching the index. The build runs with the
+    max_bucket_size skew guard active (hot anchors hash-split into
+    bounded sub-partitions — answer-preserving, layout-only)."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ann_against_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivf_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5)
+    return ann_against_index(queries, spark, idx, k=10, nprobe=2)
+
+
+# q_ann_filtered (q_ann_filtered) — q_ann_index_probe's
+# frozen-universe IVF chain (8 lowest-id anchors, nprobe=2) with the
+# metadata predicate applied to the CANDIDATE side before the top-k
+# (pre-filtering): rank only label=3 vectors inside the probed buckets.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            e.label,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign
+        WHERE rn = 1 AND label = 3
+    ),
+    q AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE vec_id < 5 AND rn <= 2
+    )
+    SELECT
+        q.vec_id AS query_id,
+        c.vec_id AS neighbor_id,
+        CAST(row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) AS INT) AS rank
+    FROM c
+    JOIN q ON c.bucket = q.bucket
+    WHERE c.vec_id != q.vec_id
+    QUALIFY rank <= 10
+""")
+def q_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FILTERED vector search — top-k under a metadata predicate
+    (label = 3), the retrieval shape every production vector store
+    serves ("nearest docs WHERE lang='en' AND license='permissive'").
+    PRE-filtering, not post-filtering: the predicate applies to the
+    index scan BEFORE the top-k window, so each query gets k qualifying
+    neighbors whenever the probed buckets hold that many (post-filtering
+    an unfiltered top-k silently returns fewer than k). The label rides
+    INLINE in the materialized IVF index rows (build-time
+    ``carry_cols`` — the Milvus/Vespa scalar-field design), so the plan
+    is: dynamic partition pruning on the probed buckets AND a pushed
+    parquet filter on label, zero metadata join-back. At 100 TB the
+    alternative — joining the index scan to a metadata table before the
+    top-k — is a second corpus-sized shuffle; carrying the column
+    deletes it. Same frozen-universe oracle chain as q_ann_index_probe
+    with the filter on the candidate side."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ann_against_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivf_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5)
+    return ann_against_index(
+        queries,
+        spark,
+        idx,
+        k=10,
+        nprobe=2,
+        pre_filter=F.col("label") == 3,
+    )
+
+
+# Reciprocal Rank Fusion of BM25 + cosine retrieval
+# (q_rrf_fusion): rank-only fusion, micro-rounded 1/(60+r)
+# contributions summed as integers. The lexical leg embeds the
+# q_bm25_search oracle verbatim; the semantic leg is the
+# q_embedding_topk cosine shape anchored on vec_id 0.
+@query(f"""
+    WITH lex_scores AS ({q_bm25_search.oracle}),
+    lex AS (
+        SELECT doc_id,
+               CAST(row_number() OVER (
+                   ORDER BY score_micro DESC, doc_id ASC
+               ) AS INT) AS rank_lex
+        FROM lex_scores
+    ),
+    sem AS (
+        SELECT c.vec_id AS doc_id,
+               CAST(row_number() OVER (
+                   ORDER BY list_cosine_similarity(
+                       CAST(c.embedding AS DOUBLE[]),
+                       CAST(q.embedding AS DOUBLE[])) DESC,
+                   c.vec_id ASC
+               ) AS INT) AS rank_sem
+        FROM embeddings c
+        CROSS JOIN (SELECT * FROM embeddings WHERE vec_id = 0) q
+        WHERE c.vec_id != q.vec_id
+        QUALIFY rank_sem <= 20
+    ),
+    fused AS (
+        SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id,
+               rank_lex,
+               rank_sem,
+               (CASE WHEN rank_lex IS NOT NULL
+                     THEN CAST(round(1000000.0 / (60.0 + rank_lex), 0)
+                               AS BIGINT) ELSE 0 END
+              + CASE WHEN rank_sem IS NOT NULL
+                     THEN CAST(round(1000000.0 / (60.0 + rank_sem), 0)
+                               AS BIGINT) ELSE 0 END) AS rrf_micro
+        FROM lex l FULL OUTER JOIN sem s ON l.doc_id = s.doc_id
+    )
+    SELECT doc_id, rank_lex, rank_sem, rrf_micro,
+           CAST(row_number() OVER (
+               ORDER BY rrf_micro DESC, doc_id ASC
+           ) AS INT) AS fused_rank
+    FROM fused
+    QUALIFY fused_rank <= 10
+""")
+def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid retrieval with Reciprocal Rank Fusion (Cormack et al.
+    SIGIR'09, the fusion every hybrid lexical+vector search service
+    runs): the BM25 top-20 for the probe terms (the q_bm25_search
+    inverted-index leg) and the exact cosine top-20 for the anchor
+    query vector (vec_id 0; vec_id ≡ doc_id, the cross-modal key)
+    fuse by summed 1/(60+rank) contributions; top-10 fused results.
+    RANK-ONLY fusion is the point — RRF never compares raw scores
+    across scoring scales, so the two legs need no calibration.
+
+    Scale shape: each leg ends in its own distributed partial top-k
+    (BM25's postings-only window, cosine's WindowGroupLimit) BEFORE
+    fusion, so the fusion input is ≤ k_lex + k_sem rows by
+    construction — the full-outer join and the two unpartitioned
+    rank windows run on ≤40 rows regardless of corpus size (a
+    bounded-by-construction global window, like the dynamic pivot's
+    capped phase 1 — NOT a corpus-scale sort). Contributions are
+    micro-rounded per leg before the integer sum (no cross-engine FP
+    drift; no rank denominator lands on a .5 tie)."""
+    from telecom_competitor_analysis_spark.operators.search import bm25_topk
+
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    lex_scores = bm25_topk(
+        docs, "doc_id", "text", terms=["join", "filter", "window"], k=20
+    )
+    w_lex = Window.orderBy(
+        F.col("score_micro").desc(), F.col("id").asc()
+    )
+    lex = lex_scores.select(
+        F.col("id").alias("doc_id"),
+        F.row_number().over(w_lex).cast("int").alias("rank_lex"),
+    )
+    sem = cosine_topk(
+        emb,
+        emb.filter(F.col("vec_id") == 0),
+        "vec_id",
+        "embedding",
+        k=20,
+    ).select(
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").cast("int").alias("rank_sem"),
+    )
+
+    def contrib(rank_col):
+        return (
+            F.when(
+                rank_col.isNotNull(),
+                F.round(
+                    F.lit(1000000.0) / (F.lit(60.0) + rank_col), 0
+                ).cast("long"),
+            )
+            .otherwise(F.lit(0).cast("long"))
+        )
+
+    fused = lex.join(sem, on="doc_id", how="full").select(
+        "doc_id",
+        "rank_lex",
+        "rank_sem",
+        (contrib(F.col("rank_lex")) + contrib(F.col("rank_sem"))).alias(
+            "rrf_micro"
+        ),
+    )
+    w_fused = Window.orderBy(F.col("rrf_micro").desc(), F.col("doc_id").asc())
+    return (
+        fused.withColumn(
+            "fused_rank", F.row_number().over(w_fused).cast("int")
+        )
+        .filter(F.col("fused_rank") <= 10)
+    )
+
+
+# q_pq_ann (q_pq_ann) — product quantization mirror:
+# identical micro-int quantization, codebook seeding (4 lowest-id
+# vectors), per-subspace nearest-code assignment (ties -> lowest code),
+# ADC table, and top-10 per query by (approx_dist, vec_id). All
+# integer arithmetic — bit-identical across engines.
+# Shared PQ CTE chain (micro-int elements -> subvectors -> codebook ->
+# codes -> per-query ADC tables -> approx/exact distances -> ranked):
+# composed by BOTH q_pq_ann and q_pq_recall.
+_PQ_CTES = """
+    e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, i, CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    sub AS (
+        SELECT vec_id, (i - 1) // 8 AS j, (i - 1) % 8 AS p, x FROM elem
+    ),
+    cb AS (
+        SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS c
+        FROM (SELECT vec_id FROM e ORDER BY vec_id LIMIT 4)
+    ),
+    cbs AS (
+        SELECT cb.c, s.j, s.p, s.x FROM sub s JOIN cb USING (vec_id)
+    ),
+    dist AS (
+        SELECT s.vec_id, s.j, cbs.c,
+               CAST(SUM((s.x - cbs.x) * (s.x - cbs.x)) AS BIGINT) AS d
+        FROM sub s JOIN cbs ON s.j = cbs.j AND s.p = cbs.p
+        GROUP BY 1, 2, 3
+    ),
+    codes AS (
+        SELECT vec_id, j, c FROM (
+            SELECT vec_id, j, c,
+                   row_number() OVER (PARTITION BY vec_id, j
+                                      ORDER BY d, c) AS rn
+            FROM dist
+        ) WHERE rn = 1
+    ),
+    qsub AS (
+        SELECT vec_id AS qid, j, p, x FROM sub WHERE vec_id < 5
+    ),
+    adc AS (
+        SELECT q.qid, cbs.j, cbs.c,
+               CAST(SUM((q.x - cbs.x) * (q.x - cbs.x)) AS BIGINT) AS d
+        FROM qsub q JOIN cbs ON q.j = cbs.j AND q.p = cbs.p
+        GROUP BY 1, 2, 3
+    ),
+    approx AS (
+        SELECT adc.qid, codes.vec_id,
+               CAST(SUM(adc.d) AS BIGINT) AS approx_dist
+        FROM codes JOIN adc ON codes.j = adc.j AND codes.c = adc.c
+        GROUP BY 1, 2
+    ),
+    exact AS (
+        SELECT q.qid, s.vec_id,
+               CAST(SUM((s.x - q.x) * (s.x - q.x)) AS BIGINT) AS exact_dist
+        FROM sub s JOIN qsub q ON s.j = q.j AND s.p = q.p
+        GROUP BY 1, 2
+    ),
+    ranked AS (
+        SELECT a.qid, a.vec_id, a.approx_dist, x.exact_dist,
+               row_number() OVER (PARTITION BY a.qid
+                                  ORDER BY a.approx_dist, a.vec_id) AS rn
+        FROM approx a
+        JOIN exact x ON a.qid = x.qid AND a.vec_id = x.vec_id
+        WHERE a.vec_id != a.qid
+    )
+"""
+
+
+@query(f"""
+    WITH {_PQ_CTES}
+    SELECT qid AS query_id, vec_id, CAST(rn AS INT) AS rank,
+           approx_dist, exact_dist
+    FROM ranked WHERE rn <= 10
+""")
+def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN (Jégou et al., TPAMI 2011) — the
+    memory-bound ANN scale path, completing the family: LSH and IVF
+    prune WHICH vectors get scored; PQ compresses HOW each one is
+    scored. The 64-dim corpus is encoded as 8 sub-codes (k=4 per
+    subspace, codebooks seeded from the lowest-id vectors — the IVF
+    anchor convention, zero training iterations); each of the 5 query
+    vectors builds one 8×4 Asymmetric-Distance lookup table
+    (broadcast), and every corpus vector is scored by 8 integer table
+    lookups instead of 64 multiplies. Top-10 per query by
+    (approx_dist, vec_id) via WindowGroupLimit partial top-k; the
+    EXACT squared-L2 rides along as the accuracy mirror. At 100 TB the
+    codes table is ~32× smaller than the vectors — the scoring scan
+    reads codes only; exact re-ranking would touch just the k
+    finalists. All arithmetic is micro-int (round(x·1e6) BIGINT), so
+    the DuckDB oracle is bit-identical. operators/similarity.py::
+    pq_adc_topk."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        pq_adc_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return pq_adc_topk(emb, emb.where(F.col("vec_id") < 5), k=10)
+
+
+# q_knn_label_audit (q_knn_label_audit) — exact integer
+# squared-L2 kNN (k=10) for the first-20 audit batch, Borda weights
+# 11-rank, argmax vote with lowest-label tie-break. All integers.
+@query("""
+    WITH e AS (
+        SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, i, CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    qelem AS (
+        SELECT vec_id AS qid, i, x FROM elem WHERE vec_id < 20
+    ),
+    d AS (
+        SELECT q.qid, c.vec_id,
+               CAST(SUM((c.x - q.x) * (c.x - q.x)) AS BIGINT) AS d
+        FROM elem c JOIN qelem q ON c.i = q.i AND c.vec_id != q.qid
+        GROUP BY 1, 2
+    ),
+    nn AS (
+        SELECT qid, vec_id, rn FROM (
+            SELECT qid, vec_id,
+                   row_number() OVER (PARTITION BY qid
+                                      ORDER BY d, vec_id) AS rn
+            FROM d
+        ) WHERE rn <= 10
+    ),
+    votes AS (
+        SELECT nn.qid, e.label AS nlabel,
+               CAST(SUM(11 - nn.rn) AS BIGINT) AS w
+        FROM nn JOIN e ON nn.vec_id = e.vec_id
+        GROUP BY 1, 2
+    ),
+    win AS (
+        SELECT qid, nlabel, w,
+               row_number() OVER (PARTITION BY qid
+                                  ORDER BY w DESC, nlabel ASC) AS rw
+        FROM votes
+    )
+    SELECT q.vec_id, q.label AS own_label,
+           win.nlabel AS predicted_label,
+           win.w AS vote_weight,
+           q.label != win.nlabel AS mismatch
+    FROM win JOIN e q ON win.qid = q.vec_id
+    WHERE win.rw = 1
+""")
+def q_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Label-noise audit via k-NN consensus (the Confident-Learning /
+    cleanlab move, Northcutt et al. JAIR'21): a sample whose nearest
+    neighbors vote for a DIFFERENT class than its recorded label is a
+    likely annotation error — the standard pre-training sweep over
+    labeled SFT/classification data. For each audited vector (the
+    first 20 ids — the audit batch; at 100 TB the batch is whatever
+    slice is under review, scored against the corpus via the ANN
+    index instead of this exact scan): top-10 neighbors by EXACT
+    integer squared-L2 over micro-quantized components, Borda-weighted
+    vote (weight 11−rank — integers, so the tally is order-independent
+    and bit-identical in the oracle), predicted label = argmax with
+    lowest-label tie-break. Plan: 20-row broadcast → map-side scoring
+    scan → WindowGroupLimit partial top-10 → one (audit×10)-row vote
+    aggregate — the corpus is scanned once, never shuffled."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        l2sq_micro,
+        micro_vec,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = ensure_parallelism(
+        emb.select(
+            "vec_id",
+            F.col("label").alias("nlabel"),
+            micro_vec(F.col("embedding")).alias("mv"),
+        )
+    )
+    audit = F.broadcast(
+        emb.where(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("qid"),
+            F.col("label").alias("own_label"),
+            micro_vec(F.col("embedding")).alias("qmv"),
+        )
+    )
+    w = Window.partitionBy("qid").orderBy("d", "vec_id")
+    nn = (
+        corpus.join(audit, F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid",
+            "own_label",
+            "vec_id",
+            "nlabel",
+            l2sq_micro(F.col("mv"), F.col("qmv")).alias("d"),
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= 10)
+    )
+    votes = nn.groupBy("qid", "own_label", "nlabel").agg(
+        F.sum(F.lit(11) - F.col("rn")).cast("long").alias("w")
+    )
+    return (
+        votes.groupBy("qid", "own_label")
+        .agg(
+            F.max_by("nlabel", F.struct(F.col("w"), -F.col("nlabel"))).alias(
+                "predicted_label"
+            ),
+            F.max("w").cast("long").alias("vote_weight"),
+        )
+        .select(
+            F.col("qid").alias("vec_id"),
+            "own_label",
+            "predicted_label",
+            "vote_weight",
+            (F.col("own_label") != F.col("predicted_label")).alias("mismatch"),
+        )
+    )
+
+
+# q_hard_negatives (q_hard_negatives) — the shared
+# component CTE chain supplies the not-a-near-dup guard; exact integer
+# squared-L2 top-5 per query among vectors OUTSIDE the query's
+# component (vec_id = doc_id cross-modal key).
+@query(
+    _NEARDUP_CC_CTES
+    + """,
+    cl AS (
+        SELECT id, MIN(label) AS cluster_id
+        FROM cc
+        GROUP BY id
+    ),
+    e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, i, CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    qelem AS (SELECT vec_id AS qid, i, x FROM elem WHERE vec_id < 5),
+    d AS (
+        SELECT q.qid, c.vec_id,
+               CAST(SUM((c.x - q.x) * (c.x - q.x)) AS BIGINT) AS dist
+        FROM elem c JOIN qelem q ON c.i = q.i AND c.vec_id != q.qid
+        GROUP BY 1, 2
+    ),
+    guarded AS (
+        SELECT d.qid, d.vec_id, d.dist
+        FROM d
+        JOIN cl cq ON cq.id = d.qid
+        JOIN cl cn ON cn.id = d.vec_id
+        WHERE cq.cluster_id != cn.cluster_id
+    )
+    SELECT qid AS query_id, vec_id AS neighbor_id,
+           CAST(rn AS INT) AS rank, dist
+    FROM (
+        SELECT qid, vec_id, dist,
+               row_number() OVER (PARTITION BY qid
+                                  ORDER BY dist, vec_id) AS rn
+        FROM guarded
+    ) WHERE rn <= 5
+"""
+)
+def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive/embedding training (the
+    DPR / SimCSE data-prep step, Karpukhin et al. EMNLP'20): for each
+    query, the nearest vectors that are NOT near-duplicates of it —
+    semantically close enough to be informative negatives, but
+    guaranteed (structurally, not by a score threshold) not to be
+    positives in disguise. The not-a-duplicate guard reuses the
+    MATERIALIZED LSH pair graph's connected components (the same
+    component labels that drive q_dedup_clusters /
+    q_leakage_safe_split, vec_id ≡ doc_id cross-modal key): a
+    candidate is excluded iff it shares the query's component. Top-5
+    per query by EXACT integer squared-L2 (micro components, ties →
+    lowest id). Plan: component labels join the corpus once (hash
+    join on id), the 5 queries broadcast, WindowGroupLimit partial
+    top-5 — at 100 TB the retrieval leg swaps to ann_against_index
+    with the same cluster-exclusion join-back."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        dedup_clusters,
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        l2sq_micro,
+        micro_vec,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = _materialized_lsh_pairs(spark, sf_dir)
+    # r12 optimization (guide §5): the component labels feed TWO
+    # consumers (the corpus-side join and the 5-query broadcast side)
+    # and their lineage is the whole iterative CC chain — without
+    # persist the label propagation runs twice per action. The frame
+    # is two ints per doc; persist it so CC runs once.
+    clusters = dedup_clusters(pairs, docs.select("doc_id"), "doc_id").select(
+        F.col("id").alias("vec_id"), "cluster_id"
+    ).persist()
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = ensure_parallelism(
+        emb.select("vec_id", micro_vec(F.col("embedding")).alias("mv"))
+    ).join(clusters, "vec_id")
+    qs = F.broadcast(
+        emb.where(F.col("vec_id") < 5)
+        .select(F.col("vec_id").alias("qid"), micro_vec(F.col("embedding")).alias("qmv"))
+        .join(
+            clusters.select(
+                F.col("vec_id").alias("qid"), F.col("cluster_id").alias("qcluster")
+            ),
+            "qid",
+        )
+    )
+    w = Window.partitionBy("qid").orderBy("dist", "vec_id")
+    return (
+        corpus.join(
+            qs,
+            (F.col("vec_id") != F.col("qid"))
+            & (F.col("cluster_id") != F.col("qcluster")),
+        )
+        .select(
+            "qid",
+            "vec_id",
+            l2sq_micro(F.col("mv"), F.col("qmv")).alias("dist"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 5)
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("rank").cast("int"),
+            "dist",
+        )
+    )
+
+
+_DRIFT_SHIFT = " + ".join(
+    f"(m{d} - mb{d}) * (m{d} - mb{d})" for d in range(64)
+)
+
+
+_DRIFT_MEANS_B = ", ".join(
+    f"CAST(round(s{d} / n) AS BIGINT) AS mb{d}" for d in range(64)
+)
+
+
+_DRIFT_MEANS = ", ".join(
+    f"CAST(round(s{d} / n) AS BIGINT) AS m{d}" for d in range(64)
+)
+
+
+# q_embedding_drift (q_embedding_drift) — identical
+# numerics: exact micro-int per-dim sums, one IEEE division per dim,
+# round-half-away to micro ints, exact integer squared-shift sum.
+_DRIFT_SUMS = ", ".join(
+    f"CAST(SUM(CAST(round(v[{d + 1}] * 1000000, 0) AS BIGINT))"
+    f" AS BIGINT) AS s{d}"
+    for d in range(64)
+)
+
+
+@query(f"""
+    WITH e AS (
+        SELECT vec_id % 2 AS side, label,
+               CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings
+    ),
+    agg AS (
+        SELECT side, label, CAST(COUNT(*) AS BIGINT) AS n, {_DRIFT_SUMS}
+        FROM e GROUP BY 1, 2
+    ),
+    a AS (SELECT label, n AS n_a, {_DRIFT_MEANS} FROM agg WHERE side = 0),
+    b AS (SELECT label, n AS n_b, {_DRIFT_MEANS_B} FROM agg WHERE side = 1)
+    SELECT a.label, a.n_a, b.n_b,
+           CAST({_DRIFT_SHIFT} AS BIGINT) AS centroid_shift_sq
+    FROM a JOIN b USING (label)
+""")
+def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-distribution drift monitor — the check run between
+    two corpus snapshots (doc_id parity = old/new crawl) before
+    trusting a retriever or classifier trained on the old one: per
+    label, the squared L2 shift between the two snapshots' class
+    centroids. Numerics follow the proven k-means parity convention:
+    per-dim micro-int sums (exact BIGINT), ONE IEEE division per dim
+    (s/n — bit-identical across engines), rounded back to micro ints,
+    then an exact integer squared-difference sum. Plan: one
+    partial-aggregated groupBy (label, side) — 20 rows out regardless
+    of corpus size — then a 10-row self-join; the 64-term shift
+    expression evaluates on aggregated rows only (the parsed-big-expr
+    cost lesson applies to per-row eval, not to 10 rows)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    sums = [
+        F.expr(
+            f"sum(cast(round(cast(embedding[{d}] as double) * 1000000, 0)"
+            f" as bigint)) as s{d}"
+        )
+        for d in range(EMBEDDING_DIM)
+    ]
+    agg = emb.groupBy(
+        (F.col("vec_id") % 2).alias("side"), "label"
+    ).agg(*sums, F.count("*").alias("n"))
+    means = [
+        F.expr(f"cast(round(s{d} / n) as bigint) as m{d}")
+        for d in range(EMBEDDING_DIM)
+    ]
+    a = agg.where(F.col("side") == 0).select(
+        "label", F.col("n").alias("n_a"), *means
+    )
+    b = agg.where(F.col("side") == 1).select(
+        "label", F.col("n").alias("n_b"), *[
+            F.expr(f"cast(round(s{d} / n) as bigint) as mb{d}")
+            for d in range(EMBEDDING_DIM)
+        ]
+    )
+    shift = " + ".join(
+        f"(m{d} - mb{d}) * (m{d} - mb{d})" for d in range(EMBEDDING_DIM)
+    )
+    return (
+        a.join(b, "label")
+        .select(
+            "label",
+            "n_a",
+            "n_b",
+            F.expr(shift).cast("long").alias("centroid_shift_sq"),
+        )
+    )
+
+
+# q_pq_recall (q_pq_recall) — recall@10 of the PQ/ADC
+# top-10 against the EXACT integer-L2 top-10 (self excluded, ties by
+# vec_id) — the ANN-observability twin of q_ann_recall for the PQ path.
+@query(f"""
+    WITH {_PQ_CTES},
+    pq10 AS (SELECT qid, vec_id FROM ranked WHERE rn <= 10),
+    ex10 AS (
+        SELECT qid, vec_id FROM (
+            SELECT qid, vec_id,
+                   row_number() OVER (PARTITION BY qid
+                                      ORDER BY exact_dist, vec_id) AS ern
+            FROM exact WHERE vec_id != qid
+        ) WHERE ern <= 10
+    )
+    SELECT pq10.qid AS query_id,
+           CAST(COUNT(ex10.vec_id) AS BIGINT) AS hits,
+           CAST(COUNT(ex10.vec_id) * 100000 AS BIGINT) AS recall_micro
+    FROM pq10 LEFT JOIN ex10
+      ON pq10.qid = ex10.qid AND pq10.vec_id = ex10.vec_id
+    GROUP BY 1
+""")
+def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN observability for the PQ path — recall@10 of q_pq_ann's
+    ADC top-10 against the EXACT integer-L2 top-10 (the q_ann_recall
+    twin for product quantization): the number every PQ deployment
+    monitors when choosing m×k. Both legs end in per-query partial
+    top-k; the recall join then touches ≤ 2·k·|queries| rows at any
+    corpus size. recall_micro = hits · 100000 (k=10) — all integers;
+    the join/count itself is the shared ``_recall_join`` (micro mode),
+    so one recall convention exists for every ANN path."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        pq_scored_pairs,
+    )
+
+    # r12 optimization (guide §2.4 one-pass-two-rankings): pq_adc_topk
+    # already computes the EXACT squared-L2 for every (query, vector)
+    # pair (the accuracy mirror riding along its output), yet the old
+    # recall leg re-derived a second corpus-wide exact brute-force
+    # scan for the exact top-10. Score the pairs ONCE
+    # (pq_scored_pairs — approx AND exact per pair), persist the
+    # narrow pair frame, and rank it twice: by approx (the PQ leg,
+    # identical window to pq_adc_topk) and by exact (the truth leg,
+    # identical pair set / distance / (dist, id) tie-break as the old
+    # brute-force scan).
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 5)
+    pairs = pq_scored_pairs(emb, queries).persist()
+    wa = Window.partitionBy("qid").orderBy("approx_dist", "id")
+    pq10 = (
+        pairs.withColumn("arn", F.row_number().over(wa))
+        .where(F.col("arn") <= 10)
+        .select(
+            F.col("qid").alias("query_id"), F.col("id").alias("neighbor_id")
+        )
+    )
+    we = Window.partitionBy("qid").orderBy("exact_dist", "id")
+    ex10 = (
+        pairs.withColumn("ern", F.row_number().over(we))
+        .where(F.col("ern") <= 10)
+        .select(
+            F.col("qid").alias("query_id"), F.col("id").alias("neighbor_id")
+        )
+    )
+    return _recall_join(ex10, pq10, k=10, micro=True)
+
+
+# q_maxsim_retrieval (q_maxsim_retrieval) — ColBERT MaxSim
+# over micro-int chunks: per (query chunk, candidate doc) MIN integer
+# L2², summed per candidate doc. Exact integer arithmetic end to end
+# (the PQ/kmeans convention), so the score column hash-matches.
+@query("""
+    WITH e AS (
+        SELECT vec_id, vec_id // 4 AS doc,
+               CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, doc, i,
+               CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    qe AS (
+        SELECT vec_id AS qc, doc AS qdoc, i, x FROM elem WHERE vec_id < 8
+    ),
+    dist AS (
+        SELECT qe.qdoc, qe.qc, elem.doc AS cdoc,
+               elem.vec_id AS cc,
+               CAST(SUM((qe.x - elem.x) * (qe.x - elem.x)) AS BIGINT) AS d
+        FROM qe JOIN elem ON qe.i = elem.i
+        WHERE elem.doc != qe.qdoc
+        GROUP BY 1, 2, 3, 4
+    ),
+    best AS (
+        SELECT qdoc, qc, cdoc, MIN(d) AS md FROM dist GROUP BY 1, 2, 3
+    ),
+    score AS (
+        SELECT qdoc, cdoc, CAST(SUM(md) AS BIGINT) AS score
+        FROM best GROUP BY 1, 2
+    )
+    SELECT qdoc AS query_doc, cdoc AS doc, score,
+           CAST(row_number() OVER (
+               PARTITION BY qdoc ORDER BY score ASC, cdoc ASC
+           ) AS INT) AS rank
+    FROM score
+    QUALIFY rank <= 3
+""")
+def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Late-interaction multi-vector retrieval (ColBERT MaxSim): groups
+    of 4 consecutive embedding rows form one logical document's chunk
+    set (vec_id div 4 — the chunked-document layout a real pipeline
+    materializes); query docs 0 and 1 rank the corpus by
+    Σ_{query chunk} min_{candidate chunk} L2²(micro-int) — exact
+    integer end to end (operators/similarity.py::maxsim_topk). Output
+    is 2 query docs × top-3, constant at any corpus size; the scored
+    candidate stream is ≤ |docs| rows per query after the two
+    map-side-combinable folds."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        maxsim_topk,
+        micro_vec,
+    )
+
+    # the 64-dim pairwise-distance stage is compute-heavy; guard the
+    # under-split local scan (no-op on a well-split cluster scan)
+    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    chunks = emb.select(
+        F.expr("vec_id div 4").cast("long").alias("doc"),
+        F.col("vec_id").alias("chunk_id"),
+        micro_vec(F.col("embedding")).alias("mv"),
+    )
+    return maxsim_topk(chunks, chunks.filter(F.col("chunk_id") < 8), k=3)
+
+
+def _recall_join(
+    exact: DataFrame, approx: DataFrame, k: int = 10, micro: bool = False
+) -> DataFrame:
+    """Per-query recall@k of ``approx`` against ``exact`` (both
+    (query_id, neighbor_id) top-k lists): left join on the pair, count
+    hits — the ONE recall computation shared by q_ann_recall /
+    q_ann_recall_filtered / q_pq_recall. Both legs are size-k per
+    query, so the hit count is |exact ∩ approx| regardless of join
+    direction. ``micro=True`` emits the all-integer convention
+    (hits, recall_micro = hits · 1_000_000/k) instead of the rounded
+    double ``recall_at_{k}``."""
+    hits = F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("bigint")
+    j = exact.select("query_id", "neighbor_id").join(
+        approx.select(
+            "query_id", "neighbor_id", F.lit(1).alias("__hit")
+        ),
+        on=["query_id", "neighbor_id"],
+        how="left",
+    )
+    if micro:
+        assert 1_000_000 % k == 0, "micro recall needs k | 1_000_000"
+        return j.groupBy("query_id").agg(
+            hits.alias("hits"),
+            (hits * (1_000_000 // k)).cast("long").alias("recall_micro"),
+        )
+    return j.groupBy("query_id").agg(
+        hits.alias("n_matched"),
+        F.round(
+            F.sum(F.coalesce(F.col("__hit"), F.lit(0))) / float(k), 6
+        ).alias(f"recall_at_{k}"),
+    )
+
+
+# q_ann_recall_filtered — the filtered IVF probe's CTE chain (as in
+# q_ann_filtered) left-joined against exact brute force over the
+# label-filtered corpus; recall counted per query.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            e.label,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign
+        WHERE rn = 1 AND label = 3
+    ),
+    q AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE vec_id < 5 AND rn <= 2
+    ),
+    approx AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT
+                q.vec_id AS query_id,
+                c.vec_id AS neighbor_id,
+                row_number() OVER (
+                    PARTITION BY q.vec_id
+                    ORDER BY list_cosine_similarity(c.v, q.v) DESC,
+                             c.vec_id ASC
+                ) AS rank
+            FROM c
+            JOIN q ON c.bucket = q.bucket
+            WHERE c.vec_id != q.vec_id
+        ) WHERE rank <= 10
+    ),
+    qv AS (
+        SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings WHERE vec_id < 5
+    ),
+    cv AS (
+        SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS v
+        FROM embeddings WHERE label = 3
+    ),
+    exact AS (
+        SELECT query_id, neighbor_id FROM (
+            SELECT
+                qv.query_id,
+                cv.neighbor_id,
+                row_number() OVER (
+                    PARTITION BY qv.query_id
+                    ORDER BY list_cosine_similarity(cv.v, qv.v) DESC,
+                             cv.neighbor_id ASC
+                ) AS rank
+            FROM qv CROSS JOIN cv
+            WHERE cv.neighbor_id != qv.query_id
+        ) WHERE rank <= 10
+    )
+    SELECT
+        e.query_id,
+        CAST(COUNT(ap.neighbor_id) AS BIGINT) AS n_matched,
+        round(COUNT(ap.neighbor_id) / 10.0, 6) AS recall_at_10
+    FROM exact e
+    LEFT JOIN approx ap
+      ON e.query_id = ap.query_id AND e.neighbor_id = ap.neighbor_id
+    GROUP BY e.query_id
+""")
+def q_ann_recall_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@10 of FILTERED vector search (q_ann_filtered's IVF probe,
+    nprobe=2, label pre-filter) against exact brute force over the
+    filtered corpus — the observability twin every approximate path in
+    the repo carries (q_ann_recall / q_pq_recall). Pre-filtering makes
+    recall the metric to watch: the qualifying vectors of a probed
+    bucket can be few, so this is where a too-small nprobe shows up
+    first. Both legs end in partial top-k, so the recall join sees
+    ≤ 2·k·|queries| rows at any corpus size."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ann_against_index,
+        cosine_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivf_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5)
+    pred = F.col("label") == 3
+    exact = cosine_topk(emb.filter(pred), queries, "vec_id", "embedding", k=10)
+    approx = ann_against_index(
+        queries, spark, idx, k=10, nprobe=2, pre_filter=pred
+    )
+    return _recall_join(exact, approx, k=10)
+
+
+def _gram_partials(emb: DataFrame, dim: int = EMBEDDING_DIM):
+    """Map-side Gram partials over e4-scaled integer components:
+    returns (sxy, sums) — the commutative-monoid state (Σxᵢxⱼ, n per
+    upper-triangle pair; Σxᵢ per dimension) that merges exactly in any
+    order, which is what makes both the one-shot q_gram_matrix and the
+    incremental q_gram_incremental forms of the same statistic green
+    against ONE full-recompute oracle. The outer product is generated
+    per row (flatten/transform, no self-join), so partial aggregation
+    collapses each task to ≤ dim(dim+1)/2 rows before the exchange."""
+    base = emb.select(
+        F.transform(
+            F.col("embedding"),
+            lambda x: F.round(x.cast("double") * 10_000).cast("long"),
+        ).alias("a")
+    )
+    outer = F.expr(
+        f"flatten(transform(sequence(0, {dim - 1}), i -> "
+        f"transform(sequence(i, {dim - 1}), j -> "
+        "struct(i AS i, j AS j, a[i] * a[j] AS v))))"
+    )
+    sxy = (
+        base.select(F.explode(outer).alias("p"))
+        .select(
+            F.col("p.i").cast("int").alias("i"),
+            F.col("p.j").cast("int").alias("j"),
+            F.col("p.v").alias("v"),
+        )
+        .groupBy("i", "j")
+        .agg(
+            F.sum("v").alias("sxy"),
+            F.count(F.lit(1)).cast("long").alias("n"),
+        )
+    )
+    sums = (
+        base.select(F.posexplode("a").alias("i", "x"))
+        .groupBy(F.col("i").cast("int").alias("i"))
+        .agg(F.sum("x").alias("sx"))
+    )
+    return sxy, sums
+
+
+def _gram_finalize(sxy: DataFrame, sums: DataFrame) -> DataFrame:
+    """Centered Gram numerator n·Σxᵢxⱼ − Σxᵢ·Σxⱼ from the partial
+    state. The 64-row sums table has TWO join consumers (sx_i, sx_j) —
+    localCheckpointed so the scan behind it runs once (the
+    skyline/kcenter multi-consumer discipline)."""
+    sums = sums.localCheckpoint(eager=False)
+    return (
+        sxy.join(
+            F.broadcast(sums.select("i", F.col("sx").alias("sx_i"))),
+            on="i",
+        )
+        .join(
+            F.broadcast(
+                sums.select(
+                    F.col("i").alias("j"), F.col("sx").alias("sx_j")
+                )
+            ),
+            on="j",
+        )
+        .select(
+            "i",
+            "j",
+            (F.col("n") * F.col("sxy") - F.col("sx_i") * F.col("sx_j"))
+            .cast("long")
+            .alias("cov_scaled"),
+        )
+    )
+
+
+# q_ivf_bucket_stats (q_ivf_bucket_stats) — recompute the
+# IVF quantization (8 lowest-id anchors) and the build's sub-split
+# arithmetic (ceil(count / max_bucket_size=50)); green re-proves the
+# stored index assignment against the anchor policy.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    )
+    SELECT
+        CAST(anchor_id AS INT) AS bucket,
+        CAST(COUNT(*) AS BIGINT) AS n_rows,
+        CAST(ceil(COUNT(*) / 50.0) AS INT) AS n_subs
+    FROM assign WHERE rn = 1
+    GROUP BY anchor_id
+""")
+def q_ivf_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index-health observability for the materialized IVF index: rows
+    and skew-split sub count per bucket — the audit that tells an
+    operator when the anchor set needs rebalancing (one bucket
+    absorbing the corpus defeats nprobe pruning even with the physical
+    split bounding partition size). Reads ONLY the index artifact
+    (counting a partition column — at 100 TB this can come from
+    partition metadata, never the vectors). The oracle recomputes the
+    quantization from scratch, so green also re-proves the stored
+    assignment against the anchor policy. Sub-level row counts are
+    deliberately absent here: the sub hash is xxhash64 (not
+    SQL-portable); its size bound is pinned by the planted-hot-cluster
+    behavior test instead."""
+    idx = _materialized_ivf_index(spark, sf_dir)
+    assignments = spark.read.parquet(f"{idx}/assignments")
+    meta = spark.read.parquet(f"{idx}/meta")
+    return (
+        assignments.groupBy(F.col("bucket").cast("int").alias("bucket"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
+        .join(
+            F.broadcast(
+                meta.select(
+                    F.col("bucket").cast("int").alias("bucket"),
+                    F.col("n_subs").cast("int").alias("n_subs"),
+                )
+            ),
+            on="bucket",
+        )
+        .select("bucket", "n_rows", "n_subs")
+    )
+
+
+# q_gram_matrix (q_gram_matrix) — the NAIVE elem⋈elem
+# self-join form of the centered Gram statistic (the Spark side
+# generates the outer product map-side instead); exact e4-scaled
+# integers, HUGEINT sums cast back to BIGINT.
+@query("""
+    WITH e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, CAST(i - 1 AS INT) AS i,
+               CAST(round(v[i] * 10000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    sxy AS (
+        SELECT a.i AS i, b.i AS j,
+               CAST(SUM(a.x * b.x) AS BIGINT) AS sxy,
+               CAST(COUNT(*) AS BIGINT) AS n
+        FROM elem a JOIN elem b
+          ON a.vec_id = b.vec_id AND a.i <= b.i
+        GROUP BY 1, 2
+    ),
+    sx AS (SELECT i, CAST(SUM(x) AS BIGINT) AS sx FROM elem GROUP BY i)
+    SELECT s.i, s.j,
+           CAST(s.n * s.sxy - sa.sx * sb.sx AS BIGINT) AS cov_scaled
+    FROM sxy s
+    JOIN sx sa ON s.i = sa.i
+    JOIN sx sb ON s.j = sb.i
+""")
+def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed Gram/covariance statistic over the embedding corpus —
+    the input every PCA / whitening / mean-centering stage needs (the
+    64×64 reduction is the distributed-heavy part; the driver-side
+    eigensolve on 2080 numbers is free). Exact scaled-integer
+    arithmetic: components quantize at 1e4 (values are in [-0.6, 0.6];
+    products land in e8 units), so Σxᵢxⱼ and the centered numerator
+    n·Σxᵢxⱼ − Σxᵢ·Σxⱼ are exact BIGINTs. Operating envelope: the
+    centered numerator grows ~n²·(6e3)² ≈ n²·3.6e7 worst-case, so
+    int64 holds to n ≈ 5×10⁵ vectors — ample for every tested SF and
+    the ×10 probe, NOT for a 100 TB corpus. Beyond that, each dropped
+    quantization digit buys ~10× rows (the bound is n²·x_max²: e3 →
+    n ≈ 5×10⁶, e2 → n ≈ 5×10⁷), or move the final multiply to
+    DECIMAL(38,0) (Spark) / HUGEINT (DuckDB); the partial state itself
+    (Σxᵢxⱼ ≤ n·3.6e7) is safe to n ≈ 2.5×10¹¹.
+
+    Scale shape: the upper-triangle outer product is generated PER ROW
+    map-side (flatten/transform — 2080 narrow structs per vector, no
+    join), so the partial aggregation collapses each task to ≤ 2080
+    rows BEFORE the only exchange; the per-dimension sums are a second
+    64-row broadcast agg. Compare the naive elem⋈elem self-join, which
+    shuffles n·64 rows twice — that shape is the ORACLE here, not the
+    plan. Returns (i, j, cov_scaled) for i ≤ j."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+
+    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    sxy, sums = _gram_partials(emb)
+    return _gram_finalize(sxy, sums)
+
+
+def _kcenter_cte_sql(k: int = 4) -> str:
+    """Unrolled greedy k-center rounds (q_kcenter_select's oracle):
+    round r picks the vector with the maximum min-L2²(micro-int) to the
+    union of rounds 0..r-1 (lowest-id tie-break); round 0 is the lowest
+    id. One CTE pair (dist, selection) per round — the q_kmeans_assign
+    unrolling convention."""
+    ctes = [
+        """e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    elem AS (
+        SELECT vec_id, i, CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM e, unnest(generate_series(1, 64)) t(i)
+    ),
+    s0 AS (SELECT vec_id FROM e ORDER BY vec_id ASC LIMIT 1)"""
+    ]
+    for r in range(1, k):
+        sel_union = " UNION ALL ".join(
+            f"SELECT vec_id FROM s{j}" for j in range(r)
+        )
+        ctes.append(f"""d{r}p AS (
+        SELECT a.vec_id, b.vec_id AS sid,
+               CAST(SUM((a.x - b.x) * (a.x - b.x)) AS BIGINT) AS d
+        FROM elem a
+        JOIN elem b ON a.i = b.i
+        WHERE b.vec_id IN ({sel_union})
+        GROUP BY 1, 2
+    ),
+    d{r} AS (SELECT vec_id, MIN(d) AS d FROM d{r}p GROUP BY vec_id),
+    s{r} AS (
+        SELECT vec_id FROM d{r}
+        WHERE vec_id NOT IN ({sel_union})
+        ORDER BY d DESC, vec_id ASC LIMIT 1
+    )""")
+    body = " UNION ALL ".join(
+        f"SELECT {r} AS sel_round, vec_id FROM s{r}" for r in range(k)
+    )
+    return "WITH " + ",\n    ".join(ctes) + "\n    " + body
+
+
+@query(_kcenter_cte_sql(4))
+def q_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Greedy k-center diversity selection over the embedding corpus
+    (operators/similarity.py::kcenter_select, k=4): the coreset /
+    "label these first" seed — iteratively keep the vector farthest
+    (max-min exact integer L2²) from everything kept so far. The
+    anti-pole of the dedup family on the same table. No driver collect
+    between rounds; each unrolled round is one broadcast + one narrow
+    map-side min-fold + a distributed 1-row sort-limit. Oracle =
+    unrolled CTE rounds (the q_kmeans_assign convention)."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        kcenter_select,
+        micro_vec,
+    )
+
+    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    corpus = emb.select(
+        "vec_id", micro_vec(F.col("embedding")).alias("mv")
+    )
+    return kcenter_select(corpus, k=4)
+
+
+def _multiprobe_lsh_sql(n_planes: int = 4) -> str:
+    """q_multiprobe_lsh's oracle: the q_embedding_lsh_topk bucket CTE,
+    with the query side fanned out to its own bucket plus every
+    Hamming-1 flip (substr surgery per plane position)."""
+    flips = ["bucket"]
+    for i in range(1, n_planes + 1):
+        flips.append(
+            f"substr(bucket, 1, {i - 1}) || "
+            f"(CASE WHEN substr(bucket, {i}, 1) = '1' "
+            f"THEN '0' ELSE '1' END) || substr(bucket, {i + 1})"
+        )
+    probe_union = "\n        UNION ALL ".join(
+        f"SELECT vec_id, v, {f} AS probe FROM q0" for f in flips
+    )
+    return f"""
+    WITH e AS (
+        SELECT
+            vec_id,
+            CAST(embedding AS DOUBLE[]) AS v,
+            {_hyperplane_bucket_sql("embedding", n_planes=n_planes, seed=0)}
+                AS bucket
+        FROM embeddings
+    ),
+    q0 AS (SELECT vec_id, v, bucket FROM e WHERE vec_id < 5),
+    probes AS (
+        {probe_union}
+    )
+    SELECT
+        q.vec_id AS query_id,
+        c.vec_id AS neighbor_id,
+        CAST(row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) AS INT) AS rank
+    FROM e c
+    JOIN probes q ON c.bucket = q.probe
+    WHERE c.vec_id != q.vec_id
+    QUALIFY rank <= 10
+"""
+
+
+@query(_multiprobe_lsh_sql(4))
+def q_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-probe LSH top-10 (operators/similarity.py::
+    multiprobe_lsh_topk, Lv et al. VLDB'07): queries probe their own
+    4-plane bucket plus all four Hamming-1 flips — the LSH recall knob
+    that leaves the corpus bucketing untouched (the hyperplane twin of
+    the IVF index's nprobe). Candidates are a strict superset of
+    q_embedding_lsh_topk's single-bucket run (recall monotonicity
+    pinned by test); the corpus side still shuffles nothing beyond the
+    single bucketed pass."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        multiprobe_lsh_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    return multiprobe_lsh_topk(
+        emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
+    )
+
+
+# q_maxsim_index (q_maxsim_index) — frozen-universe mirror
+# of the IVF-probed MaxSim: per-query-chunk nprobe=2 buckets, chunk
+# pairs scored only inside probed buckets, per-chunk MIN / per-doc SUM
+# integer L2², HAVING count = 4 (every query chunk matched).
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, vec_id // 4 AS cdoc, v, anchor_id AS bucket
+        FROM assign WHERE rn = 1
+    ),
+    q AS (
+        SELECT vec_id AS qc, vec_id // 4 AS qdoc, v, anchor_id AS bucket
+        FROM assign WHERE vec_id < 8 AND rn <= 2
+    ),
+    celem AS (
+        SELECT vec_id, cdoc, bucket, i,
+               CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM c, unnest(generate_series(1, 64)) t(i)
+    ),
+    qelem AS (
+        SELECT qc, qdoc, bucket, i,
+               CAST(round(v[i] * 1000000, 0) AS BIGINT) AS x
+        FROM q, unnest(generate_series(1, 64)) t(i)
+    ),
+    pair AS (
+        SELECT qe.qdoc, qe.qc, ce.cdoc, ce.vec_id AS cc,
+               CAST(SUM((qe.x - ce.x) * (qe.x - ce.x)) AS BIGINT) AS d
+        FROM qelem qe
+        JOIN celem ce ON qe.bucket = ce.bucket AND qe.i = ce.i
+        WHERE ce.cdoc != qe.qdoc
+        GROUP BY 1, 2, 3, 4
+    ),
+    best AS (
+        SELECT qdoc, qc, cdoc, MIN(d) AS md FROM pair GROUP BY 1, 2, 3
+    ),
+    score AS (
+        SELECT qdoc, cdoc, CAST(SUM(md) AS BIGINT) AS score
+        FROM best GROUP BY 1, 2 HAVING COUNT(*) = 4
+    )
+    SELECT qdoc AS query_doc, cdoc AS doc, score,
+           CAST(row_number() OVER (
+               PARTITION BY qdoc ORDER BY score ASC, cdoc ASC
+           ) AS INT) AS rank
+    FROM score
+    QUALIFY rank <= 3
+""")
+def q_maxsim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MaxSim late interaction over the MATERIALIZED IVF index — the
+    100 TB form the brute-force q_maxsim_retrieval documents: each
+    QUERY CHUNK probes its nprobe=2 nearest anchor buckets (dynamic
+    partition pruning on the index scan), chunk pairs are scored only
+    inside probed buckets, and the same two exact-integer folds
+    (per-chunk MIN L2², per-doc SUM) rank candidates. Approximation
+    contract: a candidate doc scores only if EVERY query chunk found
+    at least one of its chunks in a probed bucket (HAVING count =
+    n_query_chunks — without it, docs with missing chunk pairs would
+    sum fewer terms and win unfairly under min-distance scoring);
+    docs wholly outside the probed buckets are absent, exactly the
+    IVF recall trade every probe query documents. Frozen-universe
+    oracle mirrors the probed computation."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ivf_probe,
+        l2sq_micro,
+        maxsim_fold,
+        micro_vec,
+    )
+
+    chunks_per_doc = 4  # the vec_id div 4 chunk layout AND the
+    # all-chunks-matched admission threshold — one constant so they
+    # cannot drift apart (the oracle's HAVING COUNT(*) = 4 mirrors it)
+    idx = _materialized_ivf_index(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    anchors = spark.read.parquet(f"{idx}/anchors")
+    # quantize candidate chunks ONCE before the probe join (a chunk
+    # matched by m probing query chunks would otherwise pay the
+    # 64-element transform m times)
+    cand = spark.read.parquet(f"{idx}/assignments").select(
+        "bucket",
+        F.expr(f"neighbor_id div {chunks_per_doc}")
+        .cast("long")
+        .alias("cdoc"),
+        micro_vec(F.col("c_vec")).alias("cv"),
+    )
+    qc = emb.filter(
+        F.col("vec_id") < 2 * chunks_per_doc
+    ).select(
+        F.expr(f"vec_id div {chunks_per_doc}").cast("long").alias("qdoc"),
+        F.col("vec_id").alias("qc"),
+        F.col("embedding").alias("q_vec"),  # raw — anchors score on it
+        micro_vec(F.col("embedding")).alias("qv"),
+    )
+    probes = ivf_probe(qc, anchors, nprobe=2, probe_id_col="qc").select(
+        "qdoc", "qc", "qv", "bucket"
+    )
+    pair_d = cand.join(F.broadcast(probes), on="bucket").select(
+        "qdoc",
+        "qc",
+        "cdoc",
+        l2sq_micro(F.col("qv"), F.col("cv")).alias("d"),
+    )
+    return maxsim_fold(pair_d, k=3, require_chunks=chunks_per_doc)
+
+
+# Semantic decontamination (q_semantic_decontaminate): the
+# frozen-universe mirror of the materialized IVF probe (8 lowest-id
+# anchors, nprobe=2 — the q_semantic_neighbors quantization), threshold
+# cos >= 0.3, eval set = vec_id % 40 == 0.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), a.avec)
+                             DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE rn = 1 AND vec_id % 40 != 0
+    ),
+    q AS (
+        SELECT vec_id, v, anchor_id AS bucket
+        FROM assign WHERE vec_id % 40 = 0 AND rn <= 2
+    ),
+    hits AS (
+        SELECT c.vec_id AS cand_id, q.vec_id AS eval_id
+        FROM c JOIN q ON c.bucket = q.bucket
+        WHERE list_cosine_similarity(c.v, q.v) >= 0.3
+    )
+    SELECT cand_id AS vec_id,
+           CAST(COUNT(*) AS BIGINT) AS n_eval_hits,
+           CAST(MIN(eval_id) AS BIGINT) AS first_eval_id
+    FROM hits GROUP BY cand_id
+""")
+def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SEMANTIC test-set decontamination — the embedding-space
+    complement of the n-gram screen (q_decontaminate): flag every
+    training vector whose cosine to ANY eval-set vector reaches 0.3,
+    so paraphrased/reworded leakage that shares no 13-gram still gets
+    caught before training (the screen GPT-4/Llama eval cards describe
+    alongside exact-match). Eval set = vec_id % 40 == 0 (the held-out
+    2.5%); returns the contaminated training vectors with their hit
+    count and lowest-id eval witness — all integers.
+
+    Scale shape: the retrieval leg is the MATERIALIZED IVF index (the
+    same fingerprint-cached artifact every probe query reads): eval
+    queries broadcast through ivf_probe (nprobe=2), dynamic partition
+    pruning keeps the assignment scan to the probed buckets, and the
+    threshold filter + count aggregate touch only in-bucket pairs —
+    candidate volume ∝ |eval| · bucket size, never corpus². Same
+    IVF-approximate semantics as every probe: only probed buckets are
+    screened (recall is q_ann_recall's metric to watch)."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine,
+        ivf_probe,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivf_index(spark, sf_dir)
+    anchors = spark.read.parquet(f"{idx}/anchors")
+    cand = spark.read.parquet(f"{idx}/assignments").where(
+        F.pmod(F.col("neighbor_id"), F.lit(40)) != 0
+    )
+    eval_q = emb.where(F.pmod(F.col("vec_id"), F.lit(40)) == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+    )
+    probes = ivf_probe(eval_q, anchors, nprobe=2, probe_id_col="query_id")
+    hits = cand.join(F.broadcast(probes), on="bucket").where(
+        cosine(F.col("q_vec"), F.col("c_vec")) >= 0.3
+    )
+    return hits.groupBy(F.col("neighbor_id").alias("vec_id")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_eval_hits"),
+        F.min("query_id").cast("long").alias("first_eval_id"),
+    )
+
+
+MMR_POOL = 12
+
+
+MMR_SELECT = 4
+
+
+MMR_LAMBDA10 = 7  # λ = 0.7 in tenths: score = 7·rel − 3·max_sim
+
+
+def _mmr_cte_sql(pool: int = MMR_POOL, rounds: int = 4) -> str:
+    """Unrolled greedy MMR rounds mirroring q_mmr_select:
+    query = lowest-id vector, pool = top-``pool`` by micro-rounded
+    cosine relevance, score = 7·rel − 3·max-sim-to-selected in
+    λ-tenths·micro units, vec_id tie-break. Selection CTEs are s1..sN
+    (rank, vec_id, rel_micro, mmr_score)."""
+    cos = (
+        "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+        " * sqrt(list_dot_product({b}, {b})))"
+    )
+    parts = [
+        "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
+        " FROM embeddings)",
+        "q AS (SELECT vec_id AS q_id, v AS q_vec FROM e"
+        " ORDER BY vec_id ASC LIMIT 1)",
+        "scored AS (SELECT e.vec_id, e.v,"
+        " CAST(round(" + cos.format(a="e.v", b="q.q_vec")
+        + " * 1000000, 0) AS BIGINT) AS rel_micro"
+        " FROM e CROSS JOIN q WHERE e.vec_id != q.q_id)",
+        f"pool AS (SELECT * FROM scored ORDER BY rel_micro DESC,"
+        f" vec_id ASC LIMIT {pool})",
+        "sims AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,"
+        " CAST(round(" + cos.format(a="a.v", b="b.v")
+        + " * 1000000, 0) AS BIGINT) AS sim_micro"
+        " FROM pool a JOIN pool b ON a.vec_id != b.vec_id)",
+        "s1 AS (SELECT CAST(1 AS BIGINT) AS rank, vec_id, rel_micro,"
+        " CAST(rel_micro * 7 AS BIGINT) AS mmr_score"
+        " FROM pool ORDER BY rel_micro * 7 DESC, vec_id ASC LIMIT 1)",
+    ]
+    for r in range(2, rounds + 1):
+        prev = " UNION ALL ".join(
+            f"SELECT vec_id FROM s{i}" for i in range(1, r)
+        )
+        parts.append(
+            f"sel{r} AS ({prev})"
+        )
+        parts.append(
+            f"pen{r} AS (SELECT sims.a_id AS vec_id,"
+            f" MAX(sims.sim_micro) AS max_sim FROM sims"
+            f" JOIN sel{r} ON sims.b_id = sel{r}.vec_id GROUP BY 1)"
+        )
+        parts.append(
+            f"s{r} AS (SELECT CAST({r} AS BIGINT) AS rank, p.vec_id,"
+            f" p.rel_micro,"
+            f" CAST(p.rel_micro * 7 - pen{r}.max_sim * 3 AS BIGINT)"
+            f" AS mmr_score"
+            f" FROM pool p JOIN pen{r} USING (vec_id)"
+            f" WHERE p.vec_id NOT IN (SELECT vec_id FROM sel{r})"
+            f" ORDER BY p.rel_micro * 7 - pen{r}.max_sim * 3 DESC,"
+            f" p.vec_id ASC LIMIT 1)"
+        )
+    union = " UNION ALL ".join(f"SELECT * FROM s{i}" for i in range(1, rounds + 1))
+    parts.append(f"sel AS ({union})")
+    return ",\n    ".join(parts)
+
+
+@query(f"""
+    WITH {_mmr_cte_sql()}
+    SELECT rank, CAST(vec_id AS BIGINT) AS vec_id, rel_micro,
+           mmr_score
+    FROM sel
+""")
+def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximal Marginal Relevance diversified selection (Carbonell &
+    Goldstein 1998) — the result-diversification stage of a RAG
+    retriever or a diversity-seeking curation sampler: greedily pick
+    argmax_d λ·rel(q, d) − (1−λ)·max_{s∈S} sim(d, s). The query is the
+    lowest-id corpus vector (the shared _pick_anchors seed policy,
+    self excluded); relevance and pairwise similarities are
+    micro-rounded cosines, λ = 0.7 in TENTHS, so every greedy round is
+    an exact integer argmax with vec_id tie-break; MMR_SELECT rounds
+    are unrolled (the q_kmeans_assign convention — deterministic,
+    hence oracle-checkable). Scores are in λ-tenths·micro units.
+
+    Scale shape: the only corpus-sized stages are ONE broadcast-scored
+    relevance scan and ONE top-MMR_POOL row_number (WindowGroupLimit
+    partial top-k before the single-partition merge); the greedy
+    rounds and the pairwise sim matrix run on the MMR_POOL-row pool
+    (≤ MMR_POOL² rows) — reranking never touches the corpus again."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = (
+        emb.orderBy(F.col("vec_id").asc())
+        .limit(1)
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
+        )
+    )
+    scored = (
+        emb.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "vec_id",
+            F.col("embedding").alias("v"),
+            F.round(cosine(F.col("embedding"), F.col("q_vec")) * 1000000, 0)
+            .cast("long")
+            .alias("rel_micro"),
+        )
+    )
+    wnd = Window.orderBy(F.col("rel_micro").desc(), F.col("vec_id").asc())
+    pool = (
+        scored.withColumn("rn", F.row_number().over(wnd))
+        .filter(F.col("rn") <= MMR_POOL)
+        .drop("rn")
+    )
+    # The pool is ≤ MMR_POOL rows but its LINEAGE is the corpus-sized
+    # relevance scan + top-k — and the unrolled greedy rounds consume it
+    # through ~3 sibling branches each (sims twice, cand, the growing
+    # selected chain), which Spark re-derives per branch (the measured
+    # crossJoin/agg lineage re-derivation law, SCALE.md). Cutting the
+    # lineage at the 12-row boundary makes every round O(pool), not
+    # O(corpus): measured 93 s → ~2 s at sf0.01.
+    pool = pool.localCheckpoint(eager=True)
+    a = pool.select(
+        F.col("vec_id").alias("a_id"), F.col("v").alias("a_v")
+    )
+    b = pool.select(
+        F.col("vec_id").alias("b_id"), F.col("v").alias("b_v")
+    )
+    sims = (
+        a.crossJoin(b)
+        .filter(F.col("a_id") != F.col("b_id"))
+        .select(
+            "a_id",
+            "b_id",
+            F.round(cosine(F.col("a_v"), F.col("b_v")) * 1000000, 0)
+            .cast("long")
+            .alias("sim_micro"),
+        )
+    )
+    cand = pool.select("vec_id", "rel_micro")
+    lam, com = MMR_LAMBDA10, 10 - MMR_LAMBDA10
+    selected = None
+    for r in range(1, MMR_SELECT + 1):
+        if r == 1:
+            pick = cand.select(
+                "vec_id",
+                "rel_micro",
+                (F.col("rel_micro") * lam).cast("long").alias("score"),
+            )
+        else:
+            sel_ids = selected.select(F.col("vec_id").alias("b_id"))
+            pen = (
+                sims.join(F.broadcast(sel_ids), "b_id")
+                .groupBy("a_id")
+                .agg(F.max("sim_micro").alias("max_sim"))
+            )
+            pick = (
+                cand.join(selected.select("vec_id"), "vec_id", "left_anti")
+                .join(
+                    pen.withColumnRenamed("a_id", "vec_id"), "vec_id"
+                )
+                .select(
+                    "vec_id",
+                    "rel_micro",
+                    (
+                        F.col("rel_micro") * lam - F.col("max_sim") * com
+                    )
+                    .cast("long")
+                    .alias("score"),
+                )
+            )
+        top = (
+            pick.orderBy(F.col("score").desc(), F.col("vec_id").asc())
+            .limit(1)
+            .withColumn("rank", F.lit(r).cast("long"))
+        )
+        selected = top if selected is None else selected.unionByName(top)
+    return selected.select(
+        "rank", "vec_id", "rel_micro", F.col("score").alias("mmr_score")
+    )
+
+
+# silhouette combination: integer division truncates toward zero in
+# BOTH engines (Spark DIV and DuckDB // verified on negatives), so the
+# signed division is portable — but the OPERATOR SPELLING differs, so
+# the shared text takes it as the one template parameter; the
+# max(…, 1) floor guards the all-centroids-equal degenerate (a = b = 0).
+def silhouette_expr(div: str) -> str:
+    return (
+        "CAST((b_micro - a_micro) * 1000000"
+        f" {div} greatest(greatest(a_micro, b_micro), 1) AS BIGINT)"
+    )
+
+
+SILHOUETTE_EXPR = silhouette_expr("DIV")
+
+
+def _silhouette_sql(k: int = 4, iters: int = 2, dim: int = 64) -> str:
+    """Simplified silhouette over the shared unrolled k-means CTEs
+    (_kmeans_cte_sql): recompute final integer-micro centroids from the
+    m{iters-1} assignment, micro-round cosine distances, combine with
+    the shared SILHOUETTE_EXPR."""
+    sums = ",\n               ".join(
+        f"CAST(SUM(CAST(round(v[{d + 1}] * 1000000, 0) AS BIGINT))"
+        f" AS BIGINT) AS s{d}"
+        for d in range(dim)
+    )
+    divs = ", ".join(f"s{d} / (n * 1000000.0)" for d in range(dim))
+    m = f"m{iters - 1}"
+    cos = (
+        "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+        " * sqrt(list_dot_product({b}, {b})))"
+    )
+    return f"""WITH {_kmeans_cte_sql(k=k, iters=iters, dim=dim)},
+    gfin AS (SELECT cid AS cluster_id, COUNT(*) AS n,
+               {sums}
+           FROM {m} GROUP BY cid),
+    cfin AS (SELECT cluster_id AS ccid, list_value({divs}) AS cvec
+             FROM gfin),
+    scored AS (
+        SELECT {m}.vec_id, {m}.cid AS cluster_id, cfin.ccid,
+               CAST(round((1.0 - {cos.format(a=f"{m}.v", b="cfin.cvec")})
+                    * 1000000, 0) AS BIGINT) AS d_micro
+        FROM {m} CROSS JOIN cfin
+    ),
+    ab AS (
+        SELECT vec_id, MAX(cluster_id) AS cluster_id,
+               MAX(CASE WHEN ccid = cluster_id THEN d_micro END)
+                   AS a_micro,
+               MIN(CASE WHEN ccid != cluster_id THEN d_micro END)
+                   AS b_micro
+        FROM scored GROUP BY vec_id
+    ),
+    sil AS (
+        SELECT cluster_id, {silhouette_expr('//')} AS s_micro FROM ab
+    )
+    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
+           COUNT(*)::BIGINT AS n,
+           CAST(CAST(SUM(s_micro) AS BIGINT) // COUNT(*) AS BIGINT)
+               AS mean_silhouette_micro,
+           CAST(MIN(s_micro) AS BIGINT) AS min_silhouette_micro
+    FROM sil GROUP BY 1"""
+
+
+@query(_silhouette_sql())
+def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simplified (centroid-based) silhouette over the shared k-means
+    clustering (k = 4, 2 Lloyd rounds — the exact q_kmeans_assign
+    pipeline): a = cosine distance to OWN centroid, b = min distance
+    to any OTHER centroid, s = (b − a) / max(a, b). The O(n·k)
+    variant — the classic pairwise silhouette is O(n²/k) and adds
+    nothing for a cluster-health metric; this is the quality
+    observability the IVF/semdedup stack reports next to
+    q_ivf_bucket_stats (skew) and q_lsh_band_stats (band health).
+    Distances are micro-rounded once; s is exact integer from there
+    (SILHOUETTE_EXPR).
+
+    Scale shape: kmeans_assign's own rounds plus ONE more broadcast
+    scoring pass (k centroids out; the n×k candidate rows collapse to
+    (a, b) per vector via two conditional aggregates, partial
+    map-side) and a k-row rollup."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine,
+        kmeans_assign,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    # r12 optimization (guide §5): `assigned` feeds TWO consumers (the
+    # centroid re-aggregation and the broadcast scoring pass) and its
+    # lineage is the full 2-round Lloyd pipeline — without persist the
+    # clustering runs twice per action (the same multi-consumer hazard
+    # semdedup_prune already guards; before plan: 2× the kmeans
+    # subtree). Identical plans share the CacheManager entry with
+    # q_kmeans_assign/q_semdedup's assignment, so repeated audits in
+    # one session cluster once — exactly the production
+    # cluster-once/audit-repeatedly shape.
+    assigned = kmeans_assign(emb, k=4, iters=2, dim=EMBEDDING_DIM).persist()
+    sums = [
+        F.expr(f"sum(cast(round(v[{d}] * 1000000, 0) as bigint)) as s{d}")
+        for d in range(EMBEDDING_DIM)
+    ]
+    cvec = F.expr(
+        "array("
+        + ",".join(
+            f"s{d} / (n * 1000000.0)" for d in range(EMBEDDING_DIM)
+        )
+        + ") as cvec"
+    )
+    cents = (
+        assigned.groupBy("cluster_id")
+        .agg(F.count(F.lit(1)).alias("n"), *sums)
+        .select(F.col("cluster_id").alias("cid"), cvec)
+    )
+    scored = assigned.crossJoin(F.broadcast(cents)).select(
+        "vec_id",
+        "cluster_id",
+        "cid",
+        F.round(
+            (F.lit(1.0) - cosine(F.col("v"), F.col("cvec"))) * 1000000, 0
+        )
+        .cast("long")
+        .alias("d_micro"),
+    )
+    ab = scored.groupBy("vec_id").agg(
+        F.max("cluster_id").alias("cluster_id"),
+        F.max(
+            F.when(F.col("cid") == F.col("cluster_id"), F.col("d_micro"))
+        ).alias("a_micro"),
+        F.min(
+            F.when(F.col("cid") != F.col("cluster_id"), F.col("d_micro"))
+        ).alias("b_micro"),
+    )
+    s = ab.select(
+        "cluster_id", F.expr(SILHOUETTE_EXPR).alias("s_micro")
+    )
+    return s.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.expr("CAST(sum(s_micro) DIV count(1) AS BIGINT)").alias(
+            "mean_silhouette_micro"
+        ),
+        F.min("s_micro").cast("long").alias("min_silhouette_micro"),
+    )
+
+
+# Per-hit DCG term, ONE shared text: graded gain (11 − exact_rank,
+# i.e. 10…1 for exact ranks 1…10) discounted by log2(approx position
+# + 1), micro-rounded PER TERM so the per-query sum is an exact integer
+# in any aggregation order (double sums are order-dependent — the
+# q_bm25_search lesson).
+NDCG_TERM_EXPR = (
+    "CAST(round((11 - exact_rank) * 1000000"
+    " / (ln(approx_rank + 1) / ln(2)), 0) AS BIGINT)"
+)
+
+
+def _idcg_micro(k: int = 10) -> int:
+    """Ideal DCG under the same per-term micro-rounding — a CONSTANT,
+    computed once in Python and inlined as a literal into both engines
+    (the POISSON1_HEX convention)."""
+    import math
+
+    total = 0
+    for i in range(1, k + 1):
+        x = (11 - i) * 1_000_000 / (math.log(i + 1) / math.log(2))
+        total += int(math.floor(x + 0.5))
+    return total
+
+
+IDCG10_MICRO = _idcg_micro(10)
+
+
+# Rank-aware ANN quality (q_ndcg): composed from the two
+# deterministic ranking mirrors; per-term micro-rounding via the SAME
+# NDCG_TERM_EXPR text; IDCG is the shared inlined constant.
+@query(f"""
+    WITH exact0 AS ({q_embedding_topk.oracle}),
+    approx0 AS ({q_embedding_lsh_topk.oracle}),
+    exact AS (
+        SELECT query_id, neighbor_id, rank AS exact_rank FROM exact0
+    ),
+    approx AS (
+        SELECT query_id, neighbor_id, rank AS approx_rank FROM approx0
+    ),
+    hits AS (
+        SELECT e.query_id, {NDCG_TERM_EXPR} AS t,
+               e.exact_rank, a.approx_rank
+        FROM approx a
+        JOIN exact e
+          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+    ),
+    per_q AS (
+        SELECT query_id,
+               CAST(SUM(t) AS BIGINT) AS dcg_micro,
+               COUNT(*)::BIGINT AS n_hits,
+               MIN(CASE WHEN exact_rank = 1 THEN approx_rank END)
+                   AS top1_pos
+        FROM hits GROUP BY 1
+    )
+    SELECT q.query_id,
+           CAST(COALESCE(p.n_hits, 0) AS BIGINT) AS n_hits,
+           CAST(COALESCE(p.dcg_micro, 0) AS BIGINT) AS dcg_micro,
+           CAST(COALESCE(p.dcg_micro, 0) * 1000000
+                // {IDCG10_MICRO} AS BIGINT) AS ndcg_micro,
+           CAST(CASE WHEN p.top1_pos IS NULL THEN 0
+                ELSE 1000000 // p.top1_pos END AS BIGINT) AS rr_micro
+    FROM (SELECT query_id FROM exact WHERE exact_rank = 1) q
+    LEFT JOIN per_q p USING (query_id)
+""")
+def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-AWARE ANN quality: nDCG@10 and MRR of the hyperplane-LSH
+    approximate ranking against the brute-force exact ranking — the
+    completion of the observability family (q_ann_recall counts WHICH
+    exact neighbors the approximate list found; nDCG scores WHERE it
+    put them, MRR scores how fast it surfaces the true top-1 — the
+    numbers a retrieval eval harness reports alongside recall).
+    Relevance grades derive from the exact rank (11 − rank: 10…1);
+    each DCG term is micro-rounded BEFORE the sum (NDCG_TERM_EXPR), so
+    per-query DCG is an exact integer; IDCG is the inlined constant
+    IDCG10_MICRO; nDCG and reciprocal rank are single integer
+    divisions. Queries the approximate path missed entirely surface
+    with ndcg 0, not as absent rows.
+
+    Scale shape: both legs end in per-query partial top-k
+    (WindowGroupLimit), so the metric join sees ≤ 2·k·|queries| rows
+    at any corpus size — the same bound as q_ann_recall."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine_topk,
+        lsh_bucketed_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    # r12 optimization (guide §5/§3.3): the exact leg feeds TWO
+    # consumers (the metric join and the query universe qs) and its
+    # lineage is the corpus-wide brute-force top-k — localCheckpoint
+    # at the 5×10-row boundary so it computes once per run (the
+    # q_nprobe_sweep exact-leg convention).
+    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10).select(
+        "query_id",
+        "neighbor_id",
+        F.col("rank").alias("exact_rank"),
+    ).localCheckpoint()
+    approx = lsh_bucketed_topk(
+        emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
+    ).select(
+        "query_id", "neighbor_id", F.col("rank").alias("approx_rank")
+    )
+    hits = approx.join(exact, ["query_id", "neighbor_id"])
+    per_q = (
+        hits.select(
+            "query_id",
+            F.expr(NDCG_TERM_EXPR).alias("t"),
+            "exact_rank",
+            "approx_rank",
+        )
+        .groupBy("query_id")
+        .agg(
+            F.sum("t").cast("long").alias("dcg_micro"),
+            F.count(F.lit(1)).cast("long").alias("n_hits"),
+            F.min(
+                F.when(F.col("exact_rank") == 1, F.col("approx_rank"))
+            ).alias("top1_pos"),
+        )
+    )
+    qs = exact.filter(F.col("exact_rank") == 1).select("query_id")
+    return qs.join(per_q, "query_id", "left").select(
+        "query_id",
+        F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
+        F.coalesce(F.col("dcg_micro"), F.lit(0))
+        .cast("long")
+        .alias("dcg_micro"),
+        F.expr(
+            f"CAST(coalesce(dcg_micro, 0) * 1000000"
+            f" DIV {IDCG10_MICRO} AS BIGINT)"
+        ).alias("ndcg_micro"),
+        F.expr(
+            "CAST(CASE WHEN top1_pos IS NULL THEN 0"
+            " ELSE 1000000 DIV top1_pos END AS BIGINT)"
+        ).alias("rr_micro"),
+    )
+
+
+# IVF nprobe response curve (q_nprobe_sweep): the
+# q_ann_index_probe quantization with rn <= nprobe probe legs at
+# 1/2/4, each recall-joined to the brute-force exact top-10.
+# assign/c/exact MATERIALIZED — multi-referenced.
+@query("""
+    WITH a AS (
+        SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS avec
+        FROM embeddings ORDER BY vec_id ASC LIMIT 8
+    ),
+    assign AS MATERIALIZED (
+        SELECT
+            e.vec_id,
+            CAST(e.embedding AS DOUBLE[]) AS v,
+            a.anchor_id,
+            row_number() OVER (
+                PARTITION BY e.vec_id
+                ORDER BY list_dot_product(
+                             CAST(e.embedding AS DOUBLE[]), a.avec) DESC,
+                         a.anchor_id ASC
+            ) AS rn
+        FROM embeddings e CROSS JOIN a
+    ),
+    c AS MATERIALIZED (
+        SELECT vec_id, v, anchor_id AS bucket FROM assign WHERE rn = 1
+    ),
+    exact AS MATERIALIZED (
+        SELECT
+            q.vec_id AS query_id,
+            cc.vec_id AS neighbor_id
+        FROM embeddings cc
+        CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) q
+        WHERE cc.vec_id != q.vec_id
+        QUALIFY row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(
+                         CAST(cc.embedding AS DOUBLE[]),
+                         CAST(q.embedding AS DOUBLE[])) DESC,
+                     cc.vec_id ASC
+        ) <= 10
+    ),
+    ap1 AS MATERIALIZED (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+        FROM c
+        JOIN (SELECT vec_id, v, anchor_id AS bucket FROM assign
+              WHERE vec_id < 5 AND rn <= 1) q ON c.bucket = q.bucket
+        WHERE c.vec_id != q.vec_id
+        QUALIFY row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) <= 10
+    ),
+    ap2 AS MATERIALIZED (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+        FROM c
+        JOIN (SELECT vec_id, v, anchor_id AS bucket FROM assign
+              WHERE vec_id < 5 AND rn <= 2) q ON c.bucket = q.bucket
+        WHERE c.vec_id != q.vec_id
+        QUALIFY row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) <= 10
+    ),
+    ap4 AS MATERIALIZED (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+        FROM c
+        JOIN (SELECT vec_id, v, anchor_id AS bucket FROM assign
+              WHERE vec_id < 5 AND rn <= 4) q ON c.bucket = q.bucket
+        WHERE c.vec_id != q.vec_id
+        QUALIFY row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) <= 10
+    )
+    SELECT CAST(1 AS INT) AS nprobe, e.query_id,
+           CAST(COUNT(h.neighbor_id) AS BIGINT) AS hits,
+           CAST(COUNT(h.neighbor_id) * 100000 AS BIGINT) AS recall_micro
+    FROM exact e LEFT JOIN ap1 h USING (query_id, neighbor_id)
+    GROUP BY e.query_id
+    UNION ALL
+    SELECT CAST(2 AS INT), e.query_id,
+           CAST(COUNT(h.neighbor_id) AS BIGINT),
+           CAST(COUNT(h.neighbor_id) * 100000 AS BIGINT)
+    FROM exact e LEFT JOIN ap2 h USING (query_id, neighbor_id)
+    GROUP BY e.query_id
+    UNION ALL
+    SELECT CAST(4 AS INT), e.query_id,
+           CAST(COUNT(h.neighbor_id) AS BIGINT),
+           CAST(COUNT(h.neighbor_id) * 100000 AS BIGINT)
+    FROM exact e LEFT JOIN ap4 h USING (query_id, neighbor_id)
+    GROUP BY e.query_id
+""")
+def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF knob RESPONSE CURVE: recall@10 against the brute-force exact
+    top-k at nprobe ∈ {1, 2, 4} over the same materialized index — the
+    measurement that turns q_ann_index_probe's fixed nprobe=2 into an
+    informed choice (jobs/sizing.py sizes the index's anchor count from
+    statistics; this measures what each query-time probe width BUYS —
+    the two halves of the IVF tuning story). Per (nprobe, query):
+    hits and integer-micro recall — the eval-harness table.
+
+    The exact leg is computed ONCE and localCheckpointed at its
+    5×10-row boundary (the q_mmr_select lineage law: three recall legs
+    would otherwise re-derive the corpus-sized brute-force scan each).
+
+    r12 optimization (guide §2.4 remove-shuffles / §1.2 algorithm
+    first): the index is scanned ONCE at the widest width, not once
+    per width. A probe at nprobe=4 with the anchor rank kept is the
+    union of the probes at every p ≤ 4 (each corpus vector lives in
+    exactly ONE bucket, so filter proberank ≤ p reproduces the
+    nprobe=p candidate set exactly — same cos expression, same
+    (cos desc, neighbor_id) top-k tie-break as ann_against_index).
+    Before: 3 ann_against_index legs = 3 index scans (1+2+4 = 7
+    pruned bucket-partition reads), 3 probe stages, 30 parquet scans
+    / 12 BNLJ in the plan. After: one 4-of-8-partition pruned scan,
+    one probe stage, one scored frame persisted (≤ 5 queries × 4
+    buckets × capped bucket size) and three window+filter legs over
+    it."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine,
+        cosine_topk,
+        ivf_probe,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivf_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5)
+    exact = (
+        cosine_topk(emb, queries, "vec_id", "embedding", k=10)
+        .select("query_id", "neighbor_id")
+        .localCheckpoint()
+    )
+    anchors = spark.read.parquet(f"{idx}/anchors")
+    cand = spark.read.parquet(f"{idx}/assignments")
+    probes = ivf_probe(
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_vec"),
+        ),
+        anchors,
+        nprobe=4,
+        probe_id_col="query_id",
+        keep_rank_col="__proberank",
+    )
+    scored = (
+        cand.join(F.broadcast(probes), on="bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            "__proberank",
+            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
+        )
+        .persist()
+    )
+    legs = []
+    for p in (1, 2, 4):
+        w2 = Window.partitionBy("query_id").orderBy(
+            F.col("cos").desc(), F.col("neighbor_id").asc()
+        )
+        approx = (
+            scored.filter(F.col("__proberank") <= p)
+            .withColumn("rank", F.row_number().over(w2))
+            .filter(F.col("rank") <= 10)
+            .select("query_id", "neighbor_id", "rank")
+        )
+        legs.append(
+            _recall_join(exact, approx, k=10, micro=True).select(
+                F.lit(p).cast("int").alias("nprobe"),
+                "query_id",
+                "hits",
+                "recall_micro",
+            )
+        )
+    out = legs[0]
+    for leg in legs[1:]:
+        out = out.unionByName(leg)
+    return out
+
+
+# kNN hubness histogram (q_knn_hubness): every vector's
+# LSH-bucketed top-10 with the SCALED blocker (first p sign bits of the
+# 16-plane pattern, p from the shared integer rule — the
+# q_semdedup_scaled assign CTE; a fixed 4-plane blocker measured 73×
+# at ×10), in-degree histogram with the antihub 0 row via a left join
+# from the corpus.
+@query(f"""
+    WITH cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
+    e AS MATERIALIZED (
+        SELECT
+            vec_id,
+            CAST(embedding AS DOUBLE[]) AS v,
+            substr(
+                {_hyperplane_bucket_sql("embedding", 64, 16)},
+                1,
+                (SELECT CASE WHEN (n - 1) // 128 < 1 THEN 1
+                        ELSE length(bin((n - 1) // 128)) END FROM cnt)
+            ) AS bucket
+        FROM embeddings
+    ),
+    topk AS (
+        SELECT c.vec_id AS neighbor_id
+        FROM e c JOIN e q ON c.bucket = q.bucket
+        WHERE c.vec_id != q.vec_id
+        QUALIFY row_number() OVER (
+            PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(c.v, q.v) DESC, c.vec_id ASC
+        ) <= 10
+    ),
+    indeg AS (
+        SELECT neighbor_id, CAST(COUNT(*) AS BIGINT) AS k_occ
+        FROM topk GROUP BY 1
+    )
+    SELECT k_occurrence, CAST(COUNT(*) AS BIGINT) AS n_vectors
+    FROM (
+        SELECT COALESCE(i.k_occ, 0) AS k_occurrence
+        FROM embeddings m LEFT JOIN indeg i ON i.neighbor_id = m.vec_id
+    )
+    GROUP BY 1
+""")
+def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-occurrence hubness histogram of the approximate kNN graph
+    (Radovanović et al. JMLR 2010) — the ANN pathology metric: in high
+    dimensions a few vectors become HUBS that appear in a large
+    fraction of all top-k lists (skewing retrieval diversity and
+    poisoning semantic dedup), while antihubs appear in none. The
+    histogram of in-degrees over every vector's LSH-bucketed top-10 is
+    the standard diagnostic; a heavy right tail says cosine top-k is
+    concentrating before any downstream consumer trusts it.
+
+    EVERY vector is a query here, so the query side must NOT broadcast
+    (lsh_bucketed_topk broadcasts its query batch by design — correct
+    for 5 probes, wrong for the corpus): the kNN graph is a plain
+    bucket equi-self-join (the q_embedding_dup shape) + a per-query
+    top-10 window bounded by the bucket size. The signature table is
+    persisted once and feeds both join sides (the q_embedding_dup
+    persist precedent).
+
+    The blocker SCALES WITH THE CORPUS (the q_semdedup_scaled plane
+    rule: bucket = first p sign bits of the 16-plane pattern,
+    p = length(bin((n−1) div 128)) via a 1-row broadcast count — the
+    shared SEMDEDUP_PLANES_EXPR integer text): a FIXED 4-plane blocker
+    makes pair volume n²/16 — the first cut measured 73× wall at the
+    ×10 probe (2.8 s → 208 s); the scaled blocker holds expected
+    bucket size ≈ 128, pair volume ≈ 128·n (measured 5.2 s at ×10).
+    Exactly the fixed-k SemDedup lesson, re-learned on a graph query.
+
+    Returns (k_occurrence, n_vectors) including the 0 row (antihubs),
+    via a left join from the corpus onto the in-degree table."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        dot_product,
+        hyperplane_sign_bucket,
+        l2_norm,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    n1 = emb.agg(F.count(F.lit(1)).cast("long").alias("__n"))
+    # r13 (guide §2.6 — idle capacity): the 16 hyperplane projections per
+    # vector ran on the single one-row-group parquet split — the x10
+    # core-scaling probe measured the query FLAT across 8 vs 32 cores
+    # (17.3 vs 17.8 s), i.e. serial. Route the signature build through
+    # the shared under-split guard; no-op on well-split cluster scans.
+    emb = ensure_parallelism(emb)
+    sigs = (
+        emb.crossJoin(F.broadcast(n1))
+        .select(
+            "vec_id",
+            F.col("embedding").alias("v"),
+            hyperplane_sign_bucket(
+                F.col("embedding"), EMBEDDING_DIM, SEMDEDUP_MAX_PLANES
+            ).alias("__bits"),
+            F.expr(SEMDEDUP_PLANES_EXPR.format(n="__n"))
+            .cast("int")
+            .alias("__p"),
+            l2_norm(F.col("embedding")).alias("nrm"),
+        )
+        .select(
+            "vec_id",
+            "v",
+            F.col("__bits").substr(F.lit(1), F.col("__p")).alias("bucket"),
+            "nrm",
+        )
+        .persist()
+    )
+    a = sigs.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+        "bucket",
+    )
+    b = sigs.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cn"),
+        "bucket",
+    )
+    # r13 (guide §2.3 — project before the exchange): score each candidate
+    # pair map-side right after the bucket join, so the window's
+    # hashpartitioning(query_id) exchange carries (query_id, neighbor_id,
+    # score) instead of two full embedding vectors per pair — at ~128·n
+    # candidate rows the r12 plan shuffled every vector ~256×. Same score
+    # expression, same ordering, same top-10.
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__score").desc(), F.col("neighbor_id").asc()
+    )
+    topk = (
+        a.join(b, on="bucket")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            (
+                dot_product(F.col("qv"), F.col("cv"))
+                / (F.col("qn") * F.col("cn"))
+            ).alias("__score"),
+        )
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= 10)
+        .select("neighbor_id")
+    )
+    indeg = topk.groupBy("neighbor_id").agg(
+        F.count(F.lit(1)).cast("long").alias("k_occ")
+    )
+    return (
+        emb.select(F.col("vec_id").alias("neighbor_id"))
+        .join(indeg, on="neighbor_id", how="left")
+        .select(
+            F.coalesce(F.col("k_occ"), F.lit(0))
+            .cast("long")
+            .alias("k_occurrence")
+        )
+        .groupBy("k_occurrence")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
+    )
+
+
+# k-means cluster purity (q_cluster_purity): the shared
+# k=8/iters=2 assignment CTEs joined to the label column; majority by
+# (count desc, label asc).
+@query(f"""
+    WITH {_kmeans_cte_sql(k=8, iters=2, dim=64)},
+    counts AS (
+        SELECT m1.cid AS cluster_id, emb.label,
+               CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM m1 JOIN embeddings emb ON emb.vec_id = m1.vec_id
+        GROUP BY 1, 2
+    ),
+    ranked AS (
+        SELECT *, row_number() OVER (
+            PARTITION BY cluster_id ORDER BY cnt DESC, label ASC
+        ) AS rn
+        FROM counts
+    ),
+    tot AS (
+        SELECT cluster_id,
+               CAST(SUM(cnt) AS BIGINT) AS n_vectors,
+               CAST(MAX(cnt) AS BIGINT) AS top_count
+        FROM counts GROUP BY 1
+    )
+    SELECT t.cluster_id,
+           t.n_vectors,
+           CAST(r.label AS BIGINT) AS top_label,
+           t.top_count,
+           CAST(t.top_count * 1000000 // t.n_vectors AS BIGINT)
+               AS purity_micro
+    FROM tot t JOIN ranked r ON r.cluster_id = t.cluster_id AND r.rn = 1
+""")
+def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-means cluster purity against the embedding labels — the
+    external-validity twin of q_silhouette's internal score (silhouette
+    asks 'are the clusters tight', purity asks 'do they agree with the
+    labels we happen to hold' — together the clustering-observability
+    pair every curation run reports). Reads the SAME fingerprint-cached
+    k=8 assignment artifact as q_semdedup (cluster once, audit
+    repeatedly); majority label per cluster with the (count desc,
+    label asc) total tie order (the q_label_propagation argmax
+    discipline). purity = majority count · 1e6 div cluster size,
+    all-integer.
+
+    Scale shape: one join of the assignment to the label column keyed
+    on the vector id, one partial-aggregable (cluster, label) count,
+    one argmax per cluster — output is k rows."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        kmeans_assign,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = _materialized(
+        spark,
+        sf_dir,
+        "kmeans_k8_i2",
+        "embeddings",
+        lambda p: kmeans_assign(
+            emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM
+        ).write.mode("overwrite").parquet(f"{p}/assign"),
+    )
+    assign = spark.read.parquet(f"{path}/assign").select(
+        "vec_id", "cluster_id"
+    )
+    counts = (
+        assign.join(emb.select("vec_id", "label"), on="vec_id")
+        .groupBy("cluster_id", "label")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    return (
+        counts.groupBy("cluster_id")
+        .agg(
+            F.sum("cnt").cast("long").alias("n_vectors"),
+            F.max_by(
+                F.col("label"), F.struct(F.col("cnt"), (-F.col("label")))
+            )
+            .cast("long")
+            .alias("top_label"),
+            F.max("cnt").cast("long").alias("top_count"),
+        )
+        .select(
+            "cluster_id",
+            "n_vectors",
+            "top_label",
+            "top_count",
+            F.expr(
+                "CAST(top_count * 1000000 DIV n_vectors AS BIGINT)"
+            ).alias("purity_micro"),
+        )
+    )
+
+
+# RBO@10 coefficients (Webber et al. TOIS 2010), p = 0.9: a doc matched
+# in both rankings first becomes visible at depth m = max(exact_rank,
+# approx_rank) and then contributes p^(d-1)/d at every deeper prefix, so
+# its total weight is COEF[m] = Σ_{d=m..10} p^(d-1)/d, normalized by the
+# identical-lists total Σ_{d=1..10} p^(d-1) (A_d = d at every depth).
+# Computed ONCE here in Python and inlined as integer literals into BOTH
+# engines (the band_tuning / IDCG10_MICRO convention: the transcendental
+# pow never runs inside either engine) — per-query RBO is then a plain
+# integer sum.
+RBO_P = 0.9
+
+
+RBO_K = 10
+
+
+def _rbo_coef_micro() -> list[int]:
+    norm = sum(RBO_P ** (d - 1) for d in range(1, RBO_K + 1))
+    return [
+        int(
+            round(
+                1_000_000
+                * sum(RBO_P ** (d - 1) / d for d in range(m, RBO_K + 1))
+                / norm
+            )
+        )
+        for m in range(1, RBO_K + 1)
+    ]
+
+
+RBO_COEF_CASE = (
+    "CASE greatest(exact_rank, approx_rank) "
+    + " ".join(
+        f"WHEN {m} THEN {c}"
+        for m, c in enumerate(_rbo_coef_micro(), start=1)
+    )
+    + " ELSE 0 END"
+)
+
+
+# RBO@10 (q_rbo): same exact/LSH legs as q_ndcg; each
+# matched doc contributes the inlined integer literal
+# COEF[max(exact_rank, approx_rank)] — RBO_COEF_CASE is the SHARED text
+# (Python precomputes the p-series; pow never runs in either engine).
+@query(f"""
+    WITH exact0 AS ({q_embedding_topk.oracle}),
+    approx0 AS ({q_embedding_lsh_topk.oracle}),
+    exact AS (
+        SELECT query_id, neighbor_id, rank AS exact_rank FROM exact0
+    ),
+    approx AS (
+        SELECT query_id, neighbor_id, rank AS approx_rank FROM approx0
+    ),
+    matched AS (
+        SELECT e.query_id, {RBO_COEF_CASE} AS coef
+        FROM approx a
+        JOIN exact e
+          ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+    ),
+    per_q AS (
+        SELECT query_id,
+               CAST(COUNT(*) AS BIGINT) AS n_common,
+               CAST(SUM(coef) AS BIGINT) AS rbo_micro
+        FROM matched GROUP BY query_id
+    ),
+    universe AS (SELECT DISTINCT query_id FROM exact)
+    SELECT u.query_id,
+           CAST(COALESCE(p.n_common, 0) AS BIGINT) AS n_common,
+           CAST(COALESCE(p.rbo_micro, 0) AS BIGINT) AS rbo_micro
+    FROM universe u LEFT JOIN per_q p USING (query_id)
+""")
+def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rank-biased overlap @10 (Webber et al. TOIS 2010) between the
+    exact cosine ranking and the hyperplane-LSH ranking — the
+    top-weighted similarity the rank-eval family was missing: recall
+    counts membership, nDCG scores placement against graded relevance,
+    RBO compares the two PREFIX SETS with geometric top-weighting (the
+    metric for "do these two rankers agree where it matters"), and is
+    defined even when the lists are arbitrarily different. Same legs
+    and k as q_ndcg; p = 0.9 (the standard top-heavy choice).
+
+    Exactness: each matched doc contributes the inlined integer literal
+    COEF[max(ranks)] (see RBO_COEF_CASE); per-query RBO is an integer
+    sum — identical lists sum to ~1e6 (±rounding of the 10 literals).
+
+    Scale shape: both legs end in per-query partial top-k
+    (WindowGroupLimit), the metric join sees ≤ 2·k·|queries| rows, and
+    the query universe is the exact leg's ≤ |queries| distinct ids —
+    queries the LSH leg missed entirely surface with rbo 0."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        cosine_topk,
+        lsh_bucketed_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    # r12 note (guide §1 measure-first): the q_ndcg-style eager
+    # localCheckpoint of the exact leg was tried here in wave 1 and
+    # REVERTED after the idle-box A/B — with the checkpoint 8.75 s
+    # best [8.8, 11.0, 12.9] vs 2.48 s [2.5, 2.6, 3.5] without; on
+    # THIS query's left-join shape the inline re-derivation of the
+    # 50-row leg is cheaper than materializing it through the RDD
+    # path. q_ndcg / q_anomaly_mad keep theirs (both re-confirmed
+    # faster WITH the cut on the same box, same session protocol).
+    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10).select(
+        "query_id", "neighbor_id", F.col("rank").alias("exact_rank")
+    )
+    approx = lsh_bucketed_topk(
+        emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
+    ).select("query_id", "neighbor_id", F.col("rank").alias("approx_rank"))
+    matched = approx.join(exact, ["query_id", "neighbor_id"]).select(
+        "query_id", F.expr(RBO_COEF_CASE).alias("coef")
+    )
+    per_q = matched.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_common"),
+        F.sum("coef").cast("long").alias("rbo_micro"),
+    )
+    universe = exact.select("query_id").distinct()
+    return universe.join(per_q, on="query_id", how="left").select(
+        "query_id",
+        F.coalesce(F.col("n_common"), F.lit(0))
+        .cast("long")
+        .alias("n_common"),
+        F.coalesce(F.col("rbo_micro"), F.lit(0))
+        .cast("long")
+        .alias("rbo_micro"),
+    )
+
+
+# Two-stage rerank (q_two_stage_rerank): the q_pq_ann CTE
+# chain's ranked table cut at the coarse top-50, re-ranked by the exact
+# squared-L2 that rides along — same tie-breaks ((approx_dist, vec_id)
+# coarse, (exact_dist, vec_id) refine) in both engines.
+@query(f"""
+    WITH {_PQ_CTES},
+    coarse AS (
+        SELECT qid AS query_id, vec_id,
+               CAST(rn AS INT) AS approx_rank, approx_dist, exact_dist
+        FROM ranked WHERE rn <= 50
+    ),
+    refined AS (
+        SELECT query_id, vec_id, exact_dist, approx_rank,
+               CAST(row_number() OVER (
+                   PARTITION BY query_id
+                   ORDER BY exact_dist, vec_id) AS INT) AS rank
+        FROM coarse
+    )
+    SELECT query_id, rank, vec_id, exact_dist, approx_rank,
+           CAST(approx_rank - rank AS INT) AS moved
+    FROM refined WHERE rank <= 10
+""")
+def q_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-stage retrieval: PQ/ADC coarse candidates (top-50 by the
+    8-lookup approximate distance) re-ranked by the EXACT squared-L2 to
+    a final top-10 — THE production ANN serving pattern (FAISS
+    IVF-PQ + refine, ScaNN's reorder stage): the compressed index
+    proposes cheaply, full-precision vectors re-score only the
+    shortlist. ``moved`` = coarse-rank minus final-rank shows how much
+    the refine stage corrects the quantization error — all zeros would
+    mean the refine budget is wasted; large moves mean the coarse k is
+    too tight.
+
+    Scale shape: stage 1 is q_pq_ann's scan (codes table, ~32× smaller
+    than vectors) ending in a per-query partial top-50; stage 2 touches
+    exactly 50·|queries| rows — the exact distance RIDES ALONG from the
+    PQ operator (computed in the same pass per candidate), so the
+    refine stage is one WindowGroupLimit over the shortlist with NO
+    join back to the vector table."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        pq_adc_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    coarse = pq_adc_topk(
+        emb, emb.where(F.col("vec_id") < 5), k=50
+    ).select(
+        "query_id",
+        "vec_id",
+        F.col("rank").alias("approx_rank"),
+        "approx_dist",
+        "exact_dist",
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("exact_dist").asc(), F.col("vec_id").asc()
+    )
+    return (
+        coarse.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= 10)
+        .select(
+            "query_id",
+            "rank",
+            "vec_id",
+            "exact_dist",
+            "approx_rank",
+            (F.col("approx_rank") - F.col("rank"))
+            .cast("int")
+            .alias("moved"),
+        )
+    )
+
+
+# Power iteration (q_power_iteration): the q_gram_matrix
+# oracle as the cov CTE, n-independent rescale and every normalization
+# through the SHARED sign-split division text sdiv_expr (Spark DIV
+# truncates, DuckDB // floors — they agree only after the sign split).
+@query(f"""
+    WITH cov AS MATERIALIZED (
+        SELECT i, j, cov_scaled FROM ({q_gram_matrix.oracle})
+    ),
+    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM embeddings),
+    a AS MATERIALIZED (
+        SELECT i, j,
+               CAST({sdiv_expr("cov_scaled", "nn * nn", "//")} AS BIGINT)
+                   AS a
+        FROM cov, nn
+    ),
+    full_m AS MATERIALIZED (
+        SELECT i, j, a FROM a
+        UNION ALL
+        SELECT j AS i, i AS j, a FROM a WHERE i < j
+    ),
+    v1 AS MATERIALIZED (
+        SELECT j, CAST(SUM(a * 1000) AS BIGINT) AS v
+        FROM full_m GROUP BY j
+    ),
+    m1 AS (SELECT CAST(MAX(abs(v)) AS BIGINT) AS m1 FROM v1),
+    u1 AS MATERIALIZED (
+        SELECT j,
+               CAST({sdiv_expr("v * 1000", "GREATEST(m1, 1)", "//")}
+                    AS BIGINT) AS u1_milli
+        FROM v1, m1
+    ),
+    v2 AS MATERIALIZED (
+        SELECT f.j, CAST(SUM(f.a * u.u1_milli) AS BIGINT) AS v
+        FROM full_m f JOIN u1 u ON f.i = u.j
+        GROUP BY f.j
+    ),
+    m2 AS (SELECT CAST(MAX(abs(v)) AS BIGINT) AS m2 FROM v2),
+    u2 AS (
+        SELECT j,
+               CAST({sdiv_expr("v * 1000", "GREATEST(m2, 1)", "//")}
+                    AS BIGINT) AS u2_milli
+        FROM v2, m2
+    )
+    SELECT CAST(u1.j AS INT) AS dim, u1.u1_milli, u2.u2_milli,
+           CAST((SELECT m2 FROM m2)
+                // GREATEST((SELECT m1 FROM m1) // 1000, 1) AS BIGINT)
+               AS lambda_scaled
+    FROM u1 JOIN u2 USING (j)
+""")
+def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two unrolled power-iteration steps on the centered Gram matrix —
+    the distributed half of a PCA top-component estimate (q_gram_matrix
+    REDUCES the corpus to the 64×64 statistic; this query runs the
+    eigensolver's inner loop on it, all in exact integers, the
+    kmeans/pagerank/Bradley-Terry unrolled-iteration discipline). The
+    dominant direction of the embedding covariance is the
+    anisotropy/drift readout (q_embedding_drift's 'which way did the
+    space move' companion) and the whitening direction a preprocessing
+    stage would remove first.
+
+    Exactness: the covariance numerator is rescaled n-independently
+    (cov_scaled sign-div n² — entries ≤ x_max²·1e8 regardless of
+    corpus size, the q_scaling_fit audit rule applied at design time),
+    iterate vectors are ∞-norm-normalized to integer MILLI units via
+    the shared sign-split division text (sdiv_expr — Spark DIV
+    truncates, DuckDB // floors; they agree only on non-negatives), so
+    every matvec term is an exact int64 product (≤ 64·3.6e7·10³ ≈
+    2.3e12 worst-case) and both engines walk bit-identical iterates.
+    λ̂ = max|v₂| / (max|v₁|/1000) — the ∞-norm Rayleigh surrogate.
+
+    Scale shape: the corpus-scale work is q_gram_matrix's map-side
+    partials (once — the 2080-row rescaled matrix is localCheckpointed
+    bounded state, so the two matvec consumers and the union-mirror do
+    NOT re-derive the scan); each iteration is a broadcast-size join +
+    64-group aggregate; corpus row count enters as a 1-row broadcast
+    aggregate, never a collect."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+
+    emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
+    sxy, sums = _gram_partials(emb)
+    cov = _gram_finalize(sxy, sums)
+    nn = emb.agg(F.count(F.lit(1)).cast("long").alias("nn"))
+    a = (
+        cov.crossJoin(F.broadcast(nn))
+        .select(
+            "i",
+            "j",
+            F.expr(sdiv_expr("cov_scaled", "nn * nn", "DIV"))
+            .cast("long")
+            .alias("a"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    full = a.unionByName(
+        a.filter("i < j").select(
+            F.col("j").alias("i"), F.col("i").alias("j"), "a"
+        )
+    )
+    # r12 optimization (guide §3.3/§5): each iterate feeds TWO
+    # consumers (its ∞-norm aggregate and its normalized projection),
+    # so without a cut the 64-row groupBy re-runs per consumer and the
+    # exchange count doubles per unrolled step. localCheckpoint each
+    # iterate at its 64-row boundary (the dedup_clusters / textrank
+    # per-round discipline — bounded state, lineage truncated).
+    v1 = full.groupBy("j").agg(
+        F.sum(F.expr("a * 1000")).cast("long").alias("v")
+    ).localCheckpoint(eager=False)
+    m1 = v1.agg(F.max(F.abs(F.col("v"))).cast("long").alias("m1"))
+    u1 = (
+        v1.crossJoin(F.broadcast(m1))
+        .select(
+            "j",
+            F.expr(sdiv_expr("v * 1000", "GREATEST(m1, 1)", "DIV"))
+            .cast("long")
+            .alias("u1_milli"),
+        )
+    )
+    v2 = (
+        full.join(
+            u1.select(F.col("j").alias("i"), F.col("u1_milli").alias("ui")),
+            on="i",
+        )
+        .groupBy("j")
+        .agg(F.sum(F.expr("a * ui")).cast("long").alias("v"))
+        .localCheckpoint(eager=False)
+    )
+    m2 = v2.agg(F.max(F.abs(F.col("v"))).cast("long").alias("m2"))
+    u2 = (
+        v2.crossJoin(F.broadcast(m2))
+        .select(
+            "j",
+            F.expr(sdiv_expr("v * 1000", "GREATEST(m2, 1)", "DIV"))
+            .cast("long")
+            .alias("u2_milli"),
+        )
+    )
+    lam = m2.crossJoin(F.broadcast(m1)).select(
+        F.expr("CAST(m2 DIV GREATEST(m1 DIV 1000, 1) AS BIGINT)").alias(
+            "lambda_scaled"
+        )
+    )
+    return (
+        u1.join(u2, on="j")
+        .crossJoin(F.broadcast(lam))
+        .select(
+            F.col("j").cast("int").alias("dim"),
+            "u1_milli",
+            "u2_milli",
+            "lambda_scaled",
+        )
+    )
+
+
+def _materialized_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
+    """The embeddings IVFPQ index (operators/similarity.py::
+    build_ivfpq_index) as a materialized artifact — the IVF layout
+    (8 anchors, skew cap 50) with inline PQ codes and the frozen
+    codebook, shared by q_ivfpq_ann / q_ivfpq_recall. Separate tag
+    from the plain IVF index: the two artifacts have different row
+    schemas and must never alias."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        build_ivfpq_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _materialized(
+        spark,
+        sf_dir,
+        "ivfpq_idx_a8_cap50",
+        "embeddings",
+        lambda p: build_ivfpq_index(
+            emb, p, n_anchors=8, max_bucket_size=50
+        ),
+    )
+
+
+# q_ivfpq_ann (q_ivfpq_ann) — IVFPQ with exact refine:
+# composes the q_ann_index_probe probe chain (8 lowest-id anchors,
+# double dot-product ranking, nprobe=2) with the _PQ_CTES code/ADC
+# chain. Candidates = probed buckets only; coarse top-50 by the
+# integer ADC sum; exact integer-L2 refine to the final top-10. A
+# corpus vector lives in exactly one bucket and a query's two probe
+# legs hit distinct anchors, so the candidate set is duplicate-free
+# and both row_numbers are plain top-ks.
+_IVFPQ_CTES = """
+    ivfa AS (
+        SELECT vec_id AS anchor_id, v AS avec
+        FROM e ORDER BY vec_id ASC LIMIT 8
+    ),
+    ivfassign AS MATERIALIZED (
+        SELECT e.vec_id, a.anchor_id,
+               row_number() OVER (
+                   PARTITION BY e.vec_id
+                   ORDER BY list_dot_product(e.v, a.avec) DESC,
+                            a.anchor_id ASC
+               ) AS arn
+        FROM e CROSS JOIN ivfa a
+    ),
+    cbucket AS (
+        SELECT vec_id, anchor_id AS bucket FROM ivfassign WHERE arn = 1
+    ),
+    pbucket AS (
+        SELECT vec_id AS qid, anchor_id AS bucket
+        FROM ivfassign WHERE vec_id < 5 AND arn <= 2
+    ),
+    ivfapprox AS (
+        SELECT p.qid, cv.vec_id,
+               CAST(SUM(a.d) AS BIGINT) AS approx_dist
+        FROM cbucket cv
+        JOIN pbucket p ON cv.bucket = p.bucket
+        JOIN codes k ON k.vec_id = cv.vec_id
+        JOIN adc a ON a.qid = p.qid AND a.j = k.j AND a.c = k.c
+        WHERE cv.vec_id != p.qid
+        GROUP BY 1, 2
+    ),
+    ivfcoarse AS (
+        SELECT qid, vec_id, approx_dist,
+               row_number() OVER (PARTITION BY qid
+                                  ORDER BY approx_dist, vec_id) AS crn
+        FROM ivfapprox
+    ),
+    ivffine AS (
+        SELECT s.qid, s.vec_id, s.approx_dist, s.crn, x.exact_dist,
+               row_number() OVER (PARTITION BY s.qid
+                                  ORDER BY x.exact_dist, s.vec_id) AS rn
+        FROM (SELECT * FROM ivfcoarse WHERE crn <= 50) s
+        JOIN exact x ON x.qid = s.qid AND x.vec_id = s.vec_id
+    )
+"""
+
+
+@query(f"""
+    WITH {_PQ_CTES},
+    {_IVFPQ_CTES}
+    SELECT qid AS query_id, CAST(rn AS INT) AS rank,
+           vec_id AS neighbor_id, approx_dist, exact_dist,
+           CAST(crn AS INT) AS coarse_rank,
+           CAST(crn - rn AS INT) AS moved
+    FROM ivffine WHERE rn <= 10
+""")
+def q_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVFPQ ANN with exact refine (Jégou et al. TPAMI 2011 §IV
+    "IVFADC"; the FAISS IndexIVFPQ + refine composition) — the r11
+    VERDICT item 3: q_ann_index_probe prunes WHICH buckets are scanned
+    (dynamic partition pruning over the materialized IVF layout) and
+    q_pq_ann compresses HOW vectors are scored (ADC lookup tables);
+    this query composes them into what a production 100 TB vector
+    store actually runs. Each of the 5 queries probes its nprobe=2
+    nearest anchor buckets; candidates in probed buckets are scored by
+    m=8 integer map lookups over their INLINE PQ codes (the scan reads
+    only bucket/neighbor_id/codes — column pruning keeps the 64-dim
+    vector column on disk, FAISS's codes-in-RAM/vectors-on-SSD split);
+    the coarse top-50 per query (WindowGroupLimit partial top-k)
+    broadcast-joins back to the index — partition-pruned again — to
+    fetch full vectors for the shortlist only, and the final top-10
+    ranks by exact integer squared-L2. ``moved`` = coarse_rank − rank
+    is the refine-correction readout (q_two_stage_rerank's column).
+
+    Exactness: codes, ADC tables, and both distances are micro-int
+    (bit-identical in DuckDB); only the probe-selection dot product
+    runs in doubles (the established q_ann_index_probe convention).
+
+    Scale shape: probe selection is a broadcast-anchors cross join
+    (8 rows); coarse scoring is per-row map lookups with ZERO shuffle
+    before the WindowGroupLimit partial top-50; refine touches
+    ≤ 50·|queries| index rows via a broadcast join on the partition
+    column. No stage is corpus-shuffle-bound.
+    operators/similarity.py::ivfpq_topk."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ivfpq_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivfpq_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5)
+    return ivfpq_topk(queries, spark, idx, k=10, coarse_k=50, nprobe=2)
+
+
+# q_ivfpq_recall (q_ivfpq_recall) — recall@10 of the
+# refined IVFPQ top-10 against the exact integer-L2 top-10 over the
+# FULL corpus (the q_pq_recall convention; both legs size-10 per
+# query, so the count is |intersection| regardless of orientation).
+@query(f"""
+    WITH {_PQ_CTES},
+    {_IVFPQ_CTES},
+    ann10 AS (SELECT qid, vec_id FROM ivffine WHERE rn <= 10),
+    iex10 AS (
+        SELECT qid, vec_id FROM (
+            SELECT qid, vec_id,
+                   row_number() OVER (PARTITION BY qid
+                                      ORDER BY exact_dist, vec_id) AS ern
+            FROM exact WHERE vec_id != qid
+        ) WHERE ern <= 10
+    )
+    SELECT ann10.qid AS query_id,
+           CAST(COUNT(iex10.vec_id) AS BIGINT) AS hits,
+           CAST(COUNT(iex10.vec_id) * 100000 AS BIGINT) AS recall_micro
+    FROM ann10 LEFT JOIN iex10
+      ON ann10.qid = iex10.qid AND ann10.vec_id = iex10.vec_id
+    GROUP BY 1
+""")
+def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN observability for the IVFPQ path — recall@10 of
+    q_ivfpq_ann's refined top-10 against the EXACT integer-L2 top-10
+    over the FULL corpus (self excluded, vec_id tie-break): the
+    q_ann_recall / q_pq_recall twin for the composed index, and the
+    number that separates the two loss sources — bucket pruning
+    (a true neighbor in an unprobed bucket can never be found) vs
+    quantization (ADC misranks the coarse shortlist; the exact refine
+    repairs this one, which is why IVFPQ+refine recall ≥ raw-ADC
+    recall at equal nprobe). Both legs end in per-query partial top-k;
+    the recall join touches ≤ 2·k·|queries| rows at any corpus size
+    (the shared ``_recall_join`` convention)."""
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        ensure_parallelism,
+    )
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        ivfpq_topk,
+        l2sq_micro,
+        micro_vec,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = _materialized_ivfpq_index(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < 5)
+    ann10 = ivfpq_topk(
+        queries, spark, idx, k=10, coarse_k=50, nprobe=2
+    ).select("query_id", "neighbor_id")
+
+    corpus = ensure_parallelism(
+        emb.select("vec_id", micro_vec(F.col("embedding")).alias("mv"))
+    )
+    qv = F.broadcast(
+        queries.select(
+            F.col("vec_id").alias("query_id"),
+            micro_vec(F.col("embedding")).alias("qmv"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy("exact_dist", "vec_id")
+    ex10 = (
+        corpus.join(qv, F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            l2sq_micro(F.col("mv"), F.col("qmv")).alias("exact_dist"),
+        )
+        .withColumn("ern", F.row_number().over(w))
+        .where(F.col("ern") <= 10)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    )
+    return _recall_join(ex10, ann10, k=10, micro=True)

@@ -69,7 +69,7 @@ def tumbling_event_stats(
     events: DataFrame, watermark: str = "1 day", window: str = "1 day"
 ) -> DataFrame:
     """Tumbling-window stats with late-data handling — the streaming twin
-    of plans.queries.q_tumbling_window (same aggregates, same windows; the
+    of plans.streaming.q_tumbling_window (same aggregates, same windows; the
     batch query is the oracle-checked semantics)."""
     return (
         events.withWatermark("ts", watermark)
@@ -97,7 +97,7 @@ def hopping_event_stats(
     slide: str = "6 hours",
 ) -> DataFrame:
     """Hopping (sliding) window stats — the streaming twin of
-    plans.queries.q_hopping_window (same overlapping windows, same
+    plans.streaming.q_hopping_window (same overlapping windows, same
     aggregates; the batch query is the oracle-checked semantics). Each
     event contributes to window/slide overlapping windows; watermark
     bounds how long an open window's state is retained."""

@@ -9,7 +9,7 @@ event-time distance, so Spark can evict buffered rows once the watermark
 passes the horizon: state per side is O(rate × (watermark + horizon)),
 never the whole history.
 
-Batch twin: ``plans.queries_ext.q_stream_join`` runs the identical join
+Batch twin: ``plans.streaming.q_stream_join`` runs the identical join
 condition as a plain DataFrame plan and is DuckDB-oracle-checked; the
 streaming form below is checkpoint/restart-tested against it
 (tests/test_stream_join.py), the same batch-is-the-oracle pattern as

@@ -2,7 +2,7 @@
 ``applyInPandasWithState`` (the escape hatch for operators Structured
 Streaming's built-ins can't express — SURVEY.md §2.9 extension).
 
-Semantics match the batch twin (plans/queries_ext.q_sessionize, the
+Semantics match the batch twin (plans/streaming.q_sessionize, the
 oracle-checked form): events per user are split into sessions at >30-min
 inactivity gaps. State per user = (current session index, last event time,
 open-session aggregates); a processing-time timeout flushes sessions that

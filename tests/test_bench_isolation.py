@@ -12,7 +12,7 @@ pytestmark = pytest.mark.slow  # end-to-end job/pipeline tier; fast tier is -m '
 import json
 
 import bench
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def test_broken_query_yields_partial_bench(spark, monkeypatch, capsys):

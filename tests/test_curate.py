@@ -199,7 +199,7 @@ def test_dsir_weights_rank_planted_target_like_docs_first(spark, sf_dir):
     (lower) than the overall en share would give by chance, and the
     top-10 is majority-en. (Exact values are oracle-pinned; this pins
     the DIRECTION of the signal.)"""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     rows = QUERIES["q_dsir_weights"](spark, sf_dir).collect()
     assert len(rows) == 100
@@ -216,8 +216,8 @@ def test_leakage_safe_split_no_pair_straddles(spark, sf_dir):
     (both endpoints share a component, the split hashes the component
     label). Also pins that both splits are non-degenerate on the real
     corpus."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans import QUERIES
+    from telecom_competitor_analysis_spark.plans.dedup import (
         _materialized_lsh_pairs,
     )
 

@@ -325,15 +325,13 @@ def test_kmv_distinct_estimates_and_exact_mode(spark):
 
 
 def test_materialized_artifact_cache(spark, tmp_path):
-    """plans.queries_ext._materialized: builds once per source
+    """plans.artifacts._materialized: builds once per source
     fingerprint, reuses the artifact on identical input, rebuilds when
     the source parquet changes (the warehouse-table contract the
     shared pair graph / shingle index rely on)."""
     import pandas as pd
 
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
-        _materialized,
-    )
+    from telecom_competitor_analysis_spark.plans.artifacts import _materialized
 
     sf = tmp_path / "sf"
     sf.mkdir()
@@ -379,7 +377,7 @@ def test_materialized_invalidates_on_code_and_env_root(
 
     import pandas as pd
 
-    from telecom_competitor_analysis_spark.plans import queries_ext as qe
+    from telecom_competitor_analysis_spark.plans import artifacts as qe
 
     sf = tmp_path / "sf"
     part = sf / "documents.parquet" / "lang=en"
@@ -421,7 +419,7 @@ def test_materialized_keeps_concurrent_winner(spark, tmp_path):
 
     import pandas as pd
 
-    from telecom_competitor_analysis_spark.plans import queries_ext as qe
+    from telecom_competitor_analysis_spark.plans import artifacts as qe
 
     sf = tmp_path / "sf"
     sf.mkdir()

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from tests.oracle_utils import canonical_rows
 
 # queries whose outputs carry floats derived from aggregations/joins —

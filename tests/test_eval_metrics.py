@@ -14,8 +14,8 @@ from telecom_competitor_analysis_spark.operators.graph import (
     label_propagation,
     textrank_scores,
 )
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
-from telecom_competitor_analysis_spark.plans.queries_ext import (
+from telecom_competitor_analysis_spark.plans import QUERIES
+from telecom_competitor_analysis_spark.plans.stats import (
     PASS_AT_K_EXPR,
     _wilson_sql,
 )

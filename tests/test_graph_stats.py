@@ -6,7 +6,7 @@ the oracle sweep proves engine agreement; these pin the semantics."""
 from __future__ import annotations
 
 from telecom_competitor_analysis_spark.operators.graph import triangle_stats
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def _stats(spark, edges):

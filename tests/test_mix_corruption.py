@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import hashlib
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def test_doremi_weights_normalize_and_order(spark, sf_dir):

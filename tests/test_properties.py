@@ -218,7 +218,7 @@ def test_dup_span_stats_invariants(spark, texts):
     verbatim is 100% covered (dup_fraction == 1.0)."""
     import unittest.mock as mock
 
-    from telecom_competitor_analysis_spark.plans import queries_ext as qe
+    from telecom_competitor_analysis_spark.plans import dedup as qe
 
     rows = [(i, t) for i, t in enumerate(texts)]
     rows.append((len(texts), texts[0]))  # plant one verbatim duplicate
@@ -352,7 +352,7 @@ def test_training_shards_match_python_md5(spark, ids):
 
     import pandas as pd
 
-    from telecom_competitor_analysis_spark.plans import queries_ext as qe
+    from telecom_competitor_analysis_spark.plans import curation as qe
 
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": sorted(ids), "text": "x", "lang": "en"})

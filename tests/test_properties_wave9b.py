@@ -20,7 +20,7 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
 doc_strategy = st.lists(
@@ -270,7 +270,7 @@ vec_strategy = st.lists(
 @settings(max_examples=8, deadline=None)
 @given(vecs=vec_strategy)
 def test_mmr_matches_python_mirror(spark, vecs):
-    import telecom_competitor_analysis_spark.plans.queries_ext as qx
+    import telecom_competitor_analysis_spark.plans.similarity as qx
 
     d = tempfile.mkdtemp(prefix="wave9b_mmr_")
     dim = 64

@@ -131,7 +131,7 @@ def test_power_iteration_checkpoints_bound_iterates(spark, sf_dir):
     re-derivation is gone — the executed plan must not re-derive the
     Gram scan per consumer (≤ a handful of Exchanges, no parquet scans
     beyond the checkpointed boundary), and results stay byte-stable."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     df = QUERIES["q_power_iteration"](spark, sf_dir)
     rows = df.collect()

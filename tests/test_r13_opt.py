@@ -142,7 +142,7 @@ def test_knn_hubness_window_shuffle_is_narrow(spark, sf_dir):
     vectors must not appear anywhere above the bucket join. Pinned by
     asserting the executed plan computes __score below the Window (no
     dot-product expression inside the Sort/Window operators)."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     df = QUERIES["q_knn_hubness"](spark, sf_dir)
     rows = df.collect()
@@ -158,7 +158,7 @@ def test_bradley_terry_comparison_join_not_broadcast(spark, sf_dir):
     ran at the one-row-group scan's parallelism (8.0-10.3 s vs
     1.2-2.5 s for the pairs subtree at sf0.1). The shuffle_hash hint
     pins a ShuffledHashJoin for the part-blocked self-join."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     df = QUERIES["q_bradley_terry"](spark, sf_dir)
     df.collect()
@@ -172,7 +172,7 @@ def test_winsorize_percentile_input_is_repartitioned(spark, sf_dir):
     not run on the single one-row-group scan split — the under-split
     guard's round-robin repartition shows up as a RoundRobinPartitioning
     exchange below the aggregate."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     df = QUERIES["q_winsorize"](spark, sf_dir)
     assert df.count() > 0

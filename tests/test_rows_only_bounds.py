@@ -17,7 +17,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.sources.readers import load_table
 
 

@@ -4,7 +4,7 @@ the real corpus, and a planted-class fixture with known risky sets."""
 
 from __future__ import annotations
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def test_prefix_match_longest_wins_property(spark, sf_dir):

@@ -69,6 +69,24 @@ def test_medallion_end_to_end(spark, dirs):
     assert logs.filter("status = 'success'").count() == 3
 
 
+def test_failed_run_is_logged_as_failed(spark, dirs, monkeypatch):
+    from telecom_competitor_analysis_spark.jobs import run_pipeline
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("merge exploded")
+
+    monkeypatch.setattr(run_pipeline, "plan_star_appends", broken)
+    _write_bronze(dirs["bronze"], DAY1)
+    with pytest.raises(RuntimeError, match="merge exploded"):
+        run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+
+    logs = spark.read.parquet(f"{dirs['gold']}/logs").collect()
+    assert [(r.status, r.error_details) for r in logs] == [
+        ("failed", "RuntimeError: merge exploded")
+    ]
+    assert not Path(f"{dirs['gold']}/products").exists()
+
+
 def test_build_indexes_job(spark, tmp_path):
     """The nightly index-build job materializes all four probe-side
     artifacts, each immediately consumable: the shingle index answers an

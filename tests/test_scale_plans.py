@@ -12,7 +12,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.operators.skew import salted_join
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.sources.readers import load_table
 from telecom_competitor_analysis_spark.sources.writers import (
     write_bucketed,

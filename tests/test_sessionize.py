@@ -9,7 +9,7 @@ import shutil
 import tempfile
 
 
-from telecom_competitor_analysis_spark.plans.queries_ext import q_sessionize
+from telecom_competitor_analysis_spark.plans.streaming import q_sessionize
 from telecom_competitor_analysis_spark.sources.readers import load_table
 from telecom_competitor_analysis_spark.streaming.incremental import stream_events
 from telecom_competitor_analysis_spark.streaming.sessionize import (

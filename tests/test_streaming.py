@@ -75,7 +75,7 @@ def test_tumbling_stats_stream_equals_batch(spark, sf_dir, events_dir):
 def test_hopping_stats_stream_equals_batch(spark, sf_dir, events_dir):
     # overlapping windows: streaming availableNow over the same rows must
     # reproduce the batch q_hopping_window aggregates exactly
-    from telecom_competitor_analysis_spark.plans.queries import (
+    from telecom_competitor_analysis_spark.plans.streaming import (
         q_hopping_window,
     )
 

@@ -6,8 +6,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from telecom_competitor_analysis_spark.plans.oracles import ORACLES
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import ORACLES, QUERIES
 
 
 def test_every_survey_query_name_is_implemented():

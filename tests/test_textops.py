@@ -151,7 +151,7 @@ def test_weighted_sample_matches_reference_formula(spark):
 
 
 def test_pivot_dynamic_matches_static(spark, sf_dir):
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     dyn = QUERIES["q_pivot_dynamic"](spark, sf_dir)
@@ -169,7 +169,7 @@ def test_pivot_dynamic_matches_static(spark, sf_dir):
 
 
 def test_cdc_apply_semantics(spark, sf_dir):
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     got = {r.key: (r.price_cents, r.last_seq)
@@ -192,7 +192,7 @@ def test_cdc_apply_semantics(spark, sf_dir):
 def test_retention_cohort_week0_is_everyone(spark, sf_dir):
     """Every user is active in their own first week, so for each cohort
     the week-0 cell must equal the cohort's total user count."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     rows = QUERIES["q_retention_cohorts"](spark, sf_dir).collect()
@@ -217,7 +217,7 @@ def test_retention_cohort_week0_is_everyone(spark, sf_dir):
 def test_cogroup_asof_matches_jvm_asof(spark, sf_dir):
     """The cogrouped merge_asof plan and the union+window JVM plan are
     two formulations of the same operator — identical output required."""
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     a = sorted(map(tuple, QUERIES["q_cogroup_asof"](spark, sf_dir).collect()))
     b = sorted(map(tuple, QUERIES["q_asof_join"](spark, sf_dir).collect()))
@@ -231,7 +231,7 @@ def test_pivot_dynamic_caps_value_cardinality(spark, sf_dir):
     distinct set either)."""
     import pytest as _pytest
 
-    from telecom_competitor_analysis_spark.plans.queries import (
+    from telecom_competitor_analysis_spark.plans.relational import (
         q_pivot_dynamic,
     )
 
@@ -245,7 +245,7 @@ def test_dup_span_stats_merges_overlapping_spans(spark):
     """Planted boilerplate: two docs share a 5-word phrase → the three
     overlapping duplicated 3-grams merge into ONE island of 5 tokens;
     unique docs report zeros."""
-    from telecom_competitor_analysis_spark.plans import queries_ext as qe
+    from telecom_competitor_analysis_spark.plans import dedup as qe
 
     docs = spark.createDataFrame(
         [
@@ -279,7 +279,7 @@ def test_recursive_hierarchy_depths_and_union_guard(spark, sf_dir):
 
     import pytest as _pytest
 
-    from telecom_competitor_analysis_spark.plans.queries import QUERIES
+    from telecom_competitor_analysis_spark.plans import QUERIES
 
     rows = QUERIES["q_recursive_hierarchy"](spark, sf_dir).collect()
     got = {r.key: (r.root, r.depth) for r in rows}

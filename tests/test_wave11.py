@@ -10,9 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from telecom_competitor_analysis_spark.plans.queries_ext import (
-    EXT_QUERIES,
-)
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def _plan(df) -> str:
@@ -47,7 +45,7 @@ def bt_dup_dir(spark, tmp_path_factory) -> str:
 
 
 def test_bt_preagg_equals_raw_on_planted_duplicates(spark, bt_dup_dir):
-    q = EXT_QUERIES["q_bradley_terry"]
+    q = QUERIES["q_bradley_terry"]
     raw = {r.s_suppkey: r for r in q(spark, bt_dup_dir).collect()}
     spark.conf.set("spark.graft.btPreagg", "true")
     try:
@@ -86,7 +84,7 @@ def test_bt_preagg_cuts_join_input(spark, bt_dup_dir):
     # and the flagged plan actually contains the extra pre-aggregate
     # passes before the self-join (more HashAggregate nodes than the
     # raw plan)
-    q = EXT_QUERIES["q_bradley_terry"]
+    q = QUERIES["q_bradley_terry"]
     raw_aggs = _plan(q(spark, bt_dup_dir)).count("HashAggregate")
     spark.conf.set("spark.graft.btPreagg", "true")
     try:
@@ -99,7 +97,7 @@ def test_bt_preagg_cuts_join_input(spark, bt_dup_dir):
 def test_bt_default_path_unflagged_matches_sf(spark, sf_dir):
     # default stays OFF for this corpus (100% distinct triples): the
     # flag must not change results on real testdata either
-    q = EXT_QUERIES["q_bradley_terry"]
+    q = QUERIES["q_bradley_terry"]
     base = sorted(
         (r.s_suppkey, r.wins, r.n_comparisons, r.rating_micro)
         for r in q(spark, sf_dir).collect()
@@ -119,7 +117,7 @@ def test_bt_default_path_unflagged_matches_sf(spark, sf_dir):
 
 
 def test_bpe_apply_tokens_reassemble_and_merge(spark, sf_dir):
-    rows = EXT_QUERIES["q_bpe_apply"](spark, sf_dir).collect()
+    rows = QUERIES["q_bpe_apply"](spark, sf_dir).collect()
     assert len(rows) == 20
     assert [r.rank for r in rows] == list(range(1, 21))
     merged_any = False
@@ -135,9 +133,7 @@ def test_bpe_apply_tokens_reassemble_and_merge(spark, sf_dir):
 def test_bpe_merge_lambda_overlap_semantics(spark):
     # Sennrich overlap rule: "aaa" + merge (a,a) -> ["aa", "a"],
     # never ["a", "aa"] and never a triple merge
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
-        BPE_MERGE_LAMBDA,
-    )
+    from telecom_competitor_analysis_spark.plans.text import BPE_MERGE_LAMBDA
 
     body = BPE_MERGE_LAMBDA.format(a="'a'", b="'a'")
     out = spark.sql(
@@ -148,7 +144,7 @@ def test_bpe_merge_lambda_overlap_semantics(spark):
 
 
 def test_distinct_ngrams_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_distinct_ngrams"](spark, sf_dir).collect()
+    rows = QUERIES["q_distinct_ngrams"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 < r.distinct1_micro <= 1_000_000
@@ -159,7 +155,7 @@ def test_distinct_ngrams_bounds(spark, sf_dir):
 
 def test_blocklist_zero_hit_rules_still_report(spark, sf_dir):
     rows = {r.rule_id: r for r in
-            EXT_QUERIES["q_blocklist_screen"](spark, sf_dir).collect()}
+            QUERIES["q_blocklist_screen"](spark, sf_dir).collect()}
     assert set(rows) == {1, 2, 3, 4, 5, 6}
     assert rows[1].n_hits > 0 and rows[1].first_doc is not None
     assert rows[4].n_hits == 0 and rows[4].n_docs == 0
@@ -171,7 +167,7 @@ def test_event_runs_partition_totals(spark, sf_dir):
         load_table,
     )
 
-    rows = EXT_QUERIES["q_event_runs"](spark, sf_dir).collect()
+    rows = QUERIES["q_event_runs"](spark, sf_dir).collect()
     total = load_table(spark, sf_dir, "events").count()
     assert sum(r.n_events for r in rows) == total
     for r in rows:
@@ -184,7 +180,7 @@ def test_event_runs_partition_totals(spark, sf_dir):
 
 
 def test_rbo_bounds_and_identity(spark, sf_dir):
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans.similarity import (
         _rbo_coef_micro,
     )
 
@@ -193,7 +189,7 @@ def test_rbo_bounds_and_identity(spark, sf_dir):
     assert coefs == sorted(coefs, reverse=True)  # earlier match >= later
     # identical lists sum to ~1.0 (each depth d contributes COEF[d])
     assert abs(sum(coefs) - 1_000_000) <= 10
-    rows = EXT_QUERIES["q_rbo"](spark, sf_dir).collect()
+    rows = QUERIES["q_rbo"](spark, sf_dir).collect()
     assert len(rows) == 5
     for r in rows:
         assert 0 <= r.rbo_micro <= 1_000_010
@@ -202,7 +198,7 @@ def test_rbo_bounds_and_identity(spark, sf_dir):
 
 
 def test_two_stage_rerank_orders_by_exact(spark, sf_dir):
-    rows = EXT_QUERIES["q_two_stage_rerank"](spark, sf_dir).collect()
+    rows = QUERIES["q_two_stage_rerank"](spark, sf_dir).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
@@ -217,7 +213,7 @@ def test_two_stage_rerank_orders_by_exact(spark, sf_dir):
 
 
 def test_ece_bins_partition_and_bound(spark, sf_dir):
-    rows = EXT_QUERIES["q_ece"](spark, sf_dir).collect()
+    rows = QUERIES["q_ece"](spark, sf_dir).collect()
     assert all(0 <= r.bin <= 9 for r in rows)
     for r in rows:
         assert 0 <= r.avg_conf_micro <= 1_000_000
@@ -231,8 +227,8 @@ def test_ece_bins_partition_and_bound(spark, sf_dir):
 
 
 def test_t_closeness_dominates_l_diversity_classes(spark, sf_dir):
-    t = EXT_QUERIES["q_t_closeness"](spark, sf_dir).collect()[0]
-    l = EXT_QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
+    t = QUERIES["q_t_closeness"](spark, sf_dir).collect()[0]
+    l = QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
     assert t.n_classes == l.n_classes  # same QI definition
     assert 0 <= t.max_t_micro <= 1_000_000
     assert t.n_risky_classes <= t.n_classes
@@ -243,7 +239,7 @@ def test_t_closeness_dominates_l_diversity_classes(spark, sf_dir):
 
 
 def test_anomaly_mad_fence_arithmetic(spark, sf_dir):
-    rows = EXT_QUERIES["q_anomaly_mad"](spark, sf_dir).collect()
+    rows = QUERIES["q_anomaly_mad"](spark, sf_dir).collect()
     assert {r.o_orderstatus for r in rows} == {"F", "O", "P"}
     for r in rows:
         assert r.mad_cents > 0
@@ -256,7 +252,7 @@ def test_anomaly_mad_fence_arithmetic(spark, sf_dir):
 
 
 def test_freshness_decay_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_freshness_decay"](spark, sf_dir).collect()
+    rows = QUERIES["q_freshness_decay"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 0 <= r.decayed_cents <= r.raw_cents
@@ -266,7 +262,7 @@ def test_freshness_decay_bounds(spark, sf_dir):
 
 
 def test_feature_hash_collisions_account_for_all_buckets(spark, sf_dir):
-    rows = EXT_QUERIES["q_feature_hash_collisions"](spark, sf_dir).collect()
+    rows = QUERIES["q_feature_hash_collisions"](spark, sf_dir).collect()
     assert sum(r.n_buckets for r in rows) == 64
     zero = [r for r in rows if r.load == 0]
     for r in zero:
@@ -287,7 +283,7 @@ def test_feature_hash_collisions_account_for_all_buckets(spark, sf_dir):
 
 
 def test_media_sniff_contingency(spark, sf_dir):
-    rows = EXT_QUERIES["q_media_sniff"](spark, sf_dir).collect()
+    rows = QUERIES["q_media_sniff"](spark, sf_dir).collect()
     from telecom_competitor_analysis_spark.sources.readers import (
         load_table,
     )
@@ -327,7 +323,7 @@ def test_local_clustering_on_planted_graph(spark):
 
 
 def test_clustering_coeff_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_clustering_coeff"](spark, sf_dir).collect()
+    rows = QUERIES["q_clustering_coeff"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert 1 <= r.deg_bucket
@@ -335,7 +331,7 @@ def test_clustering_coeff_bounds(spark, sf_dir):
 
 
 def test_power_iteration_properties(spark, sf_dir):
-    rows = EXT_QUERIES["q_power_iteration"](spark, sf_dir).collect()
+    rows = QUERIES["q_power_iteration"](spark, sf_dir).collect()
     assert len(rows) == 64
     assert {r.dim for r in rows} == set(range(64))
     u1 = [r.u1_milli for r in rows]
@@ -356,7 +352,7 @@ def test_power_iteration_properties(spark, sf_dir):
 
 
 def test_char_entropy_rate_bounds(spark, sf_dir):
-    rows = EXT_QUERIES["q_char_entropy_rate"](spark, sf_dir).collect()
+    rows = QUERIES["q_char_entropy_rate"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         # conditioning can't raise entropy: 0 <= H(X2|X1) <= H(X)
@@ -367,7 +363,7 @@ def test_char_entropy_rate_bounds(spark, sf_dir):
 
 
 def test_burstiness_poisson_floor(spark, sf_dir):
-    rows = EXT_QUERIES["q_burstiness"](spark, sf_dir).collect()
+    rows = QUERIES["q_burstiness"](spark, sf_dir).collect()
     assert len(rows) == 20
     for r in rows:
         # VMR >= the within-doc clumping floor; must be positive and
@@ -379,7 +375,7 @@ def test_burstiness_poisson_floor(spark, sf_dir):
 
 def test_bpe_compression_curve_monotone(spark, sf_dir):
     rows = sorted(
-        EXT_QUERIES["q_bpe_compression_curve"](spark, sf_dir).collect(),
+        QUERIES["q_bpe_compression_curve"](spark, sf_dir).collect(),
         key=lambda r: r.n_merges,
     )
     assert [r.n_merges for r in rows] == [0, 2, 4, 8]
@@ -395,7 +391,7 @@ def test_delete_vectors_mask_accounting(spark, sf_dir):
         load_table,
     )
 
-    rows = EXT_QUERIES["q_delete_vectors"](spark, sf_dir).collect()
+    rows = QUERIES["q_delete_vectors"](spark, sf_dir).collect()
     orders = load_table(spark, sf_dir, "orders")
     assert sum(r.n_rows for r in rows) == orders.count()
     assert sum(r.n_masked for r in rows) == orders.filter(
@@ -409,7 +405,7 @@ def test_delete_vectors_mask_accounting(spark, sf_dir):
 
 def test_pruning_zorder_beats_linear_on_trailing_dim(spark, sf_dir):
     rows = {(r.layout, r.predicate): r for r in
-            EXT_QUERIES["q_pruning_stats"](spark, sf_dir).collect()}
+            QUERIES["q_pruning_stats"](spark, sf_dir).collect()}
     assert len(rows) == 6
     # linear layout has no price locality: the price-band predicate
     # skips (almost) nothing; z-order skips real files on BOTH dims
@@ -427,7 +423,7 @@ def test_pruning_zorder_beats_linear_on_trailing_dim(spark, sf_dir):
 
 
 def test_bloom_fpp_audit_consistency(spark, sf_dir):
-    r = EXT_QUERIES["q_bloom_fpp_audit"](spark, sf_dir).collect()[0]
+    r = QUERIES["q_bloom_fpp_audit"](spark, sf_dir).collect()[0]
     # no false negatives: every member passes
     assert r.n_pass >= r.n_members
     assert r.n_false_pos == r.n_pass - r.n_members

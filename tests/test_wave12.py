@@ -10,9 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from telecom_competitor_analysis_spark.plans.queries_ext import (
-    EXT_QUERIES,
-)
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.sources.readers import load_table
 
 
@@ -154,7 +152,7 @@ def test_ivfpq_declared_queries_shape(spark, sf_dir):
     """q_ivfpq_ann / q_ivfpq_recall behavioral pins at the declared
     parameters (nprobe=2, coarse 50, k=10): full rank sets, exact_dist
     nondecreasing in rank, and the recall twin's integer convention."""
-    ann = EXT_QUERIES["q_ivfpq_ann"](spark, sf_dir).collect()
+    ann = QUERIES["q_ivfpq_ann"](spark, sf_dir).collect()
     by_q = {}
     for r in ann:
         by_q.setdefault(r.query_id, []).append(r)
@@ -166,7 +164,7 @@ def test_ivfpq_declared_queries_shape(spark, sf_dir):
         assert dists == sorted(dists)
         assert all(r.neighbor_id != q for r in rs)
 
-    rec = EXT_QUERIES["q_ivfpq_recall"](spark, sf_dir).collect()
+    rec = QUERIES["q_ivfpq_recall"](spark, sf_dir).collect()
     assert {r.query_id for r in rec} == {0, 1, 2, 3, 4}
     for r in rec:
         assert 0 <= r.hits <= 10
@@ -213,7 +211,7 @@ def test_pack_efficiency_ffd_fills_at_least_concat(spark, sf_dir):
     summed over shards, FFD's fill is >= concat-truncate's (FFD loses
     no boundary tokens and opens sequences only on genuine lack of
     room), and the two strategies see identical doc/token totals."""
-    rows = EXT_QUERIES["q_pack_efficiency"](spark, sf_dir).collect()
+    rows = QUERIES["q_pack_efficiency"](spark, sf_dir).collect()
     agg = {}
     for r in rows:
         a = agg.setdefault(
@@ -238,7 +236,7 @@ def test_laplace_table_scales_inversely_with_epsilon():
     eps is exactly (up to rounding) 2x the table at 2*eps — Laplace
     scale b = sensitivity/eps, so halving the privacy budget doubles
     every noise level. Also pins antisymmetry and monotonicity."""
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans.stats import (
         _laplace_micro_table,
     )
 
@@ -258,12 +256,12 @@ def test_dp_histogram_mechanism_arithmetic(spark, sf_dir):
     come from the 64-level table, released = max(0, true*1e6 + noise),
     epsilon/sensitivity accounting constant, and the noise is actually
     exercised in both directions on the fixture."""
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans.stats import (
         _laplace_micro_table,
     )
 
     table = set(_laplace_micro_table())
-    rows = EXT_QUERIES["q_dp_histogram"](spark, sf_dir).collect()
+    rows = QUERIES["q_dp_histogram"](spark, sf_dir).collect()
     assert rows
     assert any(r.noise_micro < 0 for r in rows)
     assert any(r.noise_micro > 0 for r in rows)
@@ -280,7 +278,7 @@ def test_countmin_never_underestimates(spark, sf_dir):
     """The CM mechanism's signature, pinned: every point estimate >=
     the true count (counters only ever gain colliding mass), exactly
     20 probe words, and the bound column is the 2N/w budget."""
-    rows = EXT_QUERIES["q_countmin_audit"](spark, sf_dir).collect()
+    rows = QUERIES["q_countmin_audit"](spark, sf_dir).collect()
     assert len(rows) == 20
     for r in rows:
         assert r.cm_est >= r.true_freq
@@ -292,7 +290,7 @@ def test_ams_f2_order_stats_and_error(spark, sf_dir):
     """AMS audit invariants: one row, min <= lower-median <= max,
     err_micro consistent with the released numbers, true F2 >= N
     (every word contributes at least freq)."""
-    [r] = EXT_QUERIES["q_ams_f2"](spark, sf_dir).collect()
+    [r] = QUERIES["q_ams_f2"](spark, sf_dir).collect()
     assert r.min_est <= r.median_est <= r.max_est
     assert r.true_f2 > 0
     assert r.err_micro == abs(r.median_est - r.true_f2) * 1_000_000 // r.true_f2
@@ -301,7 +299,7 @@ def test_ams_f2_order_stats_and_error(spark, sf_dir):
 def test_readability_formula_consistency(spark, sf_dir):
     """The FK milli columns must be recomputable from the released
     integer sums (the shared-expression discipline's behavioral pin)."""
-    rows = EXT_QUERIES["q_readability"](spark, sf_dir).collect()
+    rows = QUERIES["q_readability"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.words_per_sentence_milli == r.n_words * 1000 // r.n_sentences
@@ -319,7 +317,7 @@ def test_compact_plan_conservation(spark, sf_dir):
     = before; after = large + packed groups), the plan never grows the
     file count, rewritten rows are exactly the small files' rows, and
     packed fill never exceeds 100%."""
-    rows = EXT_QUERIES["q_compact_plan"](spark, sf_dir).collect()
+    rows = QUERIES["q_compact_plan"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.n_files == r.n_small + r.n_large
@@ -338,11 +336,11 @@ def test_graph_modularity_identities(spark, sf_dir):
     nothing), intra-edge counts never exceed the graph size, and the
     total Q is positive (the LP partition of a near-dup graph beats
     chance) and bounded by 1."""
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans.dedup import (
         _materialized_lsh_pairs,
     )
 
-    rows = EXT_QUERIES["q_graph_modularity"](spark, sf_dir).collect()
+    rows = QUERIES["q_graph_modularity"](spark, sf_dir).collect()
     assert rows
     m = _materialized_lsh_pairs(spark, sf_dir).count()
     assert sum(r.degree_sum for r in rows) == 2 * m
@@ -357,12 +355,10 @@ def test_hll_audit_regimes_and_error(spark, sf_dir):
     """HLL audit invariants: positive estimates, err arithmetic
     consistent, and the linear-counting regime switch is exactly the
     released rule (n_zero > 0 and est_raw < 2.5m -> table value)."""
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
-        _hll_lc_table,
-    )
+    from telecom_competitor_analysis_spark.plans.stats import _hll_lc_table
 
     lc = _hll_lc_table()
-    rows = EXT_QUERIES["q_hll_audit"](spark, sf_dir).collect()
+    rows = QUERIES["q_hll_audit"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.exact_distinct > 0 and r.est > 0
@@ -378,7 +374,7 @@ def test_conformal_coverage_near_target(spark, sf_dir):
     near the 90% target (finite-sample binomial noise allowed), and
     the threshold actually rejects bad docs (a vacuous threshold that
     keeps everything would show rejection 0)."""
-    [r] = EXT_QUERIES["q_conformal_coverage"](spark, sf_dir).collect()
+    [r] = QUERIES["q_conformal_coverage"](spark, sf_dir).collect()
     assert 840_000 <= r.coverage_micro <= 1_000_000
     assert r.rejection_micro > 0
     assert r.n_cal > 0 and r.n_test_good > 0
@@ -389,7 +385,7 @@ def test_temporal_split_conservation(spark, sf_dir):
     """Split audit identities: every row lands on exactly one side,
     spanning users bounded by both side counts, leak rate arithmetic
     recomputable from released integers."""
-    rows = EXT_QUERIES["q_temporal_split"](spark, sf_dir).collect()
+    rows = QUERIES["q_temporal_split"](spark, sf_dir).collect()
     assert rows
     from telecom_competitor_analysis_spark.sources.readers import (
         load_table,
@@ -414,7 +410,7 @@ def test_lang_confusion_mass_conservation(spark, sf_dir):
     """Confusion-matrix identities: per declared language the cells sum
     to the language's doc count and row_micro is the released integer
     rate; the diagonal flag matches the cell key."""
-    rows = EXT_QUERIES["q_lang_confusion"](spark, sf_dir).collect()
+    rows = QUERIES["q_lang_confusion"](spark, sf_dir).collect()
     assert rows
     by_lang = {}
     for r in rows:
@@ -441,7 +437,7 @@ def test_quantile_sketch_exact_is_true_order_stat(spark, sf_dir):
     containing bin's [min, max] by construction."""
     rows = {
         r.p: r
-        for r in EXT_QUERIES["q_quantile_sketch_audit"](
+        for r in QUERIES["q_quantile_sketch_audit"](
             spark, sf_dir
         ).collect()
     }
@@ -472,7 +468,7 @@ def test_aa_calibration_no_effect(spark, sf_dir):
     spend metric is non-degenerate by construction), chi2 recomputable
     from the released cells via the same staged division, and — the
     point of an A/A run — no significant effect on the fixture."""
-    [r] = EXT_QUERIES["q_aa_calibration"](spark, sf_dir).collect()
+    [r] = QUERIES["q_aa_calibration"](spark, sf_dir).collect()
     assert min(r.a, r.b, r.c, r.d) > 0
     assert r.n_users == r.a + r.b + r.c + r.d
     det = r.a * r.d - r.b * r.c
@@ -495,7 +491,7 @@ def test_cluster_chaining_density_bounds(spark, sf_dir):
     at most the complete graph, the chained flag is exactly
     density < 1, and at least one tight (density = 1) cluster exists
     on the fixture (pairs themselves form 2-clusters)."""
-    rows = EXT_QUERIES["q_cluster_chaining"](spark, sf_dir).collect()
+    rows = QUERIES["q_cluster_chaining"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.n_nodes >= 2
@@ -512,7 +508,7 @@ def test_hll_merge_is_lossless(spark, sf_dir):
     """THE mergeability pin: register-wise max merge of the two halves
     must reproduce the single-pass registers exactly — zero mismatches,
     equal estimates, for every event_type."""
-    rows = EXT_QUERIES["q_hll_merge"](spark, sf_dir).collect()
+    rows = QUERIES["q_hll_merge"](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.register_mismatches == 0
@@ -524,7 +520,7 @@ def test_dp_mean_mechanism(spark, sf_dir):
     """Clipped-mean release arithmetic: clipped sum within +/-C*n,
     noise from the sensitivity-2C table, released columns
     recomputable, accounting constant."""
-    from telecom_competitor_analysis_spark.plans.queries_ext import (
+    from telecom_competitor_analysis_spark.plans.stats import (
         DP_MEAN_CLIP_CENTS,
         _laplace_micro_table,
     )
@@ -532,7 +528,7 @@ def test_dp_mean_mechanism(spark, sf_dir):
     table = set(
         _laplace_micro_table(500_000, 64, 2 * DP_MEAN_CLIP_CENTS)
     )
-    rows = EXT_QUERIES["q_dp_mean"](spark, sf_dir).collect()
+    rows = QUERIES["q_dp_mean"](spark, sf_dir).collect()
     assert rows
 
     def sdiv(x, m):
@@ -556,7 +552,7 @@ def test_event_trigrams_counts(spark, sf_dir):
     nonincreasing, user reach never exceeds occurrences, and the
     total trigram slots equal sum over users of max(rows-2, 0)."""
     rows = sorted(
-        EXT_QUERIES["q_event_trigrams"](spark, sf_dir).collect(),
+        QUERIES["q_event_trigrams"](spark, sf_dir).collect(),
         key=lambda r: r.rank,
     )
     assert rows and [r.rank for r in rows] == list(range(1, len(rows) + 1))
@@ -572,7 +568,7 @@ def test_keeper_policy_diff_membership(spark, sf_dir):
     min-id keeper IS the cluster id floor, flags match keeper
     inequality, and the longest keeper never has fewer words than the
     min-id keeper (it maximizes words by construction)."""
-    rows = EXT_QUERIES["q_keeper_policy_diff"](spark, sf_dir).collect()
+    rows = QUERIES["q_keeper_policy_diff"](spark, sf_dir).collect()
     assert rows
     docs = {
         r["doc_id"]: len(r["text"].strip().split())
@@ -591,7 +587,7 @@ def test_salt_plan_restores_budget(spark, sf_dir):
     """The planner's contract: every emitted salt factor brings the
     hot key's max rows per salted sub-key back under the target (the
     whole point of the plan), with exact ceil arithmetic."""
-    rows = EXT_QUERIES["q_salt_plan"](spark, sf_dir).collect()
+    rows = QUERIES["q_salt_plan"](spark, sf_dir).collect()
     for r in rows:
         assert r.n_rows > r.target_rows == 2048
         assert r.salt_factor == (r.n_rows + 2047) // 2048
@@ -607,7 +603,7 @@ def test_coverage_curve_monotone(spark, sf_dir):
     micro rates are the released integer divisions."""
     rows = {
         r.f: r
-        for r in EXT_QUERIES["q_coverage_curve"](spark, sf_dir).collect()
+        for r in QUERIES["q_coverage_curve"](spark, sf_dir).collect()
     }
     assert set(rows) == {25, 50, 75}
     denom = {r.test_grams for r in rows.values()}
@@ -625,7 +621,7 @@ def test_reshard_stability_hrw_minimal_disruption(spark, sf_dir):
     shard wins, so the fraction sits near 1/9."""
     rows = {
         r.strategy: r
-        for r in EXT_QUERIES["q_reshard_stability"](
+        for r in QUERIES["q_reshard_stability"](
             spark, sf_dir
         ).collect()
     }
@@ -646,7 +642,7 @@ def test_table_checksum_rollup_lossless(spark, sf_dir):
     """Reconciliation pins: the __TOTAL__ row equals the sum of the day
     rows (mergeable by associativity), counts match the raw table, and
     flipping one row's value changes the fingerprint (sensitivity)."""
-    rows = EXT_QUERIES["q_table_checksum"](spark, sf_dir).collect()
+    rows = QUERIES["q_table_checksum"](spark, sf_dir).collect()
     days = [r for r in rows if r.day_str != "__TOTAL__"]
     [total] = [r for r in rows if r.day_str == "__TOTAL__"]
     assert total.n_rows == sum(r.n_rows for r in days)

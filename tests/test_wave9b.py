@@ -4,7 +4,7 @@ Oracle parity itself rides tests/test_oracle_parity.py automatically."""
 
 from __future__ import annotations
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 
 
 def _plan(df) -> str:

@@ -1,18 +1,22 @@
-"""Driver simulation: bare session, __spark_entry__ contract, DuckDB compare."""
+"""Driver simulation: bare session, __spark_entry__ contract, DuckDB compare.
+
+The session runs on ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` if unset)."""
 import importlib.util, os, sys, time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sf_dir = os.environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
 
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py"
+    "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
 )
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
 from pyspark.sql import SparkSession
 
-spark = SparkSession.builder.master("local[8]").getOrCreate()
+master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+spark = SparkSession.builder.master(master).getOrCreate()
 
 from tests.oracle_utils import compare, duckdb_conn
 

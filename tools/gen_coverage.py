@@ -1,5 +1,5 @@
-"""Regenerate COVERAGE.md from the live registries (plans/queries*.py,
-plans/oracles*.py): one row per declared query with its check kind
+"""Regenerate COVERAGE.md from the live query registry (the family
+modules under plans/): one row per declared query with its check kind
 (oracle vs rows-only) and the first docstring line. Run from the repo
 root at round close; no SparkSession is created (imports only)."""
 
@@ -7,7 +7,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES  # noqa: E402
+from telecom_competitor_analysis_spark.plans import QUERIES  # noqa: E402
 
 
 def main() -> None:
@@ -27,8 +27,8 @@ def main() -> None:
         f.write(
             "# COVERAGE — declared queries vs SURVEY.md §2 operator"
             " inventory\n\n"
-            "Generated by tools/gen_coverage.py from the live registries"
-            " (plans/queries*.py, plans/oracles*.py).\n"
+            "Generated by tools/gen_coverage.py from the live query registry"
+            " (plans/<family>.py, each query declared beside its oracle).\n"
             f"{len(rows)} queries; {n_oracle} oracle-checked"
             " (hash-compared vs DuckDB at sf0.01),\n"
             f"{len(rows) - n_oracle} rows-only (genuinely"

@@ -27,7 +27,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 import bench  # noqa: E402  (HEADLINE lists)
-from telecom_competitor_analysis_spark.plans.queries import QUERIES  # noqa: E402
+from telecom_competitor_analysis_spark.plans import QUERIES  # noqa: E402
 from telecom_competitor_analysis_spark.session import get_spark  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -19,7 +19,7 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb
 
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 xdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sfx10"

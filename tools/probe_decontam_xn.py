@@ -29,7 +29,7 @@ from telecom_competitor_analysis_spark.operators.similarity import (
     cosine,
     ivf_probe,
 )
-from telecom_competitor_analysis_spark.plans.queries_ext import (
+from telecom_competitor_analysis_spark.plans.similarity import (
     _materialized_ivf_index,
 )
 from telecom_competitor_analysis_spark.session import get_spark

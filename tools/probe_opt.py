@@ -15,7 +15,7 @@ import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 args = sys.argv[1:]

@@ -1,7 +1,7 @@
 """x10 replication probe: warm-up + best-of-2, noop sink, local[32]."""
 import sys, time
 sys.path.insert(0, '/root/repo')
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 names = sys.argv[1:]

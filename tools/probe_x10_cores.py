@@ -7,7 +7,7 @@ bench cannot give (there every query is fixed-overhead-bound)."""
 import os, sys, time
 
 sys.path.insert(0, "/root/repo")
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 names = sys.argv[1:]

@@ -11,7 +11,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 from bench import HEADLINE, HEADLINE_EXT
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 OUT = sys.argv[1] if len(sys.argv) > 1 else "/tmp/x10_full.md"

@@ -12,7 +12,7 @@ import sys
 import time
 
 sys.path.insert(0, "/root/repo")
-from telecom_competitor_analysis_spark.plans.queries import QUERIES
+from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
 xdir = sys.argv[1]
