@@ -27,9 +27,7 @@ screen gates doc ids and the survivor set is carried as the (id, text)
 frame, persisted between stages exactly where consumers fork (the
 curate_corpus reuse lesson: Spark shares nothing across stage
 boundaries that re-derive lineage). At 100 TB each stage boundary
-would be a parquet table (the build_indexes materialization pattern);
-``persist_stages=False`` models that by leaving materialization to the
-caller.
+would be a parquet table (the build_indexes materialization pattern).
 """
 
 from __future__ import annotations
@@ -84,7 +82,6 @@ def curate_batch(
     carry_cols: Sequence[str] = (),
     n_shards: int = 8,
     decontaminate_w: int = 3,
-    persist_stages: bool = True,
 ) -> tuple[DataFrame, list[dict]]:
     """Run the full batch curation funnel. Returns (shards, lineage):
     ``shards`` = surviving docs with (id, *carry_cols, text, shard,
@@ -97,14 +94,12 @@ def curate_batch(
     lineage: list[dict] = []
     cols = [F.col(id_col), *[F.col(c) for c in carry_cols],
             F.col(text_col)]
-    cur = docs.select(*cols)
-    if persist_stages:
-        cur = cur.persist()
+    cur = docs.select(*cols).persist()
     n_cur = cur.count()
 
     def record(stage: str, survivors: DataFrame, skipped: bool = False):
         nonlocal cur, n_cur
-        if persist_stages and not skipped:
+        if not skipped:
             survivors = survivors.persist()
         n_out = n_cur if skipped else survivors.count()
         lineage.append(
@@ -116,8 +111,7 @@ def curate_batch(
             }
         )
         if not skipped:
-            if persist_stages:
-                cur.unpersist()
+            cur.unpersist()
             cur, n_cur = survivors, n_out
 
     # 0. URL dedup: keeper = min id per canonical URL (content unread)

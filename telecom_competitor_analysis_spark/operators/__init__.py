@@ -13,7 +13,7 @@ from telecom_competitor_analysis_spark.operators.dedup import (  # noqa: F401
     lsh_candidate_pairs,
     minhash_signature,
     shingle_jaccard_pairs,
-    simhash16,
+    simhash,
 )
 from telecom_competitor_analysis_spark.operators.merge import (  # noqa: F401
     anti_join_new,

@@ -31,7 +31,6 @@ def curate_corpus(
     max_words: int = 10_000,
     min_stopword_ratio: float = 0.0,
     near_dup_threshold: float = 0.5,
-    reuse_keepers: bool = True,
     reuse_via: str = "persist",
 ) -> DataFrame:
     """Surviving documents after the four curation stages. Returns
@@ -46,11 +45,11 @@ def curate_corpus(
     stages vs 73 s with persisted ones, where the cached-subtree plans
     ballooned and AQE could no longer coalesce the cached shuffles).
 
-    ``reuse_keepers`` persists the post-exact-dedup stage, which
-    feeds both the near-dup pair generation and the final anti-join —
-    without it the whole scan+score+dedup pipeline executes twice
-    (measured ~27% slower at sf0.1). At cluster scale the same role is
-    played by materializing keepers to a table between stages.
+    The reused stage is the post-exact-dedup keepers, which feed both
+    the near-dup pair generation and the final anti-join — without
+    reuse the whole scan+score+dedup pipeline executes twice (measured
+    ~27% slower at sf0.1). At cluster scale the same role is played by
+    materializing keepers to a table between stages.
 
     Near-dup policy: among candidate pairs with shingle-Jaccard ≥
     threshold, the lower id survives — applied as one anti-join against
@@ -108,16 +107,10 @@ def curate_corpus(
         .filter(F.col(id_col) == F.col("__keeper"))
         .drop("__digest", "__keeper")
     )
-    if reuse_keepers:
-        # Both mechanisms make the keepers reusable by the two consumers
-        # below (near-dup pair generation + final anti-join); see the
-        # reuse_via docstring for when each wins. At cluster scale the
-        # same role is played by writing keepers to a table between
-        # stages.
-        if reuse_via == "checkpoint":
-            keepers = keepers.localCheckpoint(eager=False)
-        else:
-            keepers = keepers.persist()
+    if reuse_via == "checkpoint":
+        keepers = keepers.localCheckpoint(eager=False)
+    else:
+        keepers = keepers.persist()
 
     # near-dup removal among survivors: drop the higher id of each pair
     pairs = shingle_jaccard_pairs(

@@ -13,10 +13,11 @@ Scale design (the point of each formulation):
   a fixed-width hex == min of the underlying 128-bit integer), which keeps
   the hash portable across engines (same md5 in Spark / DuckDB / anywhere).
 - **LSH**: band key = hash of a signature slice; candidate pairs come from
-  a self-join on the band key — pair generation is proportional to bucket
-  sizes, never O(n²) over the corpus.
-- **SimHash**: 16-bit signature from md5-nibble high bits; exact integer
-  sums per bit → order-independent, reproducible.
+  one bucket-pairing stage shared by the MinHash and SimHash variants —
+  pair generation is proportional to bucket sizes, never O(n²) over the
+  corpus.
+- **SimHash**: 16- or 64-bit signature from md5-nibble high bits; exact
+  integer sums per bit → order-independent, reproducible.
 - **shingle Jaccard**: inverted-index join on shingles (w-word windows) —
   candidate pairs only where shingles actually collide; exact Jaccard
   confirmed on candidates only (the verify step after LSH in the classic
@@ -27,30 +28,24 @@ All pure DataFrame ops — no UDFs, everything whole-stage-codegen'd.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.functions.text import words
 
-HEX_HIGH_NIBBLES = ("8", "9", "a", "b", "c", "d", "e", "f")
-
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small inputs arrive as one parquet split, serializing the
     compute-heavy shingle/hash stages onto one core (measured: 9.7s → ~1s
     for the minhash signature at sf0.1). Round-robin repartition up to the
-    session's parallelism when the scan is under-split.
-
-    Gated on ``spark.graft.ensureParallelism`` (default true): the probe
-    reads ``df.rdd.getNumPartitions()``, which forces an RDD-conversion
-    analysis of the plan. Cheap locally, needless on a real cluster where
-    a 100 TB scan is always well-split — set the conf to ``false`` there
-    and the function is a true no-op (no probe, no shuffle)."""
-    sess = df.sparkSession
-    if sess.conf.get("spark.graft.ensureParallelism", "true") != "true":
-        return df
-    target = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
+    session's parallelism when the scan is under-split; a well-split scan
+    (every large input on a cluster) is returned unchanged. The split
+    count comes from ``df.rdd.getNumPartitions()``, an analysis of the
+    plan that runs no job."""
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
@@ -71,59 +66,20 @@ def exact_dedup_groups(
     )
 
 
-def shingles(text: Column, w: int = 3) -> Column:
-    """w-word shingles as an array (space-joined windows). Empty/short
-    docs yield an empty array."""
-    arr = words(F.trim(text))
-    n = F.size(arr)
-    idx = F.sequence(F.lit(0), F.greatest(n - w, F.lit(-1)))
-    return F.when(
-        n >= w,
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(arr, (i + j + 1).cast("int")) for j in range(w)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, w: int = 3
-) -> DataFrame:
-    """(id, shingle) rows via posexplode + window lead — the codegen'd
-    formulation. The interpreted higher-order-function variant (shingles()
-    + explode) allocated heavily and ran 2-6× slower with GC-driven
-    variance; this one is a stable single window pass whose doc-id
-    partitioning is reused by any downstream per-doc groupBy (no second
-    shuffle)."""
-    from pyspark.sql import Window
-
-    win = Window.partitionBy(id_col).orderBy("pos")
-    toks = df.select(
-        F.col(id_col),
-        F.posexplode(words(F.trim(F.col(text_col)))).alias("pos", "w"),
-    )
-    parts = ["w"] + [F.lead("w", j).over(win) for j in range(1, w)]
-    guard = F.lead("w", w - 1).over(win)
-    return toks.select(
-        F.col(id_col),
-        F.concat_ws(" ", *parts).alias("word"),
-        guard.alias("__guard"),
-    ).filter(F.col("__guard").isNotNull()).drop("__guard")
-
-
 def positional_ngrams(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
-    """(id, pos, gram) rows — ``shingle_rows`` with the gram's START
-    POSITION kept. The ONE shared stage behind every positional
-    consumer (phrase retrieval, duplicate-span audit/removal): same
-    posexplode + lead-window formulation, same doc-id partitioning
-    reused by downstream per-doc work (r7 review: this block was
-    copy-pasted three times before being factored here — change the
-    gram shape HERE and every consumer plus its oracle CTE constant
-    follows)."""
+    """(id, pos, gram) rows: every n-word window of a document with its
+    START POSITION. The ONE n-gram stage behind every shingle and
+    positional consumer (``shingle_rows``, phrase retrieval,
+    duplicate-span audit/removal) — change the gram shape HERE and every
+    consumer plus its oracle CTE constant follows.
+
+    posexplode + lead window: the codegen'd formulation (a
+    higher-order-function variant over the word array allocated heavily
+    and ran 2-6× slower with GC-driven variance), a single window pass
+    whose doc-id partitioning is reused by any downstream per-doc
+    groupBy (no second shuffle)."""
     from pyspark.sql import Window
 
     win = Window.partitionBy(id_col).orderBy("pos")
@@ -142,6 +98,16 @@ def positional_ngrams(
         )
         .filter(F.col("__guard").isNotNull())
         .drop("__guard")
+    )
+
+
+def shingle_rows(
+    df: DataFrame, id_col: str, text_col: str, w: int = 3
+) -> DataFrame:
+    """(id, word) rows, one per w-word shingle: ``positional_ngrams``
+    without the position."""
+    return positional_ngrams(df, id_col, text_col, w).select(
+        id_col, F.col("gram").alias("word")
     )
 
 
@@ -181,48 +147,114 @@ def minhash_signature(
     return tokens.groupBy(id_col).agg(*aggs)
 
 
+def _rows_per_band(total: int, bands: int, what: str) -> int:
+    """Width of each of ``bands`` equal bands over ``total`` signature
+    components (MinHash hashes or SimHash bits)."""
+    if bands <= 0 or total % bands:
+        raise ValueError(
+            f"{what} ({total}) must divide evenly into bands ({bands}):"
+            " a remainder would silently exclude the trailing signature"
+            " components from every band key, weakening the LSH collision"
+            " guarantee"
+        )
+    return total // bands
+
+
+def _minhash_band_keys(n_hashes: int, bands: int) -> list[Column]:
+    """Band b covers signature components h[b·r .. b·r + r),
+    r = n_hashes/bands; its key is md5 over the '|'-joined components."""
+    r = _rows_per_band(n_hashes, bands, "n_hashes")
+    return [
+        F.md5(F.concat_ws("|", *[F.col(f"h{b * r + j}") for j in range(r)]))
+        for b in range(bands)
+    ]
+
+
+def _band_rows(
+    signatures: DataFrame, cols: list[Column], keys: list[Column]
+) -> DataFrame:
+    """(cols…, band_idx, band_key) rows, one per signature row and band,
+    band b keyed by ``keys[b]`` — the banding stage of every LSH
+    variant."""
+    rows = signatures.select(
+        *cols,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("band_idx"), k.alias("band_key"))
+                    for b, k in enumerate(keys)
+                ]
+            )
+        ).alias("band"),
+    )
+    return rows.select(*rows.columns[:-1], "band.band_idx", "band.band_key")
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    member: Column,
+    pair: Callable[[Column, Column], list[Column]],
+    max_bucket_size: int,
+) -> DataFrame:
+    """Candidate pairs from the (band_idx, band_key) buckets of
+    ``banded`` — the pairing stage of every LSH variant. Each bucket's
+    ``member`` values are collected and sorted; buckets with one member
+    or more than ``max_bucket_size`` are dropped; every member pair
+    (x, y) with x sorted before y becomes one row of the columns
+    ``pair(x, y)``, deduplicated across bands.
+
+    Per-bucket combination explode, NOT a self-join: a self-join would
+    recompute the whole signature pipeline for both sides (measured 2×
+    cost) and shuffle twice. One groupBy shuffle; member lists are
+    bounded by ``max_bucket_size``, so no single reducer ever holds an
+    unbounded list or emits an unbounded pair explosion."""
+    ms = F.col("ms")
+    return (
+        banded.groupBy("band_idx", "band_key")
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
+        .filter((F.size(ms) > 1) & (F.size(ms) <= F.lit(max_bucket_size)))
+        .select(
+            F.explode(
+                F.flatten(
+                    F.transform(
+                        ms,
+                        lambda x, i: F.transform(
+                            F.slice(ms, (i + 2).cast("int"), F.size(ms)),
+                            lambda y: F.struct(*pair(x, y)),
+                        ),
+                    )
+                )
+            ).alias("p")
+        )
+        .select("p.*")
+        .distinct()
+    )
+
+
+def _pair_with(payload: str) -> Callable[[Column, Column], list[Column]]:
+    """Pair columns of (id, ``payload``) bucket members:
+    id_a, {payload}_a, id_b, {payload}_b."""
+    return lambda x, y: [
+        x["id"].alias("id_a"),
+        x[payload].alias(f"{payload}_a"),
+        y["id"].alias("id_b"),
+        y[payload].alias(f"{payload}_b"),
+    ]
+
+
 def banded_signatures(
     signatures: DataFrame,
     id_col: str,
     n_hashes: int = 4,
     bands: int = 2,
 ) -> DataFrame:
-    """(id, band_idx, band_key) rows — the banding stage of LSH, the
+    """(id, band_idx, band_key) rows — the MinHash banding stage, the
     ONE definition shared by ``lsh_candidate_pairs`` (which pairs
     within buckets) and the band-health observability query
     (``q_lsh_band_stats``, which audits bucket-size distribution and
-    predicted candidate volume without materializing any pair). Band b
-    covers signature components h[b·r .. b·r + r), r = n_hashes/bands;
-    the band key is md5 over the '|'-joined components."""
-    if bands <= 0 or n_hashes % bands:
-        raise ValueError(
-            f"n_hashes ({n_hashes}) must divide evenly into bands ({bands}):"
-            " a remainder would silently exclude trailing hash components"
-            " from every band key, weakening the LSH collision guarantee"
-        )
-    rows_per_band = n_hashes // bands
-    return signatures.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_key")
+    predicted candidate volume without materializing any pair)."""
+    keys = _minhash_band_keys(n_hashes, bands)
+    return _band_rows(signatures, [F.col(id_col)], keys)
 
 
 def lsh_candidate_pairs(
@@ -232,9 +264,10 @@ def lsh_candidate_pairs(
     bands: int = 2,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
-    """Band the signature (rows = n_hashes/bands per band), hash each band,
-    self-join on (band_idx, band_key) → candidate pairs (a < b).
-    Pair volume is Σ bucket² — bounded by bucket sizes, not corpus size.
+    """Band the signature (rows = n_hashes/bands per band), hash each
+    band, pair the docs sharing a (band_idx, band_key) bucket → candidate
+    pairs (id_a < id_b). Pair volume is Σ bucket² — bounded by bucket
+    sizes, not corpus size.
 
     ``max_bucket_size`` drops degenerate mega-buckets before pairing (the
     CCNet/SlimPajama hygiene step): a bucket shared by m docs emits m²/2
@@ -243,41 +276,12 @@ def lsh_candidate_pairs(
     their other bands; a corpus-scale bucket means near-identical
     boilerplate, which exact dedup already collapses upstream."""
     banded = banded_signatures(signatures, id_col, n_hashes, bands)
-    # Pairs via per-bucket combination explode (NOT a self-join: a self-join
-    # would recompute the whole signature pipeline for both sides — measured
-    # 2× cost — and shuffle twice). One groupBy shuffle; bucket member lists
-    # are bounded by max_bucket_size, so no single reducer ever holds an
-    # unbounded list or emits an unbounded pair explosion.
-    ids = F.array_sort(F.collect_list(F.col(id_col)))
-    pairs = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(ids.alias("ids"))
-        .filter(
-            (F.size("ids") > 1) & (F.size("ids") <= F.lit(max_bucket_size))
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"),
-                                (i + 2).cast("int"),
-                                F.size(F.col("ids")),
-                            ),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    return _bucket_pairs(
+        banded,
+        F.col(id_col),
+        lambda x, y: [x.alias("id_a"), y.alias("id_b")],
+        max_bucket_size,
     )
-    return pairs
 
 
 def minhash_est_pairs(
@@ -291,76 +295,22 @@ def minhash_est_pairs(
     (est = fraction of MinHash components that agree), computed map-side.
 
     Same banding/bucketing as ``lsh_candidate_pairs``, but the bucket
-    member structs carry the signature array, so the estimate is a pure
+    members carry the signature array, so the estimate is a pure
     expression over the exploded pair rows — no join back to the
     signature table (which would re-evaluate the signature aggregation
     for each side and add two shuffle joins; the pattern
     ``simhash_candidate_pairs`` uses for the same reason). Returns
     (id_a, id_b, est_jaccard)."""
-    if bands <= 0 or n_hashes % bands:
-        raise ValueError(
-            f"n_hashes ({n_hashes}) must divide evenly into bands ({bands}):"
-            " a remainder would silently exclude trailing hash components"
-            " from every band key, weakening the LSH collision guarantee"
-        )
-    rows_per_band = n_hashes // bands
+    keys = _minhash_band_keys(n_hashes, bands)
     hs = F.array(*[F.col(f"h{i}") for i in range(n_hashes)])
-    banded = signatures.select(
-        F.col(id_col).alias("id"),
-        hs.alias("hs"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "hs", "band.band_idx", "band.band_key")
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col("id"), F.col("hs")))
+    banded = _band_rows(
+        signatures, [F.col(id_col).alias("id"), hs.alias("hs")], keys
     )
-    pairs = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(members.alias("ms"))
-        .filter(
-            (F.size("ms") > 1) & (F.size("ms") <= F.lit(max_bucket_size))
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ms"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ms"),
-                                (i + 2).cast("int"),
-                                F.size(F.col("ms")),
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["hs"].alias("hs_a"),
-                                y["id"].alias("id_b"),
-                                y["hs"].alias("hs_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.hs_a", "p.id_b", "p.hs_b")
-        .distinct()
+    pairs = _bucket_pairs(
+        banded,
+        F.struct(F.col("id"), F.col("hs")),
+        _pair_with("hs"),
+        max_bucket_size,
     )
     agree = sum(
         F.when(F.col("hs_a")[i] == F.col("hs_b")[i], 1).otherwise(0)
@@ -373,53 +323,20 @@ def minhash_est_pairs(
     )
 
 
-def _simhash_bit_sums(n_bits: int) -> list:
-    """The per-bit ±1 sum aggregates, built as ONE parsed SQL string per
-    bit instead of ~7 composed Column objects: py4j plan-construction
-    cost is real (NOTES) — the composed form cost ~2 s PER QUERY BUILD
-    at 64 bits, the parsed form ~0.4 s, byte-identical plans."""
-    in_list = ", ".join(f"'{h}'" for h in HEX_HIGH_NIBBLES)
-    return [
-        F.expr(
-            f"sum(CASE WHEN substring(wh, {i + 1}, 1) IN ({in_list}) "
-            "THEN 1 ELSE -1 END)"
-        ).alias(f"s{i}")
-        for i in range(n_bits)
+def simhash(df: DataFrame, id_col: str, text_col: str, n_bits: int) -> DataFrame:
+    """``n_bits``-bit SimHash: bit i = sign of Σ over words of (±1 by the
+    high bit of nibble i of the word's hash). The per-word nibbles come
+    from md5(w), extended by md5(w ‖ '#1'), md5(w ‖ '#2'), … while more
+    are needed: 16 bits read md5(w), 64 bits md5(w) ‖ md5(w ‖ '#1') —
+    portable to any engine with md5. Exact integer sums → fully
+    deterministic; emitted as an n_bits-char '0'/'1' string. Words keep
+    multiplicity (standard term-frequency weighting). 64 bits is the
+    production width: 16 bits saturates on large corpora (only 65k
+    distinct signatures)."""
+    w = F.col("w")
+    hashes = [F.md5(w)] + [
+        F.md5(F.concat(w, F.lit(f"#{k}"))) for k in range(1, (n_bits + 31) // 32)
     ]
-
-
-def _simhash_sig(n_bits: int):
-    return F.expr(
-        "concat("
-        + ", ".join(
-            f"CASE WHEN s{i} >= 0 THEN '1' ELSE '0' END"
-            for i in range(n_bits)
-        )
-        + ")"
-    )
-
-
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash: bit i = sign of Σ over words of (±1 by the high bit
-    of md5 nibble i). Exact integer sums → fully deterministic; emitted as
-    a 16-char '0'/'1' string. Words keep multiplicity (standard SimHash
-    weighting by term frequency)."""
-    tokens = ensure_parallelism(df).select(
-        F.col(id_col),
-        F.explode(words(F.trim(F.col(text_col)))).alias("w"),
-    ).select(F.col(id_col), F.md5(F.col("w")).alias("wh"))
-    summed = tokens.groupBy(id_col).agg(*_simhash_bit_sums(16))
-    return summed.select(F.col(id_col), _simhash_sig(16).alias("simhash"))
-
-
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash — the production signature width (16-bit saturates on
-    large corpora: only 65k distinct signatures). Per word, 64 ±1 decisions
-    come from the high bits of the 64 nibbles of md5(w) ‖ md5(w ‖ '#1')
-    (two md5 calls per word — portable to any engine with md5); bit i of
-    the signature is the sign of the per-document sum. Exact integer sums →
-    fully deterministic; emitted as a 64-char '0'/'1' string. Words keep
-    multiplicity (standard term-frequency weighting)."""
     tokens = (
         ensure_parallelism(df)
         .select(
@@ -428,13 +345,33 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .select(
             F.col(id_col),
-            F.concat(
-                F.md5(F.col("w")), F.md5(F.concat(F.col("w"), F.lit("#1")))
-            ).alias("wh"),
+            (F.concat(*hashes) if len(hashes) > 1 else hashes[0]).alias("wh"),
         )
     )
-    summed = tokens.groupBy(id_col).agg(*_simhash_bit_sums(64))
-    return summed.select(F.col(id_col), _simhash_sig(64).alias("simhash"))
+    # The per-bit ±1 sums and the bit string are ONE parsed SQL string
+    # per bit instead of ~7 composed Column objects: py4j
+    # plan-construction cost is real — the composed form cost ~2 s PER
+    # QUERY BUILD at 64 bits, the parsed form ~0.4 s, identical plans.
+    high = ", ".join(f"'{h}'" for h in "89abcdef")
+    sums = [
+        F.expr(
+            f"sum(CASE WHEN substring(wh, {i + 1}, 1) IN ({high}) "
+            "THEN 1 ELSE -1 END)"
+        ).alias(f"s{i}")
+        for i in range(n_bits)
+    ]
+    bits = F.expr(
+        "concat("
+        + ", ".join(
+            f"CASE WHEN s{i} >= 0 THEN '1' ELSE '0' END" for i in range(n_bits)
+        )
+        + ")"
+    )
+    return (
+        tokens.groupBy(id_col)
+        .agg(*sums)
+        .select(F.col(id_col), bits.alias("simhash"))
+    )
 
 
 def simhash_candidate_pairs(
@@ -456,8 +393,8 @@ def simhash_candidate_pairs(
     per-bucket combination explode carrying both signatures (so the
     verify stage needs NO join back), ``max_bucket_size`` drops
     degenerate buckets before pairing. Production width is 64 bits
-    (``simhash64`` + ``sig_bits=64``, 4 bands → hamming ≤ 3 complete);
-    the plan shape is width-independent.
+    (``simhash(…, 64)`` + ``sig_bits=64``, 4 bands → hamming ≤ 3
+    complete); the plan shape is width-independent.
 
     The O(candidates) verify stage carries the signature as packed 16-bit
     integer chunks, not the bit string: hamming is then
@@ -466,73 +403,25 @@ def simhash_candidate_pairs(
     whole plan at sf0.1, where candidates ≈ Σ bucket² ≈ 1M), and the
     pair shuffle payload shrinks from two 64-char strings to two int
     arrays."""
-    if bands <= 0 or sig_bits % bands:
-        raise ValueError(
-            f"sig_bits ({sig_bits}) must divide evenly into bands ({bands}):"
-            " a remainder would silently exclude the trailing bits from"
-            " every band key, so the pigeonhole guarantee (hamming <="
-            " bands-1 implies a shared band) would not hold on those bits"
-        )
-    width = sig_bits // bands
+    width = _rows_per_band(sig_bits, bands, "sig_bits")
+    sig = F.col(sig_col)
     n_chunks = (sig_bits + 15) // 16
     chunks = F.array(
         *[
-            F.conv(F.substring(F.col(sig_col), c * 16 + 1, 16), 2, 10).cast(
-                "long"
-            )
+            F.conv(F.substring(sig, c * 16 + 1, 16), 2, 10).cast("long")
             for c in range(n_chunks)
         ]
     )
-    banded = signatures.select(
-        F.col(id_col).alias("id"),
-        chunks.alias("ks"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.substring(
-                            F.col(sig_col), b * width + 1, width
-                        ).alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "ks", "band.band_idx", "band.band_key")
-    members = F.array_sort(
-        F.collect_list(F.struct(F.col("id"), F.col("ks")))
+    banded = _band_rows(
+        signatures,
+        [F.col(id_col).alias("id"), chunks.alias("ks")],
+        [F.substring(sig, b * width + 1, width) for b in range(bands)],
     )
-    pairs = (
-        banded.groupBy("band_idx", "band_key")
-        .agg(members.alias("ms"))
-        .filter(
-            (F.size("ms") > 1) & (F.size("ms") <= F.lit(max_bucket_size))
-        )
-        .select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ms"),
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ms"),
-                                (i + 2).cast("int"),
-                                F.size(F.col("ms")),
-                            ),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["ks"].alias("ks_a"),
-                                y["id"].alias("id_b"),
-                                y["ks"].alias("ks_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.ks_a", "p.id_b", "p.ks_b")
-        .distinct()
+    pairs = _bucket_pairs(
+        banded,
+        F.struct(F.col("id"), F.col("ks")),
+        _pair_with("ks"),
+        max_bucket_size,
     )
     hamming = sum(
         F.bit_count(

@@ -16,37 +16,29 @@ content is fully deterministic, so reuse can never change an answer.
 from __future__ import annotations
 
 
-# Bump on ANY semantic change to a materialized artifact's layout that the
-# builder-module hash below would not capture (e.g. a change in code
-# outside those modules). Part of every fingerprint.
+# Bump on ANY semantic change to a materialized artifact's layout that a
+# change to the package code would not capture. Part of every fingerprint.
 ARTIFACT_SCHEMA_VERSION = "v2"
 
 
-# The modules whose code produces artifact CONTENT: the operators the
-# builds call, and every plans module that defines a build closure (calls
-# ``_materialized``). A change to any of them invalidates every cached
-# artifact (a stale cache must never let an oracle pass against bytes an
-# older builder wrote).
-_BUILDER_MODULES = (
-    "operators/dedup.py",
-    "operators/similarity.py",
-    "operators/bucketing.py",
-    "plans/dedup.py",
-    "plans/relational.py",
-    "plans/similarity.py",
-    "plans/streaming.py",
-)
-
-
 def _code_version() -> str:
+    """Hash of every ``.py`` file in the package: any code edit
+    invalidates every cached artifact, so a stale cache can never let an
+    oracle pass against bytes an older builder wrote, whichever module
+    the builder reaches."""
     import hashlib
     import os
 
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     h = hashlib.md5(ARTIFACT_SCHEMA_VERSION.encode())
-    for rel in _BUILDER_MODULES:
-        with open(os.path.join(pkg_root, rel), "rb") as fh:
-            h.update(fh.read())
+    for root, dirs, files in os.walk(pkg_root):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                h.update(os.path.relpath(path, pkg_root).encode())
+                with open(path, "rb") as fh:
+                    h.update(fh.read())
     return h.hexdigest()
 
 
@@ -107,7 +99,7 @@ def _materialized(spark, sf_dir: str, tag: str, table: str, build) -> str:
     path) unless a fingerprint-matched build already exists.
 
     The fingerprint covers the build parameters (tag), the BUILDER CODE
-    (hash of the operator modules + an explicit schema-version string —
+    (hash of the package's modules + an explicit schema-version string —
     a code change must never let a consumer read bytes an older builder
     wrote), and the source parquet tree (recursive size/mtime).
 

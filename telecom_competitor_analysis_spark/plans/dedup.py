@@ -18,10 +18,10 @@ from telecom_competitor_analysis_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_est_pairs,
     minhash_signature,
+    positional_ngrams,
     shingle_jaccard_pairs,
     shingle_rows,
-    simhash16,
-    simhash64,
+    simhash,
 )
 from telecom_competitor_analysis_spark.plans.artifacts import _materialized
 from telecom_competitor_analysis_spark.plans.registry import query, rows_only
@@ -378,7 +378,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash signatures (md5-nibble hyperplanes, exact integer
     bit sums → reproducible)."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash16(docs, "doc_id", "text")
+    return simhash(docs, "doc_id", "text", 16)
 
 
 _HAMMING_16 = " + ".join(
@@ -439,7 +439,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_candidate_pairs(
-        simhash16(docs, "doc_id", "text"), "doc_id"
+        simhash(docs, "doc_id", "text", 16), "doc_id"
     )
 
 
@@ -503,7 +503,7 @@ _SIMHASH64_BITS = " || ".join(
 
 # q_simhash64 — 64-bit signature: per-word nibble source is
 # md5(w) || md5(w || '#1') (64 hex chars), bit i = sign of the summed ±1
-# high-bits of nibble i (operators/dedup.py::simhash64).
+# high-bits of nibble i (operators/dedup.py::simhash).
 _SIMHASH64_SUMS = ",\n            ".join(
     "SUM(CASE WHEN substr(wh, {i}, 1) IN "
     "('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS s{j}".format(
@@ -530,7 +530,7 @@ def q_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     at ~65k distinct signatures on a large corpus). Same exact-integer-sum
     construction as the 16-bit variant, two md5 calls per word."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash64(docs, "doc_id", "text")
+    return simhash(docs, "doc_id", "text", 64)
 
 
 _HAMMING64 = " + ".join(
@@ -592,7 +592,7 @@ def q_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_candidate_pairs(
-        simhash64(docs, "doc_id", "text"),
+        simhash(docs, "doc_id", "text", 64),
         "doc_id",
         bands=4,
         max_hamming=3,
@@ -1006,33 +1006,15 @@ def q_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens / duplicated fraction. The per-doc signal that decides
     between dropping a doc and cutting the boilerplate out of it.
 
-    Shape: token positions (posexplode) → 3-grams via two leads on the
-    SAME doc_id window → document frequency over distinct (doc, gram)
-    pairs (partial-agg; the |vocab| table joins back 1:1 per
-    occurrence, so no posting-list explosion anywhere) → classic
-    gaps-and-islands merge of overlapping [pos, pos+2] intervals
-    (running MAX of prior span ends, island = cumsum of gap flags) —
-    all on ONE doc_id exchange shared by every window pass."""
+    Shape: 3-grams with their positions (``positional_ngrams``: two
+    leads on the SAME doc_id window) → document frequency over
+    distinct (doc, gram) pairs (partial-agg; the |vocab| table joins
+    back 1:1 per occurrence, so no posting-list explosion anywhere) →
+    classic gaps-and-islands merge of overlapping [pos, pos+2]
+    intervals (running MAX of prior span ends, island = cumsum of gap
+    flags) — all on ONE doc_id exchange shared by every window pass."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(words(F.trim(F.col("text")))).alias("pos", "w"),
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        toks.withColumn(
-            "gram",
-            F.concat_ws(
-                " ",
-                F.col("w"),
-                F.lead("w", 1).over(win),
-                F.lead("w", 2).over(win),
-            ),
-        )
-        .withColumn("__guard", F.lead("w", 2).over(win))
-        .filter(F.col("__guard").isNotNull())
-        .select("doc_id", "pos", "gram")
-    )
+    grams = positional_ngrams(docs, "doc_id", "text", n=3)
     df_tbl = (
         grams.select("doc_id", "gram")
         .distinct()
@@ -1178,10 +1160,6 @@ def q_dup_span_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc collect_list (bounded by doc length — the same per-doc
     state bound as q_sequence_pack). Every shuffle is keyed by doc_id
     or a doc_id-prefixed composite."""
-    from telecom_competitor_analysis_spark.operators.dedup import (
-        positional_ngrams,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",

@@ -305,8 +305,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan split (one core buffering all 600k rows). The shared
     under-split guard repartitions first; interleaved A/B best-of-3:
     3.65 s -> 2.42 s, rows identical. On a well-split cluster scan the
-    guard is a no-op (spark.graft.ensureParallelism=false skips the
-    probe entirely)."""
+    guard is a no-op."""
     from telecom_competitor_analysis_spark.operators.dedup import (
         ensure_parallelism,
     )
@@ -802,33 +801,18 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one integer-sum aggregate. Fixed 2 iterations keeps the plan
     static; production would loop to a tolerance with the same body.
 
-    Multiplicity pre-aggregation (the documented r8 lever, probed r10
-    and found MOOT here, wired behind ``spark.graft.btPreagg`` r11 per
-    VERDICT item 6): grouping identical (part, supplier, price)
-    triples to a multiplicity m before the comparison join — with pair
-    weights m_a·m_b — is exact under these semantics (the join keys on
-    part + strict supplier order, never row identity, so every raw
-    row-pair between two duplicate triples carries the identical
-    comparison outcome) and cuts pair volume quadratically in the
-    duplicate rate. Measured on this testdata: 60,000/60,000 (sf0.01)
-    and 600,000/600,000 (sf0.1) triples are DISTINCT → raw-vs-preagg
-    pair volume ratio exactly 1.0; the pre-agg would add one
-    corpus-wide exchange for zero pair reduction, so the flag DEFAULTS
-    OFF for this corpus and exists for real preference corpora with
-    duplicate comparisons (common in RLHF dedup'd-prompt data, absent
-    in price quotes keyed by quantity). The weighted-equals-raw
-    equality is pinned on a planted-duplicate fixture in
-    tests/test_wave11.py."""
+    Multiplicity pre-aggregation (grouping identical (part, supplier,
+    price) triples to a multiplicity m, pair weights m_a·m_b) would be
+    exact here but was measured MOOT on this data: every triple is
+    distinct at sf0.01 and sf0.1, so it would add one corpus-wide
+    exchange for zero pair reduction. n_comparisons counts duplicate
+    quotes with multiplicity (pinned on a planted-duplicate fixture in
+    tests/test_wave11.py)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("pc"),
     )
-    preagg = spark.conf.get("spark.graft.btPreagg", "false") == "true"
-    if preagg:
-        li = li.groupBy("l_partkey", "l_suppkey", "pc").agg(
-            F.count(F.lit(1)).cast("long").alias("m")
-        )
     # r13 (guide §3.1 — pick the join strategy deliberately): the planner
     # broadcast the whole 600k-row comparison side (its size estimate
     # sits under the 10 MB auto-broadcast threshold), which (a) builds a
@@ -844,31 +828,13 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("a.l_partkey") == F.col("b.l_partkey"))
         & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
     ).where(F.col("a.pc") != F.col("b.pc"))
-    if preagg:
-        pairs = raw.groupBy(
-            F.col("a.l_suppkey").alias("sa"),
-            F.col("b.l_suppkey").alias("sb"),
-        ).agg(
-            F.sum(
-                F.when(
-                    F.col("a.pc") < F.col("b.pc"),
-                    F.col("a.m") * F.col("b.m"),
-                ).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("w"),
-            F.sum(F.col("a.m") * F.col("b.m")).cast("long").alias("n"),
-        )
-    else:
-        pairs = raw.groupBy(
-            F.col("a.l_suppkey").alias("sa"),
-            F.col("b.l_suppkey").alias("sb"),
-        ).agg(
-            F.sum(
-                F.when(F.col("a.pc") < F.col("b.pc"), 1).otherwise(0)
-            ).alias("w"),
-            F.count(F.lit(1)).alias("n"),
-        )
+    pairs = raw.groupBy(
+        F.col("a.l_suppkey").alias("sa"),
+        F.col("b.l_suppkey").alias("sb"),
+    ).agg(
+        F.sum(F.when(F.col("a.pc") < F.col("b.pc"), 1).otherwise(0)).alias("w"),
+        F.count(F.lit(1)).alias("n"),
+    )
     # r12 optimization (guide §2.4/§5): the per-supplier-pair aggregate
     # is TINY (≤ supplier-pair cardinality — ~175k rows of 4 ints at
     # sf0.1) but its lineage holds the ~9M-row part-blocked comparison

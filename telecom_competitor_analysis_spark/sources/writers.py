@@ -31,22 +31,13 @@ def write_gold(
     path: str,
     partition_by: tuple[str, ...] = (),
     mode: str = "append",
-    sort_within_partitions: tuple[str, ...] = (),
 ) -> None:
     """S7 — warehouse sink as partitioned parquet.
 
     ``partition_by=('scraped_at',)`` (or ('competitor_name','scraped_at'))
     gives partition pruning for the time-series queries the star schema
     exists for (reference README.md:28: price evolution analysis).
-
-    ``sort_within_partitions`` clusters rows inside each file so parquet
-    row-group min/max statistics become selective — point/range predicates
-    on the sort key then skip whole row groups at scan time (the poor
-    man's Z-order; single-key clustering covers the dominant filter
-    column).
     """
-    if sort_within_partitions:
-        df = df.sortWithinPartitions(*sort_within_partitions)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

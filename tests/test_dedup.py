@@ -9,7 +9,7 @@ from telecom_competitor_analysis_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signature,
     shingle_jaccard_pairs,
-    simhash16,
+    simhash,
 )
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away today"
@@ -40,7 +40,7 @@ def test_minhash_lsh_finds_exact_and_near(spark):
 
 def test_simhash_near_dup_distance(spark):
     sigs = {r.doc_id: r.simhash for r in
-            simhash16(_docs(spark), "doc_id", "text").collect()}
+            simhash(_docs(spark), "doc_id", "text", 16).collect()}
     ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
     assert sigs[1] == sigs[2]  # identical text → identical signature
     assert ham(sigs[1], sigs[3]) <= ham(sigs[1], sigs[4])  # near ≤ far
@@ -51,19 +51,18 @@ def test_simhash64_near_dup_distance_and_pairs(spark):
     and the 4-band pair path (pigeonhole-complete for hamming ≤ 3) finds
     the identical pair with hamming 0 while never pairing unrelated docs."""
     from telecom_competitor_analysis_spark.operators.dedup import (
-        simhash64,
         simhash_candidate_pairs,
     )
 
     sigs = {r.doc_id: r.simhash for r in
-            simhash64(_docs(spark), "doc_id", "text").collect()}
+            simhash(_docs(spark), "doc_id", "text", 64).collect()}
     assert all(len(s) == 64 for s in sigs.values())
     ham = lambda a, b: sum(x != y for x, y in zip(a, b))  # noqa: E731
     assert sigs[1] == sigs[2]
     assert ham(sigs[1], sigs[3]) <= ham(sigs[1], sigs[4])
 
     pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_candidate_pairs(
-        simhash64(_docs(spark), "doc_id", "text"), "doc_id",
+        simhash(_docs(spark), "doc_id", "text", 64), "doc_id",
         bands=4, max_hamming=3, sig_bits=64,
     ).collect()}
     assert pairs.get((1, 2)) == 0
@@ -165,7 +164,7 @@ def test_simhash_pairs_find_identical_and_respect_cap(spark):
         simhash_candidate_pairs,
     )
 
-    sigs = simhash16(_docs(spark), "doc_id", "text")
+    sigs = simhash(_docs(spark), "doc_id", "text", 16)
     pairs = {
         (r.id_a, r.id_b): r.hamming
         for r in simhash_candidate_pairs(sigs, "doc_id").collect()
@@ -176,9 +175,9 @@ def test_simhash_pairs_find_identical_and_respect_cap(spark):
 
     # a mega-bucket (identical signatures everywhere) is dropped by the cap
     rows = [(i, "same text everywhere") for i in range(30)]
-    big = simhash16(
+    big = simhash(
         spark.createDataFrame(rows, "doc_id long, text string"),
-        "doc_id", "text",
+        "doc_id", "text", 16,
     )
     capped = simhash_candidate_pairs(big, "doc_id", max_bucket_size=5)
     assert capped.count() == 0

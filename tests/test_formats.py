@@ -50,7 +50,7 @@ def test_operator_api_surface():
     for name in (
         "asof_join", "curate_corpus", "curate_incremental", "hash_split",
         "dedup_clusters", "exact_dedup_groups", "lsh_candidate_pairs",
-        "minhash_signature", "shingle_jaccard_pairs", "simhash16",
+        "minhash_signature", "shingle_jaccard_pairs", "simhash",
         "anti_join_new", "changed_records", "first_per_key",
         "latest_per_key", "lookup_join", "null_safe_diff",
         "as_media_table", "decode_media", "frame_sample",

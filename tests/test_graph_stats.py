@@ -1,9 +1,12 @@
 """Behavioral tests for the triangle census (operators/graph.py::
 triangle_stats) on planted graphs, plus curve-shape checks for the
 mutation-recall S-curve and agreement-positivity for Cohen's kappa —
-the oracle sweep proves engine agreement; these pin the semantics."""
+the oracle sweep proves engine agreement; these pin the semantics.
+Also pins the lineage truncation of pagerank_micro and triangle_stats."""
 
 from __future__ import annotations
+
+import pytest
 
 from telecom_competitor_analysis_spark.operators.graph import triangle_stats
 from telecom_competitor_analysis_spark.plans import QUERIES
@@ -77,3 +80,56 @@ def test_annotator_agreement_kappa_positive_and_bounded(spark, sf_dir):
         assert 0 < r.kappa_micro < 1_000_000
         # kappa must be BELOW raw agreement (it discounts chance)
         assert r.kappa_micro < r.p_o_micro
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_pagerank_micro_truncates_lineage(spark):
+    """r13: pagerank_micro replaces the r12 nodes/deg persists with lazy
+    localCheckpoints (nodes, deg, and the per-iteration rank iterate) —
+    the executed plan must read checkpointed RDDs instead of re-deriving
+    the edge pipeline per reference, results staying byte-stable across
+    runs (the integer-micro exactness fixture lives in test_dedup.py)."""
+    from telecom_competitor_analysis_spark.operators.graph import (
+        pagerank_micro,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3), (4, 1), (1, 4)],
+        "src long, dst long",
+    )
+    df = pagerank_micro(edges, iters=3)
+    rows = sorted(map(tuple, df.collect()))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the LAST iterate is itself checkpointed, so the final plan is a
+    # projection over ONE checkpointed RDD — every nodes/deg/iterate
+    # boundary below it is hidden behind that scan. What must hold:
+    # at least one checkpoint boundary, and no InMemoryTableScan (the
+    # r12 persists are gone — nothing stays warm across bench runs).
+    assert plan.count("Scan ExistingRDD") >= 1
+    assert "InMemoryTableScan" not in plan
+    again = sorted(map(tuple, pagerank_micro(edges, iters=3).collect()))
+    assert rows == again
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_triangle_stats_truncates_deg_and_oriented(spark):
+    """r13: triangle_stats localCheckpoints deg (3 references) and the
+    oriented edge list (both wedge-join sides); the executed plan of the
+    final census must read checkpointed RDDs, and the planted-graph
+    census (K4 + a pendant edge) stays exact: C(4,3) = 4 triangles,
+    wedges = Σ C(deg,2) = 3·C(3,2) + C(4,2) = 15."""
+    from telecom_competitor_analysis_spark.operators.graph import (
+        triangle_stats,
+    )
+
+    # K4 on {1,2,3,4} plus pendant edge (4,5)
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges = spark.createDataFrame(k4 + [(4, 5)], "id_a long, id_b long")
+    df = triangle_stats(edges)
+    row = df.collect()[0]
+    assert row.n_nodes == 5 and row.n_edges == 7
+    assert row.n_triangles == 4
+    # degrees: 1,2,3 -> 3; 4 -> 4; 5 -> 1; wedges = 3*C(3,2) + C(4,2)
+    assert row.n_wedges == 3 * 3 + 6
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") >= 2

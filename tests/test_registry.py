@@ -3,13 +3,13 @@ driver's verify order is computed from the fingerprint manifest."""
 
 from __future__ import annotations
 
-import ast
+import importlib.util
 import os
+import shutil
 
 import __spark_entry__
 import telecom_competitor_analysis_spark
 from telecom_competitor_analysis_spark.plans import ORACLES, QUERIES
-from telecom_competitor_analysis_spark.plans.artifacts import _BUILDER_MODULES
 from telecom_competitor_analysis_spark.plans.registry import (
     load_manifest,
     update_manifest,
@@ -56,22 +56,20 @@ def test_queries_follow_the_manifest_with_rows_only_last():
     assert order == verify_order(QUERIES, load_manifest(), rows_only)
 
 
-def test_every_materialized_caller_is_hashed():
-    """An edit to a module that defines an artifact build closure must
-    invalidate the artifact cache, so every module that calls
-    ``_materialized`` is part of the builder-code hash."""
-    callers = set()
-    for root, _, files in os.walk(PKG_DIR):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            path = os.path.join(root, f)
-            tree = ast.parse(open(path).read())
-            if any(
-                isinstance(n, ast.Call)
-                and getattr(n.func, "id", getattr(n.func, "attr", None)) == "_materialized"
-                for n in ast.walk(tree)
-            ):
-                callers.add(os.path.relpath(path, PKG_DIR))
-    assert callers
-    assert callers <= set(_BUILDER_MODULES), callers - set(_BUILDER_MODULES)
+def test_artifact_key_covers_every_package_module(tmp_path):
+    """Editing any module of the package must change the artifact-cache
+    key, including modules a builder only reaches through imports
+    (``functions/text.words`` via ``shingle_rows``): a stale key would
+    serve bytes an older builder wrote."""
+    pkg = tmp_path / "pkg"
+    shutil.copytree(PKG_DIR, pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    spec = importlib.util.spec_from_file_location(
+        "artifacts_copy", pkg / "plans" / "artifacts.py"
+    )
+    artifacts = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(artifacts)
+
+    before = artifacts._code_version()
+    with open(pkg / "functions" / "text.py", "a") as fh:
+        fh.write("\n# edited\n")
+    assert artifacts._code_version() != before

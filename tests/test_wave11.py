@@ -1,8 +1,7 @@
 """Round-11 wave tests.
 
-Covers the Bradley-Terry multiplicity pre-agg flag (r10 VERDICT item 6:
-the weighted form must equal the raw form on a planted-duplicate
-fixture while cutting pair volume) and the new r11 operators.
+Covers Bradley-Terry comparison counting on a planted-duplicate fixture
+and the new r11 operators.
 """
 
 from __future__ import annotations
@@ -11,12 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.plans import QUERIES
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 @pytest.fixture(scope="module")
@@ -44,19 +37,10 @@ def bt_dup_dir(spark, tmp_path_factory) -> str:
     return d
 
 
-def test_bt_preagg_equals_raw_on_planted_duplicates(spark, bt_dup_dir):
+def test_bt_counts_planted_duplicate_quotes_with_multiplicity(spark, bt_dup_dir):
     q = QUERIES["q_bradley_terry"]
     raw = {r.s_suppkey: r for r in q(spark, bt_dup_dir).collect()}
-    spark.conf.set("spark.graft.btPreagg", "true")
-    try:
-        wtd = {r.s_suppkey: r for r in q(spark, bt_dup_dir).collect()}
-    finally:
-        spark.conf.unset("spark.graft.btPreagg")
-    assert set(raw) == set(wtd) == {1, 2, 3}
-    for k in raw:
-        assert raw[k].wins == wtd[k].wins, k
-        assert raw[k].n_comparisons == wtd[k].n_comparisons, k
-        assert raw[k].rating_micro == wtd[k].rating_micro, k
+    assert set(raw) == {1, 2, 3}
     # the fixture's duplicates are real: part 10 supplier1 x supplier2
     # meets 3*2 = 6 times in the raw join, so n_comparisons counts
     # multiplicity (supplier 1: 3*2 [s2,p10] + 3*1 [s3,p10] +
@@ -64,53 +48,6 @@ def test_bt_preagg_equals_raw_on_planted_duplicates(spark, bt_dup_dir):
     # comparisons are wins)
     assert raw[1].n_comparisons == 15
     assert raw[1].wins == 9
-
-
-def test_bt_preagg_cuts_join_input(spark, bt_dup_dir):
-    # the pre-agg's point: the comparison join's per-side input shrinks
-    # from rows to distinct triples (11 planted rows -> 6 triples)
-    from telecom_competitor_analysis_spark.sources.readers import (
-        load_table,
-    )
-
-    li = load_table(spark, bt_dup_dir, "lineitem")
-    assert li.count() == 11
-    assert (
-        li.select("l_partkey", "l_suppkey", "l_extendedprice")
-        .distinct()
-        .count()
-        == 6
-    )
-    # and the flagged plan actually contains the extra pre-aggregate
-    # passes before the self-join (more HashAggregate nodes than the
-    # raw plan)
-    q = QUERIES["q_bradley_terry"]
-    raw_aggs = _plan(q(spark, bt_dup_dir)).count("HashAggregate")
-    spark.conf.set("spark.graft.btPreagg", "true")
-    try:
-        flagged_aggs = _plan(q(spark, bt_dup_dir)).count("HashAggregate")
-    finally:
-        spark.conf.unset("spark.graft.btPreagg")
-    assert flagged_aggs > raw_aggs
-
-
-def test_bt_default_path_unflagged_matches_sf(spark, sf_dir):
-    # default stays OFF for this corpus (100% distinct triples): the
-    # flag must not change results on real testdata either
-    q = QUERIES["q_bradley_terry"]
-    base = sorted(
-        (r.s_suppkey, r.wins, r.n_comparisons, r.rating_micro)
-        for r in q(spark, sf_dir).collect()
-    )
-    spark.conf.set("spark.graft.btPreagg", "true")
-    try:
-        flagged = sorted(
-            (r.s_suppkey, r.wins, r.n_comparisons, r.rating_micro)
-            for r in q(spark, sf_dir).collect()
-        )
-    finally:
-        spark.conf.unset("spark.graft.btPreagg")
-    assert base == flagged
 
 
 # --- sub-wave A: bpe_apply / distinct_ngrams / blocklist / event_runs ----

@@ -37,9 +37,9 @@ def main() -> None:
             "Dedup signature guidance: the ADVERTISED near-dup path is"
             " the 64-bit\nSimHash family (`q_simhash64` /"
             " `q_simhash64_pairs`) and MinHash-LSH;\nthe 16-bit"
-            " `q_simhash` / `q_simhash_pairs` forms are kept as the\n"
-            "teaching/compat variant (16 bits saturate at ~65k distinct"
-            " signatures —\nsee operators/dedup.py::simhash64).\n\n"
+            " `q_simhash` / `q_simhash_pairs` names run the same\n"
+            "operator at 16 bits (16 bits saturate at ~65k distinct"
+            " signatures —\nsee operators/dedup.py::simhash).\n\n"
             "| query | check | operator (docstring) |\n|---|---|---|\n"
         )
         for name, check, first in rows:
