@@ -63,8 +63,9 @@ def plan_star_appends(
     warehouse state (``existing[table]`` may be None on first load).
 
     Returns {table: DataFrame-of-new-rows}; the caller appends them via
-    sources.writers.write_gold (idempotent by construction — re-running
-    with unchanged input appends nothing).
+    sources.writers.write_gold, which runs each plan once and returns its
+    row count (idempotent by construction — re-running with unchanged
+    input appends nothing and leaves the table's files as they were).
     """
     split = star_split(clean_products)
     new_products, new_features, new_prices = (

@@ -8,9 +8,12 @@ Runnable:  python -m telecom_competitor_analysis_spark.jobs.run_pipeline \
 
 Each stage is restart-safe: silver is overwritten per run partition, gold
 appends are idempotent anti-join/change-detect plans (re-running with the
-same input appends nothing). A one-row status record goes to the logs
-table per run (reference dags/utils.py:54-68): ``success``, or ``failed``
-with the error text when a stage raises.
+same input appends nothing, and leaves the gold files as they were). Each
+append is one pass: its row count comes from the write
+(``sources.writers.write_gold``), not from a second ``count()`` job over
+the same plan. A one-row status record goes to the logs table per run
+(reference dags/utils.py:54-68): ``success``, or ``failed`` with the error
+text when a stage raises.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from telecom_competitor_analysis_spark.jobs.load import (
     plan_star_appends,
 )
 from telecom_competitor_analysis_spark.schemas import (
+    CLEAN_PRODUCT,
     RAW_PACK,
     RAW_PRODUCT,
     STAR_SCHEMA,
@@ -44,11 +48,13 @@ def _read_gold(spark: SparkSession, gold: str, table: str) -> DataFrame | None:
 
 def _write_log(spark: SparkSession, gold: str, error_details: str, status: str) -> None:
     """Append the run's status row (reference dags/utils.py:54-68 /
-    bigquery.py:160-172)."""
-    log = spark.createDataFrame(
-        [("pipeline", error_details, status)],
-        "competitor_name string, error_details string, status string",
-    ).withColumn("scraped_at", F.date_format(F.current_date(), "yyyy-MM-dd"))
+    bigquery.py:160-172), built in the JVM as one partition: one file."""
+    log = spark.range(1, numPartitions=1).select(
+        F.lit("pipeline").alias("competitor_name"),
+        F.lit(error_details).alias("error_details"),
+        F.lit(status).alias("status"),
+        F.date_format(F.current_date(), "yyyy-MM-dd").alias("scraped_at"),
+    )
     write_gold(log.select(*STAR_SCHEMA["logs"].fieldNames()),
                f"{gold}/logs", mode="append")
 
@@ -67,37 +73,37 @@ def run(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str, i
 
 
 def _load(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str, int]:
-    counts: dict[str, int] = {}
-
-    raw_products = read_wrapped_json(
-        spark, f"{bronze}/*_products.json", "products", RAW_PRODUCT
-    )
+    # explicit file lists, not globs: a glob read makes Spark probe it for
+    # a streaming-sink metadata dir and log a stack trace at WARN
+    product_files = _bronze_files(bronze, "products")
+    if not product_files:
+        raise FileNotFoundError(f"no *_products.json under {bronze}")
+    raw_products = read_wrapped_json(spark, product_files, "products", RAW_PRODUCT)
     silver_products = clean_products(raw_products)
     # silver is the durable handoff (reference writes NDJSON; parquet here,
     # partitioned by scrape date for downstream pruning)
     silver_products.write.mode("overwrite").partitionBy("scraped_at").parquet(
         f"{silver}/products"
     )
-    silver_products = spark.read.parquet(f"{silver}/products")
+    silver_products = spark.read.schema(CLEAN_PRODUCT).parquet(
+        f"{silver}/products"
+    )
 
     existing = {t: _read_gold(spark, gold, t) for t in STAR_SCHEMA}
     appends = plan_star_appends(silver_products, existing)
-    for table, rows in appends.items():
-        n = rows.count()
-        counts[table] = n
-        if n:
-            write_gold(rows, f"{gold}/{table}", mode="append")
+    counts = {table: write_gold(rows, f"{gold}/{table}", mode="append")
+              for table, rows in appends.items()}
 
-    pack_files = list(Path(bronze).glob("*_packs.json"))
+    pack_files = _bronze_files(bronze, "packs")
     if pack_files:
-        raw_packs = read_wrapped_json(
-            spark, f"{bronze}/*_packs.json", "packs", RAW_PACK
-        )
+        raw_packs = read_wrapped_json(spark, pack_files, "packs", RAW_PACK)
         new_packs = plan_pack_appends(raw_packs, _read_gold(spark, gold, "packs"))
-        counts["packs"] = new_packs.count()
-        if counts["packs"]:
-            write_gold(new_packs, f"{gold}/packs", mode="append")
+        counts["packs"] = write_gold(new_packs, f"{gold}/packs", mode="append")
     return counts
+
+
+def _bronze_files(bronze: str, kind: str) -> list[str]:
+    return sorted(str(p) for p in Path(bronze).glob(f"*_{kind}.json"))
 
 
 def main() -> None:

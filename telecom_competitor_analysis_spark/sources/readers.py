@@ -18,13 +18,16 @@ from telecom_competitor_analysis_spark.schemas import TESTDATA_TABLES
 
 
 def read_wrapped_json(
-    spark: SparkSession, path: str, header: str, element_schema: T.StructType
+    spark: SparkSession,
+    path: str | list[str],
+    header: str,
+    element_schema: T.StructType,
 ) -> DataFrame:
     """S2 — read a ``{"<header>": [...]}`` document and unwrap the array
     (reference dags/transform.py:32-49 ``json_to_list_of_dicts``).
 
     One ``multiLine`` read + ``explode`` + ``inline`` of the wrapped array;
-    scales to any number of documents per glob (each file one row
+    scales to any number of documents per glob or file list (each file one row
     pre-explode — fine for bronze, which is small by construction; the
     heavy tables enter as NDJSON/parquet).
     """

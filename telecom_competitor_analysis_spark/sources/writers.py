@@ -5,9 +5,11 @@ NDJSON (reference dags/utils.py:22-28) and streams rows into BigQuery
 (reference dags/bigquery.py:100-122) with idempotent DDL
 (reference dags/bigquery.py:9-50). Spark-first equivalents:
 
-- gold tables are **partitioned parquet** (partition by low-cardinality
-  date/competitor columns — at 100 TB partition pruning on
-  ``scraped_at``/``competitor_name`` is the first-order win),
+- gold tables are parquet. ``jobs.run_pipeline`` writes them
+  unpartitioned; ``write_gold(partition_by=...)`` partitions by
+  low-cardinality date/competitor columns for when partition pruning on
+  ``scraped_at``/``competitor_name`` pays (at 100 TB it is the
+  first-order win),
 - append mode replaces streaming inserts; the merge layer (operators/merge)
   guarantees idempotency so append is safe,
 - BigQuery ships as untested connector glue behind a flag (no GCP here).
@@ -15,7 +17,11 @@ NDJSON (reference dags/utils.py:22-28) and streams rows into BigQuery
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_json(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -31,17 +37,44 @@ def write_gold(
     path: str,
     partition_by: tuple[str, ...] = (),
     mode: str = "append",
-) -> None:
-    """S7 — warehouse sink as partitioned parquet.
+) -> int:
+    """S7 — warehouse sink as parquet; returns the number of rows written.
+
+    The rows are counted by an ``Observation`` on the write itself, so the
+    write is the only Spark action: callers never run a ``count()`` pass
+    over the same plan first.
+
+    An empty append leaves the table exactly as it was. Spark writes a
+    schema-only part file even for zero rows, so on a zero-row append the
+    files the write added are removed again, and a table the write created
+    is removed whole (plain-filesystem cleanup, as in ``compact_gold``; it
+    assumes one writer per table).
 
     ``partition_by=('scraped_at',)`` (or ('competitor_name','scraped_at'))
     gives partition pruning for the time-series queries the star schema
     exists for (reference README.md:28: price evolution analysis).
     """
-    writer = df.write.mode(mode)
+    existed = os.path.exists(path)
+    before = _files(path)
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    n = obs.get["n"]
+    if n == 0 and mode == "append":
+        if existed:
+            for added in _files(path) - before:
+                os.remove(added)
+        else:
+            shutil.rmtree(path)
+    return n
+
+
+def _files(path: str) -> set[str]:
+    """Every file below ``path`` (empty if it is missing)."""
+    return {os.path.join(root, name)
+            for root, _, names in os.walk(path) for name in names}
 
 
 def write_bigquery(
@@ -106,8 +139,6 @@ def write_range_clustered(
     File-level disjointness is asserted from the written parquet footers
     in tests (tests/test_formats.py) — the claim is checked against the
     actual artifact, not the plan."""
-    from pyspark.sql import functions as F
-
     (
         df.repartitionByRange(n_files, F.col(cluster_col))
         .sortWithinPartitions(cluster_col, *sort_cols)
@@ -138,9 +169,6 @@ def compact_gold(
     At cluster scale the same pattern runs per partition directory with
     ``target_files`` derived from bytes/128MB.
     """
-    import os
-    import shutil
-
     staging = f"{path}__compacting"
     old = f"{path}__old"
     # Recovery from a previous crash between the two renames: the original

@@ -1,7 +1,7 @@
 """Full medallion run over bronze fixture documents: first run populates
 gold, re-run appends nothing (idempotent), day-2 bronze appends only the
-true deltas. Exercises wrapped-JSON source → clean → merge → partitioned
-parquet gold end-to-end on disk."""
+true deltas. Exercises wrapped-JSON source → clean → merge → parquet gold
+end-to-end on disk."""
 
 from __future__ import annotations
 
@@ -11,10 +11,12 @@ import tempfile
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 pytestmark = pytest.mark.slow  # end-to-end job/pipeline tier; fast tier is -m 'not slow'
 
 from telecom_competitor_analysis_spark.jobs.run_pipeline import run
+from telecom_competitor_analysis_spark.sources.writers import write_gold
 from tests.test_pipeline import DAY1, DAY2
 
 COLS = [
@@ -62,7 +64,7 @@ def test_medallion_end_to_end(spark, dirs):
     assert third["features"] == 2          # changed feature + new product
     assert third["product_prices"] == 3    # price change + new feature + new product
 
-    # gold is real partitioned parquet on disk
+    # gold is real parquet on disk
     prices = spark.read.parquet(f"{dirs['gold']}/product_prices")
     assert prices.count() == 6
     logs = spark.read.parquet(f"{dirs['gold']}/logs")
@@ -85,6 +87,78 @@ def test_failed_run_is_logged_as_failed(spark, dirs, monkeypatch):
         ("failed", "RuntimeError: merge exploded")
     ]
     assert not Path(f"{dirs['gold']}/products").exists()
+
+
+def _listing(path: str) -> list[str]:
+    return sorted(str(p.relative_to(path)) for p in Path(path).rglob("*"))
+
+
+def test_run_counts_appends_without_count_jobs(spark, dirs, monkeypatch):
+    """Each append's count comes from its write: run() never calls
+    DataFrame.count()."""
+    def no_count(self):
+        raise AssertionError("run() ran a count() job")
+
+    monkeypatch.setattr(type(spark.range(0)), "count", no_count)
+    _write_bronze(dirs["bronze"], DAY1)
+    counts = run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+    assert counts == {"competitors": 2, "products": 3, "features": 3,
+                      "product_prices": 3}
+
+
+def test_rerun_leaves_gold_files_untouched(spark, dirs):
+    _write_bronze(dirs["bronze"], DAY1)
+    run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+    tables = [t.name for t in Path(dirs["gold"]).iterdir() if t.name != "logs"]
+    assert sorted(tables) == ["competitors", "features", "product_prices",
+                              "products"]
+    before = {t: _listing(f"{dirs['gold']}/{t}") for t in tables}
+
+    again = run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+    assert set(again.values()) == {0}
+    assert {t: _listing(f"{dirs['gold']}/{t}") for t in tables} == before
+
+
+def test_one_log_file_per_run(spark, dirs):
+    _write_bronze(dirs["bronze"], DAY1)
+    run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+    assert len(list(Path(f"{dirs['gold']}/logs").glob("part-*.parquet"))) == 1
+
+
+def test_run_without_products_raises_and_logs_failed(spark, dirs):
+    with pytest.raises(FileNotFoundError, match="_products.json"):
+        run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+    logs = spark.read.parquet(f"{dirs['gold']}/logs").collect()
+    assert [r.status for r in logs] == ["failed"]
+    assert logs[0].error_details.startswith("FileNotFoundError: no ")
+
+
+def test_write_gold_returns_rows_written(spark, tmp_path):
+    df = spark.range(10).withColumn("part", F.col("id") % 3)
+    assert write_gold(df, str(tmp_path / "flat")) == 10
+    assert write_gold(df.filter("id < 4"), str(tmp_path / "flat")) == 4
+    assert spark.read.parquet(str(tmp_path / "flat")).count() == 14
+    assert write_gold(df, str(tmp_path / "parted"), partition_by=("part",)) == 10
+    assert sorted(p.name for p in (tmp_path / "parted").glob("part=*")) == [
+        "part=0", "part=1", "part=2"]
+
+
+def test_empty_append_to_missing_table_creates_nothing(spark, tmp_path):
+    empty = spark.range(10).filter("id < 0")
+    assert write_gold(empty, str(tmp_path / "t")) == 0
+    assert not (tmp_path / "t").exists()
+    assert write_gold(empty.withColumn("part", F.lit(1)), str(tmp_path / "p"),
+                      partition_by=("part",)) == 0
+    assert not (tmp_path / "p").exists()
+
+
+def test_empty_append_to_existing_table_adds_no_file(spark, tmp_path):
+    path = str(tmp_path / "t")
+    write_gold(spark.range(5), path)
+    before = _listing(path)
+    assert write_gold(spark.range(10).filter("id < 0"), path) == 0
+    assert _listing(path) == before
+    assert spark.read.parquet(path).count() == 5
 
 
 def test_build_indexes_job(spark, tmp_path):

@@ -55,8 +55,7 @@ def test_streaming_star_merge_incremental(spark, dirs):
         return out
 
     def append_writer(table, rows):
-        if rows.limit(1).count():
-            write_gold(rows, f"{dirs['gold']}/{table}", mode="append")
+        write_gold(rows, f"{dirs['gold']}/{table}", mode="append")
 
     def run_stream_once():
         stream = (
@@ -113,8 +112,7 @@ def test_python_stream_source_drives_star_merge_across_restart(spark, dirs):
         return out
 
     def append_writer(table, rows):
-        if rows.limit(1).count():
-            write_gold(rows, f"{dirs['gold']}/{table}", mode="append")
+        write_gold(rows, f"{dirs['gold']}/{table}", mode="append")
 
     def run_stream_once():
         stream = clean_products(
