@@ -1,18 +1,16 @@
 """Benchmark harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS], print the JSON line
+local[$SPARK_GRAFT_CPUS] and print two JSON lines to stdout
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
-— first the full line (per-query ext dict, spreads metadata), then a compact
-tail-sized twin LAST so the driver's bounded stdout tail always archives one
-complete parseable line (r12 judge item 2; BENCH_r11's single ~15 KB line was
-head-truncated in the driver archive and unparseable).
+— first the full line (per-query ext dict, per-query spreads, loadavg), then
+a compact tail-sized twin LAST, so a reader that keeps only a bounded tail of
+stdout still gets one complete parseable line. Nothing is written to disk.
 
 Each query is fully materialized through the noop sink (forces the whole
 plan — scan, shuffles, windows — without driver-side collect overhead).
 spark.catalog.clearCache() runs before every timed run so each timed run
-pays one full materialization of any persist() inside the query (cold-action
-cost — r12 judge item 3; pre-r13 artifacts are cache-warm for
-persist-carrying queries).
+pays one full materialization of any persist() inside the query
+(cold-action cost).
 """
 
 from __future__ import annotations
@@ -47,25 +45,18 @@ HEADLINE = [
     "q_revenue_topk",
     "q_sessionize",
     "q_corpus_curate",
-    # round 2: the scale fixes are measured, not just asserted —
-    # df-capped jaccard, LSH-blocked embedding dup, stream-join batch twin
     "q_ngram_jaccard",
     "q_embedding_dup",
     "q_stream_join",
-    # round 2b: curation quality signals + decontamination sweep
     "q_quality_repetition",
     "q_decontaminate",
-    # round 2c: corpus feature extraction
     "q_tfidf",
     "q_embedding_outlier",
 ]
 
-# Second list: the operator-wave surface. Byte-stable r4 wave first,
-# then (cutover recorded round 6, per the r5 VERDICT: one merged list
-# instead of a list per round) the r5 wave and the r6 additions. List
-# TOTALS are comparable only within a cutover era; PER-QUERY timings
-# remain apples-to-apples across every round — BENCH_r{N}.json keeps
-# each query's number under its own name regardless of list membership.
+# Second list: the wider operator surface. Both lists are append-only,
+# so a list total is comparable only while its membership is unchanged;
+# per-query timings are comparable by name.
 HEADLINE_EXT = [
     "q_simhash64",
     "q_simhash64_pairs",
@@ -89,8 +80,6 @@ HEADLINE_EXT = [
     "q_winsorize",
     "q_dup_graph_stats",
     "q_key_skew",
-    # --- r5 wave (folded in at the r6 cutover; formerly HEADLINE_R5,
-    # whose per-query baselines live in BENCH_r05.json) ---
     "q_bm25_search",
     "q_bigram_lm",
     "q_fuzzy_join",
@@ -108,7 +97,6 @@ HEADLINE_EXT = [
     "q_pagerank",
     "q_kmv_distinct",
     "q_lateral_topk",
-    # --- r7 additions (measured from birth) ---
     "q_kmeans_assign",
     "q_semdedup",
     "q_domain_cap",
@@ -156,7 +144,6 @@ HEADLINE_EXT = [
     "q_impute_median",
     "q_maxsim_index",
     "q_multiprobe_lsh",
-    # --- r6 additions (measured from birth) ---
     "q_dedup_incremental",
     "q_ann_index_probe",
     "q_token_budget_fill",
@@ -166,7 +153,6 @@ HEADLINE_EXT = [
     "q_gopher_rules",
     "q_perplexity_mix",
     "q_star_join",
-    # --- r8 additions (measured from birth) ---
     "q_semantic_decontaminate",
     "q_bradley_terry",
     "q_lsh_recall",
@@ -186,7 +172,6 @@ HEADLINE_EXT = [
     "q_prefix_rule_match",
     "q_k_anonymity",
     "q_corpus_drift",
-    # --- r9 additions (measured from birth) ---
     "q_expectations",
     "q_rouge_n",
     "q_pass_at_k",
@@ -202,7 +187,6 @@ HEADLINE_EXT = [
     "q_silhouette",
     "q_zipf_fit",
     "q_ndcg",
-    # --- r10 additions (measured from birth) ---
     "q_semdedup_scaled",
     "q_edit_distance_pairs",
     "q_kcore",
@@ -222,7 +206,6 @@ HEADLINE_EXT = [
     "q_heaps_fit",
     "q_js_divergence",
     "q_gini_concentration",
-    # --- r11 additions (measured from birth) ---
     "q_bpe_apply",
     "q_distinct_ngrams",
     "q_blocklist_screen",
@@ -243,7 +226,6 @@ HEADLINE_EXT = [
     "q_delete_vectors",
     "q_pruning_stats",
     "q_bloom_fpp_audit",
-    # r12 additions (measured from birth)
     "q_ivfpq_ann",
     "q_ivfpq_recall",
     "q_pack_efficiency",
@@ -271,32 +253,6 @@ HEADLINE_EXT = [
 ]
 
 
-def resolve_artifact_path(local_path: str, this_load1: float) -> str:
-    """Never clobber a calmer run's artifact with a noisier one.
-
-    If a BENCH_LOCAL for this round already exists and started at a
-    LOWER 1-min loadavg than this run, the existing file is the better
-    noise baseline — divert this run to a ``.contended.json`` side file
-    so both survive. r9/r10/r11 each needed a manual restore of the
-    builder's idle artifact after a contended driver re-run overwrote
-    it; r11 VERDICT item 2 asked for this structural guard.
-    """
-    try:
-        with open(local_path) as fh:
-            prior_load = json.load(fh).get("loadavg_start", [None])[0]
-    except (OSError, ValueError, IndexError):
-        prior_load = None
-    if prior_load is not None and prior_load < this_load1:
-        print(
-            f"bench: keeping existing {os.path.basename(local_path)} "
-            f"(loadavg_start {prior_load:.2f} < this run's "
-            f"{this_load1:.2f}); writing .contended side file",
-            file=sys.stderr,
-        )
-        return local_path[: -len(".json")] + ".contended.json"
-    return local_path
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -305,23 +261,17 @@ def main() -> None:
     # Warm the JVM once on a trivial plan so q1 doesn't pay session startup.
     spark.range(1).count()
 
-    # Steady-state methodology: one warm-up run pays per-plan codegen
-    # compilation (1-3s fixed cost, independent of data size — pure noise at
-    # bench scale, fully amortized at 100 TB); then the best of three
-    # measured runs (local GC pauses and background load add 1-2s of
-    # run-to-run jitter on the heavier queries; the min reports the
-    # steady-state cost).
+    # One warm-up run pays per-plan codegen compilation (1-3s fixed cost,
+    # independent of data size); then the best of three measured runs
+    # (local GC pauses and background load add 1-2s of run-to-run jitter
+    # on the heavier queries; the min reports the steady-state cost).
     # Per-query fault isolation: a query that fails to analyze or execute
     # records an "err" entry and the run continues — the JSON line is always
-    # emitted, so one sick query can never erase the other 25 measurements.
+    # emitted, so one sick query can never erase the other measurements.
     errors: dict[str, str] = {}
-    # Noise adjudication (r8 VERDICT item 2): four unchanged queries once
-    # showed 5-12x driver-bench inflation that took a judge re-run to
-    # dismiss as ambient load. The artifact now carries what a future
-    # reader needs to adjudicate any >2x per-query delta WITHOUT a
-    # re-run: machine loadavg at run start/end, plus each query's
-    # [min, median, max] across the 3 timed runs (a wide spread or a
-    # high loadavg says "noise"; a tight spread on a quiet machine says
+    # Noise adjudication: machine loadavg at run start/end plus each
+    # query's [min, median, max] across the 3 timed runs (a wide spread or
+    # a high loadavg says "noise"; a tight spread on a quiet machine says
     # "the code changed").
     spreads: dict[str, list[float]] = {}
     load_start = list(os.getloadavg())
@@ -333,17 +283,12 @@ def main() -> None:
             if fn is None:
                 continue
             try:
-                # r13 measurement fix (judge's r12 item 3): the warm-up run
-                # below materializes any persist() inside the query, and the
-                # CacheManager matches the rebuilt logical plan on the timed
-                # runs — so before r13 the best-of-3 EXCLUDED the persisted
-                # subtree's compute (a steady-state number). clearCache()
-                # before every timed run makes each timed run pay one full
-                # materialization (cold-action cost) and stops caches
-                # leaking across queries within the session. Warm-up still
-                # absorbs per-plan codegen compilation. Pre-r13 artifacts
-                # carry the old (cache-warm) numbers; OPTIMIZATION_r13.md
-                # records both for the re-baselined queries.
+                # The warm-up run materializes any persist() inside the
+                # query, and the CacheManager would match the rebuilt plan
+                # on the timed runs, excluding the persisted subtree's
+                # compute. clearCache() before every timed run makes each
+                # one pay a full materialization and stops caches leaking
+                # across queries within the session.
                 spark.catalog.clearCache()
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 runs: list[float] = []
@@ -364,16 +309,13 @@ def main() -> None:
 
     timings = run_list(HEADLINE)
     timings_ext = run_list(HEADLINE_EXT)
-    # cache-lifecycle hygiene (judge's r12 item 10): leave the session with
-    # no catalog-cached frames pinned.
+    # leave the session with no catalog-cached frames pinned
     spark.catalog.clearCache()
     load_end = list(os.getloadavg())
 
-    # Key order is survival order: the driver archives a BOUNDED TAIL of
-    # stdout (r6 artifact evidence: the line's tail survived, its head
-    # was truncated), so the big per-query dicts go FIRST and the
-    # headline totals go LAST — the tail always captures value/value_ext
-    # (r6 VERDICT item 6).
+    # Key order is survival order: a bounded tail of stdout keeps the end
+    # of the line, so the big per-query dicts go FIRST and the headline
+    # totals go LAST.
     out = {
         "metric": "headline_queries_total_runtime",
         "unit": "sec",
@@ -382,25 +324,21 @@ def main() -> None:
             "cold-action: warm-up (codegen) then best-of-3 runs per query "
             "with spark.catalog.clearCache() before every timed run, so "
             "each timed run pays one full materialization of any persist() "
-            "inside the query — r13 measurement fix; pre-r13 artifacts are "
-            "cache-warm for persist-carrying queries (best reported; "
-            "[min, median, max] spread + machine loadavg in "
-            "BENCH_LOCAL for noise adjudication — judge a >2x per-query "
-            "delta against the spread and load, not the point value). "
-            "Full materialization via noop sink. TWO lists, both frozen "
-            "append-only: value/queries = the byte-stable 26-query r2 "
-            "headline (apples-to-apples across every round); "
-            "value_ext/queries_ext = the ONE canonical ext list (era "
-            "cutovers: r4 wave at birth, r5 wave folded at the r6 "
-            "cutover, r6/r7/r8 additions measured from birth — compare "
-            "list TOTALS only within an era, per-query timings across "
-            "all rounds via BENCH_r{N}.json / BENCH_LOCAL_r{N}.json)"
+            "inside the query (best reported; queries_spread holds each "
+            "query's [min, median, max] and loadavg_start/loadavg_end the "
+            "machine load — judge a per-query delta against the spread and "
+            "load, not the point value). Full materialization via noop "
+            "sink. Two append-only lists: value/queries = the 26-query "
+            "headline, value_ext/queries_ext = the wider operator surface; "
+            "compare list totals only while membership is unchanged, "
+            "per-query timings by name"
         ),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
         "loadavg_start": load_start,
         "loadavg_end": load_end,
         "queries": timings,
         "queries_ext": timings_ext,
+        "queries_spread": spreads,
     }
     if errors:
         out["errors"] = errors
@@ -409,16 +347,8 @@ def main() -> None:
     out["value"] = round(sum(timings.values()), 3)
     out["value_ext"] = round(sum(timings_ext.values()), 3)
     print(json.dumps(out))
-    # Driver-contract restoration (judge's r12 item 2): the full line above
-    # is ~15 KB and the driver archives only a BOUNDED TAIL of stdout, so in
-    # r11 the archived line was head-truncated and unparseable
-    # (BENCH_r11.json parsed=null -> PERF_r12 prev_bench_ok=false). Emit a
-    # SECOND, compact line LAST — headline per-query dict + totals only,
-    # no methodology/ext-dict/spreads (~1.2 KB, comfortably inside the
-    # 2000-char tail) — so the tail always ends with one complete,
-    # contract-shaped JSON line. Entries are the same 26 headline queries
-    # (nothing removed or renamed); per-query ext history stays in the full
-    # line and in BENCH_LOCAL_r{N}.json.
+    # The full line runs to ~15 KB; the compact line LAST (headline
+    # per-query dict + totals, ~1.2 KB) fits a 2000-char stdout tail.
     compact = {
         "metric": out["metric"],
         "unit": "sec",
@@ -432,47 +362,6 @@ def main() -> None:
         "value": out["value"],
     }
     print(json.dumps(compact))
-    # The spread dict doubles the artifact size, so it rides only in the
-    # BENCH_LOCAL file (the driver's stdout tail keeps the totals).
-    out["queries_spread"] = spreads
-
-    # Self-contained artifact: the driver archives only a BOUNDED TAIL of
-    # stdout, which truncates the headline per-query dict — so the full
-    # JSON is also written to BENCH_LOCAL_r{N}.json at the repo root
-    # (committed at round close), keeping per-query history diffable
-    # across rounds without relying on NOTES prose. The round number is
-    # taken from $SPARK_GRAFT_ROUND or inferred as 1 + the newest
-    # driver-recorded BENCH_r*.json.
-    if os.environ.get("SPARK_GRAFT_BENCH_ARTIFACT", "1") == "0":
-        return  # tests exercising main() skip the repo-root artifact
-    here = os.path.dirname(os.path.abspath(__file__))
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd is None:
-        # r13 fix (judge's r12 item 4): the old max(recorded)+1 inference
-        # let a driver re-run (8-CPU scaling pass, SPARK_GRAFT_ROUND unset,
-        # contended box) write a file that masqueraded as the NEXT round's
-        # idle local baseline (the stray BENCH_LOCAL_r13.json). Only the
-        # builder sets SPARK_GRAFT_ROUND; without it, stdout already
-        # carries both JSON lines — skip the repo-root artifact.
-        print(
-            "bench: SPARK_GRAFT_ROUND unset; skipping BENCH_LOCAL artifact",
-            file=sys.stderr,
-        )
-        return
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    # CPU-tag non-32-core runs so a scaling pass can never clobber or pose
-    # as the canonical 32-core local baseline.
-    tag = f"_c{cpus}" if cpus not in (None, "32") else ""
-    local_path = resolve_artifact_path(
-        os.path.join(here, f"BENCH_LOCAL_r{int(rnd):02d}{tag}.json"),
-        load_start[0],
-    )
-    try:
-        with open(local_path, "w") as fh:
-            json.dump(out, fh, indent=1)
-            fh.write("\n")
-    except OSError as exc:  # read-only checkout: stdout already has it
-        print(f"bench: could not write {local_path}: {exc}", file=sys.stderr)
 
 
 if __name__ == "__main__":

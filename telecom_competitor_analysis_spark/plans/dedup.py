@@ -265,8 +265,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct aggregate + the windowed count pass into one aggregate
     # over that exchange: ranked-stage A/B 2.03/1.57 -> 1.68/1.43 s
     # (two interleaved rounds), row-identical at sf0.1 (260,388 rows
-    # both ways; plans/r13/q_containment_pairs_universe_{before,after}
-    # .txt). Shingles with df > 1000 leave the universe BEFORE sizes
+    # both ways). Shingles with df > 1000 leave the universe BEFORE sizes
     # are counted, exactly as the oracle defines it; a hot shingle's
     # posting list lands in one aggregate row — the identical
     # distribution the window partition had — and is dropped before

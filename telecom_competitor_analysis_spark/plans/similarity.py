@@ -258,9 +258,10 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k IS the scale knob: cluster size ≈ n/k, pair volume ≈ n²/k, so k
     must grow with the corpus to keep cluster size (and per-cluster
-    pair work) bounded — fixed-k is quadratic BY DESIGN and the ×10
-    probe in SCALE.md measures both regimes. The declared form pins
-    k=8 for the oracle; a production run sizes k = n / target_cluster.
+    pair work) bounded — fixed-k is quadratic BY DESIGN. On 10× the
+    vectors (32 cores) k ∝ n (8 → 80) cost 2.9× the wall, fixed k=8
+    7.3×. The declared form pins k=8 for the oracle; a production run
+    sizes k = n / target_cluster.
 
     The cluster assignment is read from a FINGERPRINT-CACHED
     materialized table (built once by kmeans_assign, like the LSH pair
@@ -367,17 +368,19 @@ def _hyperplane_bucket_sql(
 def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDedup in the SCALED-BLOCKER regime — the production form the
     fixed-k q_semdedup deliberately is not (its k=8 pins cluster size
-    ∝ n, pair volume ∝ n²/k: quadratic BY KNOB CHOICE, measured in
-    SCALE.md r9). Here the blocker count grows WITH the corpus so
-    expected bucket size stays ≈ SEMDEDUP_TARGET_BUCKET: the bucket is
+    ∝ n, pair volume ∝ n²/k: quadratic BY KNOB CHOICE — a run on 100×
+    the vectors was killed at 25 min on ~10¹⁰ pairs). Here the blocker
+    count grows WITH the corpus so expected bucket size stays
+    ≈ SEMDEDUP_TARGET_BUCKET: the bucket is
     the first p sign bits of the deterministic 16-plane hyperplane
     pattern (hyperplane_sign_bucket — the same LSH family the ANN stack
     uses; the paper's faiss-IVF blocker played by the O(n·planes)
     bucketer), with p = length(bin((n−1) div 128)) — an ALL-INTEGER
     sizing rule shared textually with the oracle (SEMDEDUP_PLANES_EXPR),
     no float log anywhere. Pair volume is Σ bucket² ≈ (n/128)·128² =
-    128·n — LINEAR in the corpus (probed: tools/probe_semdedup_scaled.py
-    measured 1.5× wall on 100× vectors in exactly this regime).
+    128·n — LINEAR in the corpus (measured on 32 cores in exactly this
+    regime: 0.59 s at sf0.1 with 8 buckets, 0.86 s on 100× the vectors
+    with 1024 buckets — 1.5× wall).
 
     The corpus count enters as a 1-row broadcast aggregate inside the
     ARTIFACT BUILD (never a driver-side collect); the assignment is a
@@ -2579,10 +2582,10 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pool is ≤ MMR_POOL rows but its LINEAGE is the corpus-sized
     # relevance scan + top-k — and the unrolled greedy rounds consume it
     # through ~3 sibling branches each (sims twice, cand, the growing
-    # selected chain), which Spark re-derives per branch (the measured
-    # crossJoin/agg lineage re-derivation law, SCALE.md). Cutting the
-    # lineage at the 12-row boundary makes every round O(pool), not
-    # O(corpus): measured 93 s → ~2 s at sf0.01.
+    # selected chain), which Spark re-derives per branch (an agg or
+    # crossJoin child is re-planned per leg: no exchange reuse across
+    # alias renames). Cutting the lineage at the 12-row boundary makes
+    # every round O(pool), not O(corpus): measured 93 s → ~2 s at sf0.01.
     pool = pool.localCheckpoint(eager=True)
     a = pool.select(
         F.col("vec_id").alias("a_id"), F.col("v").alias("a_v")

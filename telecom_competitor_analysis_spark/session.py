@@ -5,8 +5,12 @@ all (single-threaded Python loops per Airflow task, SURVEY.md §4.1); here
 every job shares a session configured for Catalyst/AQE to do the physical
 planning:
 
-- AQE on (runtime join-strategy switch, skew-join splitting, partition
-  coalescing) — at 100 TB this is what rescues skewed shuffle keys.
+- AQE (runtime join-strategy switch, skew-join splitting, partition
+  coalescing) and sort-merge as the shuffled-join strategy are Spark's
+  defaults and are left alone: at 100 TB AQE is what rescues skewed
+  shuffle keys, and a sort-merge join spills where a shuffled-hash
+  join's build side cannot. A join that measures faster as a
+  shuffled-hash join carries its own ``shuffle_hash`` hint.
 - ``spark.sql.shuffle.partitions`` defaults small for local mode; on a real
   cluster AQE coalescing makes the initial number mostly irrelevant.
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
@@ -44,23 +48,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r12 optimization (guide §3.1/§9): let the planner pick a
-        # shuffled-hash join when its size conditions hold instead of
-        # always sort-merge — the mid-size equi-joins (comparison
-        # pairs, shingle postings) skip both sorts. Interleaved
-        # same-session A/B at sf0.1: q_bradley_terry 0.73×,
-        # q_corpus_curate 0.65×, 10-query join set total −17%, no
-        # query worse than +14% (tools/probe_conf_ab.py). Env-
-        # overridable for clusters whose build sides overflow a
-        # partition (SHJ cannot spill its hash table): set
-        # SPARK_GRAFT_PREFER_SMJ=true to restore the default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         # testdata events.parquet carries TIMESTAMP(NANOS) — read as long,
         # converted back in sources/readers.load_table

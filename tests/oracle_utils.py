@@ -1,6 +1,7 @@
 """Local stand-in for the driver's correctness compare: run a Spark query
 and its DuckDB oracle on the same parquet tables, sort columns by name,
-canonicalize values, compare order-insensitively."""
+canonicalize values, compare order-insensitively. Also the formatted-plan
+text that plan-shape tests assert on."""
 
 from __future__ import annotations
 
@@ -11,6 +12,14 @@ import duckdb
 import pandas as pd
 
 from telecom_competitor_analysis_spark.schemas import TESTDATA_TABLES
+
+
+def formatted_plan(df) -> str:
+    """``df.explain("formatted")`` as a string: the node tree, then one
+    detail block per node."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

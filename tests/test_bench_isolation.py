@@ -1,7 +1,6 @@
 """bench.py fault isolation: one broken query must not erase the other
 measurements — the harness records an err entry and still prints the
-JSON line (round-3's BENCH was a DNF because q_sessionize's analysis
-error aborted the whole run)."""
+JSON lines (one query's analysis error once aborted a whole run)."""
 
 from __future__ import annotations
 
@@ -10,6 +9,7 @@ import pytest
 pytestmark = pytest.mark.slow  # end-to-end job/pipeline tier; fast tier is -m 'not slow'
 
 import json
+import os
 
 import bench
 from telecom_competitor_analysis_spark.plans import QUERIES
@@ -23,10 +23,13 @@ def test_broken_query_yields_partial_bench(spark, monkeypatch, capsys):
     monkeypatch.setattr(bench, "HEADLINE", ["q_topk", "q_broken_test_only"])
     monkeypatch.setattr(bench, "HEADLINE_EXT", ["q_key_skew", "q_pivot_dynamic"])
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    # keep the repo root clean: no BENCH_LOCAL artifact from a test run
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ARTIFACT", "0")
+    repo_root = os.path.dirname(os.path.abspath(bench.__file__))
+    before = sorted(os.listdir(repo_root))
 
     bench.main()
+
+    # stdout is the only output: the repo root gains no file
+    assert sorted(os.listdir(repo_root)) == before
 
     lines = capsys.readouterr().out.strip().splitlines()
     parsed = json.loads(lines[-2])  # full line (first of the two)
@@ -37,10 +40,12 @@ def test_broken_query_yields_partial_bench(spark, monkeypatch, capsys):
     assert parsed["queries_ext"]["q_key_skew"] > 0
     assert parsed["queries_ext"]["q_pivot_dynamic"] > 0
     assert parsed["value_ext"] > 0
-    # r13 driver-contract fix: the LAST stdout line is the compact
-    # tail-sized twin — same headline queries dict and totals, no
-    # methodology/ext dict, and small enough for the driver's bounded
-    # stdout tail (BENCH_r11's full line was head-truncated there).
+    # the run-to-run spread rides in the full line: [min, median, max]
+    spread = parsed["queries_spread"]["q_topk"]
+    assert spread == sorted(spread) and spread[0] == parsed["queries"]["q_topk"]
+    # the LAST stdout line is the compact tail-sized twin — same
+    # headline queries dict and totals, no methodology/ext dict, small
+    # enough for a bounded stdout tail.
     compact = json.loads(lines[-1])
     assert compact["queries"] == parsed["queries"]
     assert compact["value"] == parsed["value"]
@@ -49,28 +54,3 @@ def test_broken_query_yields_partial_bench(spark, monkeypatch, capsys):
     assert compact["n_errors"] == 1
     assert "queries_ext" not in compact and "methodology" not in compact
 
-
-def test_resolve_artifact_path_guards_idle_artifact(tmp_path):
-    """A contended re-run must not clobber an idle run's artifact
-    (r11 VERDICT item 2): when the existing BENCH_LOCAL started at a
-    lower 1-min loadavg, the new run diverts to .contended.json; when
-    the new run is calmer (or no/invalid artifact exists), it keeps
-    the canonical path."""
-    p = tmp_path / "BENCH_LOCAL_r99.json"
-
-    # no existing artifact -> canonical path
-    assert bench.resolve_artifact_path(str(p), 5.0) == str(p)
-
-    # existing idle artifact (0.2) vs contended run (6.0) -> side file
-    p.write_text(json.dumps({"loadavg_start": [0.2, 1.0, 2.0]}))
-    assert bench.resolve_artifact_path(str(p), 6.0) == str(
-        tmp_path / "BENCH_LOCAL_r99.contended.json"
-    )
-
-    # existing contended artifact (6.0) vs idle run (0.2) -> overwrite
-    p.write_text(json.dumps({"loadavg_start": [6.0, 5.0, 4.0]}))
-    assert bench.resolve_artifact_path(str(p), 0.2) == str(p)
-
-    # corrupt artifact -> fail open to the canonical path
-    p.write_text("not json")
-    assert bench.resolve_artifact_path(str(p), 5.0) == str(p)

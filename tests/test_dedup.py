@@ -1,6 +1,7 @@
 """Behavioral tests for the dedup operators on synthetic near-duplicate
 fixtures (the testdata corpus has no planted dups, so these prove the
-operators actually catch what they claim to catch)."""
+operators actually catch what they claim to catch). Also the CDC
+chunking query's plan shape and share counts."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ from telecom_competitor_analysis_spark.operators.dedup import (
     shingle_jaccard_pairs,
     simhash,
 )
+from telecom_competitor_analysis_spark.plans import QUERIES
+from tests.oracle_utils import formatted_plan
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away today"
 NEAR = "the quick brown fox jumps over the lazy dog and runs far away now"  # 1 word off
@@ -439,3 +442,18 @@ def test_materialized_keeps_concurrent_winner(spark, tmp_path):
     got = qe._materialized(spark, str(sf), "race", "documents", build)
     assert got == winner
     assert pd.read_parquet(f"{winner}/t.parquet").x.iloc[0] == "winner"
+
+
+def test_cdc_chunks_has_no_pair_stage(spark, sf_dir):
+    # CDC's whole point: sharing is a groupBy on the digest — no join,
+    # no cartesian, anywhere
+    plan = formatted_plan(QUERIES["q_cdc_chunks"](spark, sf_dir))
+    assert "Join" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_cdc_chunks_share_counts_consistent(spark, sf_dir):
+    for r in QUERIES["q_cdc_chunks"](spark, sf_dir).collect():
+        assert r.n_docs >= 2
+        assert r.n_occurrences >= r.n_docs
+        assert r.len_words >= 1

@@ -2,7 +2,9 @@
 win-rate CI, ROUGE-2), data-contract expectations, the scaling fit,
 and the graph operators (TextRank, label propagation). The oracles
 prove cross-engine parity end-to-end; these pin hand-computed values
-and operator-level edge cases on crafted rows."""
+and operator-level edge cases on crafted rows. Also plan shapes and
+invariants of the stats-family BLEU, Poisson-bootstrap and Spearman
+queries."""
 
 from __future__ import annotations
 
@@ -19,6 +21,7 @@ from telecom_competitor_analysis_spark.plans.stats import (
     PASS_AT_K_EXPR,
     _wilson_sql,
 )
+from tests.oracle_utils import formatted_plan
 
 
 def test_pass_at_k_expr_hand_computed(spark):
@@ -173,3 +176,79 @@ def test_winrate_ties_count_for_kb(spark, tmp_path):
     assert r.n == 2 and r.w == 1
     assert r.winrate_micro == 500_000
     assert r.ci_low_micro < 500_000 < r.ci_high_micro
+
+
+def test_bootstrap_ci_fanout_collapses_before_exchange(spark, sf_dir):
+    # the ×32 explode is map-side; the shuffle carries (source, rep)
+    # partial aggregates; the rank window sees 32 rows per source
+    plan = formatted_plan(QUERIES["q_bootstrap_ci"](spark, sf_dir))
+    assert "Generate" in plan and "explode(" in plan
+    assert "partial_sum" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_rank_correlation_windows_over_distinct_values_only(spark, sf_dir):
+    # every Window's input must be an aggregate (value-cardinality
+    # rows), never the raw doc scan
+    plan = formatted_plan(QUERIES["q_rank_correlation"](spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "partial_sum" in plan or "partial_count" in plan
+    # the doc-level tokenize feeds ONLY groupBys: a Window directly over
+    # a FileScan would show a window operator with no aggregate between
+    # it and the scan — pin via operator counts: 2 rank windows, and at
+    # least 3 aggregates (g, xc/yc, final sums)
+    assert plan.count("Window") >= 2
+    assert plan.count("HashAggregate") >= 6  # partial+final per groupBy
+
+
+def test_bleu_join_keys_match_count_keys(spark, sf_dir):
+    # clip join on (pair, n, gram) — the same key the counts hashed on;
+    # no cartesian; everything partial-aggregates
+    plan = formatted_plan(QUERIES["q_bleu"](spark, sf_dir))
+    assert "CartesianProduct" not in plan
+    assert "partial_count" in plan or "partial_sum" in plan
+
+
+def test_bleu_bounds_and_clip_invariants(spark, sf_dir):
+    rows = QUERIES["q_bleu"](spark, sf_dir).collect()
+    assert rows, "no pairs at this SF"
+    for r in rows:
+        assert 0 <= r.bleu2_micro <= 1_000_000
+        assert r.n1 <= r.d1 and r.n2 <= r.d2
+        assert r.ref_id % 2 == 0 and r.cand_id % 2 == 1
+
+
+def test_bootstrap_ci_orders_and_is_deterministic(spark, sf_dir):
+    q = QUERIES["q_bootstrap_ci"]
+    a = {r.source: r for r in q(spark, sf_dir).collect()}
+    b = {r.source: r for r in q(spark, sf_dir).collect()}
+    assert a.keys() == b.keys() and len(a) > 0
+    for s, r in a.items():
+        assert r.boot_lo_micro <= r.boot_hi_micro
+        assert r.b == 32
+        # hash-seeded weights → bit-stable across runs
+        assert (r.boot_lo_micro, r.boot_hi_micro) == (
+            b[s].boot_lo_micro,
+            b[s].boot_hi_micro,
+        )
+        # Poisson(1) weights have mean 1 → replicate means track the
+        # point estimate; even at sf0.001's 25 docs/source the 93.75%
+        # interval stays within ±45% of it (width ∝ 1/√n)
+        assert abs(r.boot_lo_micro - r.point_mean_micro) < (
+            0.45 * r.point_mean_micro
+        )
+        assert abs(r.boot_hi_micro - r.point_mean_micro) < (
+            0.45 * r.point_mean_micro
+        )
+
+
+def test_rank_correlation_in_range_and_positive_on_length_signals(
+    spark, sf_dir
+):
+    rows = QUERIES["q_rank_correlation"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert -1_000_000 <= r.spearman_micro <= 1_000_000
+        # chars and whitespace tokens order a natural corpus the same
+        # way — strongly positive at every source
+        assert r.spearman_micro > 500_000

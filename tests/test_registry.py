@@ -1,10 +1,13 @@
 """The query registry's ordering rules (pure Python, no Spark): the
-driver's verify order is computed from the fingerprint manifest."""
+driver's verify order is computed from the fingerprint manifest. Also
+keeps the helper scripts under tools/ runnable and documented."""
 
 from __future__ import annotations
 
+import glob
 import importlib.util
 import os
+import re
 import shutil
 
 import __spark_entry__
@@ -73,3 +76,21 @@ def test_artifact_key_covers_every_package_module(tmp_path):
     with open(pkg / "functions" / "text.py", "a") as fh:
         fh.write("\n# edited\n")
     assert artifacts._code_version() != before
+
+
+def test_tools_run_from_any_checkout_and_are_listed():
+    """Every tools/*.py finds the repo from its own path (no hard-coded
+    checkout path, no cwd-relative ``sys.path`` entry) and has an entry
+    in tools/README.md."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tools = sorted(glob.glob(os.path.join(repo, "tools", "*.py")))
+    with open(os.path.join(repo, "tools", "README.md")) as fh:
+        readme = fh.read()
+    assert tools
+    for path in tools:
+        name = os.path.basename(path)
+        with open(path) as fh:
+            src = fh.read()
+        assert repo not in src, name
+        assert not re.search(r"sys\.path\.insert\(\s*0\s*,\s*['\"]", src), name
+        assert f"`{name}`" in readme, name

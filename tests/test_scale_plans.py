@@ -148,7 +148,7 @@ def test_key_skew_topk_avoids_global_sort(spark, sf_dir):
 def test_pii_scrub_is_map_only(spark, split_sf_dir):
     # pure narrow stage: zero exchanges on a well-split scan (the
     # guard's round-robin on the one-file testdata is pinned by
-    # tests/test_wave9b.py::test_compute_bound_map_queries_...)
+    # test_compute_bound_map_queries_keep_the_parallelism_guard below)
     assert "Exchange" not in _plan(QUERIES["q_pii_scrub"](spark, split_sf_dir))
 
 
@@ -1139,66 +1139,6 @@ def test_corpus_drift_windows_only_over_aggregated_rows(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-@pytest.mark.slow  # plan-shape tier, runs real Spark jobs
-def test_shj_default_and_smj_escape_hatch_agree(spark):
-    """A skewed equi-join (one hot key owns most build rows) under the
-    session default (preferSortMergeJoin=false) must produce the same
-    rows as under the SMJ-restoring escape-hatch value, and the two
-    plans must actually differ in join strategy — the 'green both ways'
-    evidence the r12 VERDICT asked for before trusting the global flip
-    at scale."""
-    big = spark.range(0, 20_000).select(
-        (F.col("id") % 997).alias("k"), F.col("id").alias("payload")
-    )
-    # skewed build side: ~half the rows share key 0
-    build = spark.range(0, 4_000).select(
-        F.when(F.col("id") < 2_000, F.lit(0))
-        .otherwise(F.col("id") % 997)
-        .alias("k"),
-        (F.col("id") * 3).alias("attr"),
-    )
-    # A threshold BETWEEN the build side's size estimate and
-    # size*shuffle_partitions: too small to broadcast, but inside SHJ's
-    # canBuildLocalHashMap window (sizeInBytes < threshold * partitions).
-    # -1 would disable BOTH broadcast and the SHJ size condition, so
-    # derive it from the planner's own estimate (exactly size/2).
-    build_size = int(
-        build._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_pref = spark.conf.get("spark.sql.join.preferSortMergeJoin")
-    try:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(max(build_size // 2, 1))
-        )
-        # keep AQE from demoting the shuffle join back to broadcast off
-        # the (much smaller) runtime shuffle-byte statistics — the test
-        # pins strategy choice, not AQE's late conversion
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        shj_df = big.join(build, on="k").groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("attr").alias("s")
-        )
-        shj_rows = sorted(map(tuple, shj_df.collect()))
-        shj_plan = shj_df._jdf.queryExecution().executedPlan().toString()
-
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-        smj_df = big.join(build, on="k").groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("attr").alias("s")
-        )
-        smj_rows = sorted(map(tuple, smj_df.collect()))
-        smj_plan = smj_df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", prev_pref)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-    assert shj_rows == smj_rows
-    assert "ShuffledHashJoin" in shj_plan
-    assert "SortMergeJoin" in smj_plan
-
-
 def test_power_iteration_checkpoints_bound_iterates(spark, sf_dir):
     """r12 wave 5: q_power_iteration cuts each 64-row iterate's lineage
     with a lazy localCheckpoint, so the doubled-per-consumer groupBy
@@ -1275,3 +1215,16 @@ def test_winsorize_percentile_input_is_repartitioned(spark, sf_dir):
     assert df.count() > 0
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "roundrobin" in plan.lower() or "RoundRobinPartitioning" in plan
+
+
+def test_compute_bound_map_queries_keep_the_parallelism_guard(
+    spark, sf_dir
+):
+    # full-surface ×10 sweep finding: pii_scrub/fertility/embedding_quantize
+    # serialized compute-bound regex/HOF stages onto a 1-2-split scan
+    # (14×/6.2×/6.2× at ×10). The guard repartitions under-split scans;
+    # at the tiny test SF that must show as a round-robin exchange in
+    # the plan. Regression here = someone dropped the guard.
+    for q in ("q_pii_scrub", "q_fertility", "q_embedding_quantize"):
+        plan = _plan(QUERIES[q](spark, sf_dir))
+        assert "roundrobin" in plan.lower(), q

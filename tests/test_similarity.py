@@ -2,7 +2,8 @@
 plausible neighbors and (b) achieve non-trivial recall@10 against the
 brute-force exact baseline — an approximation that recalls nothing is a
 bug, not an approximation. Also pins the IVF probe, PQ and k-means
-operator internals their consumers rely on."""
+operator internals their consumers rely on, and the NDCG, MMR and
+silhouette queries' plan shapes and bounds."""
 
 from __future__ import annotations
 
@@ -19,6 +20,8 @@ from telecom_competitor_analysis_spark.operators.similarity import (
     pq_scored_pairs,
 )
 from telecom_competitor_analysis_spark.sources.readers import load_table
+from telecom_competitor_analysis_spark.plans import QUERIES
+from tests.oracle_utils import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -698,3 +701,57 @@ def test_pq_adc_topk_contract_unchanged(spark, vecs):
         # ranked by (approx_dist, id)
         srt = sorted(lst, key=lambda r: (r.approx_dist, r.vec_id))
         assert [r.rank for r in srt] == [1, 2, 3], qid
+
+
+def test_ndcg_both_legs_end_in_partial_topk(spark, sf_dir):
+    # exact and approx legs must both carry the WindowGroupLimit
+    # partial top-k so the metric join sees ≤ 2·k·|queries| rows
+    plan = formatted_plan(QUERIES["q_ndcg"](spark, sf_dir))
+    assert plan.count("WindowGroupLimit") >= 2
+    assert "rangepartitioning" not in plan
+
+
+def test_ndcg_bounds_and_consistency_with_recall(spark, sf_dir):
+    ndcg = {r.query_id: r for r in QUERIES["q_ndcg"](spark, sf_dir).collect()}
+    recall = {
+        r.query_id: r.n_matched
+        for r in QUERIES["q_ann_recall"](spark, sf_dir).collect()
+    }
+    assert ndcg.keys() == recall.keys()
+    for q, r in ndcg.items():
+        assert 0 <= r.ndcg_micro <= 1_000_000
+        assert 0 <= r.rr_micro <= 1_000_000
+        # same hit set as recall@10 by construction
+        assert r.n_hits == recall[q]
+        if r.n_hits == 10:
+            assert r.ndcg_micro > 0
+
+
+def test_mmr_ranks_scores_and_diversity_shape(spark, sf_dir):
+    rows = sorted(
+        QUERIES["q_mmr_select"](spark, sf_dir).collect(),
+        key=lambda r: r.rank,
+    )
+    assert [r.rank for r in rows] == [1, 2, 3, 4]
+    assert len({r.vec_id for r in rows}) == 4
+    # rank 1 is the pure-relevance argmax; from rank 2 on, greedy
+    # scores are provably non-increasing (the penalty set grows and the
+    # candidate set shrinks). rank1 -> rank2 is NOT an invariant: with
+    # negative cosine sims, 7*rel - 3*max_sim can exceed 7*rel1 —
+    # asserting it would be fixture-coupled (r9 ADVICE).
+    assert rows[0].mmr_score == rows[0].rel_micro * 7
+    for a, b in zip(rows[1:], rows[2:]):
+        assert a.mmr_score >= b.mmr_score
+
+
+def test_silhouette_bounds_and_partition_of_corpus(spark, sf_dir):
+    rows = QUERIES["q_silhouette"](spark, sf_dir).collect()
+    assert 1 <= len(rows) <= 4
+    from telecom_competitor_analysis_spark.sources.readers import load_table
+
+    total = load_table(spark, sf_dir, "embeddings").count()
+    assert sum(r.n for r in rows) == total
+    for r in rows:
+        assert -1_000_000 <= r.min_silhouette_micro <= 1_000_000
+        assert -1_000_000 <= r.mean_silhouette_micro <= 1_000_000
+        assert r.min_silhouette_micro <= r.mean_silhouette_micro

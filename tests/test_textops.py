@@ -1,6 +1,7 @@
 """Round-5 operator tests: BM25 retrieval, bigram-LM scoring, edit-
 distance join (deletion-neighborhood blocking), canonical-per-cluster
-selection, weighted sampling, dynamic pivot."""
+selection, weighted sampling, dynamic pivot; the Zipf fit's top-k plan
+and slope."""
 
 from __future__ import annotations
 
@@ -9,6 +10,9 @@ import math
 import pytest
 
 from pyspark.sql import functions as F
+
+from telecom_competitor_analysis_spark.plans import QUERIES
+from tests.oracle_utils import formatted_plan
 
 
 def test_bm25_ranks_term_dense_docs_first(spark):
@@ -151,7 +155,6 @@ def test_weighted_sample_matches_reference_formula(spark):
 
 
 def test_pivot_dynamic_matches_static(spark, sf_dir):
-    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     dyn = QUERIES["q_pivot_dynamic"](spark, sf_dir)
@@ -169,7 +172,6 @@ def test_pivot_dynamic_matches_static(spark, sf_dir):
 
 
 def test_cdc_apply_semantics(spark, sf_dir):
-    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     got = {r.key: (r.price_cents, r.last_seq)
@@ -192,7 +194,6 @@ def test_cdc_apply_semantics(spark, sf_dir):
 def test_retention_cohort_week0_is_everyone(spark, sf_dir):
     """Every user is active in their own first week, so for each cohort
     the week-0 cell must equal the cohort's total user count."""
-    from telecom_competitor_analysis_spark.plans import QUERIES
     from telecom_competitor_analysis_spark.sources.readers import load_table
 
     rows = QUERIES["q_retention_cohorts"](spark, sf_dir).collect()
@@ -217,8 +218,6 @@ def test_retention_cohort_week0_is_everyone(spark, sf_dir):
 def test_cogroup_asof_matches_jvm_asof(spark, sf_dir):
     """The cogrouped merge_asof plan and the union+window JVM plan are
     two formulations of the same operator — identical output required."""
-    from telecom_competitor_analysis_spark.plans import QUERIES
-
     a = sorted(map(tuple, QUERIES["q_cogroup_asof"](spark, sf_dir).collect()))
     b = sorted(map(tuple, QUERIES["q_asof_join"](spark, sf_dir).collect()))
     assert a == b and len(a) > 0
@@ -279,8 +278,6 @@ def test_recursive_hierarchy_depths_and_union_guard(spark, sf_dir):
 
     import pytest as _pytest
 
-    from telecom_competitor_analysis_spark.plans import QUERIES
-
     rows = QUERIES["q_recursive_hierarchy"](spark, sf_dir).collect()
     got = {r.key: (r.root, r.depth) for r in rows}
     for key, (root, depth) in list(got.items())[:200]:
@@ -297,3 +294,15 @@ def test_recursive_hierarchy_depths_and_union_guard(spark, sf_dir):
             " SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3"
             ") SELECT * FROM r"
         ).collect()
+
+
+def test_zipf_fit_topk_is_never_a_global_sort(spark, sf_dir):
+    plan = formatted_plan(QUERIES["q_zipf_fit"](spark, sf_dir))
+    assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
+
+
+def test_zipf_slope_negative(spark, sf_dir):
+    row = QUERIES["q_zipf_fit"](spark, sf_dir).collect()[0]
+    assert row.n_words <= 1000
+    assert row.slope_micro < 0

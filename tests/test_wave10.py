@@ -1,7 +1,7 @@
 """Round-10 wave: SemDedup's scaled-blocker regime as a declared,
-oracle-checked query (q_semdedup_scaled) — the production form whose
-×N behavior tools/probe_semdedup_scaled.py measured at 1.5× wall on
-100× vectors (bucket count ∝ corpus, constant expected bucket size)."""
+oracle-checked query (q_semdedup_scaled) — the production form that ran
+at 1.5× the wall on 100× the vectors (bucket count ∝ corpus, constant
+expected bucket size; q_semdedup_scaled's docstring has the numbers)."""
 
 from __future__ import annotations
 

@@ -1,11 +1,14 @@
 """Regenerate COVERAGE.md from the live query registry (the family
 modules under plans/): one row per declared query with its check kind
-(oracle vs rows-only) and the first docstring line. Run from the repo
-root at round close; no SparkSession is created (imports only)."""
+(oracle vs rows-only) and the first docstring line. Writes COVERAGE.md at
+the root of the checkout the script lives in; no SparkSession is created
+(imports only)."""
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from telecom_competitor_analysis_spark.plans import QUERIES  # noqa: E402
 
@@ -23,7 +26,7 @@ def main() -> None:
         rows.append((name, check, first[:70]))
     n_oracle = sum(1 for _, c, _ in rows if c == "oracle")
 
-    with open("COVERAGE.md", "w") as f:
+    with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:
         f.write(
             "# COVERAGE — declared queries vs SURVEY.md §2 operator"
             " inventory\n\n"

@@ -1,4 +1,4 @@
-"""Round-12 full-surface plan audit: one row of plan-shape statistics per
+"""Full-surface plan audit: one row of plan-shape statistics per
 bench-listed query, so EVERY operator is examined (guide §1/§7.2) without
 executing anything.
 
@@ -17,7 +17,8 @@ optimization guide says to look for:
 - Window nodes and WindowGroupLimit (partial top-k) presence
 
 Output: TSV to stdout (one line per query) + a flag summary at the end.
-Explain-only — no actions run; safe to run on a busy box.
+Explain-only: no query is executed, though a builder may run its own
+jobs (an eager localCheckpoint, a first-use artifact build).
 """
 import os
 import re
@@ -25,7 +26,7 @@ import sys
 import io
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402  (HEADLINE lists)
 from telecom_competitor_analysis_spark.plans import QUERIES  # noqa: E402
 from telecom_competitor_analysis_spark.session import get_spark  # noqa: E402
