@@ -21,14 +21,14 @@ admission composite's ordering, batch-shaped):
   6 decontaminate   drop docs sharing a w-gram with the eval set
   7 shard           deterministic hash shard + stable position
 
-Scale shape: every stage is one of the already-probed operators (the
-composed q_corpus_curate ran 2.90 s at sf0.1 and 3.49 s on 10× the
-data, on 32 cores); the composition adds NO new shuffle — each
-screen gates doc ids and the survivor set is carried as the (id, text)
-frame, persisted between stages exactly where consumers fork (the
-curate_corpus reuse lesson: Spark shares nothing across stage
-boundaries that re-derive lineage). At 100 TB each stage boundary
-would be a parquet table (the build_indexes materialization pattern).
+Scale shape: every stage is one of the declared operators; the
+composition adds NO new shuffle — each screen gates doc ids and the
+survivor set is carried as the (id, text) frame. Each stage boundary
+is persisted and counted (the lineage row needs the count, and the
+next stage reads the same rows); the previous boundary is
+unpersisted as soon as the next one is counted, and the last one
+backs the returned shards. At 100 TB each stage boundary would be a
+parquet table (the build_indexes materialization pattern).
 """
 
 from __future__ import annotations

@@ -31,25 +31,20 @@ def curate_corpus(
     max_words: int = 10_000,
     min_stopword_ratio: float = 0.0,
     near_dup_threshold: float = 0.5,
-    reuse_via: str = "persist",
 ) -> DataFrame:
     """Surviving documents after the four curation stages. Returns
     (id, pred_lang, n_words) for every keeper.
 
-    ``reuse_via`` picks the reuse mechanism: "persist" (default — zero
-    build-time cost, right when this is the whole query) or
-    "checkpoint" (lazy localCheckpoint — pays ~2 s of physical planning
-    at BUILD time but hands every consumer the SAME lineage-truncated
-    RDD, which is decisively faster when this corpus feeds a deeper
-    composition: curate_incremental measured 22 s with checkpointed
-    stages vs 73 s with persisted ones, where the cached-subtree plans
-    ballooned and AQE could no longer coalesce the cached shuffles).
-
-    The reused stage is the post-exact-dedup keepers, which feed both
-    the near-dup pair generation and the final anti-join — without
-    reuse the whole scan+score+dedup pipeline executes twice (measured
-    ~27% slower at sf0.1). At cluster scale the same role is played by
-    materializing keepers to a table between stages.
+    The post-exact-dedup keepers feed both the near-dup pair generation
+    and the final anti-join, so they are reused through a lazy
+    ``localCheckpoint``: every consumer reads the same lineage-truncated
+    RDD instead of re-running scan+score+dedup. On 4 cores this beat
+    both a ``persist()`` and no reuse at all, as the whole query and
+    inside the deeper curate_incremental composition (medians
+    checkpoint / persist / none at sf0.1: q_corpus_curate 4.00 / 4.16 /
+    4.52 s, q_curate_incremental 13.7 / 26.5 / 17.5 s; NOTES.md). At
+    cluster scale the same role is played by materializing keepers to
+    a table between stages.
 
     Near-dup policy: among candidate pairs with shingle-Jaccard ≥
     threshold, the lower id survives — applied as one anti-join against
@@ -107,10 +102,7 @@ def curate_corpus(
         .filter(F.col(id_col) == F.col("__keeper"))
         .drop("__digest", "__keeper")
     )
-    if reuse_via == "checkpoint":
-        keepers = keepers.localCheckpoint(eager=False)
-    else:
-        keepers = keepers.persist()
+    keepers = keepers.localCheckpoint(eager=False)
 
     # near-dup removal among survivors: drop the higher id of each pair
     pairs = shingle_jaccard_pairs(
@@ -119,10 +111,6 @@ def curate_corpus(
         text_col,
         w=3,
         threshold=near_dup_threshold,
-        # r12: the universe cache helps the direct curate (persist
-        # mode) but hurts the deep composed incremental plan exactly
-        # as the reuse_via docstring predicts — follow the same switch
-        cache_universe=reuse_via != "checkpoint",
     )
     drops = pairs.select(F.col("id_b").alias(id_col)).distinct()
     survivors = keepers.join(drops, on=id_col, how="left_anti")
@@ -156,9 +144,6 @@ def curate_incremental(
         min_words,
         max_words,
         near_dup_threshold=near_dup_threshold,
-        # checkpoint, not persist: this corpus feeds the deep composed
-        # plan below — see curate_corpus's reuse_via docstring
-        reuse_via="checkpoint",
     ).join(new_df.select(id_col, text_col), on=id_col)
 
     # (b) digest-level: drop content already kept

@@ -534,7 +534,6 @@ def shingle_jaccard_pairs(
     w: int = 3,
     threshold: float = 0.2,
     max_df: int = 1000,
-    cache_universe: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by exact Jaccard over distinct w-shingles, candidates
     from an inverted-index join on shingles (only docs sharing ≥1 shingle
@@ -568,20 +567,12 @@ def shingle_jaccard_pairs(
         .filter(F.col("__df") <= F.lit(max_df))
         .drop("__df")
     )
-    # r12 optimization (guide §5): the capped universe feeds FOUR
-    # consumers (both inverted-index join sides + the size table,
-    # itself joined twice), and each re-derivation pays the shingle
-    # explode + distinct + df-cap window — the multi-consumer lesson
-    # q_containment_pairs' checkpointed `ranked` universe recorded
-    # (19.8 s unmaterialized vs 3.5 s), applied to the operator every
-    # exact-pair query shares. At 100 TB this frame is the
-    # materialized shingle index (build_shingle_index) the incremental
-    # path keeps on parquet. cache_universe=False restores the lazy
-    # form for DEEP COMPOSED plans (curate_incremental measured 50%
-    # SLOWER with the cache — the r5 reuse_via lesson: cached-subtree
-    # plans balloon and AQE stops coalescing the cached shuffles).
-    if cache_universe:
-        toks = toks.persist()
+    # The capped universe feeds four consumers (both inverted-index
+    # join sides and the size table, itself joined twice) and is left
+    # lazy: a persist() of it measured slower on 4 cores, summed over
+    # its four exact-pair queries (NOTES.md). At 100 TB this frame is
+    # the materialized shingle index (build_shingle_index) the
+    # incremental path keeps on parquet.
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = toks.alias("a")
     b = toks.alias("b")
@@ -815,9 +806,6 @@ def shingle_jaccard_pairs_between(
         .filter(F.col("__df") <= F.lit(max_df))
         .drop("__df")
     )
-    # r12: NO universe cache here — this asymmetric form exists for the
-    # composed incremental path, where the cached subtree was measured
-    # 50% slower (see shingle_jaccard_pairs.cache_universe).
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     probe_ids = probe.select(F.col(id_col).alias("id"))
     build_ids = build.select(F.col(id_col).alias("id"))

@@ -415,25 +415,9 @@ def kmeans_assign(
         ensure_parallelism,
     )
 
-    # r12 optimization (guide §5): the narrow (vec_id, v) frame feeds
-    # every Lloyd round twice (scoring cross-join + centroid-update
-    # join) plus the final assignment join-back — 2·iters scans of the
-    # vector table and a re-run of the under-split repartition per
-    # consumer. persist() it so the scan + repartition happen once per
-    # action; the frame is exactly the working set (id + dim floats).
-    # CACHE LIFETIME CAVEAT (r13, mirrors semdedup_prune's): the
-    # returned DataFrame is lazy, so this function cannot unpersist —
-    # the cached (vec_id, v) frame lives until the session ends or the
-    # caller clears it (bench.py clearCaches between timed runs). On
-    # semdedup_prune's assign=None path this stacks with the outer
-    # assignment persist — two cached copies of the corpus vectors;
-    # kept deliberately, because dropping the inner persist makes
-    # Lloyd's re-derive the scan+repartition 2·iters+1 times DURING the
-    # outer persist's one materialization (the build gets slower to
-    # save memory the clearCache hygiene already reclaims).
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    ).persist()
+    )
     cents = _pick_anchors(corpus, id_col, vec_col, k).select(
         F.col("anchor_id").alias("cid"),
         F.col("anchor_vec").alias("cvec"),

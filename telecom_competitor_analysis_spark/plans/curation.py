@@ -180,7 +180,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated exactly ONCE — per-(doc, bucket) counts; the 64-row
     bucket LM derives from THAT aggregate (sum over docs), never from
     a second pass over the tokens (measured at the ×10 probe: 4.6× →
-    2.6× for 10× tokens, even paying the cache cold). The LM and its
+    2.6× for 10× tokens). The LM and its
     totals broadcast; the final top-100 is a constant-bound rank over
     one row per document. Nothing global-sorts the corpus and the LM
     state is O(buckets), not O(vocab)."""
@@ -199,16 +199,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_buckets),
         ).alias("b"),
     )
-    # the per-(doc,bucket) count table feeds BOTH the LM fit and the
-    # scoring join, and Spark shares nothing across join sides — persist
-    # it so the corpus-scale explode runs once (it is ~50× smaller than
-    # the token stream: ≤64 int rows per doc). Same cache-lifetime
-    # caveat as semdedup_prune: the result is lazy, so the cache lives
-    # until the session ends or the caller clears it.
-    per = (
-        bk.groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
+    per = bk.groupBy("doc_id", "lang", "b").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
     )
     agg = per.groupBy("b").agg(
         F.sum("n").cast("bigint").alias("c_r"),
@@ -454,12 +446,7 @@ def q_perplexity_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # r12 optimization (guide §5): `scores` feeds TWO consumers (the
-    # quartile-cutoff aggregate and the bucketed rollup) and its
-    # lineage is the whole bigram-LM scoring pipeline — persist the
-    # narrow per-doc score frame so the LM pass runs once per action
-    # (the q_quality_calibration shape).
-    scores = bigram_lm_scores(docs, "doc_id", "text").persist()
+    scores = bigram_lm_scores(docs, "doc_id", "text")
     cuts = scores.agg(
         F.percentile(F.col("avg_logp"), F.lit(0.25)).alias("q1"),
         F.percentile(F.col("avg_logp"), F.lit(0.5)).alias("q2"),
@@ -1446,13 +1433,7 @@ def q_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "score_micro"
     )
     gopher = gopher_rules(docs, "doc_id", "text").select("doc_id", "passes")
-    # r12 optimization (guide §5): `j` feeds TWO consumers (the decile
-    # cutoff aggregate and the bucketed rollup) and its lineage holds
-    # BOTH text-scoring passes (hashed linear score + Gopher gate, each
-    # a full tokenize) — the before plan re-derived them per consumer
-    # (18 parquet scans). The frame is three narrow columns; persist it
-    # so the scoring join runs once (the q_conformal_coverage shape).
-    j = model.join(gopher, on="doc_id").persist()
+    j = model.join(gopher, on="doc_id")
     cuts = j.agg(
         F.percentile(
             F.col("score_micro"),
@@ -2131,12 +2112,7 @@ def q_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "score_micro"
     )
     gopher = gopher_rules(docs, "doc_id", "text").select("doc_id", "passes")
-    # r12 optimization (guide §5): `j` feeds TWO consumers (the min/max
-    # bounds aggregate and the binned rollup), and each re-derivation
-    # pays both full-tokenize scoring passes (18 parquet scans in the
-    # before plan). Persist the 3-column frame — the
-    # q_quality_calibration / q_conformal_coverage shape.
-    j = model.join(gopher, on="doc_id").persist()
+    j = model.join(gopher, on="doc_id")
     bounds = j.agg(
         F.min("score_micro").alias("min_s"),
         F.max("score_micro").alias("max_s"),
@@ -2703,16 +2679,6 @@ def q_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " 16, 10) AS INT) % 2 = 0"
             ),
         )
-        # r12 optimization (guide §5): `scored` is consumed THREE times
-        # (n_cal, the threshold order statistic, and the test rollup),
-        # and its lineage holds BOTH text-scoring passes (hashed linear
-        # score + Gopher gate, each a full tokenize) joined on doc_id —
-        # the before plan re-derived all of it per consumer. The frame
-        # is narrow (doc_id, score_micro, passes, is_cal); persist it
-        # so the scoring join runs once. At cluster scale this is the
-        # scored-calibration table a conformal pipeline materializes
-        # anyway.
-        .persist()
     )
     cal_good = scored.filter(F.col("is_cal") & F.col("passes"))
     n_cal = cal_good.agg(F.count(F.lit(1)).cast("long").alias("n_cal"))

@@ -299,14 +299,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles the 2.6M-row posting frame twice, where the array
     # collect is ONE groupBy and the pair joins broadcast the
     # doc-count-sized array table.)
-    # r12 optimization (guide §5): `arrays` is consumed by BOTH verify
-    # join sides — without persist the collect_list groupBy over the
-    # checkpointed posting frame runs twice per action. One row per
-    # doc; at 100 TB this is the doc→sorted-shingle-array side table
-    # the verify stage materializes anyway.
     arrays = ranked.groupBy("id").agg(
         F.array_sort(F.collect_list("word")).alias("arr")
-    ).persist()
+    )
     cont = F.greatest(
         F.col("n_shared").cast("double") / F.col("n_a"),
         F.col("n_shared").cast("double") / F.col("n_b"),
@@ -2360,12 +2355,7 @@ def q_cluster_chaining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _materialized_lsh_pairs(spark, sf_dir)
-    # r12 optimization (guide §5): the component labels feed TWO
-    # consumers (the cluster-size rollup and the per-cluster edge
-    # count) and their lineage is the iterative CC chain — persist the
-    # 2-int label frame so CC runs once per action (the
-    # q_hard_negatives shape).
-    lab = dedup_clusters(pairs, docs.select("doc_id"), "doc_id").persist()
+    lab = dedup_clusters(pairs, docs.select("doc_id"), "doc_id")
     clus = (
         lab.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))

@@ -300,12 +300,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text", n_hashes=4)
-    # r12 optimization (guide §5): triangle_stats references its edge
-    # list FOUR times (degree build, orientation join, closure join,
-    # edge count) and the edge lineage here is the full MinHash+LSH
-    # pair pipeline — the before plan re-derived signatures per
-    # reference. persist() the bounded candidate-pair list so the LSH
-    # stage runs once per action.
+    # persisted: triangle_stats reads the edges 4×; measured 3.38 →
+    # 1.91 s (without → with) on 4 cores at sf0.1 (NOTES.md)
     edges = lsh_candidate_pairs(sig, "doc_id", n_hashes=4, bands=2).persist()
     return triangle_stats(edges)
 
@@ -387,18 +383,9 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = toks.select(
         F.col("w").alias("a"), F.lead("w").over(win).alias("b")
     ).filter(F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-    # r12 optimization (guide §5): textrank_scores references the edge
-    # list three times (both union legs + the degree build) and its
-    # lineage here is the token explode + lead window + distinct —
-    # persist the narrow (u, v) frame so the co-occurrence extraction
-    # runs once per action (the q_triangle_count shape).
-    edges = (
-        adj.select(
-            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-        )
-        .distinct()
-        .persist()
-    )
+    edges = adj.select(
+        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+    ).distinct()
     final = textrank_scores(edges, iters=2)
     return (
         final.orderBy(F.col("s").desc(), F.col("word"))
@@ -849,12 +836,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("node"),
         F.col("doc_id").cast("long").alias("label"),
     )
-    # r12 optimization (guide §5): the label table feeds THREE
-    # consumers (node_stats, the id_a leg, the id_b leg) and its
-    # lineage is the 2-round LP join chain — the before plan
-    # re-derived it per reference (68 parquet scans). Two ints per
-    # node; persist so LP runs once per action.
-    labels = label_propagation(nodes, edges, rounds=2).persist()
+    labels = label_propagation(nodes, edges, rounds=2)
 
     m_df = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
     both = edges.unionByName(

@@ -714,14 +714,9 @@ def q_embedding_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm,
     )
 
-    # The signature table (label, id, per-band buckets, norm, vector) is
-    # materialized ONCE (persist — the local stand-in for writing
-    # signatures to a table, which every production LSH pipeline does):
-    # the per-band self-joins and the scoring joins all read it, instead
-    # of re-running the interpreted array-fold bucket computation for
-    # every join side (4× otherwise). persist(), not a lazy
-    # localCheckpoint: checkpoint physically plans at build time (~2 s,
-    # r5 profile) while persist defers everything to first execution.
+    # The signature table (label, id, per-band buckets, norm, vector)
+    # feeds the per-band self-joins and the scoring joins. At 100 TB it
+    # is written to a table, as every production LSH pipeline does.
     # ensure_parallelism: a small parquet arrives as ONE split, which
     # would serialize the fold work onto a single core; no-op
     # (conf-gated) on a real cluster.
@@ -737,7 +732,7 @@ def q_embedding_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         l2_norm(F.col("embedding")).alias("nrm"),
         "embedding",
-    ).persist()
+    )
 
     cand = None
     for band in range(EMBEDDING_LSH_BANDS):
@@ -1536,14 +1531,9 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _materialized_lsh_pairs(spark, sf_dir)
-    # r12 optimization (guide §5): the component labels feed TWO
-    # consumers (the corpus-side join and the 5-query broadcast side)
-    # and their lineage is the whole iterative CC chain — without
-    # persist the label propagation runs twice per action. The frame
-    # is two ints per doc; persist it so CC runs once.
     clusters = dedup_clusters(pairs, docs.select("doc_id"), "doc_id").select(
         F.col("id").alias("vec_id"), "cluster_id"
-    ).persist()
+    )
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = ensure_parallelism(
         emb.select("vec_id", micro_vec(F.col("embedding")).alias("mv"))
@@ -1707,19 +1697,14 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_scored_pairs,
     )
 
-    # r12 optimization (guide §2.4 one-pass-two-rankings): pq_adc_topk
-    # already computes the EXACT squared-L2 for every (query, vector)
-    # pair (the accuracy mirror riding along its output), yet the old
-    # recall leg re-derived a second corpus-wide exact brute-force
-    # scan for the exact top-10. Score the pairs ONCE
-    # (pq_scored_pairs — approx AND exact per pair), persist the
-    # narrow pair frame, and rank it twice: by approx (the PQ leg,
-    # identical window to pq_adc_topk) and by exact (the truth leg,
-    # identical pair set / distance / (dist, id) tie-break as the old
-    # brute-force scan).
+    # One pass, two rankings: pq_scored_pairs scores every (query,
+    # vector) pair ONCE, approx AND exact, and the frame is ranked twice:
+    # by approx (the PQ leg, identical window to pq_adc_topk) and by
+    # exact (the truth leg, identical pair set / distance / (dist, id)
+    # tie-break as a brute-force scan).
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    pairs = pq_scored_pairs(emb, queries).persist()
+    pairs = pq_scored_pairs(emb, queries)
     wa = Window.partitionBy("qid").orderBy("approx_dist", "id")
     pq10 = (
         pairs.withColumn("arn", F.row_number().over(wa))
@@ -2732,16 +2717,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r12 optimization (guide §5): `assigned` feeds TWO consumers (the
-    # centroid re-aggregation and the broadcast scoring pass) and its
-    # lineage is the full 2-round Lloyd pipeline — without persist the
-    # clustering runs twice per action (the same multi-consumer hazard
-    # semdedup_prune already guards; before plan: 2× the kmeans
-    # subtree). Identical plans share the CacheManager entry with
-    # q_kmeans_assign/q_semdedup's assignment, so repeated audits in
-    # one session cluster once — exactly the production
-    # cluster-once/audit-repeatedly shape.
-    assigned = kmeans_assign(emb, k=4, iters=2, dim=EMBEDDING_DIM).persist()
+    assigned = kmeans_assign(emb, k=4, iters=2, dim=EMBEDDING_DIM)
     sums = [
         F.expr(f"sum(cast(round(v[{d}] * 1000000, 0) as bigint)) as s{d}")
         for d in range(EMBEDDING_DIM)
@@ -3041,9 +3017,8 @@ def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Before: 3 ann_against_index legs = 3 index scans (1+2+4 = 7
     pruned bucket-partition reads), 3 probe stages, 30 parquet scans
     / 12 BNLJ in the plan. After: one 4-of-8-partition pruned scan,
-    one probe stage, one scored frame persisted (≤ 5 queries × 4
-    buckets × capped bucket size) and three window+filter legs over
-    it."""
+    one probe stage, one scored frame (≤ 5 queries × 4 buckets ×
+    capped bucket size) and three window+filter legs over it."""
     from telecom_competitor_analysis_spark.operators.similarity import (
         cosine,
         cosine_topk,
@@ -3079,7 +3054,6 @@ def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__proberank",
             cosine(F.col("q_vec"), F.col("c_vec")).alias("cos"),
         )
-        .persist()
     )
     legs = []
     for p in (1, 2, 4):
@@ -3161,8 +3135,7 @@ def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     for 5 probes, wrong for the corpus): the kNN graph is a plain
     bucket equi-self-join (the q_embedding_dup shape) + a per-query
     top-10 window bounded by the bucket size. The signature table is
-    persisted once and feeds both join sides (the q_embedding_dup
-    persist precedent).
+    persisted once and feeds both join sides.
 
     The blocker SCALES WITH THE CORPUS (the q_semdedup_scaled plane
     rule: bucket = first p sign bits of the 16-plane pattern,
@@ -3211,6 +3184,8 @@ def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__bits").substr(F.lit(1), F.col("__p")).alias("bucket"),
             "nrm",
         )
+        # persisted: both sides of the bucket join read it; measured
+        # 3.90 → 2.60 s (without → with) on 4 cores at sf0.1 (NOTES.md)
         .persist()
     )
     a = sigs.select(

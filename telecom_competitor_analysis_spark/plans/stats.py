@@ -598,13 +598,7 @@ def q_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingle_rows(docs, "doc_id", "text", w=3).select(
         (F.col("doc_id") % 2).alias("side"), F.col("word").alias("sh")
     )
-    # r12 optimization (guide §5): the distinct shingle universe feeds
-    # SIX consumers (each side's sketch, the exact-intersection join's
-    # two legs, and the two size counts) — the before plan re-derived
-    # the shingle explode + distinct per consumer (16 parquet scans).
-    # Persist the narrow (side, sh) frame; at 100 TB this is the
-    # materialized distinct-shingle table the KMV build reads anyway.
-    vocab = sh.distinct().persist()
+    vocab = sh.distinct()
     va = vocab.where(F.col("side") == 0).select("sh")
     vb = vocab.where(F.col("side") == 1).select("sh")
     ha = va.select(F.md5("sh").alias("h")).orderBy("h").limit(64)
@@ -807,7 +801,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct at sf0.01 and sf0.1, so it would add one corpus-wide
     exchange for zero pair reduction. n_comparisons counts duplicate
     quotes with multiplicity (pinned on a planted-duplicate fixture in
-    tests/test_wave11.py)."""
+    tests/test_eval_metrics.py)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_suppkey",
@@ -835,21 +829,8 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("a.pc") < F.col("b.pc"), 1).otherwise(0)).alias("w"),
         F.count(F.lit(1)).alias("n"),
     )
-    # r12 optimization (guide §2.4/§5): the per-supplier-pair aggregate
-    # is TINY (≤ supplier-pair cardinality — ~175k rows of 4 ints at
-    # sf0.1) but its lineage holds the ~9M-row part-blocked comparison
-    # join. Downstream, `sym` (and through it `pairs`) is referenced
-    # FIVE times across the MM-iteration joins, and Spark shares no
-    # subtree across join sides — the before plan carried 40 lineitem
-    # scans / 8 SortMergeJoins / 54 Exchanges for ONE logical join.
-    # The r8 probe that dismissed reuse checkpointed `sym` LAZILY
-    # (post-union, still 2 join derivations, no cache sharing across
-    # the alias renames); persisting `pairs` (pre-union, the smallest
-    # frame above the join) lets every reference hit the one cached
-    # copy: after plan = 2 lineitem scans, 1 SortMergeJoin. At cluster
-    # scale the same role is played by materializing the pair-count
-    # table between stages (it is the natural checkpoint artifact of a
-    # Bradley-Terry pipeline).
+    # persisted: the MM iterations read it 5×; measured 12.30 → 4.94 s
+    # (without → with) on 4 cores at sf0.1 (NOTES.md)
     pairs = pairs.persist()
     sym = pairs.select(
         F.col("sa").alias("i"), F.col("sb").alias("j"), "w", "n"
@@ -3568,11 +3549,6 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cents").alias("hi"),
         F.count(F.lit(1)).cast("long").alias("n"),
     )
-    # r12 optimization (guide §5): `binned` feeds TWO consumers (the
-    # 256-bin histogram and the in-bin exact selection) — without
-    # persist the orders scan + bounds broadcast re-derives per
-    # consumer. Three ints per row; persist so the binning pass runs
-    # once per action.
     binned = o.crossJoin(F.broadcast(bounds)).select(
         "o_orderkey",
         "cents",
@@ -3582,7 +3558,7 @@ def q_quantile_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("bin"),
-    ).persist()
+    )
     hist = binned.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.min("cents").alias("bin_min"),

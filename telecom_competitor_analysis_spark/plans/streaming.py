@@ -548,7 +548,7 @@ def q_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     prev_keepers = (
-        curate_corpus(prev, reuse_via="checkpoint")
+        curate_corpus(prev)
         .join(prev.select("doc_id", "text"), on="doc_id")
         .select("doc_id", "text")
     )

@@ -134,10 +134,9 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal's set-membership twin).
 
     Scale shape: ONE corpus-scale explode into per-(lang, word) counts
-    (persisted — it feeds both the vocab ranking and the per-language
-    rollup; the q_dsir_weights pattern); the global word counts DERIVE
-    from that aggregate, the top-512 vocab broadcasts back, and the
-    OOV rollup is O(langs × vocab). The vocab selection is sort+limit
+    (it feeds both the vocab ranking and the per-language rollup); the
+    global word counts DERIVE from that aggregate, the top-512 vocab
+    broadcasts back, and the OOV rollup is O(langs × vocab). The vocab selection is sort+limit
     — TakeOrderedAndProject, the distributed partial top-k
     (plan-asserted) — NOT a global row_number window, which for an
     unpartitioned spec plans a single-partition Window regardless of
@@ -146,10 +145,8 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "lang", F.explode(words(F.trim(F.col("text")))).alias("word")
     )
-    counts_lw = (
-        tok.groupBy("lang", "word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
+    counts_lw = tok.groupBy("lang", "word").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
     )
     counts_w = counts_lw.groupBy("word").agg(
         F.sum("n").cast("bigint").alias("n_total")

@@ -457,3 +457,77 @@ def test_cdc_chunks_share_counts_consistent(spark, sf_dir):
         assert r.n_docs >= 2
         assert r.n_occurrences >= r.n_docs
         assert r.len_words >= 1
+
+
+def test_edit_distance_pairs_bounds_and_plan(spark, sf_dir):
+    df = QUERIES["q_edit_distance_pairs"](spark, sf_dir)
+    plan = formatted_plan(df)
+    # verify runs on the bounded LSH candidate set — no pair stage of
+    # its own, no nested loop; the distance is the built-in JVM
+    # levenshtein, never a Python stage
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "levenshtein" in plan
+    assert "Python" not in plan
+    for r in df.collect():
+        assert r.id_a < r.id_b
+        assert 500000 <= r.sim_micro <= 1000000
+        assert r.dist >= 0
+
+
+def test_band_tuning_grid_monotone_in_rows_per_band(spark, sf_dir):
+    # for fixed H = b*r and fixed s, fewer rows per band (more bands)
+    # is strictly more permissive — the grid must reflect the S-curve
+    from telecom_competitor_analysis_spark.plans.dedup import band_tuning_grid
+
+    grid = {}
+    for b, r, jbin, p in band_tuning_grid():
+        grid.setdefault(jbin, []).append((r, p))
+    for jbin, entries in grid.items():
+        entries.sort()
+        for (r1, p1), (r2, p2) in zip(entries, entries[1:]):
+            assert p1 >= p2, (jbin, r1, r2)
+    # and the declared query orders expected recall the same way
+    rows = {
+        (r.bands, r.rows_per_band): r.expected_recall_micro
+        for r in QUERIES["q_band_tuning"](spark, sf_dir).collect()
+    }
+    assert rows[(16, 1)] >= rows[(8, 2)] >= rows[(4, 4)] >= rows[(2, 8)]
+
+
+def test_frame_dedup_no_pair_stage(spark, sf_dir):
+    df = QUERIES["q_frame_dedup"](spark, sf_dir)
+    plan = formatted_plan(df)
+    assert "CartesianProduct" not in plan
+    assert "md5" in plan
+    for r in df.collect():
+        assert r.n_frames >= 2
+        assert 1 <= r.n_media <= r.n_frames
+
+
+def test_candidate_precision_bounds(spark, sf_dir):
+    rows = QUERIES["q_candidate_precision"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0 <= r.agree_quarters <= 4
+        assert r.n_true_pairs <= r.n_candidates
+        assert 0 <= r.precision_micro <= 1_000_000
+
+
+def test_cluster_chaining_density_bounds(spark, sf_dir):
+    """Chaining-audit identities: every multi-node cluster has at
+    least the spanning-tree edge count (n-1 — CC needs connectivity),
+    at most the complete graph, the chained flag is exactly
+    density < 1, and at least one tight (density = 1) cluster exists
+    on the fixture (pairs themselves form 2-clusters)."""
+    rows = QUERIES["q_cluster_chaining"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r.n_nodes >= 2
+        assert r.n_nodes - 1 <= r.n_edges <= r.possible_pairs
+        assert r.possible_pairs == r.n_nodes * (r.n_nodes - 1) // 2
+        assert r.density_micro == r.n_edges * 2_000_000 // (
+            r.n_nodes * (r.n_nodes - 1)
+        )
+        assert r.chained == (r.n_edges < r.possible_pairs)
+    assert any(not r.chained for r in rows)

@@ -3,8 +3,8 @@ win-rate CI, ROUGE-2), data-contract expectations, the scaling fit,
 and the graph operators (TextRank, label propagation). The oracles
 prove cross-engine parity end-to-end; these pin hand-computed values
 and operator-level edge cases on crafted rows. Also plan shapes and
-invariants of the stats-family BLEU, Poisson-bootstrap and Spearman
-queries."""
+invariants of the stats-family queries (BLEU, Poisson bootstrap,
+Spearman, the privacy, sketch and split audits)."""
 
 from __future__ import annotations
 
@@ -21,6 +21,7 @@ from telecom_competitor_analysis_spark.plans.stats import (
     PASS_AT_K_EXPR,
     _wilson_sql,
 )
+from telecom_competitor_analysis_spark.sources.readers import load_table
 from tests.oracle_utils import formatted_plan
 
 
@@ -252,3 +253,299 @@ def test_rank_correlation_in_range_and_positive_on_length_signals(
         # chars and whitespace tokens order a natural corpus the same
         # way — strongly positive at every source
         assert r.spearman_micro > 500_000
+
+
+def test_l_diversity_bounds(spark, sf_dir):
+    r = QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
+    assert r.n_classes >= 1
+    assert 1 <= r.min_l_diversity <= 5  # 5 market segments exist
+    assert r.n_risky_classes <= r.n_classes
+    assert 0 <= r.risky_micro <= 1_000_000
+
+
+def test_chrf_scores_in_range(spark, sf_dir):
+    rows = QUERIES["q_chrf"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0 <= r.f1_micro <= 1_000_000
+        assert 0 <= r.f2_micro <= 1_000_000
+        assert 0 <= r.chrf_micro <= 1_000_000
+        assert r.chrf_micro == (r.f1_micro + r.f2_micro) // 2
+
+
+def test_group_kfold_no_pair_straddles_folds(spark, sf_dir):
+    # the leakage property itself: every LSH candidate pair lands in
+    # ONE fold (same component -> same cluster_id -> same mod-5 fold)
+    from telecom_competitor_analysis_spark.operators.dedup import (
+        dedup_clusters,
+    )
+    from telecom_competitor_analysis_spark.plans.dedup import (
+        _materialized_lsh_pairs,
+    )
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table as lt,
+    )
+
+    docs = lt(spark, sf_dir, "documents")
+    pairs = _materialized_lsh_pairs(spark, sf_dir)
+    cl = dedup_clusters(pairs, docs.select("doc_id"), "doc_id")
+    fold = {r.id: r.cluster_id % 5 for r in cl.collect()}
+    for p in pairs.collect():
+        assert fold[p.id_a] == fold[p.id_b]
+    # and the declared rollup accounts for every doc exactly once
+    rows = QUERIES["q_group_kfold"](spark, sf_dir).collect()
+    assert sum(r.n_docs for r in rows) == docs.count()
+    assert all(0 <= r.fold <= 4 for r in rows)
+
+
+def test_mi_lang_source_cells_cover_corpus(spark, sf_dir):
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table as lt,
+    )
+
+    rows = QUERIES["q_mi_lang_source"](spark, sf_dir).collect()
+    n = lt(spark, sf_dir, "documents").count()
+    assert sum(r.n_xy for r in rows) == n
+    import math
+
+    bound = int(math.log(n) * 1_000_000) + 1
+    for r in rows:
+        assert -bound <= r.pmi_micro <= bound
+
+
+def test_gini_bounds(spark, sf_dir):
+    r = QUERIES["q_gini_concentration"](spark, sf_dir).collect()[0]
+    # discrete Gini with the truncating-division form can dip a hair
+    # under 0 on perfectly balanced data; bound with the 1/n slack
+    assert -1_000_000 // r.n_sources <= r.gini_micro < 1_000_000
+    assert r.total_tokens > 0
+
+
+def test_laplace_table_scales_inversely_with_epsilon():
+    """The mechanism's calibration pin: the quantized noise table at
+    eps is exactly (up to rounding) 2x the table at 2*eps — Laplace
+    scale b = sensitivity/eps, so halving the privacy budget doubles
+    every noise level. Also pins antisymmetry and monotonicity."""
+    from telecom_competitor_analysis_spark.plans.stats import (
+        _laplace_micro_table,
+    )
+
+    t_half = _laplace_micro_table(eps_micro=500_000)
+    t_one = _laplace_micro_table(eps_micro=1_000_000)
+    assert len(t_half) == 64
+    for a, b in zip(t_half, t_one):
+        assert abs(a - 2 * b) <= 1  # integer rounding only
+    # antisymmetric around the center, strictly increasing
+    for k in range(64):
+        assert abs(t_half[k] + t_half[63 - k]) <= 1
+    assert t_half == sorted(t_half) and t_half[0] < 0 < t_half[-1]
+
+
+def test_dp_histogram_mechanism_arithmetic(spark, sf_dir):
+    """Release-table invariants at the declared eps=0.5: noise values
+    come from the 64-level table, released = max(0, true*1e6 + noise),
+    epsilon/sensitivity accounting constant, and the noise is actually
+    exercised in both directions on the fixture."""
+    from telecom_competitor_analysis_spark.plans.stats import (
+        _laplace_micro_table,
+    )
+
+    table = set(_laplace_micro_table())
+    rows = QUERIES["q_dp_histogram"](spark, sf_dir).collect()
+    assert rows
+    assert any(r.noise_micro < 0 for r in rows)
+    assert any(r.noise_micro > 0 for r in rows)
+    for r in rows:
+        assert r.noise_micro in table
+        assert r.released_micro == max(
+            0, r.true_n * 1_000_000 + r.noise_micro
+        )
+        assert r.epsilon_micro == 500_000
+        assert r.sensitivity == 1
+
+
+def test_countmin_never_underestimates(spark, sf_dir):
+    """The CM mechanism's signature, pinned: every point estimate >=
+    the true count (counters only ever gain colliding mass), exactly
+    20 probe words, and the bound column is the 2N/w budget."""
+    rows = QUERIES["q_countmin_audit"](spark, sf_dir).collect()
+    assert len(rows) == 20
+    for r in rows:
+        assert r.cm_est >= r.true_freq
+        assert r.overestimate == r.cm_est - r.true_freq
+        assert r.within_bound == (r.overestimate <= r.bound)
+
+
+def test_ams_f2_order_stats_and_error(spark, sf_dir):
+    """AMS audit invariants: one row, min <= lower-median <= max,
+    err_micro consistent with the released numbers, true F2 >= N
+    (every word contributes at least freq)."""
+    [r] = QUERIES["q_ams_f2"](spark, sf_dir).collect()
+    assert r.min_est <= r.median_est <= r.max_est
+    assert r.true_f2 > 0
+    assert r.err_micro == abs(r.median_est - r.true_f2) * 1_000_000 // r.true_f2
+
+
+def test_hll_audit_regimes_and_error(spark, sf_dir):
+    """HLL audit invariants: positive estimates, err arithmetic
+    consistent, and the linear-counting regime switch is exactly the
+    released rule (n_zero > 0 and est_raw < 2.5m -> table value)."""
+    from telecom_competitor_analysis_spark.plans.stats import _hll_lc_table
+
+    lc = _hll_lc_table()
+    rows = QUERIES["q_hll_audit"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r.exact_distinct > 0 and r.est > 0
+        assert r.err_micro == abs(r.est - r.exact_distinct) * 1_000_000 // r.exact_distinct
+        if r.n_zero > 0 and r.est_raw * 2 < 5 * 64:
+            assert r.est == lc[r.n_zero - 1]
+        else:
+            assert r.est == r.est_raw
+
+
+def test_temporal_split_conservation(spark, sf_dir):
+    """Split audit identities: every row lands on exactly one side,
+    spanning users bounded by both side counts, leak rate arithmetic
+    recomputable from released integers."""
+    rows = QUERIES["q_temporal_split"](spark, sf_dir).collect()
+    assert rows
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table,
+    )
+
+    totals = {
+        r["event_type"]: r["cnt"]
+        for r in load_table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
+    for r in rows:
+        assert r.train_rows + r.test_rows == totals[r.event_type]
+        assert r.spanning_users <= min(r.train_users, r.test_users)
+        assert r.leak_micro == r.spanning_users * 1_000_000 // max(
+            r.test_users, 1
+        )
+
+
+def test_lang_confusion_mass_conservation(spark, sf_dir):
+    """Confusion-matrix identities: per declared language the cells sum
+    to the language's doc count and row_micro is the released integer
+    rate; the diagonal flag matches the cell key."""
+    rows = QUERIES["q_lang_confusion"](spark, sf_dir).collect()
+    assert rows
+    by_lang = {}
+    for r in rows:
+        by_lang.setdefault(r.lang, []).append(r)
+        assert r.is_match == (r.lang == r.pred_lang)
+    docs = load_table(spark, sf_dir, "documents")
+    totals = {
+        r["lang"]: r["cnt"]
+        for r in docs.groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    }
+    for lang, cells in by_lang.items():
+        tot = sum(c.n_docs for c in cells)
+        assert tot == totals[lang]
+        for c in cells:
+            assert c.row_micro == c.n_docs * 1_000_000 // tot
+
+
+def test_quantile_sketch_exact_is_true_order_stat(spark, sf_dir):
+    """The two-pass selection must return the TRUE k-th order
+    statistic: recompute k = 1 + p(n-1)//100 and the sorted cents
+    value directly and compare; the estimate must stay inside the
+    containing bin's [min, max] by construction."""
+    rows = {
+        r.p: r
+        for r in QUERIES["q_quantile_sketch_audit"](
+            spark, sf_dir
+        ).collect()
+    }
+    assert set(rows) == {25, 50, 75, 90, 99}
+    cents = sorted(
+        r["cents"]
+        for r in load_table(spark, sf_dir, "orders")
+        .select(
+            F.round(F.col("o_totalprice") * 100)
+            .cast("long")
+            .alias("cents")
+        )
+        .collect()
+    )
+    n = len(cents)
+    for p, r in rows.items():
+        k = 1 + p * (n - 1) // 100
+        assert r.exact_cents == cents[k - 1]
+        assert r.err_cents == r.est_cents - r.exact_cents
+        assert (
+            r.err_micro
+            == abs(r.err_cents) * 1_000_000 // r.exact_cents
+        )
+
+
+def test_aa_calibration_no_effect(spark, sf_dir):
+    """A/A invariants: all four cells populated (the above-average
+    spend metric is non-degenerate by construction), chi2 recomputable
+    from the released cells via the same staged division, and — the
+    point of an A/A run — no significant effect on the fixture."""
+    [r] = QUERIES["q_aa_calibration"](spark, sf_dir).collect()
+    assert min(r.a, r.b, r.c, r.d) > 0
+    assert r.n_users == r.a + r.b + r.c + r.d
+    det = r.a * r.d - r.b * r.c
+
+    def sdiv(x, m):
+        return -((-x) // m) if x < 0 else x // m
+
+    chi_a = sdiv(det * 1000, r.a + r.b)
+    chi_b = sdiv(chi_a * det, r.c + r.d)
+    assert r.chi2_micro == chi_b * r.n_users * 1000 // (
+        (r.a + r.c) * (r.b + r.d)
+    )
+    assert r.significant == (r.chi2_micro > 3_841_000)
+    assert not r.significant
+
+
+def test_hll_merge_is_lossless(spark, sf_dir):
+    """THE mergeability pin: register-wise max merge of the two halves
+    must reproduce the single-pass registers exactly — zero mismatches,
+    equal estimates, for every event_type."""
+    rows = QUERIES["q_hll_merge"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r.register_mismatches == 0
+        assert r.estimates_equal
+        assert 1 <= r.n_registers <= 64
+
+
+def test_dp_mean_mechanism(spark, sf_dir):
+    """Clipped-mean release arithmetic: clipped sum within +/-C*n,
+    noise from the sensitivity-2C table, released columns
+    recomputable, accounting constant."""
+    from telecom_competitor_analysis_spark.plans.stats import (
+        DP_MEAN_CLIP_CENTS,
+        _laplace_micro_table,
+    )
+
+    table = set(
+        _laplace_micro_table(500_000, 64, 2 * DP_MEAN_CLIP_CENTS)
+    )
+    rows = QUERIES["q_dp_mean"](spark, sf_dir).collect()
+    assert rows
+
+    def sdiv(x, m):
+        return -((-x) // m) if x < 0 else x // m
+
+    for r in rows:
+        assert abs(r.clipped_sum_cents) <= DP_MEAN_CLIP_CENTS * r.n_customers
+        assert r.noise_microcents in table
+        assert (
+            r.released_sum_microcents
+            == r.clipped_sum_cents * 1_000_000 + r.noise_microcents
+        )
+        assert r.released_mean_microcents == sdiv(
+            r.released_sum_microcents, r.n_customers
+        )
+        assert r.sensitivity_cents == 2 * DP_MEAN_CLIP_CENTS

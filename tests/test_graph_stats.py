@@ -2,7 +2,9 @@
 triangle_stats) on planted graphs, plus curve-shape checks for the
 mutation-recall S-curve and agreement-positivity for Cohen's kappa —
 the oracle sweep proves engine agreement; these pin the semantics.
-Also pins the lineage truncation of pagerank_micro and triangle_stats."""
+Also pins the lineage truncation of pagerank_micro and triangle_stats,
+and bounds of the graph-family queries (k-core, assortativity,
+modularity)."""
 
 from __future__ import annotations
 
@@ -133,3 +135,43 @@ def test_triangle_stats_truncates_deg_and_oriented(spark):
     assert row.n_wedges == 3 * 3 + 6
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan ExistingRDD") >= 2
+
+
+def test_kcore_counts_monotone_nonincreasing(spark, sf_dir):
+    rows = sorted(
+        QUERIES["q_kcore"](spark, sf_dir).collect(),
+        key=lambda r: r.round,
+    )
+    assert [r.round for r in rows] == [1, 2, 3]
+    for a, b in zip(rows, rows[1:]):
+        # peeling only removes: survivor counts never grow
+        assert b.n_nodes <= a.n_nodes
+        assert b.n_edges <= a.n_edges
+
+
+def test_assortativity_in_range(spark, sf_dir):
+    r = QUERIES["q_assortativity"](spark, sf_dir).collect()[0]
+    assert -1_000_000 <= r.assortativity_micro <= 1_000_000
+    assert r.n_directed_edges % 2 == 0  # both orientations present
+
+
+def test_graph_modularity_identities(spark, sf_dir):
+    """Newman-Q sanity on the LP communities: every released community
+    has degree, the degree sums over released rows account for BOTH
+    endpoints of every edge (zero-degree singletons contribute
+    nothing), intra-edge counts never exceed the graph size, and the
+    total Q is positive (the LP partition of a near-dup graph beats
+    chance) and bounded by 1."""
+    from telecom_competitor_analysis_spark.plans.dedup import (
+        _materialized_lsh_pairs,
+    )
+
+    rows = QUERIES["q_graph_modularity"](spark, sf_dir).collect()
+    assert rows
+    m = _materialized_lsh_pairs(spark, sf_dir).count()
+    assert sum(r.degree_sum for r in rows) == 2 * m
+    assert sum(r.intra_edges for r in rows) <= m
+    q = sum(r.contrib_micro for r in rows)
+    assert 0 < q <= 1_000_000
+    for r in rows:
+        assert r.degree_sum > 0 and r.n_nodes >= 1

@@ -1228,3 +1228,55 @@ def test_compute_bound_map_queries_keep_the_parallelism_guard(
     for q in ("q_pii_scrub", "q_fertility", "q_embedding_quantize"):
         plan = _plan(QUERIES[q](spark, sf_dir))
         assert "roundrobin" in plan.lower(), q
+
+
+# Query-level persist() calls that did not pay in interleaved
+# same-session A/Bs on 4 cores (NOTES.md) and were deleted. A persist
+# inside a query builder is never unpersisted (the builder returns a
+# lazy frame), so it would stay in the session's CacheManager and could
+# be substituted into later plans.
+PERSIST_DELETED = (
+    "q_band_tuning",
+    "q_candidate_precision",
+    "q_cluster_chaining",
+    "q_conformal_coverage",
+    "q_containment_pairs",
+    "q_corpus_curate",
+    "q_corpus_overlap",
+    "q_dsir_weights",
+    "q_ece",
+    "q_embedding_dup",
+    "q_graph_modularity",
+    "q_hard_negatives",
+    "q_kmeans_assign",
+    "q_lsh_recall",
+    "q_ngram_jaccard",
+    "q_nprobe_sweep",
+    "q_oov_rate",
+    "q_perplexity_mix",
+    "q_pq_recall",
+    "q_quality_calibration",
+    "q_quantile_sketch_audit",
+    "q_silhouette",
+    "q_textrank_keywords",
+)
+
+# Queries whose persist() paid in two such A/Bs; each kept site carries
+# its "measured X → Y s" note.
+PERSIST_KEPT = ("q_bradley_terry", "q_knn_hubness", "q_triangle_count")
+
+
+@pytest.mark.parametrize("name", PERSIST_DELETED)
+def test_query_leaves_no_cache_entry(spark, sf_dir, name):
+    spark.catalog.clearCache()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("name", PERSIST_KEPT)
+def test_kept_persist_is_in_the_plan(spark, sf_dir, name):
+    spark.catalog.clearCache()
+    try:
+        assert "InMemoryTableScan" in _plan(QUERIES[name](spark, sf_dir))
+    finally:
+        spark.catalog.clearCache()

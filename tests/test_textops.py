@@ -1,7 +1,8 @@
 """Round-5 operator tests: BM25 retrieval, bigram-LM scoring, edit-
 distance join (deletion-neighborhood blocking), canonical-per-cluster
 selection, weighted sampling, dynamic pivot; the Zipf fit's top-k plan
-and slope."""
+and slope; bounds of the text-family statistics (readability,
+coverage)."""
 
 from __future__ import annotations
 
@@ -306,3 +307,53 @@ def test_zipf_slope_negative(spark, sf_dir):
     row = QUERIES["q_zipf_fit"](spark, sf_dir).collect()[0]
     assert row.n_words <= 1000
     assert row.slope_micro < 0
+
+
+def test_heaps_fit_checkpoints_and_beta_range(spark, sf_dir):
+    r = QUERIES["q_heaps_fit"](spark, sf_dir).collect()[0]
+    # checkpoints are bin-length buckets: bounded by log2(max doc id)
+    assert 2 <= r.n_points <= 64
+    # beta in [0, 1]: 0 = saturated vocab (this synthetic corpus is
+    # template-y by construction), 1 = every token new
+    assert 0 <= r.beta_micro <= 1_000_000
+
+
+def test_js_divergence_bounds_and_symmetry_shape(spark, sf_dir):
+    r = QUERIES["q_js_divergence"](spark, sf_dir).collect()[0]
+    # 0 <= JS <= ln 2 (693147 micro); halves of one corpus sit near 0
+    assert 0 <= r.js_micro <= 693148
+    assert r.js_micro == (r.kl_p_micro + r.kl_q_micro) // 2
+    assert r.n_vocab >= 1
+
+
+def test_readability_formula_consistency(spark, sf_dir):
+    """The FK milli columns must be recomputable from the released
+    integer sums (the shared-expression discipline's behavioral pin)."""
+    rows = QUERIES["q_readability"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r.words_per_sentence_milli == r.n_words * 1000 // r.n_sentences
+        assert r.syllables_per_word_milli == r.n_syllables * 1000 // r.n_words
+        assert r.fk_grade_milli == (
+            r.n_words * 390 // r.n_sentences
+            + r.n_syllables * 11800 // r.n_words
+            - 15590
+        )
+        assert r.n_sentences >= r.n_docs  # floor of 1 per doc
+
+
+def test_coverage_curve_monotone(spark, sf_dir):
+    """Nested train prefixes force a monotone coverage curve; all
+    three points share the same held-out gram denominator and the
+    micro rates are the released integer divisions."""
+    rows = {
+        r.f: r
+        for r in QUERIES["q_coverage_curve"](spark, sf_dir).collect()
+    }
+    assert set(rows) == {25, 50, 75}
+    denom = {r.test_grams for r in rows.values()}
+    assert len(denom) == 1
+    assert rows[25].covered <= rows[50].covered <= rows[75].covered
+    for r in rows.values():
+        assert r.coverage_micro == r.covered * 1_000_000 // r.test_grams
+        assert 0 < r.covered <= r.test_grams

@@ -1,53 +1,85 @@
-"""Interleaved same-session config A/B: a shared box shows ±30-50%
+"""Interleaved same-session A/B: a shared box shows ±30-50%
 session-to-session variance, so comparing two separate probe sessions
-confounds conf effect with drift. For a DYNAMIC SQLConf this probe
-alternates the conf between timed runs of the same query inside ONE
-session (A,B,A,B,A,B after one warm-up per side) and reports best-of-3
-per side with the side's [min, max] run range — drift hits both sides
-equally.
+confounds the effect with drift. This probe alternates the two sides
+between timed runs of the same query inside ONE session (one warm-up per
+side, then N rounds; the side that runs first alternates round by round)
+and reports per side the median, the best run and the [min, max] run
+range — drift hits both sides equally.
 
-Usage: python tools/probe_conf_ab.py key=valueA key=valueB q_name ...
-($SPARK_GRAFT_SF_DIR selects the scale factor, default sf0.1)
+Two kinds of A/B:
+- ``key=valueA key=valueB`` flips one DYNAMIC SQLConf;
+- ``persist=on persist=off`` is a device A/B: side B swaps
+  ``DataFrame.persist`` for the identity (no cache entry, no conf set),
+  side A runs the code as it stands.
+
+Usage: python tools/probe_conf_ab.py [--rounds N] A B q_name ...
+(N defaults to 3; $SPARK_GRAFT_SF_DIR selects the scale factor, default
+sf0.1). Every run clears the cache first and is timed into the noop sink.
 """
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql.classic.dataframe import DataFrame
 from telecom_competitor_analysis_spark.plans import QUERIES
 from telecom_competitor_analysis_spark.session import get_spark
 
-ka, va = sys.argv[1].split("=", 1)
-kb, vb = sys.argv[2].split("=", 1)
+args = sys.argv[1:]
+rounds = 3
+if args[0] == "--rounds":
+    rounds, args = int(args[1]), args[2:]
+ka, va = args[0].split("=", 1)
+kb, vb = args[1].split("=", 1)
 assert ka == kb, "A/B must flip one key"
-names = sys.argv[3:]
+names = args[2:]
+
+real_persist = DataFrame.persist
+
+
+def use(side):
+    """Put the session (or the DataFrame class) on one side of the A/B."""
+    if ka == "persist":
+        on = (va if side == "A" else vb) == "on"
+        DataFrame.persist = real_persist if on else (lambda self, *a, **k: self)
+    else:
+        spark.conf.set(ka, va if side == "A" else vb)
+
+
+def run(fn):
+    # cold-action, as bench.py: no run reuses another's persist()
+    spark.catalog.clearCache()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark(app_name="probe_conf_ab")
 spark.range(1).count()
-print(f"loadavg {os.getloadavg()[0]:.2f}  {ka}: A={va} B={vb}", flush=True)
+print(f"loadavg {os.getloadavg()[0]:.2f}  {ka}: A={va} B={vb}  "
+      f"rounds={rounds}", flush=True)
 
 tot = {"A": 0.0, "B": 0.0}
 for n in names:
     fn = QUERIES[n]
     runs = {"A": [], "B": []}
-    for side, v in (("A", va), ("B", vb)):
-        spark.conf.set(ka, v)
-        spark.catalog.clearCache()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    for _ in range(3):
-        for side, v in (("A", va), ("B", vb)):
-            spark.conf.set(ka, v)
-            # cold-action, as bench.py: no side reuses the other's persist()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs[side].append(time.perf_counter() - t0)
-    a, b = min(runs["A"]), min(runs["B"])
-    tot["A"] += a
-    tot["B"] += b
-    ra = f"[{min(runs['A']):.3f}, {max(runs['A']):.3f}]"
-    rb = f"[{min(runs['B']):.3f}, {max(runs['B']):.3f}]"
-    print(f"{n:32s} A={a:.3f} {ra} B={b:.3f} {rb}  ratio={b / a:.2f}",
-          flush=True)
-print(f"TOTAL A={tot['A']:.3f} B={tot['B']:.3f}", flush=True)
+    for side in ("A", "B"):
+        use(side)
+        run(fn)
+    for r in range(rounds):
+        for side in ("A", "B") if r % 2 == 0 else ("B", "A"):
+            use(side)
+            runs[side].append(run(fn))
+    med = {s: statistics.median(v) for s, v in runs.items()}
+    for s in tot:
+        tot[s] += med[s]
+    cols = "  ".join(
+        f"{s}: med={med[s]:.3f} best={min(v):.3f} "
+        f"[{min(v):.3f}, {max(v):.3f}]"
+        for s, v in runs.items()
+    )
+    print(f"{n:32s} {cols}  ratio={med['B'] / med['A']:.2f}", flush=True)
+use("A")
+print(f"TOTAL (medians) A={tot['A']:.3f} B={tot['B']:.3f}", flush=True)
