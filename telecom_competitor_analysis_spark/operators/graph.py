@@ -128,18 +128,8 @@ def triangle_stats(edges: DataFrame, id_a: str = "id_a",
     """
     ea, eb = F.col(id_a), F.col(id_b)
     e = edges.select(ea.alias("id_a"), eb.alias("id_b"))
-    # r13 (guide §5/§3.3, judge's r12 item 4): deg is referenced three
-    # times (both orientation join sides + the wedge-count aggregate)
-    # and oriented twice (both sides of the wedge self-join); without
-    # materialization each reference re-derives the whole upstream
-    # subtree — the r12 plan still carried 92 Exchanges after the
-    # caller's edge persist. Lazy localCheckpoints cut it to ~40 and
-    # measured fastest in an interleaved same-session A/B at sf0.1
-    # (best-of-3: none 4.29 s, persist 3.69 s, localCheckpoint 2.28 s —
-    # at 468 edges the census is pure per-Exchange/stage overhead, and
-    # the checkpoint both shares the subtree AND truncates what AQE
-    # must replan per stage). Both frames are narrow and bounded
-    # (|V| rows / |E| rows).
+    # checkpointed: deg is read 3× and oriented 2×; measured 1.98 →
+    # 1.62 s (without → with) on 4 cores at sf0.1 (NOTES.md)
     deg = (
         e.select(F.col("id_a").alias("v"))
         .unionAll(e.select(F.col("id_b").alias("v")))

@@ -507,18 +507,11 @@ def semdedup_prune(
     the query loudly instead of silently dropping the vectors it
     predates (r7 review finding; fires whenever the result columns are
     materialized — collect/write — but a bare count() column-prunes
-    every projection including the guard). Without ``assign``, the clustering
-    subtree is persist()ed so Lloyd's runs once instead of three times
-    (measured 53 s → 20 s at the ×10 probe). CACHE LIFETIME CAVEAT
-    (r7 review): the returned DataFrame is lazy, so this function
-    cannot unpersist — the cached assignment (one copy per distinct
-    corpus; identical plans share the CacheManager entry) lives until
-    the session ends or the caller clears it; repeated executions in
-    one session serve the clustering stage cache-warm."""
+    every projection including the guard). Without ``assign``, each of
+    the three consumers re-derives the (deterministic) clustering; no
+    declared query takes that path."""
     if assign is None:
-        assign = kmeans_assign(
-            corpus, id_col, vec_col, k, iters, dim
-        ).persist()
+        assign = kmeans_assign(corpus, id_col, vec_col, k, iters, dim)
     else:
         ids = corpus.select(F.col(id_col).alias("vec_id"))
         assign = ids.join(assign, on="vec_id", how="left").select(
@@ -1191,10 +1184,7 @@ def pq_scored_pairs(
         ensure_parallelism,
     )
 
-    # the 32-row codebook is consumed twice (corpus encode + ADC
-    # table build) and its lineage is a corpus limit-k scan — cut it
-    # once (the MMR-pool bounded-frame discipline)
-    cb = pq_codebook(corpus, id_col, vec_col).localCheckpoint()
+    cb = pq_codebook(corpus, id_col, vec_col)
     corpus = ensure_parallelism(corpus)
     sub = pq_subvectors(corpus, id_col, vec_col)
     codes = pq_encode(sub, cb)

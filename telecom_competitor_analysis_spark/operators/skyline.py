@@ -53,16 +53,7 @@ def skyline_2d(
     dominate each other under the strict-in-one definition, so keeping
     one representative is the useful contract). Returns
     (id_col, x_col, y_col)."""
-    # the distinct-point set has THREE consumers (global bounds, the
-    # bucketed frontier pass, the bucket-max metadata) — Spark shares
-    # nothing across join sides, so without lineage truncation the raw
-    # scan + distinct aggregate would run once per consumer
-    # (localCheckpoint: the dedup_clusters iteration pattern)
-    reps = (
-        points.groupBy(x_col, y_col)
-        .agg(F.min(id_col).alias(id_col))
-        .localCheckpoint(eager=False)
-    )
+    reps = points.groupBy(x_col, y_col).agg(F.min(id_col).alias(id_col))
     bounds = reps.agg(
         F.min(x_col).alias("__minx"), F.max(x_col).alias("__maxx")
     )

@@ -281,15 +281,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("word", "df", F.explode("__ids").alias("id"))
         .select("id", "word", "df")
     )
-    # localCheckpoint the RANKED universe once: the candidate join
-    # consumes it on both sides and the verify legs twice more, and
-    # Spark shares nothing across join sides — without the
-    # materialization each consumer re-runs the whole shingle+rank
-    # pipeline (measured 19.8 s unmaterialized vs ~3.5 s here at
-    # sf0.1; the r7 multi-consumer lesson). The frame is narrow
-    # (id, word, rn, sz) and shingle-count-sized; at 100 TB this is a
-    # parquet artifact (the build_shingle_index pattern), not an
-    # in-memory checkpoint.
+    # checkpointed: the candidate join reads it on both sides and the
+    # verify legs twice more; measured 7.33 → 5.07 s (without → with)
+    # on 4 cores at sf0.1 (NOTES.md)
     ranked = rank_token_sets(toks).localCheckpoint(eager=True)
     cand = containment_prefix_candidates(ranked, 60)
     # exact verify on the SURVIVORS only (positional filtering leaves

@@ -3606,10 +3606,8 @@ def q_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory is a bounded aggregate, not the event stream).
 
     Scale shape: one partial-aggregated groupBy builds the inventory
-    (bounded by |partitions × days|, localCheckpointed — three
-    consumers would otherwise re-derive it from the event scan); FFD
-    runs per partition over that bounded table; everything downstream
-    is O(files)."""
+    (bounded by |partitions × days|); FFD runs per partition over that
+    bounded table; everything downstream is O(files)."""
     from telecom_competitor_analysis_spark.operators.curate import ffd_pack
 
     T = COMPACT_TARGET_ROWS
@@ -3622,7 +3620,7 @@ def q_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "file_id", F.datediff(F.col("day"), F.lit("1970-01-01")).cast("long")
         )
-    ).localCheckpoint()
+    )
     small = files.filter(F.col("n_rows") < T)
     packed = (
         ffd_pack(small, "file_id", "n_rows", "event_type", seq_len=T)

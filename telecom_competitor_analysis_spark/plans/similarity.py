@@ -1970,10 +1970,7 @@ def _gram_partials(emb: DataFrame, dim: int = EMBEDDING_DIM):
 
 def _gram_finalize(sxy: DataFrame, sums: DataFrame) -> DataFrame:
     """Centered Gram numerator n·Σxᵢxⱼ − Σxᵢ·Σxⱼ from the partial
-    state. The 64-row sums table has TWO join consumers (sx_i, sx_j) —
-    localCheckpointed so the scan behind it runs once (the
-    skyline/kcenter multi-consumer discipline)."""
-    sums = sums.localCheckpoint(eager=False)
+    state."""
     return (
         sxy.join(
             F.broadcast(sums.select("i", F.col("sx").alias("sx_i"))),
@@ -2564,13 +2561,8 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= MMR_POOL)
         .drop("rn")
     )
-    # The pool is ≤ MMR_POOL rows but its LINEAGE is the corpus-sized
-    # relevance scan + top-k — and the unrolled greedy rounds consume it
-    # through ~3 sibling branches each (sims twice, cand, the growing
-    # selected chain), which Spark re-derives per branch (an agg or
-    # crossJoin child is re-planned per leg: no exchange reuse across
-    # alias renames). Cutting the lineage at the 12-row boundary makes
-    # every round O(pool), not O(corpus): measured 93 s → ~2 s at sf0.01.
+    # checkpointed: every greedy round reads the pool ~3×; measured
+    # 3.93 → 1.40 s (without → with) on 4 cores at sf0.1 (NOTES.md)
     pool = pool.localCheckpoint(eager=True)
     a = pool.select(
         F.col("vec_id").alias("a_id"), F.col("v").alias("a_v")
@@ -2853,16 +2845,11 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # r12 optimization (guide §5/§3.3): the exact leg feeds TWO
-    # consumers (the metric join and the query universe qs) and its
-    # lineage is the corpus-wide brute-force top-k — localCheckpoint
-    # at the 5×10-row boundary so it computes once per run (the
-    # q_nprobe_sweep exact-leg convention).
     exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10).select(
         "query_id",
         "neighbor_id",
         F.col("rank").alias("exact_rank"),
-    ).localCheckpoint()
+    )
     approx = lsh_bucketed_topk(
         emb, queries, dim=EMBEDDING_DIM, k=10, n_planes=4
     ).select(
@@ -3003,10 +2990,6 @@ def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two halves of the IVF tuning story). Per (nprobe, query):
     hits and integer-micro recall — the eval-harness table.
 
-    The exact leg is computed ONCE and localCheckpointed at its
-    5×10-row boundary (the q_mmr_select lineage law: three recall legs
-    would otherwise re-derive the corpus-sized brute-force scan each).
-
     r12 optimization (guide §2.4 remove-shuffles / §1.2 algorithm
     first): the index is scanned ONCE at the widest width, not once
     per width. A probe at nprobe=4 with the anchor rank kept is the
@@ -3028,10 +3011,8 @@ def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _materialized_ivf_index(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = (
-        cosine_topk(emb, queries, "vec_id", "embedding", k=10)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
+    exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10).select(
+        "query_id", "neighbor_id"
     )
     anchors = spark.read.parquet(f"{idx}/anchors")
     cand = spark.read.parquet(f"{idx}/assignments")

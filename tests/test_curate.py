@@ -375,3 +375,80 @@ def test_keeper_policy_diff_membership(spark, sf_dir):
         assert r.longest_differs == (r.keep_longest != r.keep_minid)
         assert r.quality_differs == (r.keep_quality != r.keep_minid)
         assert docs[r.keep_longest] >= docs[r.keep_minid]
+
+
+def test_blocklist_zero_hit_rules_still_report(spark, sf_dir):
+    rows = {r.rule_id: r for r in
+            QUERIES["q_blocklist_screen"](spark, sf_dir).collect()}
+    assert set(rows) == {1, 2, 3, 4, 5, 6}
+    assert rows[1].n_hits > 0 and rows[1].first_doc is not None
+    assert rows[4].n_hits == 0 and rows[4].n_docs == 0
+    assert rows[4].first_doc is None
+
+
+
+def test_ece_bins_partition_and_bound(spark, sf_dir):
+    rows = QUERIES["q_ece"](spark, sf_dir).collect()
+    assert all(0 <= r.bin <= 9 for r in rows)
+    for r in rows:
+        assert 0 <= r.avg_conf_micro <= 1_000_000
+        assert 0 <= r.pass_micro <= 1_000_000
+        assert r.gap_micro == abs(r.avg_conf_micro - r.pass_micro)
+    # bin edges honored: every doc with conf in [b/10, (b+1)/10) lands
+    # in bin b — the min/max normalization guarantees bins 0 and 9 are
+    # non-empty (the extreme docs define the bounds)
+    bins = {r.bin for r in rows}
+    assert 0 in bins and 9 in bins
+
+
+
+def test_freshness_decay_bounds(spark, sf_dir):
+    rows = QUERIES["q_freshness_decay"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0 <= r.decayed_cents <= r.raw_cents
+        assert 0 <= r.retention_micro <= 1_000_000
+    # 30-day span with 7-day half-life: meaningful decay happened
+    assert any(r.retention_micro < 900_000 for r in rows)
+
+
+
+def test_feature_hash_collisions_account_for_all_buckets(spark, sf_dir):
+    rows = QUERIES["q_feature_hash_collisions"](spark, sf_dir).collect()
+    assert sum(r.n_buckets for r in rows) == 64
+    zero = [r for r in rows if r.load == 0]
+    for r in zero:
+        assert r.token_mass == 0
+    # vocabulary words all land somewhere: sum(load * n_buckets) = |vocab|
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table,
+    )
+    from telecom_competitor_analysis_spark.functions.text import words
+    vocab = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.explode(words(F.trim(F.col("text")))).alias("w"))
+        .filter(F.col("w") != "")
+        .distinct()
+        .count()
+    )
+    assert sum(r.load * r.n_buckets for r in rows) == vocab
+
+
+
+def test_media_sniff_contingency(spark, sf_dir):
+    rows = QUERIES["q_media_sniff"](spark, sf_dir).collect()
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table,
+    )
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    assert sum(r.n_files for r in rows) == n_docs
+    sniffs = {r.sniffed for r in rows}
+    assert {"jpeg", "png", "riff", "gif", "unknown"} == sniffs
+    for r in rows:
+        if r.sniffed == "unknown":
+            assert not r.is_mismatch
+        if r.media_type == "image" and r.sniffed in ("jpeg", "png", "gif"):
+            assert not r.is_mismatch
+        if r.media_type == "video" and r.sniffed != "unknown":
+            assert r.is_mismatch  # nothing sniffs as video container
+

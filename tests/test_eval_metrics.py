@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.operators.graph import (
@@ -549,3 +550,67 @@ def test_dp_mean_mechanism(spark, sf_dir):
             r.released_sum_microcents, r.n_customers
         )
         assert r.sensitivity_cents == 2 * DP_MEAN_CLIP_CENTS
+
+
+@pytest.fixture(scope="module")
+def bt_dup_dir(spark, tmp_path_factory) -> str:
+    """A lineitem fixture with PLANTED duplicate (part, supplier, price)
+    triples: 3 suppliers quote 2 parts; supplier 1's quote on part 10 is
+    duplicated 3x and supplier 2's 2x, so the raw comparison join sees
+    m_a*m_b copies of the same outcome wherever duplicates meet."""
+    rows = []
+    quotes = [
+        # (partkey, suppkey, price, multiplicity)
+        (10, 1, 100.0, 3),
+        (10, 2, 200.0, 2),
+        (10, 3, 150.0, 1),
+        (20, 1, 500.0, 2),
+        (20, 2, 400.0, 1),
+        (20, 3, 400.0, 2),  # tie with supplier 2 -> dropped pairs
+    ]
+    for pk, sk, price, m in quotes:
+        rows += [(pk, sk, price)] * m
+    d = str(tmp_path_factory.mktemp("btdup"))
+    spark.createDataFrame(
+        rows, "l_partkey long, l_suppkey long, l_extendedprice double"
+    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+    return d
+
+
+
+def test_bt_counts_planted_duplicate_quotes_with_multiplicity(spark, bt_dup_dir):
+    q = QUERIES["q_bradley_terry"]
+    raw = {r.s_suppkey: r for r in q(spark, bt_dup_dir).collect()}
+    assert set(raw) == {1, 2, 3}
+    # the fixture's duplicates are real: part 10 supplier1 x supplier2
+    # meets 3*2 = 6 times in the raw join, so n_comparisons counts
+    # multiplicity (supplier 1: 3*2 [s2,p10] + 3*1 [s3,p10] +
+    # 2*1 [s2,p20] + 2*2 [s3,p20] = 15, of which the 9 part-10
+    # comparisons are wins)
+    assert raw[1].n_comparisons == 15
+    assert raw[1].wins == 9
+
+
+
+def test_t_closeness_dominates_l_diversity_classes(spark, sf_dir):
+    t = QUERIES["q_t_closeness"](spark, sf_dir).collect()[0]
+    l = QUERIES["q_l_diversity"](spark, sf_dir).collect()[0]
+    assert t.n_classes == l.n_classes  # same QI definition
+    assert 0 <= t.max_t_micro <= 1_000_000
+    assert t.n_risky_classes <= t.n_classes
+    assert t.n_risky_rows >= t.n_risky_classes  # every class has >=1 row
+
+
+
+def test_anomaly_mad_fence_arithmetic(spark, sf_dir):
+    rows = QUERIES["q_anomaly_mad"](spark, sf_dir).collect()
+    assert {r.o_orderstatus for r in rows} == {"F", "O", "P"}
+    for r in rows:
+        assert r.mad_cents > 0
+        # uniform synthetic totals: max dev ~= 2*MAD, fence at
+        # 3*1.4826*MAD is never crossed — z proves the fence ran
+        assert 0 < r.worst_z_milli < 3000
+        assert r.n_outliers == 0
+        # medians land on the half-cent grid exactly
+        assert (r.median_cents * 2) == int(r.median_cents * 2)
+

@@ -175,3 +175,32 @@ def test_graph_modularity_identities(spark, sf_dir):
     assert 0 < q <= 1_000_000
     for r in rows:
         assert r.degree_sum > 0 and r.n_nodes >= 1
+
+
+def test_local_clustering_on_planted_graph(spark):
+    # K4 plus a pendant: cc(K4 nodes not on the pendant) = 1,
+    # cc(attachment node, deg 4) = 3 triangles / 6 wedges = 0.5
+    from telecom_competitor_analysis_spark.operators.graph import (
+        local_clustering,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)],
+        "id_a long, id_b long",
+    )
+    lc = {r.v: r for r in local_clustering(edges).collect()}
+    assert lc[1].n_tri == 3 and lc[1].deg == 3
+    assert lc[4].n_tri == 3 and lc[4].deg == 4
+    assert lc[5].n_tri == 0 and lc[5].deg == 1
+    total_tri = sum(r.n_tri for r in lc.values())
+    assert total_tri == 3 * 4  # 4 triangles in K4, each credits 3 nodes
+
+
+
+def test_clustering_coeff_bounds(spark, sf_dir):
+    rows = QUERIES["q_clustering_coeff"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 1 <= r.deg_bucket
+        assert 0 <= r.avg_cc_micro <= r.max_cc_micro <= 1_000_000
+

@@ -104,3 +104,68 @@ def test_table_checksum_rollup_lossless(spark, sf_dir):
     assert total.n_rows == n_events
     # sensitivity: distinct day fingerprints (no trivial constant)
     assert len({r.checksum for r in days}) > 1
+
+
+def test_event_runs_partition_totals(spark, sf_dir):
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table,
+    )
+
+    rows = QUERIES["q_event_runs"](spark, sf_dir).collect()
+    total = load_table(spark, sf_dir, "events").count()
+    assert sum(r.n_events for r in rows) == total
+    for r in rows:
+        assert r.n_runs >= r.n_repeat_runs
+        assert 0 <= r.repeat_micro <= 1_000_000
+        assert r.max_run_len >= 1
+
+
+
+def test_delete_vectors_mask_accounting(spark, sf_dir):
+    from telecom_competitor_analysis_spark.sources.readers import (
+        load_table,
+    )
+
+    rows = QUERIES["q_delete_vectors"](spark, sf_dir).collect()
+    orders = load_table(spark, sf_dir, "orders")
+    assert sum(r.n_rows for r in rows) == orders.count()
+    assert sum(r.n_masked for r in rows) == orders.filter(
+        "o_orderkey % 13 = 0"
+    ).count()
+    for r in rows:
+        assert 0 <= r.n_masked <= r.n_rows
+        expected = r.mask_micro > 200_000
+        assert r.needs_compaction == expected
+
+
+
+def test_pruning_zorder_beats_linear_on_trailing_dim(spark, sf_dir):
+    rows = {(r.layout, r.predicate): r for r in
+            QUERIES["q_pruning_stats"](spark, sf_dir).collect()}
+    assert len(rows) == 6
+    # linear layout has no price locality: the price-band predicate
+    # skips (almost) nothing; z-order skips real files on BOTH dims
+    lin_p2 = rows[("linear", "P2_price_band")]
+    z_p2 = rows[("zorder", "P2_price_band")]
+    assert z_p2.skip_micro > lin_p2.skip_micro
+    assert lin_p2.skip_micro < 200_000  # near-zero skip without locality
+    # the conjunction prunes at least as well as either band alone
+    for lay in ("linear", "zorder"):
+        both = rows[(lay, "P3_both")]
+        assert both.files_kept <= min(
+            rows[(lay, "P1_cust_band")].files_kept,
+            rows[(lay, "P2_price_band")].files_kept,
+        )
+
+
+
+def test_bloom_fpp_audit_consistency(spark, sf_dir):
+    r = QUERIES["q_bloom_fpp_audit"](spark, sf_dir).collect()[0]
+    # no false negatives: every member passes
+    assert r.n_pass >= r.n_members
+    assert r.n_false_pos == r.n_pass - r.n_members
+    assert r.bits_set <= 2 * r.n_build
+    assert 0 <= r.fpp_measured_micro <= 1_000_000
+    # sparse fill at test SFs: prediction stays tiny
+    assert r.fpp_predicted_micro < 100_000
+

@@ -222,9 +222,9 @@ def test_kmeans_assign_deterministic_and_sane(spark):
     assert repart == got
 
 
-def test_semdedup_prunes_planted_neardups_keep_lowest(spark):
-    """semdedup_prune: planted near-identical vectors are deduped to the
-    LOWEST id per semantic group; well-separated vectors survive."""
+def _semdedup_planted(spark):
+    """semdedup_prune(k=2, iters=2, dim=4, threshold=0.9) over planted
+    vectors, uncollected."""
     import pandas as pd
 
     from telecom_competitor_analysis_spark.operators.similarity import (
@@ -244,16 +244,27 @@ def test_semdedup_prunes_planted_neardups_keep_lowest(spark):
     ]:
         rows.append({"vec_id": i, "embedding": vec})
     emb = spark.createDataFrame(pd.DataFrame(rows))
-    got = {
-        r.vec_id: r.kept
-        for r in semdedup_prune(
-            emb, "vec_id", "embedding", k=2, iters=2, dim=4, threshold=0.9
-        ).collect()
-    }
+    return semdedup_prune(
+        emb, "vec_id", "embedding", k=2, iters=2, dim=4, threshold=0.9
+    )
+
+
+def test_semdedup_prunes_planted_neardups_keep_lowest(spark):
+    """semdedup_prune: planted near-identical vectors are deduped to the
+    LOWEST id per semantic group; well-separated vectors survive."""
+    got = {r.vec_id: r.kept for r in _semdedup_planted(spark).collect()}
     assert len(got) == 6
     assert got[0] is True and got[2] is False and got[4] is False
     assert got[1] is True and got[3] is False
     assert got[5] is True  # cos 0 to every cluster-mate — never dropped
+
+
+def test_semdedup_prune_leaves_no_cache_entry(spark):
+    # the returned frame is lazy, so a persist() of the in-function
+    # clustering could never be released
+    spark.catalog.clearCache()
+    assert len(_semdedup_planted(spark).collect()) == 6
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ivf_index_append_equals_rebuild(spark, tmp_path):
@@ -1018,3 +1029,57 @@ def test_ivfpq_declared_queries_shape(spark, sf_dir):
     for r in rec:
         assert 0 <= r.hits <= 10
         assert r.recall_micro == r.hits * 100_000
+
+
+def test_rbo_bounds_and_identity(spark, sf_dir):
+    from telecom_competitor_analysis_spark.plans.similarity import (
+        _rbo_coef_micro,
+    )
+
+    coefs = _rbo_coef_micro()
+    assert len(coefs) == 10
+    assert coefs == sorted(coefs, reverse=True)  # earlier match >= later
+    # identical lists sum to ~1.0 (each depth d contributes COEF[d])
+    assert abs(sum(coefs) - 1_000_000) <= 10
+    rows = QUERIES["q_rbo"](spark, sf_dir).collect()
+    assert len(rows) == 5
+    for r in rows:
+        assert 0 <= r.rbo_micro <= 1_000_010
+        if r.n_common == 0:
+            assert r.rbo_micro == 0
+
+
+
+def test_two_stage_rerank_orders_by_exact(spark, sf_dir):
+    rows = QUERIES["q_two_stage_rerank"](spark, sf_dir).collect()
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r.query_id, []).append(r)
+    assert len(by_q) == 5
+    for q, rs in by_q.items():
+        rs.sort(key=lambda r: r.rank)
+        assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
+        dists = [r.exact_dist for r in rs]
+        assert dists == sorted(dists)  # refine stage orders by exact
+        assert all(1 <= r.approx_rank <= 50 for r in rs)
+        assert all(r.moved == r.approx_rank - r.rank for r in rs)
+
+
+
+def test_power_iteration_properties(spark, sf_dir):
+    rows = QUERIES["q_power_iteration"](spark, sf_dir).collect()
+    assert len(rows) == 64
+    assert {r.dim for r in rows} == set(range(64))
+    u1 = [r.u1_milli for r in rows]
+    u2 = [r.u2_milli for r in rows]
+    # inf-norm normalization: max |u| is exactly 1000 after each step
+    assert max(abs(x) for x in u1) == 1000
+    assert max(abs(x) for x in u2) == 1000
+    lam = {r.lambda_scaled for r in rows}
+    assert len(lam) == 1 and lam.pop() >= 0
+    # iterates converge toward a direction: cosine(u1, u2) should be
+    # decidedly positive once the dominant eigenvalue separates
+    num = sum(a * b for a, b in zip(u1, u2))
+    den = (sum(a * a for a in u1) * sum(b * b for b in u2)) ** 0.5
+    assert num / den > 0.5
+

@@ -357,3 +357,81 @@ def test_coverage_curve_monotone(spark, sf_dir):
     for r in rows.values():
         assert r.coverage_micro == r.covered * 1_000_000 // r.test_grams
         assert 0 < r.covered <= r.test_grams
+
+
+def test_bpe_apply_tokens_reassemble_and_merge(spark, sf_dir):
+    rows = QUERIES["q_bpe_apply"](spark, sf_dir).collect()
+    assert len(rows) == 20
+    assert [r.rank for r in rows] == list(range(1, 21))
+    merged_any = False
+    for r in rows:
+        toks = r.bpe_tokens.split(" ")
+        assert "".join(toks) == r.word  # application is lossless
+        assert r.n_tokens == len(toks)
+        assert r.n_tokens <= len(r.word)
+        merged_any |= any(len(t) >= 2 for t in toks)
+    assert merged_any  # at least one merge actually applied
+
+
+
+def test_bpe_merge_lambda_overlap_semantics(spark):
+    # Sennrich overlap rule: "aaa" + merge (a,a) -> ["aa", "a"],
+    # never ["a", "aa"] and never a triple merge
+    from telecom_competitor_analysis_spark.plans.text import BPE_MERGE_LAMBDA
+
+    body = BPE_MERGE_LAMBDA.format(a="'a'", b="'a'")
+    out = spark.sql(
+        f"SELECT aggregate(split('a a a', ' '), '', (acc, x) -> {body})"
+        " AS t"
+    ).collect()[0].t
+    assert out == "aa a"
+
+
+
+def test_distinct_ngrams_bounds(spark, sf_dir):
+    rows = QUERIES["q_distinct_ngrams"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert 0 < r.distinct1_micro <= 1_000_000
+        assert 0 < r.distinct2_micro <= 1_000_000
+        # bigram slots = token slots - one per multi-word doc
+        assert r.n_bigrams < r.n_tokens
+
+
+
+def test_char_entropy_rate_bounds(spark, sf_dir):
+    rows = QUERIES["q_char_entropy_rate"](spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        # conditioning can't raise entropy: 0 <= H(X2|X1) <= H(X)
+        # (estimator noise aside, bigram H <= 2*unigram H always)
+        assert 0 < r.entropy_rate <= r.h_uni + 1e-6
+        assert r.h_bi <= 2 * r.h_uni + 1e-6
+        assert r.n_bigrams < r.n_chars
+
+
+
+def test_burstiness_poisson_floor(spark, sf_dir):
+    rows = QUERIES["q_burstiness"](spark, sf_dir).collect()
+    assert len(rows) == 20
+    for r in rows:
+        # VMR >= the within-doc clumping floor; must be positive and
+        # occ_per_doc >= 1.0 by construction
+        assert r.vmr_micro > 0
+        assert r.occ_per_doc_micro >= 1_000_000
+        assert r.df <= r.n_occ
+
+
+
+def test_bpe_compression_curve_monotone(spark, sf_dir):
+    rows = sorted(
+        QUERIES["q_bpe_compression_curve"](spark, sf_dir).collect(),
+        key=lambda r: r.n_merges,
+    )
+    assert [r.n_merges for r in rows] == [0, 2, 4, 8]
+    toks = [r.total_tokens for r in rows]
+    # each extra merge can only shrink the corpus token count
+    assert toks == sorted(toks, reverse=True)
+    assert toks[-1] < toks[0]
+    assert rows[0].compression_micro == 1_000_000  # 0 merges = chars
+

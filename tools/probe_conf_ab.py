@@ -3,14 +3,16 @@ session-to-session variance, so comparing two separate probe sessions
 confounds the effect with drift. This probe alternates the two sides
 between timed runs of the same query inside ONE session (one warm-up per
 side, then N rounds; the side that runs first alternates round by round)
-and reports per side the median, the best run and the [min, max] run
-range — drift hits both sides equally.
+and reports per side the median, the quartiles and the [min, max] run
+range, plus in how many rounds B ran slower than A — drift hits both
+sides equally.
 
 Two kinds of A/B:
 - ``key=valueA key=valueB`` flips one DYNAMIC SQLConf;
-- ``persist=on persist=off`` is a device A/B: side B swaps
-  ``DataFrame.persist`` for the identity (no cache entry, no conf set),
-  side A runs the code as it stands.
+- ``persist=on persist=off`` and ``localCheckpoint=on
+  localCheckpoint=off`` are device A/Bs: side B swaps that
+  ``DataFrame`` method for the identity (no cache entry, no lineage
+  cut, no conf set), side A runs the code as it stands.
 
 Usage: python tools/probe_conf_ab.py [--rounds N] A B q_name ...
 (N defaults to 3; $SPARK_GRAFT_SF_DIR selects the scale factor, default
@@ -30,19 +32,24 @@ args = sys.argv[1:]
 rounds = 3
 if args[0] == "--rounds":
     rounds, args = int(args[1]), args[2:]
+assert rounds >= 2, "quartiles need two rounds"
 ka, va = args[0].split("=", 1)
 kb, vb = args[1].split("=", 1)
 assert ka == kb, "A/B must flip one key"
 names = args[2:]
 
-real_persist = DataFrame.persist
+devices = {m: getattr(DataFrame, m) for m in ("persist", "localCheckpoint")}
+
+
+def identity(self, *args, **kwargs):
+    return self
 
 
 def use(side):
     """Put the session (or the DataFrame class) on one side of the A/B."""
-    if ka == "persist":
+    if ka in devices:
         on = (va if side == "A" else vb) == "on"
-        DataFrame.persist = real_persist if on else (lambda self, *a, **k: self)
+        setattr(DataFrame, ka, devices[ka] if on else identity)
     else:
         spark.conf.set(ka, va if side == "A" else vb)
 
@@ -76,10 +83,13 @@ for n in names:
     for s in tot:
         tot[s] += med[s]
     cols = "  ".join(
-        f"{s}: med={med[s]:.3f} best={min(v):.3f} "
+        f"{s}: med={med[s]:.3f} q1..q3={q[0]:.3f}..{q[2]:.3f} "
         f"[{min(v):.3f}, {max(v):.3f}]"
         for s, v in runs.items()
+        for q in [statistics.quantiles(v, n=4)]
     )
-    print(f"{n:32s} {cols}  ratio={med['B'] / med['A']:.2f}", flush=True)
+    slower = sum(b > a for a, b in zip(runs["A"], runs["B"]))
+    print(f"{n:32s} {cols}  ratio={med['B'] / med['A']:.2f}  "
+          f"B slower {slower}/{rounds}", flush=True)
 use("A")
 print(f"TOTAL (medians) A={tot['A']:.3f} B={tot['B']:.3f}", flush=True)
