@@ -118,6 +118,7 @@ def main(argv: list[str] | None = None) -> dict[str, str]:
     args = p.parse_args(argv)
 
     from telecom_competitor_analysis_spark.session import get_spark
+    from telecom_competitor_analysis_spark.sources.readers import read_parquet
 
     spark = get_spark(app_name="build_indexes")
     paths = build_all(
@@ -128,7 +129,8 @@ def main(argv: list[str] | None = None) -> dict[str, str]:
         n_anchors=args.n_anchors,
     )
     for name, path in paths.items():
-        n = spark.read.parquet(
+        n = read_parquet(
+            spark,
             f"{path}/postings" if name == "shingle_index"
             else f"{path}/assignments" if name == "ivf_index"
             else path

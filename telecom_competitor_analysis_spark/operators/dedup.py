@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.functions.text import words
+from telecom_competitor_analysis_spark.sources.readers import read_parquet
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -732,8 +733,8 @@ def near_dups_against_index(
     content is NOT a near-dup of an old doc). When a batch doc's
     shingles all lie inside the index universe, the jaccard equals the
     shared-universe recompute exactly (pinned by test)."""
-    postings = spark.read.parquet(f"{index_path}/postings")
-    sizes = spark.read.parquet(f"{index_path}/sizes")
+    postings = read_parquet(spark, f"{index_path}/postings")
+    sizes = read_parquet(spark, f"{index_path}/sizes")
     btoks = (
         shingle_rows(ensure_parallelism(batch), id_col, text_col, w)
         .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
@@ -966,7 +967,7 @@ def url_frontier_screen(
     # permanently breaking the one-row-per-canonical invariant the
     # exactly-once argument depends on.
     try:
-        seen = spark.read.parquet(seen_dir).select(
+        seen = read_parquet(spark, seen_dir).select(
             "canonical_url", F.col("keeper_id").alias("__seen_keeper")
         )
     except AnalysisException as e:

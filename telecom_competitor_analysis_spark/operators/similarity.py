@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from telecom_competitor_analysis_spark.sources.readers import read_parquet
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -690,11 +692,11 @@ def append_to_ivf_index(
     so appends to a ``carry_cols`` index can never silently write
     label-less rows that filtered searches would exclude forever; a
     batch missing a carried column fails analysis loudly here."""
-    anchors = spark.read.parquet(f"{path}/anchors")
-    meta = spark.read.parquet(f"{path}/meta")
+    anchors = read_parquet(spark, f"{path}/anchors")
+    meta = read_parquet(spark, f"{path}/meta")
     stored = {
         f.name
-        for f in spark.read.parquet(f"{path}/assignments").schema.fields
+        for f in read_parquet(spark, f"{path}/assignments").schema.fields
     }
     carried = sorted(stored - {"neighbor_id", "c_vec", "bucket", "sub"})
     assigned = ivf_assign(
@@ -837,8 +839,8 @@ def ann_against_index(
     buckets hold k qualifying rows (post-filtering an unfiltered top-k
     returns fewer). The filtered semantics remain IVF-approximate: only
     probed buckets are searched."""
-    anchors = spark.read.parquet(f"{index_path}/anchors")
-    cand = spark.read.parquet(f"{index_path}/assignments")
+    anchors = read_parquet(spark, f"{index_path}/anchors")
+    cand = read_parquet(spark, f"{index_path}/assignments")
     if pre_filter is not None:
         cand = cand.filter(pre_filter)
     probes = ivf_probe(
@@ -1348,8 +1350,8 @@ def ivfpq_topk(
     refine-stage correction readout (the q_two_stage_rerank column).
     All scoring arithmetic is micro-int; only the probe-selection dot
     product runs in doubles (the established IVF probe convention)."""
-    anchors = spark.read.parquet(f"{index_path}/anchors")
-    cb = spark.read.parquet(f"{index_path}/pq_codebook")
+    anchors = read_parquet(spark, f"{index_path}/anchors")
+    cb = read_parquet(spark, f"{index_path}/pq_codebook")
     m, kc = PQ_SUBSPACES, PQ_CODES
 
     qsub = pq_subvectors(queries, id_col, vec_col).withColumnRenamed(
@@ -1379,7 +1381,7 @@ def ivfpq_topk(
         "query_id",
     ).join(adc_map, F.col("query_id") == F.col("qid")).drop("qid", "q_vec")
 
-    cand = spark.read.parquet(f"{index_path}/assignments").select(
+    cand = read_parquet(spark, f"{index_path}/assignments").select(
         "bucket", "neighbor_id", "codes"
     )
     scored = (
@@ -1405,7 +1407,7 @@ def ivfpq_topk(
         .withColumnRenamed("bucket", "pbucket")
     )
 
-    fat = spark.read.parquet(f"{index_path}/assignments").select(
+    fat = read_parquet(spark, f"{index_path}/assignments").select(
         "bucket", F.col("neighbor_id").alias("fid"), "c_vec"
     )
     qm = queries.select(

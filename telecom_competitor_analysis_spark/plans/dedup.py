@@ -25,7 +25,10 @@ from telecom_competitor_analysis_spark.operators.dedup import (
 )
 from telecom_competitor_analysis_spark.plans.artifacts import _materialized
 from telecom_competitor_analysis_spark.plans.registry import query, rows_only
-from telecom_competitor_analysis_spark.sources.readers import load_table
+from telecom_competitor_analysis_spark.sources.readers import (
+    load_table,
+    read_parquet,
+)
 
 
 def _materialized_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,7 +43,7 @@ def _materialized_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.write.mode("overwrite").parquet(f"{path}/pairs")
 
     path = _materialized(spark, sf_dir, "lsh_pairs_h4b2", "documents", build)
-    return spark.read.parquet(f"{path}/pairs")
+    return read_parquet(spark, f"{path}/pairs")
 
 
 @query("""

@@ -22,7 +22,10 @@ from telecom_competitor_analysis_spark.plans.dedup import (
 )
 from telecom_competitor_analysis_spark.plans.registry import query
 from telecom_competitor_analysis_spark.plans.stats import sdiv_expr
-from telecom_competitor_analysis_spark.sources.readers import load_table
+from telecom_competitor_analysis_spark.sources.readers import (
+    load_table,
+    read_parquet,
+)
 
 
 EMBEDDING_DIM = 64
@@ -284,7 +287,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM
         ).write.mode("overwrite").parquet(f"{p}/assign"),
     )
-    assign = spark.read.parquet(f"{path}/assign")
+    assign = read_parquet(spark, f"{path}/assign")
     return semdedup_prune(
         emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM,
         threshold=0.2, assign=assign,
@@ -430,7 +433,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _materialized(
         spark, sf_dir, "semdedup_blocker_p16t128", "embeddings", _build
     )
-    assign = spark.read.parquet(f"{path}/assign")
+    assign = read_parquet(spark, f"{path}/assign")
     return semdedup_prune(
         emb, "vec_id", "embedding", threshold=0.2, assign=assign
     )
@@ -2036,8 +2039,8 @@ def q_ivf_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-portable); its size bound is pinned by the planted-hot-cluster
     behavior test instead."""
     idx = _materialized_ivf_index(spark, sf_dir)
-    assignments = spark.read.parquet(f"{idx}/assignments")
-    meta = spark.read.parquet(f"{idx}/meta")
+    assignments = read_parquet(spark, f"{idx}/assignments")
+    meta = read_parquet(spark, f"{idx}/meta")
     return (
         assignments.groupBy(F.col("bucket").cast("int").alias("bucket"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
@@ -2329,11 +2332,11 @@ def q_maxsim_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot drift apart (the oracle's HAVING COUNT(*) = 4 mirrors it)
     idx = _materialized_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    anchors = spark.read.parquet(f"{idx}/anchors")
+    anchors = read_parquet(spark, f"{idx}/anchors")
     # quantize candidate chunks ONCE before the probe join (a chunk
     # matched by m probing query chunks would otherwise pay the
     # 64-element transform m times)
-    cand = spark.read.parquet(f"{idx}/assignments").select(
+    cand = read_parquet(spark, f"{idx}/assignments").select(
         "bucket",
         F.expr(f"neighbor_id div {chunks_per_doc}")
         .cast("long")
@@ -2425,8 +2428,8 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _materialized_ivf_index(spark, sf_dir)
-    anchors = spark.read.parquet(f"{idx}/anchors")
-    cand = spark.read.parquet(f"{idx}/assignments").where(
+    anchors = read_parquet(spark, f"{idx}/anchors")
+    cand = read_parquet(spark, f"{idx}/assignments").where(
         F.pmod(F.col("neighbor_id"), F.lit(40)) != 0
     )
     eval_q = emb.where(F.pmod(F.col("vec_id"), F.lit(40)) == 0).select(
@@ -3014,8 +3017,8 @@ def q_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cosine_topk(emb, queries, "vec_id", "embedding", k=10).select(
         "query_id", "neighbor_id"
     )
-    anchors = spark.read.parquet(f"{idx}/anchors")
-    cand = spark.read.parquet(f"{idx}/assignments")
+    anchors = read_parquet(spark, f"{idx}/anchors")
+    cand = read_parquet(spark, f"{idx}/assignments")
     probes = ivf_probe(
         queries.select(
             F.col("vec_id").alias("query_id"),
@@ -3281,7 +3284,7 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, "vec_id", "embedding", k=8, iters=2, dim=EMBEDDING_DIM
         ).write.mode("overwrite").parquet(f"{p}/assign"),
     )
-    assign = spark.read.parquet(f"{path}/assign").select(
+    assign = read_parquet(spark, f"{path}/assign").select(
         "vec_id", "cluster_id"
     )
     counts = (

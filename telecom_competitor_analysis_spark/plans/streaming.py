@@ -17,7 +17,10 @@ from telecom_competitor_analysis_spark.plans.similarity import (
     q_embedding_topk,
     q_gram_matrix,
 )
-from telecom_competitor_analysis_spark.sources.readers import load_table
+from telecom_competitor_analysis_spark.sources.readers import (
+    load_table,
+    read_parquet,
+)
 
 
 @query("""
@@ -713,7 +716,7 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda p: day_rollup(history).write.mode("overwrite").parquet(p),
     )
     merged = (
-        spark.read.parquet(stored)
+        read_parquet(spark, stored)
         .unionByName(day_rollup(batch))
         .groupBy("order_day")
         .agg(
@@ -756,7 +759,7 @@ def q_gram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored = _materialized(spark, sf_dir, "gram_hist_mod4", "embeddings", build)
     bsxy, bsums = _gram_partials(batch)
     sxy = (
-        spark.read.parquet(f"{stored}/sxy")
+        read_parquet(spark, f"{stored}/sxy")
         .unionByName(bsxy)
         .groupBy("i", "j")
         .agg(
@@ -765,7 +768,7 @@ def q_gram_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sums = (
-        spark.read.parquet(f"{stored}/sums")
+        read_parquet(spark, f"{stored}/sums")
         .unionByName(bsums)
         .groupBy("i")
         .agg(F.sum("sx").cast("long").alias("sx"))

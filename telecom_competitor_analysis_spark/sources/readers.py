@@ -6,9 +6,22 @@ The reference reads ``{"header": [...]}`` JSON documents
 declarative read each. Explicit ``schema=`` plays the pydantic-validation
 role (reference dags/data_model.py:27-37): FAILFAST aborts on malformed
 rows, PERMISSIVE + corrupt-record column gives the bad-row side channel.
+
+Parquet is schema-on-read too, with a per-process schema. A parquet
+footer is itself the declared schema of its file, so ``read_parquet`` takes
+the declaration from there: Spark infers it on the first read of a dataset
+in the process, and every later read of the same files passes the kept
+schema as ``schema=``. That is the role ``read_ndjson``'s ``schema=`` plays:
+each read is resolved against a schema given to it, not one a Spark job
+works out from the files, so no read after the first runs a
+schema-inference job. Every parquet read in the package goes through
+``read_parquet`` or passes a declared schema itself (``jobs/run_pipeline``'s
+``CLEAN_PRODUCT`` and ``STAR_SCHEMA`` reads).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,8 +96,68 @@ def read_csv(
     return reader.csv(path)
 
 
+# The session confs that change the schema Spark infers from a parquet
+# dataset; each is part of the key a kept schema is found by.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# (absolute path, conf values) -> (file listing, inferred schema)
+_schemas: dict[tuple, tuple[tuple, T.StructType]] = {}
+
+
+def _listing(path: str) -> tuple:
+    """``(relative name, size, mtime_ns)`` of every file under ``path``,
+    sorted; empty when ``path`` is not on the local filesystem."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append(
+                (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+            )
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet file or dataset directory with its schema supplied.
+
+    The first read of a dataset lets Spark infer the schema (one Spark
+    job) and keeps ``df.schema``; every later read of the same files under
+    the same inference confs is ``spark.read.schema(kept).parquet(path)``,
+    which runs no job. The stored types are Spark's own by construction.
+    A kept schema is dropped as soon as the files under ``path`` change
+    (any file added, removed, resized or touched) or one of
+    ``_INFERENCE_CONFS`` takes another value, so a rewritten dataset is
+    read with its new schema. A path that is not a local file or
+    directory (a remote URI, a glob) is read by plain inference."""
+    listing = _listing(path)
+    if not listing:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    kept = _schemas.get(key)
+    if kept is not None and kept[0] == listing:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[key] = (listing, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md).
+    """Read one testdata table (TESTDATA.md) through
+    ``read_parquet``: the table's footer supplies its schema, inferred once
+    per process, and later reads of the table run no Spark job.
 
     Runtime-settable confs are pinned here too (not only in session.py) so
     the queries behave identically under a session the driver created:
@@ -104,7 +177,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

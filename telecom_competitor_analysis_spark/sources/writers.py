@@ -23,6 +23,8 @@ import shutil
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from telecom_competitor_analysis_spark.sources.readers import read_parquet
+
 
 def write_json(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S5/S6 — JSON / NDJSON sink. Spark's JSON writer is NDJSON per part
@@ -177,7 +179,7 @@ def compact_gold(
     # completed swap whose cleanup died; it is deleted below as before.)
     if os.path.exists(old) and not os.path.exists(path):
         os.rename(old, path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     df.repartition(target_files).write.mode("overwrite").parquet(staging)
     # Swap via two renames, never delete-then-move: a crash mid-sequence
     # leaves either the original table live (before the first rename) or

@@ -1,10 +1,11 @@
 """Local stand-in for the driver's correctness compare: run a Spark query
 and its DuckDB oracle on the same parquet tables, sort columns by name,
 canonicalize values, compare order-insensitively. Also the formatted-plan
-text that plan-shape tests assert on."""
+text that plan-shape tests assert on, and the Spark jobs a call runs."""
 
 from __future__ import annotations
 
+import itertools
 import math
 from typing import Any
 
@@ -20,6 +21,23 @@ def formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+_job_groups = itertools.count()
+
+
+def job_ids(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` runs, recorded under a job group of
+    its own."""
+    sc = spark.sparkContext
+    group = f"job_ids_{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -5,8 +5,10 @@ salting spreads a hot key."""
 
 from __future__ import annotations
 
+import ast
 import shutil
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +20,7 @@ from telecom_competitor_analysis_spark.sources.writers import (
     write_bucketed,
     write_gold,
 )
+from tests.oracle_utils import job_ids
 
 
 def _plan(df) -> str:
@@ -1315,23 +1318,21 @@ CHECKPOINT_KEPT_EAGER = (
 )
 
 
+def _build_job_ids(spark, sf_dir, names):
+    """Ids of every Spark job run while building each of ``names``'
+    DataFrames (no action is taken on them)."""
+    return job_ids(spark, lambda: [QUERIES[n](spark, sf_dir) for n in names])
+
+
 def _build_stage_names(spark, sf_dir, name):
     """Names of the stages of every Spark job run while building
-    ``name``'s DataFrame (no action is taken on it)."""
-    sc = spark.sparkContext
-    group = f"build_{name}"
-    sc.setJobGroup(group, group)
-    try:
-        QUERIES[name](spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    st = sc.statusTracker()
+    ``name``'s DataFrame."""
+    st = spark.sparkContext.statusTracker()
     # a stage skipped because its shuffle output already exists has no
     # StageInfo
     return [
         info.name
-        for j in st.getJobIdsForGroup(group)
+        for j in _build_job_ids(spark, sf_dir, [name])
         for s in st.getJobInfo(j).stageIds
         if (info := st.getStageInfo(s)) is not None
     ]
@@ -1339,19 +1340,41 @@ def _build_stage_names(spark, sf_dir, name):
 
 @pytest.mark.parametrize("name", CHECKPOINT_DELETED)
 def test_query_build_runs_no_checkpoint_job(spark, sf_dir, name):
-    # building still runs parquet schema-inference jobs; a checkpoint's
-    # job is the one whose stage is named after localCheckpoint
-    stages = _build_stage_names(spark, sf_dir, name)
-    assert stages  # the group did record the build's jobs
-    assert not [s for s in stages if s.startswith("localCheckpoint")]
+    # the first build infers the schema of each table it reads for the
+    # first time in the process; the second reads them all with a kept
+    # schema, so any job it runs is the query's own (an eager checkpoint)
+    _build_job_ids(spark, sf_dir, [name])
+    assert _build_job_ids(spark, sf_dir, [name]) == []
 
 
 @pytest.mark.parametrize("name", CHECKPOINT_KEPT_EAGER)
 def test_kept_eager_checkpoint_runs_its_job_at_build(spark, sf_dir, name):
     # the control for the test above: a kept eager checkpoint's job is
-    # found by the same stage-name match
+    # recorded by the same second build
+    _build_job_ids(spark, sf_dir, [name])
     stages = _build_stage_names(spark, sf_dir, name)
     assert [s for s in stages if s.startswith("localCheckpoint")]
+
+
+def _star_queries() -> tuple[str, ...]:
+    """The ``star_queries`` benchmark workload's query names, read from
+    perfbench/workloads.py without importing it."""
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py"
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "STAR_QUERIES" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("STAR_QUERIES not found in perfbench/workloads.py")
+
+
+def test_star_queries_build_runs_no_job_once_tables_are_read(spark, sf_dir):
+    # every parquet read after a dataset's first passes the kept schema, so
+    # rebuilding the benchmark's star queries runs no schema-inference job
+    names = _star_queries()
+    assert len(names) == 16
+    _build_job_ids(spark, sf_dir, names)
+    assert _build_job_ids(spark, sf_dir, names) == []
 
 
 @pytest.mark.parametrize("name", CHECKPOINT_KEPT)

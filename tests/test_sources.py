@@ -1,18 +1,29 @@
 """Reader/validation tests (SURVEY.md §2.1-§2.2): wrapped-JSON unwrap,
-NDJSON with FAILFAST (the pydantic role), bad-row side channel."""
+NDJSON with FAILFAST (the pydantic role), bad-row side channel, parquet
+read with a kept schema."""
 
 from __future__ import annotations
 
+import ast
 import json
 import shutil
 import tempfile
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from telecom_competitor_analysis_spark.schemas import RAW_PRODUCT
 from telecom_competitor_analysis_spark.sources.readers import (
     read_ndjson,
+    read_parquet,
     read_wrapped_json,
+)
+from tests.oracle_utils import job_ids
+
+PACKAGE = (
+    Path(__file__).resolve().parents[1] / "telecom_competitor_analysis_spark"
 )
 
 ROWS = [
@@ -257,3 +268,118 @@ def test_python_datasource_writer_append_preserves_prior_jobs(spark, tmpdir):
                              RAW_PRODUCT)
     got = {r.product_name for r in back.collect()}
     assert got == {ROWS[0]["product_name"], ROWS[1]["product_name"]}
+
+
+def test_read_parquet_infers_once_then_runs_no_job(spark, tmpdir):
+    path = f"{tmpdir}/t.parquet"
+    spark.range(5).selectExpr("id", "cast(id as string) s").write.parquet(path)
+    first = []
+    assert job_ids(spark, lambda: first.append(read_parquet(spark, path)))
+    again = []
+    assert not job_ids(spark, lambda: again.append(read_parquet(spark, path)))
+    assert again[0].schema == first[0].schema
+    assert first[0].schema == spark.read.parquet(path).schema
+    assert sorted(again[0].collect()) == sorted(first[0].collect())
+
+
+def test_read_parquet_sees_a_rewritten_schema(spark, tmpdir):
+    path = f"{tmpdir}/t.parquet"
+    spark.range(3).write.parquet(path)
+    assert read_parquet(spark, path).dtypes == [("id", "bigint")]
+    # an added column
+    spark.range(3).selectExpr("id", "'x' AS tag").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert read_parquet(spark, path).dtypes == [
+        ("id", "bigint"), ("tag", "string")
+    ]
+    # a changed type
+    spark.range(3).selectExpr("cast(id AS string) id").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = read_parquet(spark, path)
+    assert df.dtypes == [("id", "string")]
+    assert sorted(r.id for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_read_parquet_keys_on_the_inference_confs(spark, tmpdir):
+    # a BINARY column without a UTF8 annotation (pyarrow writes no Spark
+    # schema into the footer) is binary or string by the session conf
+    path = f"{tmpdir}/b.parquet"
+    pq.write_table(pa.table({"b": pa.array([b"ab", b"cd"], pa.binary())}),
+                   path)
+    key = "spark.sql.parquet.binaryAsString"
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        df = read_parquet(spark, path)
+        assert df.dtypes == [("b", "string")]
+        assert sorted(r.b for r in df.collect()) == ["ab", "cd"]
+    finally:
+        spark.conf.unset(key)
+    assert read_parquet(spark, path).dtypes == [("b", "binary")]
+
+
+def test_read_parquet_sees_an_added_file(spark, tmpdir):
+    path = f"{tmpdir}/d"
+    spark.range(3).coalesce(1).write.parquet(path)
+    assert read_parquet(spark, path).count() == 3
+    spark.range(3, 7).coalesce(1).write.mode("append").parquet(path)
+    df = read_parquet(spark, path)
+    assert sorted(r.id for r in df.collect()) == list(range(7))
+
+
+def _schema_less_parquet_reads(tree: ast.AST) -> list[int]:
+    """Lines of the ``….read.parquet(…)`` calls outside ``read_parquet``
+    with no ``.schema(…)`` earlier in their call chain."""
+    found = []
+
+    def visit(node, in_reader):
+        if isinstance(node, ast.FunctionDef) and node.name == "read_parquet":
+            in_reader = True
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and not in_reader
+        ):
+            chain, cur = [], node.func.value
+            while isinstance(cur, (ast.Call, ast.Attribute)):
+                if isinstance(cur, ast.Attribute):
+                    chain.append(cur.attr)
+                    cur = cur.value
+                else:
+                    cur = cur.func
+            if "read" in chain and "schema" not in chain:
+                found.append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, in_reader)
+
+    visit(tree, False)
+    return found
+
+
+def test_guard_finds_a_schema_less_parquet_read():
+    # the guard below catches the forms it must, and passes the others
+    src = """
+def f(spark, p):
+    a = spark.read.parquet(p)
+    b = spark.read.option("x", 1).parquet(p)
+    c = spark.read.schema(s).parquet(p)
+    d = read_parquet(spark, p)
+    df.write.parquet(p)
+def read_parquet(spark, p):
+    return spark.read.parquet(p)
+"""
+    assert _schema_less_parquet_reads(ast.parse(src)) == [3, 4]
+
+
+def test_every_parquet_read_supplies_its_schema():
+    # the one schema-less read is read_parquet's own first read of a dataset
+    found = {
+        str(p.relative_to(PACKAGE)): lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (lines := _schema_less_parquet_reads(ast.parse(p.read_text())))
+    }
+    assert found == {}
