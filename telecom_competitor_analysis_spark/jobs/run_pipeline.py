@@ -14,15 +14,26 @@ append is one pass: its row count comes from the write
 the same plan. A one-row status record goes to the logs table per run
 (reference dags/utils.py:54-68): ``success``, or ``failed`` with the error
 text when a stage raises.
+
+The reference loads the star tables one after another; here a day's
+appends (the four star tables, plus packs) are independent Spark jobs of
+1-7 tasks each, so they run concurrently, one driver thread per append,
+each keeping the caller's job group and local properties. Every append
+still scans silver on its own: persisting silver for them was measured
+not to pay (day 0 + day 1 at 10k products: 3.86 → 4.16 s on 4 cores),
+overlapping them does (NOTES.md). ``run()`` returns, or logs a failed
+append, only once every append has finished.
 """
 
 from __future__ import annotations
 
 import argparse
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from telecom_competitor_analysis_spark.jobs.clean import clean_products
 from telecom_competitor_analysis_spark.jobs.load import (
@@ -37,6 +48,8 @@ from telecom_competitor_analysis_spark.schemas import (
 )
 from telecom_competitor_analysis_spark.sources.readers import read_wrapped_json
 from telecom_competitor_analysis_spark.sources.writers import write_gold
+
+_STAR_TABLES = ("competitors", "products", "features", "product_prices")
 
 
 def _read_gold(spark: SparkSession, gold: str, table: str) -> DataFrame | None:
@@ -89,17 +102,25 @@ def _load(spark: SparkSession, bronze: str, silver: str, gold: str) -> dict[str,
         f"{silver}/products"
     )
 
-    existing = {t: _read_gold(spark, gold, t) for t in STAR_SCHEMA}
-    appends = plan_star_appends(silver_products, existing)
-    counts = {table: write_gold(rows, f"{gold}/{table}", mode="append")
-              for table, rows in appends.items()}
-
     pack_files = _bronze_files(bronze, "packs")
+    targets = _STAR_TABLES + (("packs",) if pack_files else ())
+    existing = {t: _read_gold(spark, gold, t) for t in targets}
+    appends = plan_star_appends(silver_products, existing)
     if pack_files:
         raw_packs = read_wrapped_json(spark, pack_files, "packs", RAW_PACK)
-        new_packs = plan_pack_appends(raw_packs, _read_gold(spark, gold, "packs"))
-        counts["packs"] = write_gold(new_packs, f"{gold}/packs", mode="append")
-    return counts
+        appends["packs"] = plan_pack_appends(raw_packs, existing["packs"])
+
+    # one small job per table, run side by side. The target is wrapped per
+    # submit, so each thread gets its own copy of this thread's local
+    # properties: the job group carries over, and concurrent writes do not
+    # share one SQL execution id.
+    with ThreadPoolExecutor(max_workers=len(appends)) as pool:
+        futures = {
+            table: pool.submit(inheritable_thread_target(spark)(write_gold),
+                               rows, f"{gold}/{table}", mode="append")
+            for table, rows in appends.items()
+        }
+    return {table: f.result() for table, f in futures.items()}
 
 
 def _bronze_files(bronze: str, kind: str) -> list[str]:

@@ -126,7 +126,9 @@ def foreach_batch_star_merge(
 ) -> Callable[[DataFrame, int], None]:
     """J5 change-detection merge under streaming: each micro-batch runs
     the exact batch merge plan (jobs/load.plan_star_appends), so batch and
-    streaming semantics cannot drift."""
+    streaming semantics cannot drift. The appends run one after another
+    (unlike ``jobs.run_pipeline``): ``append_writer`` need not be
+    thread-safe."""
     from telecom_competitor_analysis_spark.jobs.load import plan_star_appends
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import shutil
 import tempfile
+import time
 from pathlib import Path
 
 import pytest
@@ -64,9 +65,13 @@ def test_medallion_end_to_end(spark, dirs):
     assert third["features"] == 2          # changed feature + new product
     assert third["product_prices"] == 3    # price change + new feature + new product
 
-    # gold is real parquet on disk
+    # gold is real parquet on disk, holding exactly the rows the
+    # concurrent appends reported
     prices = spark.read.parquet(f"{dirs['gold']}/product_prices")
     assert prices.count() == 6
+    for table in first:
+        rows = spark.read.parquet(f"{dirs['gold']}/{table}").count()
+        assert rows == sum(c[table] for c in (first, second, third)), table
     logs = spark.read.parquet(f"{dirs['gold']}/logs")
     assert logs.filter("status = 'success'").count() == 3
 
@@ -87,6 +92,61 @@ def test_failed_run_is_logged_as_failed(spark, dirs, monkeypatch):
         ("failed", "RuntimeError: merge exploded")
     ]
     assert not Path(f"{dirs['gold']}/products").exists()
+
+
+def test_failed_append_reraises_after_the_others_finish(spark, dirs,
+                                                      monkeypatch):
+    from telecom_competitor_analysis_spark.jobs import run_pipeline
+
+    real = run_pipeline.write_gold
+
+    def features_fail(df, path, *args, **kwargs):
+        if path.endswith("/features"):
+            raise RuntimeError("features append exploded")
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(run_pipeline, "write_gold", features_fail)
+    _write_bronze(dirs["bronze"], DAY1)
+    with pytest.raises(RuntimeError, match="features append exploded"):
+        run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+
+    gold = dirs["gold"]
+    for table, n in {"competitors": 2, "products": 3,
+                     "product_prices": 3}.items():
+        assert spark.read.parquet(f"{gold}/{table}").count() == n, table
+    assert not Path(f"{gold}/features").exists()
+    logs = spark.read.parquet(f"{gold}/logs").collect()
+    assert [(r.status, r.error_details) for r in logs] == [
+        ("failed", "RuntimeError: features append exploded")
+    ]
+
+
+def _group_job(sc, group: str) -> int:
+    """Run one job under `group`; its id, once the status store has it
+    (listener events arrive in order, so every earlier job is there too)."""
+    sc.setJobGroup(group, group)
+    sc.parallelize([0], 1).count()
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, f"job of {group} never seen"
+        time.sleep(0.05)
+    return ids[0]
+
+
+def test_appends_run_in_the_callers_job_group(spark, dirs):
+    sc = spark.sparkContext
+    _write_bronze(dirs["bronze"], DAY1)
+    try:
+        first = _group_job(sc, "medallion-before")
+        sc.setJobGroup("medallion-run", "medallion run")
+        run(spark, dirs["bronze"], dirs["silver"], dirs["gold"])
+        last = _group_job(sc, "medallion-after")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup("medallion-run"))
+    assert in_group and in_group == set(range(first + 1, last))
 
 
 def _listing(path: str) -> list[str]:
