@@ -1368,13 +1368,46 @@ def _star_queries() -> tuple[str, ...]:
     raise AssertionError("STAR_QUERIES not found in perfbench/workloads.py")
 
 
+# the ``star_queries`` benchmark workload's queries
+STAR_QUERIES = (
+    "q_agg_latest_price", "q_scd_detect", "q_lookup_join", "q_star_split",
+    "q_antijoin_new", "q_surrogate_key", "q_union_all", "q_topk",
+    "q_window_rank", "q_asof_join", "q_revenue_topk", "q_star_join",
+    "q_cdc_apply", "q_bucketed_join", "q_tumbling_window", "q_json_unwrap",
+)
+
+
+def test_star_queries_match_the_benchmark_workload():
+    assert sorted(STAR_QUERIES) == sorted(_star_queries())
+
+
 def test_star_queries_build_runs_no_job_once_tables_are_read(spark, sf_dir):
     # every parquet read after a dataset's first passes the kept schema, so
     # rebuilding the benchmark's star queries runs no schema-inference job
-    names = _star_queries()
-    assert len(names) == 16
-    _build_job_ids(spark, sf_dir, names)
-    assert _build_job_ids(spark, sf_dir, names) == []
+    _build_job_ids(spark, sf_dir, STAR_QUERIES)
+    assert _build_job_ids(spark, sf_dir, STAR_QUERIES) == []
+
+
+def _codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_star_queries_rerun_compiles_no_generated_class(spark, sf_dir):
+    # session.CODEGEN_CACHE_ENTRIES keeps every class the 16 queries
+    # generate; at Spark's default of 100 entries the cache evicts them and
+    # each pass recompiles ~175. The bound is not 0: under AQE a query can
+    # compile a class or two on a run after its first (q_scd_detect: 2 on
+    # its second or third run, then none; with AQE off, none after its
+    # first).
+    for _ in range(2):
+        before = _codegen_compiles(spark)
+        for name in STAR_QUERIES:
+            spark.catalog.clearCache()
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite").save()
+    assert _codegen_compiles(spark) - before < len(STAR_QUERIES)
 
 
 @pytest.mark.parametrize("name", CHECKPOINT_KEPT)

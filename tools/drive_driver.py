@@ -1,6 +1,12 @@
 """Driver simulation: bare session, __spark_entry__ contract, DuckDB compare.
 
-The session runs on ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` if unset)."""
+The session runs on ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` if unset).
+Like the driver's, it is bare: it keeps Spark's default codegen cache of
+100 generated classes, not ``session.get_spark``'s
+``CODEGEN_CACHE_ENTRIES``. That cap is a static conf, fixed when the
+session starts, so ``sources/readers.load_table`` cannot pin it the way
+it pins the runtime confs; the cache evicts classes as the queries run,
+and the per-query walls printed here include their recompiles."""
 import importlib.util, os, sys, time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
