@@ -17,4 +17,14 @@ Designed for a multi-executor cluster at ~100 TB (partitioned writes,
 broadcast-able dims, no driver-side row loops); tested on local[N].
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers need not be able to import this package: the closures
+# its pandas stages ship (``applyInPandas``/``mapInPandas`` functions and
+# the package helpers they call) are pickled by value, not as a
+# reference that a worker started outside the checkout cannot resolve.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

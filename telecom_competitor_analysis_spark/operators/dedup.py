@@ -31,7 +31,7 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.functions.text import words
@@ -81,8 +81,6 @@ def positional_ngrams(
     and ran 2-6× slower with GC-driven variance), a single window pass
     whose doc-id partitioning is reused by any downstream per-doc
     groupBy (no second shuffle)."""
-    from pyspark.sql import Window
-
     win = Window.partitionBy(id_col).orderBy("pos")
     toks = df.select(
         F.col(id_col),
@@ -109,6 +107,80 @@ def shingle_rows(
     without the position."""
     return positional_ngrams(df, id_col, text_col, w).select(
         id_col, F.col("gram").alias("word")
+    )
+
+
+def shingle_postings(
+    df: DataFrame, id_col: str, text_col: str, w: int = 3, id_name: str = "id"
+) -> DataFrame:
+    """Distinct (``id_name``, sh) rows, one per document and w-word
+    shingle — the posting set every inverted-index consumer of the
+    shingle family starts from. The under-split guard
+    (``ensure_parallelism``) sits here, in front of the compute-heavy
+    shingle window."""
+    return (
+        shingle_rows(ensure_parallelism(df), id_col, text_col, w)
+        .select(F.col(id_col).alias(id_name), F.col("word").alias("sh"))
+        .distinct()
+    )
+
+
+def df_cap(
+    postings: DataFrame, token: str, max_df: int, keep_df: bool = False
+) -> DataFrame:
+    """The rows of the distinct (id, ``token``) posting set whose token
+    has document frequency ``df <= max_df`` — the ONE document-frequency
+    cap (stopword filter, the CCNet/SlimPajama hygiene step) of the
+    shingle and token-set families. ``keep_df`` keeps the count as
+    column ``df`` for consumers that order or filter on it.
+
+    A window count over partitionBy(token): ONE shuffle on the token —
+    the key the inverted-index join hashes on, so the partitioning is
+    produced once and reused — where a groupBy + join-back re-runs the
+    tokenization for the count side (measured 2.4× slower at sf0.1,
+    and the slowest form again on 4 cores). A hot token's rows land in
+    one window partition, the distribution the join itself would have
+    had; the window buffer spills, unlike a ``collect_set`` aggregation
+    buffer, and the filter drops them before any pairing (NOTES.md,
+    "One df cap")."""
+    df_col = "df" if keep_df else "__df"
+    capped = postings.withColumn(
+        df_col, F.count(F.lit(1)).over(Window.partitionBy(token))
+    ).filter(F.col(df_col) <= F.lit(max_df))
+    return capped if keep_df else capped.drop(df_col)
+
+
+def jaccard_pairs(
+    shared: DataFrame, sizes_a: DataFrame, sizes_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, n_shared, n_a, n_b, jaccard) rows of the shared
+    counts ``shared`` (id_a, id_b, n_shared) whose exact Jaccard
+    n_shared / (n_a + n_b − n_shared) reaches ``threshold``; n_a and
+    n_b come from the (id, n_sh) size tables ``sizes_a`` and
+    ``sizes_b``. The one finisher of every exact shingle-Jaccard leg.
+    The size tables are corpus-cardinality (one row per doc) — NOT
+    broadcast-able at scale; they are shuffle-joined and AQE picks the
+    strategy."""
+    return (
+        shared.join(
+            sizes_a.withColumnRenamed("id", "id_a").withColumnRenamed(
+                "n_sh", "n_a"
+            ),
+            on="id_a",
+        )
+        .join(
+            sizes_b.withColumnRenamed("id", "id_b").withColumnRenamed(
+                "n_sh", "n_b"
+            ),
+            on="id_b",
+        )
+        .withColumn(
+            "jaccard",
+            F.col("n_shared").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
     )
 
 
@@ -548,26 +620,7 @@ def shingle_jaccard_pairs(
     so the Jaccard stays exact over the filtered shingle space (both the
     numerator and the denominators exclude stop-shingles — no bias, just
     a smaller, discriminative feature set)."""
-    toks = (
-        shingle_rows(ensure_parallelism(df), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    # df-cap as a window count over partitionBy(sh): ONE shuffle on the
-    # shingle — the same key the inverted-index join hashes on, so the
-    # partitioning is produced once and reused — where a groupBy+semi-join
-    # would re-run the whole shingle pipeline for the count side (measured
-    # 2.4× slower at sf0.1). A hot shingle's rows do land in one window
-    # partition, but that is the identical distribution the join itself
-    # would have had, and the filter drops them before any pairing.
-    from pyspark.sql import Window
-
-    w_sh = Window.partitionBy("sh")
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = df_cap(shingle_postings(df, id_col, text_col, w), "sh", max_df)
     # The capped universe feeds four consumers (both inverted-index
     # join sides and the size table, itself joined twice) and is left
     # lazy: a persist() of it measured slower on 4 cores, summed over
@@ -582,25 +635,7 @@ def shingle_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    # sizes is corpus-cardinality (one row per doc) — NOT broadcast-able at
-    # scale; shuffle-join it and let AQE pick the strategy.
-    out = (
-        shared.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"),
-            on="id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
+    return jaccard_pairs(shared, sizes, sizes, threshold)
 
 
 def kmv_distinct(
@@ -634,9 +669,7 @@ def kmv_distinct(
         .groupBy(group_col, "__h")
         .agg(F.lit(1).alias("__one"))
     )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy(group_col).orderBy("__h")
+    w = Window.partitionBy(group_col).orderBy("__h")
     ranked = hashes.withColumn("__rn", F.row_number().over(w))
     # u = first 13 hex nibbles as a fraction of 16^13 — exact integer
     # arithmetic then one constant division, identical in any engine
@@ -689,18 +722,7 @@ def build_shingle_index(
     shingle, the join key every probe batch hashes on) and every
     incremental batch reads only the buckets its own shingles hash to;
     the keep-list's documents are never re-tokenized again."""
-    toks = (
-        shingle_rows(ensure_parallelism(keepers), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    from pyspark.sql import Window as _W
-
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(_W.partitionBy("sh")))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = df_cap(shingle_postings(keepers, id_col, text_col, w), "sh", max_df)
     # one narrow pipeline feeds both writes; persist would pin the
     # exchange (NOTES r5) — the double scan is the write-side cost paid
     # once per index rebuild
@@ -735,12 +757,8 @@ def near_dups_against_index(
     shared-universe recompute exactly (pinned by test)."""
     postings = read_parquet(spark, f"{index_path}/postings")
     sizes = read_parquet(spark, f"{index_path}/sizes")
-    btoks = (
-        shingle_rows(ensure_parallelism(batch), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    b_sizes = btoks.groupBy("id").agg(F.count(F.lit(1)).alias("n_a"))
+    btoks = shingle_postings(batch, id_col, text_col, w)
+    b_sizes = btoks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     shared = (
         btoks.alias("a")
         .join(postings.alias("b"), F.col("a.sh") == F.col("b.sh"))
@@ -749,22 +767,7 @@ def near_dups_against_index(
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    return (
-        shared.join(b_sizes.withColumnRenamed("id", "id_a"), on="id_a")
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
-    )
+    return jaccard_pairs(shared, b_sizes, sizes, threshold)
 
 
 def shingle_jaccard_pairs_between(
@@ -794,19 +797,7 @@ def shingle_jaccard_pairs_between(
     union = probe.select(F.col(id_col), F.col(text_col)).unionByName(
         build.select(F.col(id_col), F.col(text_col))
     )
-    toks = (
-        shingle_rows(ensure_parallelism(union), id_col, text_col, w)
-        .select(F.col(id_col).alias("id"), F.col("word").alias("sh"))
-        .distinct()
-    )
-    from pyspark.sql import Window
-
-    w_sh = Window.partitionBy("sh")
-    toks = (
-        toks.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
-    )
+    toks = df_cap(shingle_postings(union, id_col, text_col, w), "sh", max_df)
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     probe_ids = probe.select(F.col(id_col).alias("id"))
     build_ids = build.select(F.col(id_col).alias("id"))
@@ -820,27 +811,7 @@ def shingle_jaccard_pairs_between(
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    out = (
-        shared.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
-                "n_sh", "n_a"
-            ),
-            on="id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            on="id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "n_shared", "n_a", "n_b", "jaccard")
+    return jaccard_pairs(shared, sizes, sizes, threshold)
 
 
 def paragraph_dedup(

@@ -15,12 +15,14 @@ document body.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from telecom_competitor_analysis_spark.functions.text import words
 from telecom_competitor_analysis_spark.operators.dedup import (
+    df_cap,
     ensure_parallelism,
+    shingle_postings,
     shingle_rows,
 )
 
@@ -128,26 +130,20 @@ def decontaminate(
     benchmark. Both sides reduce to distinct (id, shingle) rows; the join
     hashes on the shingle, and ``max_df`` drops corpus-hot shingles
     (boilerplate n-grams that would both blow up the join and
-    false-positive the sweep) using a window count over the join's own
-    shuffle key — same cap discipline as shingle_jaccard_pairs. The
-    benchmark side is bounded by construction (eval sets are small), so
-    AQE will broadcast it; we stay declarative rather than forcing the
-    hint."""
-    c = (
-        shingle_rows(ensure_parallelism(corpus), id_col, text_col, w)
-        .select(F.col(id_col).alias("corpus_id"), F.col("word").alias("sh"))
-        .distinct()
+    false-positive the sweep) through ``operators/dedup.df_cap``, the
+    shingle family's one cap: a window count over the join's own
+    shuffle key. The benchmark side is bounded by construction (eval
+    sets are small), so it skips the under-split guard and AQE will
+    broadcast it; we stay declarative rather than forcing the hint."""
+    c = df_cap(
+        shingle_postings(corpus, id_col, text_col, w, id_name="corpus_id"),
+        "sh",
+        max_df,
     )
     b = (
         shingle_rows(benchmark, id_col, text_col, w)
         .select(F.col(id_col).alias("bench_id"), F.col("word").alias("sh"))
         .distinct()
-    )
-    w_sh = Window.partitionBy("sh")
-    c = (
-        c.withColumn("__df", F.count(F.lit(1)).over(w_sh))
-        .filter(F.col("__df") <= F.lit(max_df))
-        .drop("__df")
     )
     return (
         c.join(b, on="sh")

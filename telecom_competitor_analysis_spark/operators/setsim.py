@@ -31,8 +31,8 @@ tokens can still appear when many documents are genuinely near-equal;
 those candidates all VERIFY, so the quadratic term is bounded by the
 true output size, not by corpus size.
 
-Scale shape: one shuffle for df counts, one word-join to attach df,
-one per-doc window (row_number over (df, word)) for the prefix, one
+Scale shape: one shuffle for the df window (the shared df cap), one
+per-doc window (row_number over (df, word)) for the prefix, one
 equi-join on prefix tokens for candidates, then an O(candidates)
 verify against the per-doc sorted token arrays (array_intersect — no
 re-explode). Every stage keys on doc_id or word; nothing is global.
@@ -42,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from telecom_competitor_analysis_spark.operators.dedup import df_cap
 
 JACCARD_MICRO = 1_000_000
 
@@ -64,8 +66,9 @@ def pruned_token_sets(
     (measured: a ×10 replication probe went 1.3 s → 477 s with only
     the relative cap). With the absolute cap every token contributes
     ≤ max_df_abs²/2 candidates regardless of N, so total candidate
-    volume is linear in vocabulary size — the same df-cap discipline
-    as operators/dedup.py's shingle families.
+    volume is linear in vocabulary size. It is ``operators/dedup.df_cap``,
+    the shingle families' one cap; the relative cap is a filter on the
+    ``df`` it keeps.
 
     ``max_df_frac`` must be the reciprocal of a positive integer (1/n)
     so the relative predicate stays integer-exact; a non-reciprocal
@@ -86,15 +89,11 @@ def pruned_token_sets(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(tokens_col)).alias("word"),
     )
-    df_counts = tok.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = docs.select(F.count("*").alias("n_docs"))
     return (
-        tok.join(df_counts, "word")
+        df_cap(tok, "word", max_df_abs, keep_df=True)
         .join(F.broadcast(n_docs))
-        .where(
-            (F.col("df") * F.lit(inv) <= F.col("n_docs"))
-            & (F.col("df") <= F.lit(max_df_abs))
-        )
+        .where(F.col("df") * F.lit(inv) <= F.col("n_docs"))
         .select("id", "word", "df")
     )
 

@@ -249,8 +249,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine. `direction` names the contained side
     (the smaller shingle set)."""
     from telecom_competitor_analysis_spark.operators.dedup import (
-        ensure_parallelism,
-        shingle_rows,
+        df_cap,
+        shingle_postings,
     )
     from telecom_competitor_analysis_spark.operators.setsim import (
         containment_prefix_candidates,
@@ -258,32 +258,11 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # r13 (guide §2.4 — fewer passes over one exchange): ONE
-    # groupBy(word).collect_set(id) computes the distinct AND the
-    # document frequency (collect_set dedupes ids per word by
-    # construction). The Exchange count is UNCHANGED at 4 — Spark
-    # already shared the word exchange between the old distinct and
-    # the df window (hashpartitioning on a subset key satisfies the
-    # grouping distribution) — the win is collapsing the two-phase
-    # distinct aggregate + the windowed count pass into one aggregate
-    # over that exchange: ranked-stage A/B 2.03/1.57 -> 1.68/1.43 s
-    # (two interleaved rounds), row-identical at sf0.1 (260,388 rows
-    # both ways). Shingles with df > 1000 leave the universe BEFORE sizes
-    # are counted, exactly as the oracle defines it; a hot shingle's
-    # posting list lands in one aggregate row — the identical
-    # distribution the window partition had — and is dropped before
-    # any pairing.
-    raw = shingle_rows(ensure_parallelism(docs), "doc_id", "text", 3).select(
-        F.col("doc_id").alias("id"), "word"
-    )
-    toks = (
-        raw.groupBy("word")
-        .agg(F.collect_set("id").alias("__ids"))
-        .withColumn("df", F.size("__ids"))
-        .filter(F.col("df") <= F.lit(1000))
-        .select("word", "df", F.explode("__ids").alias("id"))
-        .select("id", "word", "df")
-    )
+    # the shared df cap: shingles with df > 1000 leave the universe
+    # BEFORE sizes are counted, exactly as the oracle defines it
+    toks = df_cap(
+        shingle_postings(docs, "doc_id", "text", 3), "sh", 1000, keep_df=True
+    ).select("id", F.col("sh").alias("word"), "df")
     # checkpointed: the candidate join reads it on both sides and the
     # verify legs twice more; measured 7.33 → 5.07 s (without → with)
     # on 4 cores at sf0.1 (NOTES.md)

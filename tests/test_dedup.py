@@ -5,14 +5,25 @@ chunking query's plan shape and share counts."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
+from pyspark.sql import functions as F
+
+from telecom_competitor_analysis_spark.functions.text import words
 from telecom_competitor_analysis_spark.operators.dedup import (
+    build_shingle_index,
     exact_dedup_groups,
     lsh_candidate_pairs,
     minhash_signature,
     shingle_jaccard_pairs,
+    shingle_jaccard_pairs_between,
     simhash,
 )
+from telecom_competitor_analysis_spark.operators.quality import decontaminate
+from telecom_competitor_analysis_spark.operators.setsim import pruned_token_sets
 from telecom_competitor_analysis_spark.plans import QUERIES
+from telecom_competitor_analysis_spark.sources.readers import read_parquet
 from tests.oracle_utils import formatted_plan
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away today"
@@ -125,7 +136,7 @@ def _boilerplate_corpus(spark, n=40):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_shingle_df_cap_bounds_pair_volume(spark):
+def test_shingle_df_cap_bounds_pair_volume(spark, tmp_path):
     """A boilerplate shingle shared by every doc must NOT explode into
     O(n²) candidate pairs once its document frequency exceeds max_df —
     while true near-dups (sharing discriminative shingles) still pair."""
@@ -142,6 +153,170 @@ def test_shingle_df_cap_bounds_pair_volume(spark):
     # capped: the boilerplate blowup is gone, the real near-dup survives
     assert len(capped_pairs) < 10
     assert (100, 101) in capped_pairs
+
+    # the cap boundary, through every consumer of the one df cap: the
+    # boilerplate shingle ('click here now', and the words of it) has
+    # df == n == max_df (kept), then df == max_df + 1 (dropped)
+    n = 6
+    docs = _boilerplate_corpus(spark, n)
+    bp = range(n)
+    all_bp = {(i, j) for i in bp for j in bp if i < j}
+    for max_df, kept in ((n, True), (n - 1, False)):
+        got = {
+            (r.id_a, r.id_b)
+            for r in shingle_jaccard_pairs(
+                docs, "doc_id", "text", w=3, threshold=0.0, max_df=max_df
+            ).collect()
+        }
+        assert got == (all_bp if kept else set()) | {(100, 101)}
+
+        probe = docs.filter("doc_id < 3 OR doc_id = 100")
+        build = docs.filter("NOT (doc_id < 3 OR doc_id = 100)")
+        got = {
+            (r.id_a, r.id_b)
+            for r in shingle_jaccard_pairs_between(
+                probe, build, "doc_id", "text", w=3, threshold=0.0,
+                max_df=max_df,
+            ).collect()
+        }
+        cross = {(i, j) for i in range(3) for j in range(3, n)}
+        assert got == (cross if kept else set()) | {(100, 101)}
+
+        idx = str(tmp_path / f"shidx{max_df}")
+        build_shingle_index(docs, "doc_id", "text", idx, w=3, max_df=max_df)
+        posted = {
+            r.id
+            for r in read_parquet(spark, f"{idx}/postings")
+            .filter("sh = 'click here now'")
+            .collect()
+        }
+        assert posted == (set(bp) if kept else set())
+
+        bench = spark.createDataFrame(
+            [(900, "so click here now please")], "doc_id long, text string"
+        )
+        got = {
+            (r.corpus_id, r.bench_id, r.n_shared_shingles)
+            for r in decontaminate(
+                docs, bench, "doc_id", "text", w=3, max_df=max_df
+            ).collect()
+        }
+        assert got == ({(i, 900, 1) for i in bp} if kept else set())
+
+        sets = pruned_token_sets(
+            docs, "doc_id", words(F.trim(F.col("text"))),
+            max_df_frac=1.0, max_df_abs=max_df,
+        )
+        kept_words = {r.word for r in sets.collect()}
+        assert ("click" in kept_words) == kept  # 'click' has df == n
+
+
+PACKAGE = Path(__file__).resolve().parents[1] / "telecom_competitor_analysis_spark"
+TOKEN_COLS = {"sh", "word", "gram", "token"}
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _calls(node: ast.AST, name: str) -> list[ast.Call]:
+    return [
+        c for c in ast.walk(node)
+        if isinstance(c, ast.Call) and _callee(c) == name
+    ]
+
+
+def _literal(node: ast.AST):
+    """``"x"`` or ``F.col("x")`` → "x"."""
+    if isinstance(node, ast.Call) and _callee(node) == "col" and node.args:
+        node = node.args[0]
+    return node.value if isinstance(node, ast.Constant) else None
+
+
+def _df_cap_sites(tree: ast.AST, home: set[str]) -> list[int]:
+    """Lines, outside the top-level functions named in ``home``, that
+    compute a document-frequency cap — a count windowed over
+    partitionBy of one token column (a literal in TOKEN_COLS or a
+    variable), or the ``size`` of a ``collect_set`` alias — or call
+    ``shingle_rows(ensure_parallelism(…))``."""
+    found = []
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and fn.name in home:
+            continue
+        bound = {
+            t.id: a.value
+            for a in ast.walk(fn) if isinstance(a, ast.Assign)
+            for t in a.targets if isinstance(t, ast.Name)
+        }
+        sets = {
+            _literal(c.args[0])
+            for c in _calls(fn, "alias")
+            if isinstance(c.func, ast.Attribute)
+            and isinstance(c.func.value, ast.Call)
+            and _callee(c.func.value) == "collect_set"
+        } - {None}
+        for c in _calls(fn, "over"):
+            spec = c.args[0] if c.args else None
+            spec = bound.get(spec.id) if isinstance(spec, ast.Name) else spec
+            if (
+                isinstance(c.func, ast.Attribute)
+                and isinstance(c.func.value, ast.Call)
+                and _callee(c.func.value) == "count"
+                and spec is not None
+                and any(
+                    len(p.args) == 1
+                    and (isinstance(p.args[0], ast.Name)
+                         or _literal(p.args[0]) in TOKEN_COLS)
+                    for p in _calls(spec, "partitionBy")
+                )
+            ):
+                found.append(c.lineno)
+        found += [
+            c.lineno for c in _calls(fn, "size")
+            if c.args and _literal(c.args[0]) in sets
+        ]
+        found += [
+            c.lineno for c in _calls(fn, "shingle_rows")
+            if c.args and isinstance(c.args[0], ast.Call)
+            and _callee(c.args[0]) == "ensure_parallelism"
+        ]
+    return sorted(found)
+
+
+def test_guard_finds_a_df_cap():
+    # the guard below catches the forms it must, and passes the others
+    src = """
+def f(t, d):
+    w_sh = Window.partitionBy("sh")
+    a = t.withColumn("__df", F.count(F.lit(1)).over(w_sh))
+    b = t.withColumn("df", F.count("*").over(Window.partitionBy(tok)))
+    c = t.groupBy("word").agg(F.collect_set("id").alias("ids"))
+    c = c.withColumn("df", F.size("ids"))
+    e = shingle_rows(ensure_parallelism(d), "id", "text", 3)
+    f = t.withColumn("sz", F.count("*").over(Window.partitionBy("id")))
+    g = t.withColumn("m", F.min("x").over(Window.partitionBy("sh")))
+    h = shingle_rows(d, "id", "text", 3)
+def df_cap(t, token):
+    return t.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy(token)))
+"""
+    assert _df_cap_sites(ast.parse(src), {"df_cap"}) == [4, 5, 7, 8]
+
+
+def test_df_cap_is_defined_once():
+    # the one df cap and the one guarded shingle tokenization live in
+    # operators/dedup.py's df_cap and shingle_postings
+    found = {
+        rel: lines
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (rel := str(p.relative_to(PACKAGE)))
+        and (lines := _df_cap_sites(
+            ast.parse(p.read_text()),
+            {"df_cap", "shingle_postings"}
+            if rel == "operators/dedup.py" else set(),
+        ))
+    }
+    assert found == {}
 
 
 def test_lsh_bucket_cap_bounds_pair_volume(spark):

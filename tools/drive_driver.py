@@ -6,12 +6,20 @@ Like the driver's, it is bare: it keeps Spark's default codegen cache of
 ``CODEGEN_CACHE_ENTRIES``. That cap is a static conf, fixed when the
 session starts, so ``sources/readers.load_table`` cannot pin it the way
 it pins the runtime confs; the cache evicts classes as the queries run,
-and the per-query walls printed here include their recompiles."""
-import importlib.util, os, sys, time
+and the per-query walls printed here include their recompiles.
+
+The script runs from a scratch working directory, as an external consumer
+of ``__spark_entry__`` does: with the repo only on ``sys.path``, a query
+whose Python workers import the package from the working directory fails
+here too."""
+import importlib.util, os, sys, tempfile, time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sf_dir = os.environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
+sf_dir = os.path.abspath(sf_dir)
+scratch = tempfile.TemporaryDirectory(prefix="drive_driver-")
+os.chdir(scratch.name)
 
 spec = importlib.util.spec_from_file_location(
     "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
